@@ -7,7 +7,7 @@ from wedge_parallel_triangle_counting_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="wetric-tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark(app_name="wetric-tests", master="local[8]")
     yield s
     s.stop()
 

@@ -297,6 +297,22 @@ def test_components_golden(spark):
     assert set(comp_b.values()) == {0}
 
 
+def test_components_round_cap_warns(spark):
+    """A hashmin run that stops at max_iters while labels still change
+    says so; a converged run stays silent."""
+    import warnings
+
+    path = edges_df(spark, [(i, i + 1) for i in range(11)])  # 12 vertices
+    with pytest.warns(RuntimeWarning, match=r"max_iters=3 with \d+ labels"):
+        capped = connected_components(path, max_iters=3).collect()
+    assert len(capped) == 12
+    with warnings.catch_warnings(record=True) as seen:
+        warnings.simplefilter("always")
+        comp = {r.v: r.component for r in connected_components(path).collect()}
+    assert set(comp.values()) == {0}
+    assert not [w for w in seen if "round cap" in str(w.message)]
+
+
 @pytest.mark.parametrize("seed", [4, 17])
 def test_components_strategies_agree(spark, seed):
     pairs = _random_directed(seed, 80, 90)  # sparse -> several components
@@ -895,3 +911,26 @@ def test_lazy_localcheckpoint_defused_but_persisted(spark, monkeypatch):
     assert lazy.count() == 500
     eager = df.localCheckpoint(eager=True)
     assert eager._jdf.queryExecution().analyzed().rdd().checkpointData().isDefined()
+
+
+@pytest.mark.parametrize("eager", [False, True])
+def test_localcheckpoint_forwards_storage_level(spark, monkeypatch, eager):
+    """The sanitizing localCheckpoint wrapper keeps PySpark 4's
+    three-argument signature: `storageLevel` reaches the stock method
+    whether passed by keyword or positionally, lazy and eager."""
+    from pyspark import StorageLevel
+    from pyspark.sql import functions as F
+
+    import wedge_parallel_triangle_counting_spark.session as S
+
+    monkeypatch.setattr(S, "_EAGER_EVERY", 10**9)
+    df = spark.range(500).select(F.col("id").alias("v"))
+    for ck in (
+        df.localCheckpoint(eager, StorageLevel.DISK_ONLY),
+        df.localCheckpoint(eager=eager, storageLevel=StorageLevel.DISK_ONLY),
+    ):
+        rdd = ck._jdf.queryExecution().analyzed().rdd()
+        assert rdd.checkpointData().isDefined() == eager
+        assert rdd.getStorageLevel().useDisk()
+        assert not rdd.getStorageLevel().useMemory()
+        assert ck.count() == 500

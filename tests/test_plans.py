@@ -332,6 +332,86 @@ def test_hits_round_never_exchanges_edge_table(spark):
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", old)
 
 
+def _shuffle_exchanges(df) -> list[tuple[tuple[str, ...], str, str]]:
+    """(hash keys, shuffle origin, child node) of every shuffle exchange
+    in `df`'s own physical plan tree, walked on the JVM side. Unlike a
+    text scan of the plan string, the walk does not descend into the
+    plans that built the cached relations the query scans."""
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    found = []
+
+    def walk(node):
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if name.endswith("QueryStageExec"):
+            return walk(node.plan())
+        if name == "ShuffleExchangeExec":
+            part = node.outputPartitioning()
+            keys = ()
+            if part.getClass().getSimpleName() == "HashPartitioning":
+                keys = tuple(e.toString().split("#")[0] for e in seq(part.expressions()))
+            found.append((keys, node.shuffleOrigin().toString(), node.child().simpleString(25)))
+        for child in seq(node.children()):
+            walk(child)
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return found
+
+
+def test_pagerank_round_never_exchanges_edge_table(spark, monkeypatch):
+    """PageRank loop shape, driven through `pagerank` itself: the edge
+    cache is hash(src)-clustered once in `_prepare`, so a steady-state
+    round's contribution join must add NO single-key exchange on src
+    (that would re-shuffle the edge table every round). The fused
+    contribution+carry aggregation on v, above its map-side partial
+    HashAggregate, must be there. The carried state is a lazily
+    checkpointed AQE result, which reports UnknownPartitioning, so its
+    vertex-sized side may be exchanged on v. Broadcast disabled to
+    force the at-scale SortMergeJoin plan."""
+    from wedge_parallel_triangle_counting_spark.operators.checkpointing import (
+        CheckpointedLoop,
+    )
+    from wedge_parallel_triangle_counting_spark.operators.pagerank import pagerank
+
+    rounds = {}
+    step = CheckpointedLoop.step
+
+    def recording_step(self, df, iteration, *args, **kwargs):
+        if self.name == "pagerank" and iteration == 2:
+            rounds[iteration] = (
+                _shuffle_exchanges(df),
+                df._jdf.queryExecution().executedPlan().toString(),
+            )
+        return step(self, df, iteration, *args, **kwargs)
+
+    monkeypatch.setattr(CheckpointedLoop, "step", recording_step)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    try:
+        edges = spark.read.parquet(f"{SF}/orders.parquet").select(
+            (F.col("o_custkey") % 601).alias("src"),
+            (F.col("o_orderkey") % 601).alias("dst"),
+        )
+        assert pagerank(edges, num_iters=3).count() > 0
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", old)
+    exchanges, plan = rounds[2]
+    assert "SortMergeJoin" in plan and "InMemoryTableScan" in plan, plan
+    keyed = [x for x in exchanges if x[1] == "ENSURE_REQUIREMENTS"]
+    assert not [x for x in keyed if x[0] == ("src",)], exchanges
+    fused = [
+        x for x in keyed
+        if x[0] == ("v",) and x[2].startswith("HashAggregate") and "partial_" in x[2]
+    ]
+    assert len(fused) == 1, exchanges
+
+
 def test_eigencentrality_round_single_edge_exchange(spark):
     """Eigencentrality loop shape: sym is hash(src)-clustered once
     (build_sym_clustered), so a steady-state iteration's only

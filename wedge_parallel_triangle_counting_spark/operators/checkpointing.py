@@ -59,7 +59,14 @@ def loop_partitions(spark: SparkSession) -> int:
     sides. Must equal spark.sql.shuffle.partitions — per-iteration
     aggregation outputs and checkpointed state use the shuffle count,
     so a defaultParallelism mismatch re-exchanges the static edge table
-    every iteration (found while profiling PageRank scaling, r3)."""
+    every iteration (found while profiling PageRank scaling, r3).
+
+    The rule that sizes it lives in `session.get_spark`: on `local[N]`
+    the shuffle count defaults to N, one partition per core, unless
+    `shuffle_partitions=` or `SPARK_GRAFT_SHUFFLE` sets it; other
+    masters default to 32. The explicit `repartition(n, ...)` calls
+    that use this count are outside AQE's coalescing, so it is also
+    the task count of every loop stage over the static sides."""
     return int(
         spark.conf.get(
             "spark.sql.shuffle.partitions",

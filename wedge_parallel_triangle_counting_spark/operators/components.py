@@ -18,6 +18,8 @@ durable checkpoint + manifest on cadence.
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -201,6 +203,7 @@ def _components_hashmin(
     if labels is None:
         labels = verts.select("v", F.col("v").alias("component"))
 
+    changed = 0
     for it in range(start, max_iters):
         new_labels = loop.step(
             _hashmin_round(sym, labels, bcast_state), it, eager=False
@@ -216,6 +219,14 @@ def _components_hashmin(
         labels = new_labels
         if changed == 0:
             break
+    if changed:
+        warnings.warn(
+            f"components: hashmin stopped at the round cap max_iters="
+            f"{max_iters} with {changed} labels still changing in the last "
+            "round; the labels are not converged",
+            RuntimeWarning,
+            stacklevel=3,
+        )
     if loop.history:  # state is localCheckpointed — sym no longer needed
         sym.unpersist()
     return labels.select("v", "component")

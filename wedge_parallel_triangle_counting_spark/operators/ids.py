@@ -5,7 +5,8 @@ A global `row_number()` window funnels every row through one task at
 the sort boundary — the classic antipattern at 10^12 rows (SURVEY
 §7.3). This is the two-pass zipWithIndex pattern instead:
 
-1. range-partition by the order key and sort within partitions
+1. range-partition by the order key into `loop_partitions` ranges
+   (the session's one partition rule) and sort within partitions
    (distributed sort, like any shuffle sort);
 2. count rows per physical partition (cheap agg), prefix-sum the
    counts on the driver (one tiny array), broadcast the offsets;
@@ -23,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .checkpointing import loop_partitions
+
 
 def assign_contiguous_ids_with_count(
     df: DataFrame,
@@ -34,7 +37,7 @@ def assign_contiguous_ids_with_count(
     count, which pass 2 computes anyway — callers that need n (e.g.
     the rank pipeline) save a full count job."""
     spark = df.sparkSession
-    npart = npartitions or max(spark.sparkContext.defaultParallelism, 8)
+    npart = npartitions or loop_partitions(spark)
     parted = (
         df.repartitionByRange(npart, *order_cols)
         .sortWithinPartitions(*order_cols)
@@ -89,7 +92,7 @@ def attach_cumulative_weight(
     distributed analogue of the reference's global wedge cumsum
     (A3, tc.cu:348-361) that drives wedge-balanced partitioning."""
     spark = df.sparkSession
-    npart = npartitions or max(spark.sparkContext.defaultParallelism, 8)
+    npart = npartitions or loop_partitions(spark)
     parted = (
         df.repartitionByRange(npart, *order_cols)
         .sortWithinPartitions(*order_cols)

@@ -20,7 +20,12 @@ Scale design (r3, after profiling the 0.67 scaling efficiency):
   spark.sql.shuffle.partitions (NOT defaultParallelism): the
   aggregation output and the checkpointed state use the shuffle
   partition count, so a mismatch re-exchanged the EDGE table every
-  iteration.
+  iteration. That count is one partition per core on `local[N]`
+  (session.get_spark's partition rule): AQE cannot coalesce the
+  explicit repartitions, and the fixed 32 of earlier rounds made a
+  2-round durable run over 168 k links on 4 cores cost 500 tasks,
+  three 64-task union stages of ~550 ms each among them (77 tasks at
+  4 partitions).
 - `localCheckpoint(eager=False)` truncates lineage without a
   dedicated materialization job per iteration (the next action — the
   dangling broadcast — materializes it; iterative lineage blowup,
