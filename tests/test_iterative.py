@@ -221,23 +221,14 @@ def test_pagerank_topics_matches_independent_runs(spark):
         assert abs(sum(by_topic[t].values()) - 1.0) < 1e-9
 
 
-def test_pagerank_topics_work_independent_of_topic_count(spark, monkeypatch):
+def test_pagerank_topics_work_independent_of_topic_count(spark):
     """The batching claim: T topic vectors ride ONE loop — the number
     of Spark jobs and stages must not grow with T (a per-topic loop
     would multiply both). Compared via the status tracker on job
-    groups around a T=1 and a T=4 run of the same graph/iterations.
-
-    The lineage depth bound (session._EAGER_EVERY: every Nth lazy
-    checkpoint process-wide is eager, +1 job when it lands inside a
-    run) is pushed out of reach — it would add a counter-position-
-    dependent job to one run and break the T-independence equality."""
+    groups around a T=1 and a T=4 run of the same graph/iterations."""
     from wedge_parallel_triangle_counting_spark.operators.pagerank import (
         pagerank_topics,
     )
-
-    import wedge_parallel_triangle_counting_spark.session as S
-
-    monkeypatch.setattr(S, "_EAGER_EVERY", 10**9)
 
     pairs = _random_directed(7, 40, 120)
     sc = spark.sparkContext
@@ -341,13 +332,9 @@ def test_components_strategies_agree(spark, seed):
     assert a == want
 
 
-@pytest.mark.parametrize("impl", ["agg", "window"])
-def test_star_round_impls_agree(spark, impl, monkeypatch):
-    """Both per-src min formulations of the star rounds (r4-j A/B)
-    produce identical labels."""
-    from wedge_parallel_triangle_counting_spark.operators import components as C
-
-    monkeypatch.setattr(C, "STAR_ROUND_IMPL", impl)
+def test_star_round_impls_agree(spark):
+    """Star rounds (window neighborhood min) and hashmin produce
+    identical labels."""
     pairs = _random_directed(11, 70, 85)
     df = edges_df(spark, pairs)
     got = {r.v: r.component for r in connected_components(df, strategy="star").collect()}
@@ -860,14 +847,19 @@ def test_localcheckpoint_sanitizer_caps_size_estimate(spark):
     every round. Unchecked, the driver ends up doing BigInteger
     multiplication on multi-megabit numbers inside every stats walk
     (measured: a 500-vertex hashmin loop's round wall went 0.5 s ->
-    120 s by round 11). The session-installed sanitizer rebuilds the
-    leaf without origin stats whenever the captured estimate exceeds
-    2^64 bytes; this pins (a) the estimate stays <= 64 bits through an
-    8-round triple-self-join chain and (b) the data is untouched."""
+    120 s by round 11). `checkpoint()` rebuilds the leaf without
+    origin stats whenever the captured estimate exceeds 2^64 bytes;
+    this pins (a) the estimate stays <= 64 bits through an 8-round
+    triple-self-join chain and (b) the data is untouched. A silent
+    revert of the py4j reflection fails (a)."""
     from pyspark.sql import functions as F
 
+    from wedge_parallel_triangle_counting_spark.operators.checkpointing import (
+        checkpoint,
+    )
+
     df = spark.range(100).select(F.col("id").alias("v"), F.col("id").alias("c"))
-    state = df.localCheckpoint(eager=True)
+    state = checkpoint(df, eager=True)
     for _ in range(8):
         a = state.select(F.col("v").alias("av"), F.col("c").alias("ac"))
         b = state.select(F.col("v").alias("bv"), F.col("c").alias("bc"))
@@ -876,7 +868,7 @@ def test_localcheckpoint_sanitizer_caps_size_estimate(spark):
             .join(b, state.v == F.col("bv"))
             .select("v", "c")
         )
-        state = rnd.localCheckpoint(eager=True)
+        state = checkpoint(rnd, eager=True)
     plan = state._jdf.queryExecution().analyzed()
     assert plan.getClass().getSimpleName() == "LogicalRDD"
     size = plan.stats().sizeInBytes()  # py4j converts sane BigInts to int
@@ -885,52 +877,120 @@ def test_localcheckpoint_sanitizer_caps_size_estimate(spark):
     assert state.agg(F.sum("c")).first()[0] == 4950
 
 
-def test_lazy_localcheckpoint_defused_but_persisted(spark, monkeypatch):
-    """r6: a LAZY localCheckpoint's RDD must carry NO checkpointData
+def test_lazy_localcheckpoint_defused_but_persisted(spark):
+    """r6: a LAZY `checkpoint()`'s RDD must carry NO checkpointData
     (its doCheckpoint on a broadcast-exchange thread deadlocks the JVM
     against DAGScheduler.getCacheLocs — lock-order inversion on the
     global RDDCheckpointData$ monitor, jstack-confirmed) while keeping
     the persistence that localCheckpoint sets BEFORE marking, so
     caching behavior is unchanged. Eager checkpoints are untouched.
-
-    _EAGER_EVERY is pushed out of reach: every Nth lazy checkpoint
-    process-wide legitimately stays a real eager checkpoint (the
-    lineage depth bound), which would make this assert flaky."""
+    A silent revert of the py4j reflection fails the first assert."""
     from pyspark.sql import functions as F
 
-    import wedge_parallel_triangle_counting_spark.session as S
+    from wedge_parallel_triangle_counting_spark.operators.checkpointing import (
+        checkpoint,
+    )
 
-    monkeypatch.setattr(S, "_EAGER_EVERY", 10**9)
     df = spark.range(500).select(F.col("id").alias("v"))
-    lazy = df.localCheckpoint(eager=False)
+    lazy = checkpoint(df)
     plan = lazy._jdf.queryExecution().analyzed()
     assert plan.getClass().getSimpleName() == "LogicalRDD"
     assert not plan.rdd().checkpointData().isDefined()
     assert plan.rdd().getStorageLevel().useMemory()
     assert plan.rdd().getStorageLevel().useDisk()
     assert lazy.count() == 500
-    eager = df.localCheckpoint(eager=True)
+    eager = checkpoint(df, eager=True)
     assert eager._jdf.queryExecution().analyzed().rdd().checkpointData().isDefined()
 
 
-@pytest.mark.parametrize("eager", [False, True])
-def test_localcheckpoint_forwards_storage_level(spark, monkeypatch, eager):
-    """The sanitizing localCheckpoint wrapper keeps PySpark 4's
-    three-argument signature: `storageLevel` reaches the stock method
-    whether passed by keyword or positionally, lazy and eager."""
-    from pyspark import StorageLevel
+def test_checkpoint_eager_every_8th_round_of_each_chain(spark):
+    """A katz-shaped loop checkpoints two chains per round. Each
+    chain's round-8 frame is a real, materialized checkpoint (the RDD
+    lineage depth bound), whatever else checkpoints in the process;
+    every other round's frame, round 0 included, is defused."""
     from pyspark.sql import functions as F
 
-    import wedge_parallel_triangle_counting_spark.session as S
+    from wedge_parallel_triangle_counting_spark.operators.checkpointing import (
+        checkpoint,
+    )
 
-    monkeypatch.setattr(S, "_EAGER_EVERY", 10**9)
+    walks = spark.range(50).select(F.col("id").alias("v"), F.lit(1).alias("w"))
+    acc = walks.select("v", F.lit(0).alias("acc"))
+    frames = []
+    for k in range(9):
+        walks = checkpoint(walks.select("v", (F.col("w") + 1).alias("w")), round=k)
+        acc = checkpoint(
+            acc.join(walks, "v").select("v", (F.col("acc") + F.col("w")).alias("acc")),
+            round=k,
+        )
+        frames.append((k, walks, acc))
+    for k, *chain_frames in frames:
+        for df in chain_frames:
+            rdd = df._jdf.queryExecution().analyzed().rdd()
+            if k == 8:
+                assert rdd.isCheckpointedAndMaterialized(), k
+            else:
+                assert not rdd.checkpointData().isDefined(), k
+    # w is k+2 in round k, so acc sums 2..10 per vertex
+    assert acc.agg(F.sum("acc")).first()[0] == 50 * sum(range(2, 11))
+
+
+@pytest.mark.parametrize("eager", [False, True])
+def test_localcheckpoint_forwards_storage_level(spark, eager):
+    """Importing the package leaves PySpark's own
+    `DataFrame.localCheckpoint` in place, on the public class and on
+    the classic subclass, so user calls keep the stock contract: a
+    lazy call keeps its checkpointData, and `storageLevel` reaches
+    the method whether passed by keyword or positionally."""
+    from pyspark import StorageLevel
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    import wedge_parallel_triangle_counting_spark  # noqa: F401
+
+    for cls, module in (
+        (DataFrame, "pyspark.sql.dataframe"),
+        (ClassicDataFrame, "pyspark.sql.classic.dataframe"),
+    ):
+        assert cls.__dict__["localCheckpoint"].__module__ == module, cls
     df = spark.range(500).select(F.col("id").alias("v"))
     for ck in (
         df.localCheckpoint(eager, StorageLevel.DISK_ONLY),
         df.localCheckpoint(eager=eager, storageLevel=StorageLevel.DISK_ONLY),
     ):
         rdd = ck._jdf.queryExecution().analyzed().rdd()
-        assert rdd.checkpointData().isDefined() == eager
+        assert rdd.checkpointData().isDefined()
         assert rdd.getStorageLevel().useDisk()
         assert not rdd.getStorageLevel().useMemory()
         assert ck.count() == 500
+
+
+def test_package_checkpoints_only_through_helper():
+    """Package code never calls `.localCheckpoint(` outside
+    `checkpointing.checkpoint`, so the safety fixes and the per-round
+    depth bound cover every package checkpoint."""
+    import ast
+    import pathlib
+
+    import wedge_parallel_triangle_counting_spark as pkg
+
+    offenders = []
+    for path in sorted(pathlib.Path(pkg.__file__).parent.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        allowed = set()
+        if path.name == "checkpointing.py":
+            helper = next(
+                n
+                for n in tree.body
+                if isinstance(n, ast.FunctionDef) and n.name == "checkpoint"
+            )
+            allowed = {id(n) for n in ast.walk(helper)}
+        offenders += [
+            f"{path.name}:{n.lineno}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Attribute)
+            and n.attr == "localCheckpoint"
+            and id(n) not in allowed
+        ]
+    assert not offenders, offenders

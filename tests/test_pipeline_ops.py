@@ -4,6 +4,8 @@ crawl frontier, component-size histogram."""
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import functions as F
 
 from tests.conftest import TWO_COMP, edges_df
@@ -354,11 +356,17 @@ def test_incremental_components_converges_in_constant_rounds(spark):
         incremental_components,
     )
 
-    # a 60-vertex path: cold HashMin needs ~path-length rounds; the
-    # star forest compresses it so the incremental run converges
-    # within a handful of rounds even with the tight max_iters
+    # a 60-vertex path: cold HashMin needs ~path-length rounds (past
+    # its default cap of 50), so the old labels come from star, whose
+    # round count does not grow with the diameter; the star forest
+    # compresses them so the incremental run converges within a
+    # handful of rounds even with the tight max_iters
     path = [(i, i + 1) for i in range(60)]
-    old_labels = connected_components(edges_df(spark, path))
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        old_labels = connected_components(edges_df(spark, path), strategy="star")
+        old = old_labels.collect()
+    assert len(old) == 61 and all(r["component"] == 0 for r in old)
     inc = incremental_components(
         old_labels, edges_df(spark, [(60, 61)]), max_iters=4
     ).collect()

@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpointing import loop_partitions
+from .checkpointing import checkpoint, loop_partitions
 from .graph import build_sym_clustered
 
 # 15 hex chars of md5 -> uniform in [0, 16^15) = [0, 2^60)
@@ -90,11 +90,11 @@ def neighborhood_function(
     sym = build_sym_clustered(edges, npart, key="dst").persist()
     # vertex set off the dst side reuses the hash(dst) clustering, so
     # the distinct and the state init plan zero extra exchanges
-    state = (
+    state = checkpoint(
         sym.select(F.col("dst").alias("v"))
         .distinct()
-        .select("v", F.array(_sketch_hash(F.col("v"))).alias("sk"))
-        .localCheckpoint(eager=True)
+        .select("v", F.array(_sketch_hash(F.col("v"))).alias("sk")),
+        eager=True,
     )
     n_verts = state.count()
     if n_verts == 0:
@@ -115,7 +115,7 @@ def neighborhood_function(
         # hop states cache on first compute there, each per-hop
         # estimate reads its cached state, and the old one-eager-job-
         # per-hop cadence disappears (max_hops+1 jobs -> 1)
-        state = (
+        state = checkpoint(
             state.unionByName(contrib)
             .groupBy("v")
             .agg(
@@ -126,8 +126,8 @@ def neighborhood_function(
                     1,
                     k,
                 ).alias("sk")
-            )
-            .localCheckpoint(eager=False)
+            ),
+            round=hop,
         )
         per_hop.append(
             state.agg(F.sum(_estimate(k, n_verts)).alias("nf_est")).select(
@@ -137,7 +137,7 @@ def neighborhood_function(
     out = per_hop[0]
     for frame in per_hop[1:]:
         out = out.unionByName(frame)
-    out = out.localCheckpoint(eager=True)
+    out = checkpoint(out, eager=True)
     sym.unpersist()
     return out
 

@@ -37,6 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .checkpointing import checkpoint
 from .graph import adjacency, prepare_oriented_fast
 from .ids import attach_cumulative_weight
 
@@ -186,7 +187,7 @@ def triangle_count_doulion(
         ).cast("long")
         % keep_den
     )
-    kept = und.filter(coin < keep_num).localCheckpoint(eager=True)
+    kept = checkpoint(und.filter(coin < keep_num), eager=True)
     m_kept = kept.count()
     tri = triangle_count(kept).collect()[0][0]
     est = tri * keep_den**3 // keep_num**3

@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpointing import loop_partitions
+from .checkpointing import checkpoint, loop_partitions
 from .graph import build_sym_clustered
 
 
@@ -69,22 +69,18 @@ def betweenness_sampled(
         return spark.createDataFrame([], "v long, betweenness double")
     levels = [level]
     seen = level.select("s", "v")
-    for _d in range(max_hops):
+    for d in range(max_hops):
         cand = (
             sym.join(levels[-1], sym.src == F.col("v"))
             .groupBy("s", F.col("dst").alias("v"))
             .agg(F.sum("sigma").alias("sigma"))
         )
-        nxt = (
-            cand.join(seen, ["s", "v"], "left_anti")
-            .localCheckpoint(eager=False)
-            .persist()
-        )
+        nxt = checkpoint(cand.join(seen, ["s", "v"], "left_anti"), round=d).persist()
         if nxt.count() == 0:
             nxt.unpersist()
             break
         levels.append(nxt)
-        seen = nxt.select("s", "v").unionByName(seen).localCheckpoint(eager=False)
+        seen = checkpoint(nxt.select("s", "v").unionByName(seen), round=d)
     # backward pass: delta over the BFS DAG, deepest level first
     delta = levels[-1].select("s", "v", F.lit(0.0).alias("delta"))
     acc = [delta] if len(levels) > 1 else []
@@ -105,12 +101,12 @@ def betweenness_sampled(
                 ).alias("delta")
             )
         )
-        delta = (
+        delta = checkpoint(
             levels[d]
             .select("s", "v")
             .join(contrib, ["s", "v"], "left")
-            .select("s", "v", F.coalesce("delta", F.lit(0.0)).alias("delta"))
-            .localCheckpoint(eager=False)
+            .select("s", "v", F.coalesce("delta", F.lit(0.0)).alias("delta")),
+            round=d,
         )
         if d > 0:  # source rows (d=0) never contribute to their own score
             acc.append(delta)
@@ -128,7 +124,7 @@ def betweenness_sampled(
         )
     else:
         out = allv.select("v", F.lit(0.0).alias("betweenness"))
-    out = out.localCheckpoint(eager=True)
+    out = checkpoint(out, eager=True)
     for fr in levels:
         fr.unpersist()
     sym.unpersist()

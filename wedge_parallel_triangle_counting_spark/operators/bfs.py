@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpointing import CheckpointedLoop, loop_partitions
+from .checkpointing import CheckpointedLoop, checkpoint, loop_partitions
 from .graph import build_sym_clustered
 
 
@@ -72,7 +72,7 @@ def shortest_hops(
         dist = loop.step(dist.unionByName(new_frontier), it, eager=False)
         # the frontier count doubles as the convergence check AND the
         # checkpoint materialization — one action per round
-        frontier = new_frontier.localCheckpoint(eager=False)
+        frontier = checkpoint(new_frontier, round=it)
         n_new = frontier.count()
         loop.history[-1]["extra"]["frontier"] = n_new
         if n_new == 0:

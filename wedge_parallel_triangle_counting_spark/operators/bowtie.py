@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpointing import loop_partitions
+from .checkpointing import checkpoint, loop_partitions
 from .scc import _clean_directed, strongly_connected_components
 
 
@@ -41,9 +41,9 @@ def _reachable_from(
 ) -> DataFrame:
     """All vertices reachable from `seeds[v]` (seeds included) along
     `edges_by_src[src,dst]`; multi-source BFS, frontier-only joins."""
-    settled = seeds.select("v").distinct().localCheckpoint(eager=True)
+    settled = checkpoint(seeds.select("v").distinct(), eager=True)
     frontier = settled
-    for _ in range(max_rounds):
+    for rnd in range(max_rounds):
         grown = (
             edges_by_src.join(
                 frontier.select(F.col("v").alias("src")), "src", "left_semi"
@@ -51,8 +51,8 @@ def _reachable_from(
             .select(F.col("dst").alias("v"))
             .distinct()
         )
-        frontier = grown.join(settled, "v", "left_anti").localCheckpoint(eager=False)
-        settled = settled.unionByName(frontier).localCheckpoint(eager=False)
+        frontier = checkpoint(grown.join(settled, "v", "left_anti"), round=rnd)
+        settled = checkpoint(settled.unionByName(frontier), round=rnd)
         if frontier.count() == 0:
             return settled
     raise RuntimeError(
@@ -128,11 +128,11 @@ def bowtie_decomposition(
         .when(F.col("f_from_in") | F.col("f_to_out"), "tendril")
         .otherwise("disconnected")
     )
-    out = (
+    out = checkpoint(
         flagged.select(cls.alias("cls"))
         .groupBy("cls")
-        .agg(F.count(F.lit(1)).alias("n_vertices"))
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).alias("n_vertices")),
+        eager=True,
     )
     for df in (labels, core, reach_from_core, reach_to_core, in_set, out_set, fwd, rev, e):
         df.unpersist()

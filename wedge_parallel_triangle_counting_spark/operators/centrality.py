@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpointing import CheckpointedLoop, loop_partitions
+from .checkpointing import CheckpointedLoop, checkpoint, loop_partitions
 from .graph import build_sym_clustered
 
 
@@ -51,12 +51,11 @@ def _ms_bfs(
         16,
         10,
     ).cast("long")
-    seeds = (
+    seeds = checkpoint(
         sym.select("src")
         .distinct()
         .filter(h % 100 < seed_pct)
         .select(F.col("src").alias("s"))
-        .localCheckpoint(eager=False)
     )
     loop = CheckpointedLoop(
         spark,
@@ -100,12 +99,12 @@ def _ms_bfs(
             "s", "v", F.lit(it + 1).cast("long").alias("hops")
         )
         dist = loop.step(dist.unionByName(new_frontier), it, eager=False)
-        frontier = new_frontier.localCheckpoint(eager=False)
+        frontier = checkpoint(new_frontier, round=it)
         n_new = frontier.count()
         loop.history[-1]["extra"]["frontier"] = n_new
         if n_new == 0:
             break
-    dist = dist.localCheckpoint(eager=True)
+    dist = checkpoint(dist, eager=True)
     sym.unpersist()
     return dist, seeds
 
@@ -163,12 +162,15 @@ def _ms_bfs_sigma(edges: DataFrame, seed_pct: int, max_hops: int):
         .filter(h % 100 < seed_pct)
         .select(F.col("src").alias("s"))
     )
-    dist = seeds.select(
-        "s",
-        F.col("s").alias("v"),
-        F.lit(0).cast("long").alias("hops"),
-        F.lit(1).cast("long").alias("sigma"),
-    ).localCheckpoint(eager=True)
+    dist = checkpoint(
+        seeds.select(
+            "s",
+            F.col("s").alias("v"),
+            F.lit(0).cast("long").alias("hops"),
+            F.lit(1).cast("long").alias("sigma"),
+        ),
+        eager=True,
+    )
     frontier = dist
     for it in range(max_hops):
         cand = (
@@ -176,7 +178,7 @@ def _ms_bfs_sigma(edges: DataFrame, seed_pct: int, max_hops: int):
             .groupBy("s", F.col("dst").alias("w"))
             .agg(F.sum("sigma").alias("sigma"))
         )
-        new_frontier = (
+        new_frontier = checkpoint(
             cand.join(
                 dist.select("s", F.col("v").alias("w")), ["s", "w"], "left_anti"
             )
@@ -185,12 +187,12 @@ def _ms_bfs_sigma(edges: DataFrame, seed_pct: int, max_hops: int):
                 F.col("w").alias("v"),
                 F.lit(it + 1).cast("long").alias("hops"),
                 "sigma",
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
         if new_frontier.limit(1).count() == 0:
             break
-        dist = dist.unionByName(new_frontier).localCheckpoint(eager=True)
+        dist = checkpoint(dist.unionByName(new_frontier), eager=True)
         frontier = new_frontier
     sym.unpersist()
     return dist

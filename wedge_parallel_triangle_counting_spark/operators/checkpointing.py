@@ -3,10 +3,15 @@ algorithms run as checkpointed DataFrame loops with per-partition
 lineage and metrics so any run is resumable mid-iteration).
 
 Two layers:
-- every iteration: `localCheckpoint()` truncates lineage so the plan
+- every iteration: `checkpoint()` truncates lineage so the plan
   doesn't grow linearly with iteration count (the distributed analogue
   of the reference's multi-launch chunking, tc_base.cu:332-356 —
-  bounded work per "launch");
+  bounded work per "launch"). It is the one place package code
+  checkpoints: stock `localCheckpoint` plus a cap on bogus size
+  estimates and a defused lazy mark (two Spark-internal hazards, see
+  the functions below). Depth rule: a loop passes its round index, and
+  every `_EAGER_EVERY`-th (8th) round is a real eager checkpoint, so
+  each chain's RDD lineage spans at most 8 rounds of its own loop;
 - every `checkpoint_every` iterations (when a directory is given):
   durable parquet snapshot + a JSON manifest recording iteration
   number, row count, per-partition row counts (lineage of the physical
@@ -23,6 +28,168 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+# 2^64 bytes = 16 EiB. Any plan-size ESTIMATE above this is provably
+# bogus (no input is that large); see _sanitize_checkpoint_stats.
+_SANE_SIZE_BITS = 64
+
+# Every _EAGER_EVERY-th round of a loop checkpoints for real, bounding
+# each defused chain's RDD lineage depth (see _defuse_lazy_checkpoint's
+# depth-bound note). N=8 keeps a 4x margin under the ~60-round depth
+# where task deserialization was measured to survive, at the cost of
+# one extra job per chain per 8 rounds.
+_EAGER_EVERY = 8
+
+
+def _sanitize_checkpoint_stats(df: DataFrame) -> DataFrame:
+    """Cap the size estimate a localCheckpoint'ed frame carries forward.
+
+    Spark's `Dataset.localCheckpoint` snapshots the pre-checkpoint
+    plan's statistics into the `LogicalRDD` leaf it returns
+    (`LogicalRDD.fromDataset` -> `rewriteStatsAndConstraints`). The
+    size estimate for a join is the PRODUCT of its children's
+    `sizeInBytes` (SizeInBytesOnlyStatsPlanVisitor.default), so in an
+    iterative loop whose round references the carried state k>1 times
+    (hashmin pointer jumping: 5; SCC coloring: 4; h-index doubling: 3)
+    the estimate's BIT LENGTH multiplies by k every round. After ~10
+    rounds the driver is doing Toom-Cook multiplication on multi-
+    megabit BigIntegers inside every stats walk (InjectRuntimeFilter,
+    join selection, the next checkpoint's own snapshot) and a 500-row
+    round that executes in 0.4 s takes minutes to PLAN — jstack shows
+    `java.math.BigInteger.multiplyToomCook3` under
+    `SizeInBytesOnlyStatsPlanVisitor` (round walls measured 0.5 s ->
+    2.7 -> 16 -> 120 s on a 12-round doc-graph fixture; the identical
+    loop with this fix: 0.4 s flat, same per-round change counts).
+
+    The fix: when the captured estimate exceeds 2^64 bytes (16 EiB —
+    physically impossible, purely estimation compounding), rebuild the
+    `LogicalRDD` leaf WITHOUT originStats/originConstraints, keeping
+    the rdd, output, partitioning and ordering. The leaf then reports
+    `spark.sql.defaultSizeInBytes` like any unknown-size relation;
+    explicit broadcast() hints and AQE's runtime-measured sizes are
+    unaffected. Sane estimates (every non-degenerate case, including
+    all single-pass plans) are returned untouched, so plan choices do
+    not change anywhere else. Data is never touched — only planner
+    metadata; per-round change counts and final labels are
+    bit-identical (regression-tested in test_iterative.py).
+    """
+    try:
+        jdf = df._jdf
+        plan = jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() != "LogicalRDD":
+            return df
+        try:
+            size = plan.stats().sizeInBytes()
+            if isinstance(size, int) and size.bit_length() <= _SANE_SIZE_BITS:
+                return df
+        except Exception:
+            # py4j cannot even convert the BigInt (>4300 digits) —
+            # definitely in the compounding regime
+            pass
+        sess = df.sparkSession
+        jvm = sess.sparkContext._jvm
+        none = getattr(getattr(jvm.scala, "None$"), "MODULE$")
+        stripped = jvm.org.apache.spark.sql.execution.LogicalRDD(
+            plan.output(),
+            plan.rdd(),
+            plan.outputPartitioning(),
+            plan.outputOrdering(),
+            plan.isStreaming(),
+            plan.stream(),
+            sess._jsparkSession,
+            none,
+            none,
+        )
+        new_jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            sess._jsparkSession, stripped
+        )
+        return df.__class__(new_jdf, sess)
+    except Exception:  # pragma: no cover — non-classic sessions, API drift
+        return df
+
+
+def _defuse_lazy_checkpoint(df: DataFrame) -> DataFrame:
+    """Un-mark a LAZY localCheckpoint's RDD-level checkpoint machinery,
+    keeping its persistence — closes a Spark-internal deadlock window.
+
+    `RDD.localCheckpoint()` persists the RDD (MEMORY_AND_DISK, disk-
+    backed) and THEN marks `checkpointData`. When the first job that
+    computes such an RDD is launched from a broadcast-exchange thread
+    (e.g. PageRank's dangling-mass broadcast reading the previous
+    iteration's lazily-checkpointed ranks), `RDD.doCheckpoint` runs on
+    that thread and takes the global `RDDCheckpointData$` monitor then
+    the RDD's own monitor, while `DAGScheduler.getCacheLocs`
+    concurrently takes them in the OPPOSITE order — a lock-order
+    inversion that deadlocks the JVM (observed this round in a
+    partest run: jstack "Found one Java-level deadlock" between
+    `dag-scheduler-event-loop` and `broadcast-exchange-48`, the same
+    mechanism as the r5 bloom_probe deadlock fixed in
+    checkpointing.finish_with_caches). Every lazy checkpoint consumed
+    under a broadcast before any other action is a standing instance
+    of this race.
+
+    Clearing `checkpointData` (public-in-bytecode `checkpointData_$eq`)
+    removes the only party that ever locks `RDDCheckpointData$`, while:
+    - the persistence set BEFORE marking stays, so blocks still cache
+      on first compute exactly as before (lazy localCheckpoint IS
+      persist-based) — execution and results are bit-identical;
+    - the LOGICAL plan stays truncated at the LogicalRDD leaf (the
+      Catalyst-level growth localCheckpoint exists to stop);
+    - RDD-level lineage is retained instead of truncated, which is
+      strictly SAFER under block eviction (recompute instead of
+      "checkpoint block not found") at the cost of a linear driver
+      DAG walk per job — microseconds at realistic round counts.
+
+    Eager checkpoints are left untouched: their materialization (and
+    doCheckpoint) completes inside the call on the action thread.
+
+    Depth bound: defused frames retain RDD lineage, so an unbounded
+    chain of them grows the serialized task object graph without limit
+    — at ~120 chained PageRank iterations Java task DESERIALIZATION
+    overflows the executor thread stack (ObjectInputStream recursion;
+    reproduced, ~60 iterations survive). `checkpoint()` therefore leaves
+    every `_EAGER_EVERY`-th round's checkpoint as a REAL eager one:
+    eager materialization runs on the action thread while every other
+    frame in the plan is unmarked, so it cannot hit the broadcast-
+    thread deadlock, and the completed checkpoint truncates RDD
+    lineage, bounding chain depth to `_EAGER_EVERY` rounds."""
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() != "LogicalRDD":
+            return df
+        jrdd = plan.rdd()
+        if jrdd.checkpointData().isDefined() and not (
+            jrdd.isCheckpointedAndMaterialized()
+        ):
+            jvm = df.sparkSession.sparkContext._jvm
+            none = getattr(getattr(jvm.scala, "None$"), "MODULE$")
+            getattr(jrdd, "checkpointData_$eq")(none)
+    except Exception:  # pragma: no cover — non-classic sessions, API drift
+        pass
+    return df
+
+
+def checkpoint(
+    df: DataFrame, eager: bool = False, round: int | None = None
+) -> DataFrame:
+    """Truncate `df`'s lineage: the one way package code checkpoints.
+
+    Stock `localCheckpoint` plus the two Spark-internal fixes above:
+    the size-estimate cap always, and a lazy checkpoint is defused
+    (persisted, not marked) — unless `round` is a positive multiple of
+    `_EAGER_EVERY`, when it is a real eager checkpoint. A loop passes
+    the index of the loop that carries the chain, so every chain's RDD
+    lineage is cut at least once per `_EAGER_EVERY` of its own rounds,
+    whatever else runs in the process; a one-shot call passes nothing.
+    """
+    if round is not None and round > 0 and round % _EAGER_EVERY == 0:
+        eager = True
+    if eager:
+        return _sanitize_checkpoint_stats(df.localCheckpoint(eager=True))
+    return _sanitize_checkpoint_stats(
+        _defuse_lazy_checkpoint(df.localCheckpoint(eager=False))
+    )
 
 
 def finish_with_caches(
@@ -195,7 +362,7 @@ class CheckpointedLoop:
         `eager=False` defers checkpoint materialization to the caller's
         next action (e.g. a convergence count) — one job per round
         instead of two when the caller counts immediately after."""
-        df = df.localCheckpoint(eager=eager)
+        df = checkpoint(df, eager=eager, round=iteration)
         if self.collect_partition_stats:
             pstats = (
                 df.groupBy(F.spark_partition_id().alias("pid")).count().collect()

@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .checkpointing import loop_layout, loop_partitions
+from .checkpointing import checkpoint, loop_layout, loop_partitions
 from .graph import build_sym_clustered
 
 _DEC = "decimal(38,0)"
@@ -55,10 +55,10 @@ def louvain_move_rounds(edges: DataFrame, num_rounds: int = 2) -> DataFrame:
     npart = loop_partitions(spark)
     key, bcast_state = loop_layout(edges)
     sym = build_sym_clustered(edges, npart, key=key).persist()
-    deg = (
+    deg = checkpoint(
         sym.groupBy(F.col("src").alias("v"))
-        .agg(F.count("*").cast("long").alias("kv"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").cast("long").alias("kv")),
+        eager=True,
     )
     m2 = sym.count()  # = 2m, one driver scalar
 
@@ -67,10 +67,8 @@ def louvain_move_rounds(edges: DataFrame, num_rounds: int = 2) -> DataFrame:
     # re-reads kv from the checkpointed state (r6 — one join and one
     # broadcast build fewer per round)
     comm = deg.select("v", F.col("v").alias("community"), "kv")
-    for _ in range(num_rounds):
-        comm = _louvain_round(sym, comm, m2, bcast_state).localCheckpoint(
-            eager=False
-        )
+    for rnd in range(num_rounds):
+        comm = checkpoint(_louvain_round(sym, comm, m2, bcast_state), round=rnd)
     comm = comm.select("v", F.col("community").cast("long").alias("community"))
     comm.count()
     sym.unpersist()
@@ -223,18 +221,18 @@ def louvain_move_rounds_weighted(
             F.col("cb").alias("src"), F.col("ca").alias("dst"), "weight"
         )
     )
-    strength = (
+    strength = checkpoint(
         sym.select(F.col("src").alias("v"), F.col("weight").alias("w2"))
         .unionByName(loops)
         .groupBy("v")
-        .agg(F.sum("w2").cast("long").alias("sv"))
-        .localCheckpoint(eager=True)
+        .agg(F.sum("w2").cast("long").alias("sv")),
+        eager=True,
     )
     m2 = strength.agg(F.sum("sv")).first()[0] or 0
 
     comm = strength.select("v", F.col("v").alias("community"))
     w = Window.partitionBy("v").orderBy(F.desc("score"), F.asc("c"))
-    for _ in range(num_rounds):
+    for rnd in range(num_rounds):
         cs = (
             comm.join(strength, "v")
             .groupBy(F.col("community").alias("c"))
@@ -274,10 +272,10 @@ def louvain_move_rounds_weighted(
         )
         # loop-only vertices (no non-loop neighbor -> no kvc row) keep
         # their current community
-        comm = (
+        comm = checkpoint(
             comm.join(best, "v", "left")
-            .select("v", F.coalesce("cnew", "community").alias("community"))
-            .localCheckpoint(eager=False)
+            .select("v", F.coalesce("cnew", "community").alias("community")),
+            round=rnd,
         )
     comm = comm.select(
         F.col("v").cast("long").alias("v"),

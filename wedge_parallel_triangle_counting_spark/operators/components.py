@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from .checkpointing import (
     LOOP_BROADCAST_INPUT_MAX,
     CheckpointedLoop,
+    checkpoint,
     loop_partitions,
 )
 from .graph import normalize_edges
@@ -35,25 +36,6 @@ from .graph import normalize_edges
 # BENCH_r02); above it, diameter risk dominates — a web crawl's long
 # chains would make hashmin run O(diameter) full-graph rounds.
 AUTO_HASHMIN_MAX_EDGES = 50_000_000
-
-# Whether star rounds dedup the large-star output / small-star self
-# rows before the small-star join. r3 dropped them to save a shuffle
-# per round and BENCH_r03 recorded a 9.94 s → 14.10 s "regression";
-# two r4 interleaved A/Bs (order counterbalanced, 12 pairs, sf0.1 and
-# a 16x-amplified graph — BENCH/RUNS.md r4-a) show the variants within
-# noise of each other (dedup-off slightly ahead, 8/12 pairs) and both
-# far under the r3 number, so the r3 delta was host phasing. Default
-# stays OFF: fewer exchanges per round is the safer bet when shuffle
-# volume, not duplicate inflation, dominates at real scale.
-STAR_DEDUP_ROUNDS = False
-
-# How star rounds compute the per-vertex neighborhood min: "agg"
-# (groupBy + join back) or "window" (single-exchange window min).
-# Interleaved A/B (BENCH/RUNS.md r4-j): window wins ALL reps on both
-# the sf0.1 and 16x-amplified graphs — 16.6→8.9 s and 44→27 s vs the
-# shipped shape — because each star step drops from two exchanges of
-# the 2m-row neighbor relation (groupBy + join back) to one.
-STAR_ROUND_IMPL = "window"
 
 # Whether hashmin rounds add the pointer-jumping grandparent term
 # (label(label(v))). OFF by default: on low-diameter graphs the jump
@@ -302,7 +284,6 @@ def _components_star(
     checkpoint_dir: str | None,
     checkpoint_every: int,
     resume: bool,
-    dedup_rounds: bool = STAR_DEDUP_ROUNDS,
 ) -> DataFrame:
     """Alternating large-star / small-star contraction over the
     persisted canonical edge set `e` (count `prev_cnt`). State is the
@@ -322,18 +303,16 @@ def _components_star(
             cur, start = got
             prev_cnt = cur.count()
 
-    cur, prev_cnt = _star_rounds(
-        loop, cur, prev_cnt, start, max_iters, dedup_rounds=dedup_rounds
-    )
+    cur, prev_cnt = _star_rounds(loop, cur, prev_cnt, start, max_iters)
     # parent table: every vertex points to its component min (vertex
     # set from the persisted canonical edges — materialized via
     # localCheckpoint so `e` can be released before returning the
     # still-lazy result)
-    verts = (
+    verts = checkpoint(
         e.select(F.col("src").alias("v"))
         .unionByName(e.select(F.col("dst").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        eager=True,
     )
     e.unpersist()
     parents = cur.select(F.col("src").alias("v"), F.col("dst").alias("component"))
@@ -349,33 +328,25 @@ def _star_rounds(
     prev_cnt: int,
     start: int,
     max_iters: int,
-    dedup_rounds: bool = STAR_DEDUP_ROUNDS,
-    impl: str | None = None,
-    small_pre_dedup: bool = False,
 ) -> tuple[DataFrame, int]:
     """Alternating large-star / small-star rounds until the edge
     relation stabilizes; returns (final relation, its count).
 
-    `dedup_rounds` controls the two intermediate distincts inside a
-    round (on the large-star output and the small-star self rows).
-    They are semantically optional — every downstream consumer is a
-    min-agg or ends in a distinct — so the trade is one saved shuffle
-    per round (off) vs a duplicate-inflated relation through the
-    small-star join (on). Counterbalanced interleaved A/Bs at sf0.1
-    and 16x-amplified measured the variants within host noise
-    (BENCH/RUNS.md r4-a), so the default keeps the fewer-shuffles
-    shape.
+    No intermediate distincts inside a round (on the large-star output
+    or the small-star self rows): they are semantically optional —
+    every downstream consumer is a min-agg or ends in a distinct — and
+    counterbalanced interleaved A/Bs at sf0.1 and 16x-amplified
+    measured them within host noise (BENCH/RUNS.md r4-a), so a round
+    keeps the fewer-shuffles shape.
 
-    `impl` picks how the per-vertex neighborhood min is computed:
-    - "agg" — groupBy(src).min + equi-join back (two exchanges of the
-      2m-row neighbor relation per star step, AQE may broadcast the
-      n-row min side at small scale — but can't at 100 TB).
-    - "window" — a single `min().over(Window.partitionBy(src))`: ONE
-      exchange of the neighbor relation per star step regardless of
-      scale, at the cost of an in-partition sort. Fewer exchanges is
-      the at-scale term (the n-row min side stops broadcasting long
-      before 10^12 edges).
-    Default is STAR_ROUND_IMPL (interleaved A/B, BENCH/RUNS.md r4-j).
+    The per-vertex neighborhood min is a single
+    `min().over(Window.partitionBy(src))`: ONE exchange of the 2m-row
+    neighbor relation per star step regardless of scale, at the cost
+    of an in-partition sort. The groupBy(src).min + join-back form
+    pays two exchanges (AQE may broadcast the n-row min side at small
+    scale, but not at 100 TB); window won every rep of an interleaved
+    A/B on both the sf0.1 and 16x-amplified graphs (BENCH/RUNS.md
+    r4-j).
 
     The final canonicalization relies on an invariant of the
     small-star output: every emitted row has dst = min(neighborhood
@@ -383,17 +354,8 @@ def _star_rounds(
     own src), so rows are already (large, small)-canonical and the
     single trailing distinct both dedups and finishes the round — no
     pre-dedup of the join output is needed."""
-    if impl is None:
-        impl = STAR_ROUND_IMPL
-    wsrc = Window.partitionBy("src")
-
-    def _with_min(rel: DataFrame) -> DataFrame:
-        """rel[src,dst] -> rel + per-src neighborhood min column `mn`."""
-        if impl == "window":
-            return rel.withColumn("mn", F.min("dst").over(wsrc))
-        mins = rel.groupBy("src").agg(F.min("dst").alias("mn"))
-        return rel.join(mins, "src")
-
+    # per-src neighborhood min, added as column `mn`
+    nbr_min = F.min("dst").over(Window.partitionBy("src"))
     for it in range(start, max_iters):
         # large-star: for each u, connect all strictly-larger neighbors
         # to min(neighborhood ∪ {u})
@@ -401,34 +363,28 @@ def _star_rounds(
             cur.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
         large = (
-            _with_min(nbrs)
+            nbrs.withColumn("mn", nbr_min)
             .filter(F.col("dst") > F.col("src"))
             .select(F.col("dst").alias("src"), F.least("mn", F.col("src")).alias("dst"))
             .filter(F.col("src") != F.col("dst"))
         )
-        if dedup_rounds:
-            large = large.distinct()
         # lazy checkpoint (r6): the small-star step reads `large` FOUR
         # times (nbrs2 twice, its self rows twice) and the window min
         # above only shares its exchange, not the sort — one cached
         # compute replaces up to four window re-evaluations per round
-        large = large.localCheckpoint(eager=False)
+        large = checkpoint(large, round=it)
         # small-star: for each u, connect all smaller-or-equal neighbors
         # to the min
         nbrs2 = large.select("src", "dst").unionByName(
             large.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
         self_rows = nbrs2.select(F.col("src"), F.col("src").alias("dst"))
-        if dedup_rounds:
-            self_rows = self_rows.distinct()
         small_nbrs = nbrs2.filter(F.col("dst") < F.col("src")).unionByName(self_rows)
         small = (
-            _with_min(small_nbrs)
+            small_nbrs.withColumn("mn", nbr_min)
             .select(F.col("dst").alias("src"), F.col("mn").alias("dst"))
             .filter(F.col("src") != F.col("dst"))
         )
-        if small_pre_dedup:  # the pre-r4 shipped shape, kept for A/B
-            small = small.distinct()
         new_cur = small.select(
             F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
         ).distinct()

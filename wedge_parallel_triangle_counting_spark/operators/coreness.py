@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpointing import loop_partitions
+from .checkpointing import checkpoint, loop_partitions
 from .graph import build_sym_clustered
 
 # h-index of a DESC-sorted int array: the indicator arr[i] >= i+1
@@ -51,10 +51,10 @@ def core_numbers(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
     spark = edges.sparkSession
     npart = loop_partitions(spark)
     sym = build_sym_clustered(edges, npart, key="dst").persist()
-    state = (
+    state = checkpoint(
         sym.groupBy(F.col("dst").alias("v"))
-        .agg(F.count(F.lit(1)).cast("int").alias("c"))
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).cast("int").alias("c")),
+        eager=True,
     )
     # TWO h-index steps per materialized job (r6): the step sequence
     # H, H², H³… is unchanged (total steps still capped at max_rounds,
@@ -69,7 +69,8 @@ def core_numbers(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
     remaining = max_rounds
     while remaining > 0:
         mid = _hindex_step(sym, state) if remaining >= 2 else state
-        new_state = _hindex_round(sym, mid).localCheckpoint(eager=False)
+        rnd = (max_rounds - remaining) // 2  # this loop's round index
+        new_state = checkpoint(_hindex_round(sym, mid), round=rnd)
         remaining -= 2 if remaining >= 2 else 1
         changed = (
             new_state.agg(F.coalesce(F.sum("chg"), F.lit(0))).collect()[0][0]

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpointing import CheckpointedLoop, loop_partitions
+from .checkpointing import CheckpointedLoop, checkpoint, loop_partitions
 from .graph import build_sym_clustered
 
 
@@ -113,7 +113,7 @@ def eigenvector_centrality(
     # scratch frames are released; a zero-iteration call has no
     # checkpoint yet, so sever its lineage from sym explicitly
     if prev_raw is None:
-        state = state.localCheckpoint(eager=True)
+        state = checkpoint(state, eager=True)
     else:
         state.count()
     sym.unpersist()

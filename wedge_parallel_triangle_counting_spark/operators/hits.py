@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpointing import CheckpointedLoop, loop_partitions
+from .checkpointing import CheckpointedLoop, checkpoint, loop_partitions
 from .graph import normalize_edges
 
 
@@ -173,21 +173,24 @@ def hits(
     # or a resumed-finished run) — then the state itself carries both
     # columns (initial or durable-snapshot schema).
     if a is None:
-        out = verts.join(state, "v", "left").select(
-            "v",
-            F.coalesce("hub", F.lit(0.0)).alias("hub"),
-            F.coalesce("authority", F.lit(0.0)).alias("authority"),
-        ).localCheckpoint(eager=True)
+        out = checkpoint(
+            verts.join(state, "v", "left").select(
+                "v",
+                F.coalesce("hub", F.lit(0.0)).alias("hub"),
+                F.coalesce("authority", F.lit(0.0)).alias("authority"),
+            ),
+            eager=True,
+        )
     else:
-        out = (
+        out = checkpoint(
             verts.join(state.select("v", "hub"), "v", "left")
             .join(a, "v", "left")
             .select(
                 "v",
                 F.coalesce("hub", F.lit(0.0)).alias("hub"),
                 F.coalesce("authority", F.lit(0.0)).alias("authority"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
     for c in prev_scratch:
         c.unpersist()

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpointing import loop_partitions
+from .checkpointing import checkpoint, loop_partitions
 from .graph import normalize_edges
 
 _DEC = "decimal(38,0)"
@@ -64,28 +64,28 @@ def katz_centrality_scaled(
     walks = verts.select("v", F.lit(1).cast(_DEC).alias("w"))
     acc = verts.select("v", F.lit(0).cast(_DEC).alias("acc"))
     for k in range(1, num_iters + 1):
-        walks = (
+        walks = checkpoint(
             e.join(walks, e.src == walks.v)
             .groupBy(F.col("dst").alias("v"))
-            .agg(F.sum("w").cast(_DEC).alias("w"))
-            .localCheckpoint(eager=False)
+            .agg(F.sum("w").cast(_DEC).alias("w")),
+            round=k,
         )
         mult = F.lit(beta_den ** (num_iters - k)).cast(_DEC)
-        acc = (
+        acc = checkpoint(
             acc.join(walks, "v", "left")
             .select(
                 "v",
                 (
                     F.col("acc") + mult * F.coalesce("w", F.lit(0).cast(_DEC))
                 ).cast(_DEC).alias("acc"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            round=k,
         )
         # vertices with no in-walks drop out of `walks` (sparse state,
         # the HITS lesson) but stay in `acc` via the left join
         walks = walks.filter(F.col("w") > 0)
     out = acc.select("v", F.col("acc").alias("katz_scaled"))
-    out = out.localCheckpoint(eager=True)
+    out = checkpoint(out, eager=True)
     e.unpersist()
     verts.unpersist()
     return out

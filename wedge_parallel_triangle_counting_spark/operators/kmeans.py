@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .checkpointing import checkpoint
+
 OFFSET = 1 << 24
 SCALE = 1_000_000
 
@@ -103,27 +105,33 @@ def kmeans_fit(
     init = "hash" (k smallest-md5 vectors) or "farthest"
     (deterministic k-means++-style farthest-first seeding)."""
     spark = embeddings.sparkSession
-    vecs = embeddings.select(
-        F.col(id_col).alias("vec_id"), _quantize(F.col(vec_col)).alias("q")
-    ).localCheckpoint(eager=True)
+    vecs = checkpoint(
+        embeddings.select(
+            F.col(id_col).alias("vec_id"), _quantize(F.col(vec_col)).alias("q")
+        ),
+        eager=True,
+    )
 
     seed_h = _h64(F.concat(F.lit("km:"), F.col("vec_id").cast("string")))
     from pyspark.sql.window import Window
 
     if init == "farthest":
-        cents = _farthest_init(vecs, k).localCheckpoint(eager=True)
+        cents = checkpoint(_farthest_init(vecs, k), eager=True)
     elif init == "hash":
         hinit = (
             vecs.select("vec_id", "q", seed_h.alias("h"))
             .orderBy("h", "vec_id")
             .limit(k)
         )
-        cents = hinit.select(
-            (
-                F.row_number().over(Window.orderBy("h", "vec_id")) - 1
-            ).alias("cid"),
-            F.col("q").alias("cq"),
-        ).localCheckpoint(eager=True)
+        cents = checkpoint(
+            hinit.select(
+                (
+                    F.row_number().over(Window.orderBy("h", "vec_id")) - 1
+                ).alias("cid"),
+                F.col("q").alias("cq"),
+            ),
+            eager=True,
+        )
     else:
         raise ValueError(f"unknown init {init!r}")
 
@@ -134,7 +142,7 @@ def kmeans_fit(
     )
 
     def _update(asg):
-        return (
+        return checkpoint(
             asg.select("cluster", F.posexplode("q").alias("pos", "val"))
             .groupBy("cluster", "pos")
             .agg(F.expr("sum(val) div count(*)").alias("cv"))
@@ -144,8 +152,8 @@ def kmeans_fit(
                     F.collect_list(F.struct("pos", "cv"))
                 ).alias("pv")
             )
-            .select("cid", F.col("pv.cv").alias("cq"))
-            .localCheckpoint(eager=True)
+            .select("cid", F.col("pv.cv").alias("cq")),
+            eager=True,
         )
 
     assign = None
@@ -158,7 +166,7 @@ def kmeans_fit(
             .select("vec_id", "q", F.col("m.cid").alias("cluster"))
         )
         if it == num_iters - 1:
-            assign = assign.localCheckpoint(eager=True)
+            assign = checkpoint(assign, eager=True)
             break
         cents = _update(assign)
     return assign, _update(assign)

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .checkpointing import loop_partitions
+from .checkpointing import checkpoint, loop_partitions
 
 
 def propagate_labels(
@@ -62,7 +62,7 @@ def propagate_labels(
         .otherwise(F.lit("unlabeled"))
         .alias("origin"),
     )
-    for _ in range(rounds):
+    for rnd in range(rounds):
         labeled = state.filter(F.col("label").isNotNull()).select(
             F.col("v").alias("dst"), F.col("label").alias("nbr_label")
         )
@@ -77,7 +77,7 @@ def propagate_labels(
             .filter(F.col("rk") == 1)
             .select("v", F.col("nbr_label").alias("vote"))
         )
-        state = (
+        state = checkpoint(
             state.join(winner, "v", "left")
             .select(
                 "v",
@@ -88,8 +88,8 @@ def propagate_labels(
                 )
                 .otherwise(F.col("origin"))
                 .alias("origin"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            round=rnd,
         )
     n_unlabeled = state.filter(F.col("label").isNull()).count()  # materialize
     _ = n_unlabeled

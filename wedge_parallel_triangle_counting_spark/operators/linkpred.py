@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .checkpointing import checkpoint
 from .graph import build_sym_clustered
 
 
@@ -145,7 +146,7 @@ def common_neighbor_pairs(
         )
         # eager localCheckpoint pins the (k-bounded) result before the
         # cached symmetric table is released — no driver materialization
-        out = top.localCheckpoint(eager=True)
+        out = checkpoint(top, eager=True)
     finally:
         sym.unpersist()
     return out
@@ -214,7 +215,7 @@ def link_prediction_scores(
             .orderBy(F.desc("score"), F.asc("id_a"), F.asc("id_b"))
             .limit(k)
         )
-        out = top.localCheckpoint(eager=True)
+        out = checkpoint(top, eager=True)
     finally:
         sym.unpersist()
     return out

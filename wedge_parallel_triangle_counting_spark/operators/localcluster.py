@@ -47,7 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .checkpointing import loop_partitions
+from .checkpointing import checkpoint, loop_partitions
 from .graph import build_sym_clustered
 
 UNIT = 10**12
@@ -77,10 +77,9 @@ def ppr_push(
     sym = build_sym_clustered(edges, npart, key="src").persist()
     # lazy: the seed/seed-degree lookup right below is the first action
     # and materializes it — no dedicated checkpoint job (r6)
-    deg = (
+    deg = checkpoint(
         sym.groupBy(F.col("src").alias("v"))
         .agg(F.count("*").cast("long").alias("kv"))
-        .localCheckpoint(eager=False)
     )
     if seed is None:
         row = deg.orderBy(F.desc("kv"), F.asc("v")).first()
@@ -91,7 +90,7 @@ def ppr_push(
     epsu = max(1, UNIT // (eps_deg_factor * seed_deg))
 
     state = spark.createDataFrame([(seed, 0, UNIT)], "v long, p long, r long")
-    for _ in range(num_rounds):
+    for rnd in range(num_rounds):
         fr = (
             state.join(deg, "v")
             .filter(F.col("r") >= F.col("kv") * F.lit(epsu))
@@ -133,11 +132,13 @@ def ppr_push(
             .select(F.col("dst").alias("v"), F.lit(0).cast("long").alias("p"),
                     F.col("share").alias("r"))
         )
-        state = (
+        state = checkpoint(
             held.unionByName(inc)
             .groupBy("v")
-            .agg(F.sum("p").cast("long").alias("p"), F.sum("r").cast("long").alias("r"))
-            .localCheckpoint(eager=False)
+            .agg(
+                F.sum("p").cast("long").alias("p"), F.sum("r").cast("long").alias("r")
+            ),
+            round=rnd,
         )
     state.count()
     sym.unpersist()
@@ -179,7 +180,7 @@ def sweep_cut(
     # materialize inside the single terminal job, which computes the
     # window once and caches it — the old eager checkpoint was a
     # dedicated job (r6)
-    ranked = (
+    ranked = checkpoint(
         push_state.filter(F.col("p") > 0)
         .join(deg, "v")
         .withColumn("q", F.expr("p * 1000000 div kv"))
@@ -187,7 +188,6 @@ def sweep_cut(
             "rank",
             F.row_number().over(Window.orderBy(F.desc("q"), F.asc("v"))),
         )
-        .localCheckpoint(eager=False)
     )
     rk = ranked.select("v", "rank")
     ev = (
@@ -231,6 +231,6 @@ def sweep_cut(
             F.expr("cut * 1000000 div den").alias("cond_ppm"),
         )
     )
-    res = out.localCheckpoint(eager=True)
+    res = checkpoint(out, eager=True)
     clean.unpersist()
     return res

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpointing import loop_partitions
+from .checkpointing import checkpoint, loop_partitions
 from .graph import drop_self_loops, normalize_edges
 
 
@@ -59,14 +59,14 @@ def maximal_matching(edges: DataFrame, max_rounds: int = 32) -> DataFrame:
     spark = edges.sparkSession
     npart = loop_partitions(spark)
     clean = drop_self_loops(normalize_edges(edges))
-    act = (
+    act = checkpoint(
         clean.select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .distinct()
         .select("a", "b", _priority(F.col("a"), F.col("b")).alias("p"))
-        .repartition(npart, "a")
-        .localCheckpoint(eager=True)
+        .repartition(npart, "a"),
+        eager=True,
     )
     matched: list[DataFrame] = []
     for rnd in range(1, max_rounds + 1):
@@ -76,12 +76,12 @@ def maximal_matching(edges: DataFrame, max_rounds: int = 32) -> DataFrame:
             act.select(F.col("b").alias("v"), "p")
         )
         vmin = ends.groupBy("v").agg(F.min("p").alias("mn"))
-        sel = (
+        sel = checkpoint(
             act.join(vmin.withColumnRenamed("v", "a").withColumnRenamed("mn", "ma"), "a")
             .join(vmin.withColumnRenamed("v", "b").withColumnRenamed("mn", "mb"), "b")
             .filter((F.col("p") == F.col("ma")) & (F.col("p") == F.col("mb")))
-            .select("a", "b", F.lit(rnd).alias("round"))
-            .localCheckpoint(eager=True)
+            .select("a", "b", F.lit(rnd).alias("round")),
+            eager=True,
         )
         # the globally minimal active edge is always a local minimum,
         # so sel is nonempty whenever act is nonempty
@@ -89,16 +89,16 @@ def maximal_matching(edges: DataFrame, max_rounds: int = 32) -> DataFrame:
         gone = sel.select(F.col("a").alias("v")).unionByName(
             sel.select(F.col("b").alias("v"))
         )
-        act = (
+        act = checkpoint(
             act.join(gone.withColumnRenamed("v", "a"), "a", "left_anti")
             .join(gone.withColumnRenamed("v", "b"), "b", "left_anti")
             .select("a", "b", "p")
-            .repartition(npart, "a")
-            .localCheckpoint(eager=True)
+            .repartition(npart, "a"),
+            eager=True,
         )
     if not matched:
         return spark.createDataFrame([], "a long, b long, round int")
     out = matched[0]
     for s in matched[1:]:
         out = out.unionByName(s)
-    return out.localCheckpoint(eager=True)
+    return checkpoint(out, eager=True)

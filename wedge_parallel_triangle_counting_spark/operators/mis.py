@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpointing import loop_partitions
+from .checkpointing import checkpoint, loop_partitions
 from .graph import build_sym_clustered
 
 # 2^31: leaves the 32-bit md5 prefix in the high bits and any vertex
@@ -74,12 +74,12 @@ def _luby_rounds(
     # them the act/sel plans nest one level per round and Catalyst
     # stack-overflows past a few dozen rounds (coloring runs O(longest
     # increasing-priority path) rounds)
-    act = (
+    act = checkpoint(
         sym.select(F.col("src").alias("v"))
         .distinct()
         .select("v", _priority(F.col("v")).alias("p"))
-        .repartition(npart, "v")
-        .localCheckpoint(eager=True)
+        .repartition(npart, "v"),
+        eager=True,
     )
     selections: list[DataFrame] = []
     for rnd in range(1, max_rounds + 1):
@@ -93,11 +93,11 @@ def _luby_rounds(
             )
         )
         nbr_min = live.groupBy("src").agg(F.min("pd").alias("mn"))
-        sel = (
+        sel = checkpoint(
             act.join(nbr_min.withColumnRenamed("src", "v"), "v", "left")
             .filter(F.col("mn").isNull() | (F.col("p") < F.col("mn")))
-            .select("v", F.lit(rnd).alias("round"))
-            .localCheckpoint(eager=True)
+            .select("v", F.lit(rnd).alias("round")),
+            eager=True,
         )
         if sel.limit(1).count() == 0:
             # only possible when act is empty (the min-priority active
@@ -112,10 +112,10 @@ def _luby_rounds(
                 .distinct()
             )
             gone = gone.unionByName(dominated)
-        act = (
+        act = checkpoint(
             act.join(gone, "v", "left_anti")
-            .repartition(npart, "v")
-            .localCheckpoint(eager=True)
+            .repartition(npart, "v"),
+            eager=True,
         )
         if act.limit(1).count() == 0:
             break
@@ -125,7 +125,7 @@ def _luby_rounds(
         out = selections[0]
         for s in selections[1:]:
             out = out.unionByName(s)
-        out = out.localCheckpoint(eager=True)
+        out = checkpoint(out, eager=True)
     sym.unpersist()
     return out
 

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpointing import finish_with_caches, loop_partitions
+from .checkpointing import checkpoint, finish_with_caches, loop_partitions
 from .graph import normalize_edges
 from .truss import canonical_edges, enumerate_triangles
 
@@ -224,7 +224,7 @@ def rich_club(edges: DataFrame, max_k_log2: int = 12) -> DataFrame:
             ).alias("phi_ppm"),
         )
     )
-    res = out.localCheckpoint(eager=True)
+    res = checkpoint(out, eager=True)
     und.unpersist()
     return res
 
@@ -250,11 +250,11 @@ def hub_ego_stats(edges: DataFrame, top_h: int = 10) -> DataFrame:
         .groupBy("v")
         .agg(F.count(F.lit(1)).cast("long").alias("kv"))
     )
-    hubs = (
+    hubs = checkpoint(
         deg.orderBy(F.desc("kv"), F.asc("v"))
         .limit(top_h)
-        .select(F.col("v").alias("hub"), F.col("kv").alias("hub_deg"))
-        .localCheckpoint(eager=True)
+        .select(F.col("v").alias("hub"), F.col("kv").alias("hub_deg")),
+        eager=True,
     )
     inc = und.select(F.col("src").alias("v"), F.col("dst").alias("nbr")).unionByName(
         und.select(F.col("dst").alias("v"), F.col("src").alias("nbr"))
@@ -284,7 +284,7 @@ def hub_ego_stats(edges: DataFrame, top_h: int = 10) -> DataFrame:
             ).alias("density_ppm"),
         )
     )
-    res = out.localCheckpoint(eager=True)
+    res = checkpoint(out, eager=True)
     und.unpersist()
     return res
 
@@ -326,6 +326,6 @@ def quadrilateral_count(edges: DataFrame) -> DataFrame:
         .cast("long")
         .alias("quads"),
     )
-    res = out.localCheckpoint(eager=True)
+    res = checkpoint(out, eager=True)
     und.unpersist()
     return res

@@ -26,10 +26,11 @@ Scale design (r3, after profiling the 0.67 scaling efficiency):
   2-round durable run over 168 k links on 4 cores cost 500 tasks,
   three 64-task union stages of ~550 ms each among them (77 tasks at
   4 partitions).
-- `localCheckpoint(eager=False)` truncates lineage without a
+- a lazy `checkpointing.checkpoint` truncates lineage without a
   dedicated materialization job per iteration (the next action — the
   dangling broadcast — materializes it; iterative lineage blowup,
-  SURVEY §7.3).
+  SURVEY §7.3). Every 8th round's checkpoint is eager, which bounds
+  the RDD lineage of the carried ranks to 8 rounds.
 """
 
 from __future__ import annotations
@@ -37,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpointing import CheckpointedLoop, loop_partitions
+from .checkpointing import CheckpointedLoop, checkpoint, loop_partitions
 
 
 def _prepare(edges: DataFrame, weight_col: str | None, npart: int):
@@ -273,17 +274,19 @@ def _iterate(
             # static caches and both rank states are live — the caller
             # reads the list only after pagerank() released them
             residuals.append(
-                new_ranks.alias("a")
-                .join(ranks.alias("b"), "v")
-                .agg(
-                    F.round(
-                        F.sum(F.abs(F.col("a.pr") - F.col("b.pr"))), 6
-                    ).alias("l1_residual")
+                checkpoint(
+                    new_ranks.alias("a")
+                    .join(ranks.alias("b"), "v")
+                    .agg(
+                        F.round(
+                            F.sum(F.abs(F.col("a.pr") - F.col("b.pr"))), 6
+                        ).alias("l1_residual")
+                    )
+                    .select(
+                        F.lit(it + 1).cast("long").alias("iter"), "l1_residual"
+                    ),
+                    eager=True,
                 )
-                .select(
-                    F.lit(it + 1).cast("long").alias("iter"), "l1_residual"
-                )
-                .localCheckpoint(eager=True)
             )
         delta = None
         if tol is not None:
@@ -405,7 +408,7 @@ def pagerank_topics(
         # same lazy lineage truncation as the plain loop: the next
         # iteration's dangling broadcast (or the terminal count)
         # materializes it
-        ranks = new_ranks.localCheckpoint(eager=False)
+        ranks = checkpoint(new_ranks, round=it)
     # materialize the final (lazily checkpointed) state so the caller's
     # actions never recompute the loop (same contract as pagerank)
     ranks.count()

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .checkpointing import checkpoint
 from .kmeans import _h64, _quantize
 
 
@@ -73,7 +74,7 @@ def pq_fit(
     vecs = emb.select(
         F.col(id_col).alias("vec_id"), _quantize(F.col(vec_col)).alias("q")
     )
-    subs = (
+    subs = checkpoint(
         vecs.select(
             "vec_id",
             F.explode(
@@ -88,8 +89,8 @@ def pq_fit(
                 )
             ).alias("s"),
         )
-        .select("vec_id", "s.m", "s.sq")
-        .localCheckpoint(eager=True)
+        .select("vec_id", "s.m", "s.sq"),
+        eager=True,
     )
 
     seed_h = _h64(
@@ -101,12 +102,12 @@ def pq_fit(
         )
     )
     wseed = Window.partitionBy("m").orderBy("h", "vec_id")
-    cb = (
+    cb = checkpoint(
         subs.select("vec_id", "m", "sq", seed_h.alias("h"))
         .withColumn("code", F.row_number().over(wseed) - 1)
         .filter(F.col("code") < ks)
-        .select("m", "code", F.col("sq").alias("cq"))
-        .localCheckpoint(eager=True)
+        .select("m", "code", F.col("sq").alias("cq")),
+        eager=True,
     )
 
     dist = F.aggregate(
@@ -116,14 +117,14 @@ def pq_fit(
     )
 
     def _update(codes):
-        return (
+        return checkpoint(
             codes.select("m", "code", F.posexplode("sq").alias("pos", "val"))
             .groupBy("m", "code", "pos")
             .agg(F.expr("sum(val) div count(*)").alias("cv"))
             .groupBy("m", "code")
             .agg(F.array_sort(F.collect_list(F.struct("pos", "cv"))).alias("pv"))
-            .select("m", "code", F.col("pv.cv").alias("cq"))
-            .localCheckpoint(eager=True)
+            .select("m", "code", F.col("pv.cv").alias("cq")),
+            eager=True,
         )
 
     codes = None
@@ -136,7 +137,7 @@ def pq_fit(
             .select("vec_id", "m", "sq", F.col("mn.code").alias("code"))
         )
         if it == num_iters - 1:
-            codes = codes.localCheckpoint(eager=True)
+            codes = checkpoint(codes, eager=True)
             break
         cb = _update(codes)
     return codes.select("vec_id", "m", "code"), _update(codes)

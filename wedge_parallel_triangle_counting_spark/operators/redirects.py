@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpointing import loop_partitions
+from .checkpointing import checkpoint, loop_partitions
 
 
 def resolve_redirects(redirects: DataFrame, rounds: int = 6) -> DataFrame:
@@ -54,7 +54,7 @@ def resolve_redirects(redirects: DataFrame, rounds: int = 6) -> DataFrame:
         .distinct()
     )
     is_src = red.select(F.col("src").alias("nxt"), F.lit(True).alias("nxt_is_src"))
-    state = (
+    state = checkpoint(
         univ.join(red, univ.v == red.src, "left")
         .select(
             "v",
@@ -67,8 +67,8 @@ def resolve_redirects(redirects: DataFrame, rounds: int = 6) -> DataFrame:
         # done ⇔ nxt is not itself a redirect source (terminal page)
         .join(is_src, "nxt", "left")
         .select("v", "nxt", "hops", F.col("nxt_is_src").isNull().alias("done"))
-        .repartition(npart, "v")
-        .localCheckpoint(eager=True)
+        .repartition(npart, "v"),
+        eager=True,
     )
     for _ in range(rounds):
         if state.filter(~F.col("done")).isEmpty():
@@ -89,13 +89,13 @@ def resolve_redirects(redirects: DataFrame, rounds: int = 6) -> DataFrame:
                 F.col("done2").alias("done"),
             )
         )
-        state = (
+        state = checkpoint(
             state.filter(F.col("done"))
             .unionByName(jumped)
-            .repartition(npart, "v")
+            .repartition(npart, "v"),
             # eager checkpoint = per-round lineage truncation; the
             # self-join would otherwise double the plan every round
-            .localCheckpoint(eager=True)
+            eager=True,
         )
     red.unpersist()
     return state.select(

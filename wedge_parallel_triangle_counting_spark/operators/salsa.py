@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpointing import CheckpointedLoop, loop_partitions
+from .checkpointing import CheckpointedLoop, checkpoint, loop_partitions
 from .graph import normalize_edges
 
 
@@ -175,14 +175,14 @@ def salsa(
         .unionByName(e_dst.select(F.col("dst").alias("v")))
         .distinct()
     )
-    out = (
+    out = checkpoint(
         verts.join(state, "v", "left")
         .select(
             "v",
             F.coalesce("h", F.lit(0.0)).alias("hub"),
             F.coalesce("a", F.lit(0.0)).alias("authority"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
     e_dst.unpersist()
     e_src.unpersist()

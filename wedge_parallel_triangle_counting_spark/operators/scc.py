@@ -51,7 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpointing import CheckpointedLoop, loop_partitions
+from .checkpointing import CheckpointedLoop, checkpoint, loop_partitions
 from .graph import normalize_edges
 
 
@@ -140,12 +140,12 @@ def strongly_connected_components(
         fingerprint={"edges": m} if checkpoint_dir else None,
     )
 
-    active = (
+    active = checkpoint(
         e.select(F.col("src").alias("v"))
         .unionByName(e.select(F.col("dst").alias("v")))
         .distinct()
-        .repartition(npart, "v")
-        .localCheckpoint(eager=True)
+        .repartition(npart, "v"),
+        eager=True,
     )
     done: DataFrame | None = None
     step = 0  # global step counter for the checkpoint loop history
@@ -170,15 +170,13 @@ def strongly_connected_components(
         # handled correctly by the coloring peel, so hitting max_inner
         # just falls through.
         pre_trim, n_pre = active, n_active
-        for _ in range(max_inner):
+        for it in range(max_inner):
             ef = fwd.join(
                 active.withColumnRenamed("v", "src"), "src", "left_semi"
             ).join(active.withColumnRenamed("v", "dst"), "dst", "left_semi")
             srcs = ef.select(F.col("src").alias("v")).distinct()
             dsts = ef.select(F.col("dst").alias("v")).distinct()
-            new_active = srcs.join(dsts, "v", "left_semi").localCheckpoint(
-                eager=False
-            )
+            new_active = checkpoint(srcs.join(dsts, "v", "left_semi"), round=it)
             n_new = new_active.count()
             if n_new == n_active:
                 break  # new ⊆ old with equal count ⇒ identical set
@@ -192,7 +190,7 @@ def strongly_connected_components(
             done = (
                 assigned
                 if done is None
-                else done.unionByName(assigned).localCheckpoint(eager=False)
+                else checkpoint(done.unionByName(assigned), round=outer)
             )
         if n_active == 0:
             break
@@ -271,7 +269,7 @@ def strongly_connected_components(
             new_frontier = grown.join(marked, "v", "left_anti")
             marked = loop.step(marked.unionByName(new_frontier), step, eager=False)
             step += 1
-            frontier = new_frontier.localCheckpoint(eager=False)
+            frontier = checkpoint(new_frontier, round=it)
             n_new = frontier.count()
             loop.history[-1]["extra"].update(
                 {"outer": outer, "phase": "mark", "frontier": n_new}
@@ -288,10 +286,10 @@ def strongly_connected_components(
         done = (
             assigned
             if done is None
-            else done.unionByName(assigned).localCheckpoint(eager=False)
+            else checkpoint(done.unionByName(assigned), round=outer)
         )
-        active = active.join(marked.select("v"), "v", "left_anti").localCheckpoint(
-            eager=False
+        active = checkpoint(
+            active.join(marked.select("v"), "v", "left_anti"), round=outer
         )
         if own_ea:  # fwd/rev (outer round 0 full-graph reuse) stay cached
             ea.unpersist()
@@ -304,7 +302,7 @@ def strongly_connected_components(
                 "raise max_outer"
             )
 
-    out = done.repartition(npart, "v").localCheckpoint(eager=True)
+    out = checkpoint(done.repartition(npart, "v"), eager=True)
     e.unpersist()
     rev.unpersist()
     return out

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpointing import CheckpointedLoop, loop_partitions
+from .checkpointing import CheckpointedLoop, checkpoint, loop_partitions
 
 
 def weighted_sssp(
@@ -124,14 +124,14 @@ def weighted_sssp(
             )
         )
         merged = loop.step(merged, it, eager=False)
-        frontier = merged.filter("improved").select("v", "dist").localCheckpoint(
-            eager=False
+        frontier = checkpoint(
+            merged.filter("improved").select("v", "dist"), round=it
         )
         n_improved = frontier.count()
         loop.history[-1]["extra"]["improved"] = n_improved
         dist = merged.select("v", "dist")
         if n_improved == 0:
             break
-    out = dist.localCheckpoint(eager=True)
+    out = checkpoint(dist, eager=True)
     e.unpersist()
     return out

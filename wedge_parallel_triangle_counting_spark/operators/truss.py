@@ -44,7 +44,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpointing import CheckpointedLoop, finish_with_caches, loop_partitions
+from .checkpointing import (
+    CheckpointedLoop,
+    checkpoint,
+    finish_with_caches,
+    loop_partitions,
+)
 from .graph import normalize_edges
 
 
@@ -173,6 +178,6 @@ def k_truss(
 
     # support recomputed against the final subgraph (the loop's last
     # filter used the PRE-removal supports)
-    out = _support(cur).localCheckpoint(eager=True)
+    out = checkpoint(_support(cur), eager=True)
     und.unpersist()
     return out

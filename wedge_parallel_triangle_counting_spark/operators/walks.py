@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpointing import finish_with_caches, loop_partitions
+from .checkpointing import checkpoint, finish_with_caches, loop_partitions
 from .graph import build_sym_clustered
 
 
@@ -159,15 +159,15 @@ def node2vec_walks(
             )
         )
         idx = h % tot
-        picked = (
+        picked = checkpoint(
             cand.select("walk_id", "cur", "nbr", "w", cum.alias("cum"), idx.alias("idx"))
             .filter((F.col("idx") >= F.col("cum") - F.col("w")) & (F.col("idx") < F.col("cum")))
             .select(
                 "walk_id",
                 F.col("cur").alias("prev"),
                 F.col("nbr").alias("cur"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            round=t,
         )
         state = picked
         out.append(
@@ -210,7 +210,7 @@ def random_walks(
                 ":", F.lit("walk"), F.col("walk_id").cast("string"), F.lit(str(t))
             )
         )
-        frontier = (
+        frontier = checkpoint(
             frontier.join(adj, "v")
             .select(
                 "walk_id",
@@ -218,8 +218,8 @@ def random_walks(
                 F.element_at("adj", (h % F.col("deg")).cast("int") + 1).alias(
                     "v"
                 ),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            round=t,
         )
         out.append(frontier)
     result = out[0]

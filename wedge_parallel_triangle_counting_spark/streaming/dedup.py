@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.checkpointing import checkpoint
+
 
 def dedup_groups(docs: DataFrame, prefix_tokens: int | None = None) -> DataFrame:
     """The logical dedup query (batch or stream): (text_hash, n_docs,
@@ -71,5 +73,5 @@ def run_streaming_dedup(
         .start()
     )
     q.awaitTermination()
-    out = spark.table("stream_dedup").localCheckpoint(eager=True)
+    out = checkpoint(spark.table("stream_dedup"), eager=True)
     return out

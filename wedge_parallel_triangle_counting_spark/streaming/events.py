@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.checkpointing import checkpoint
+
 
 def windowed_counts(events: DataFrame) -> DataFrame:
     """(window_start, event_type, n_events, total_value) per 1-hour
@@ -93,7 +95,7 @@ def run_streaming_windowed(
 
     def capture(df: DataFrame, batch_id: int) -> None:
         batches.append(
-            df.withColumn("_batch", F.lit(int(batch_id))).localCheckpoint(eager=True)
+            checkpoint(df.withColumn("_batch", F.lit(int(batch_id))), eager=True)
         )
 
     query = (

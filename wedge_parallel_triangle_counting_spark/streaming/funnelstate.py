@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.checkpointing import checkpoint
+
 OUT_SCHEMA = "user_id long, s1_us long, s2_us long, s3_us long"
 STATE_SCHEMA = "tss array<long>, tps array<long>"
 
@@ -164,9 +166,7 @@ def run_streaming_funnel(
 
     def capture(df: DataFrame, batch_id: int) -> None:
         batches.append(
-            df.withColumn("_batch", F.lit(int(batch_id))).localCheckpoint(
-                eager=True
-            )
+            checkpoint(df.withColumn("_batch", F.lit(int(batch_id))), eager=True)
         )
 
     q = (
@@ -187,9 +187,9 @@ def run_streaming_funnel(
     rn = F.row_number().over(
         Window.partitionBy("user_id").orderBy(F.desc("_batch"))
     )
-    return (
+    return checkpoint(
         allb.withColumn("_rn", rn)
         .filter(F.col("_rn") == 1)
-        .drop("_rn", "_batch")
-        .localCheckpoint(eager=True)
+        .drop("_rn", "_batch"),
+        eager=True,
     )

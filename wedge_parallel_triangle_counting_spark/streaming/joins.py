@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.checkpointing import checkpoint
+
 ATTRIBUTION_WINDOW = "30 minutes"
 
 
@@ -98,4 +100,4 @@ def run_streaming_attribution(
     )
     query.awaitTermination()
     # eagerly pin the result so the caller may delete the replay dir
-    return spark.table("attribution_join").localCheckpoint(eager=True)
+    return checkpoint(spark.table("attribution_join"), eager=True)

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.checkpointing import checkpoint
 from ..operators.sketches import (
     countmin_sketch_table,
     hll_register_table,
@@ -70,7 +71,7 @@ def run_streaming_countmin(
         .start()
     )
     q.awaitTermination()
-    return spark.table("stream_countmin").localCheckpoint(eager=True)
+    return checkpoint(spark.table("stream_countmin"), eager=True)
 
 
 def run_streaming_hll_registers(
@@ -91,4 +92,4 @@ def run_streaming_hll_registers(
         .start()
     )
     q.awaitTermination()
-    return spark.table("stream_hll_regs").localCheckpoint(eager=True)
+    return checkpoint(spark.table("stream_hll_regs"), eager=True)

@@ -28,6 +28,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.checkpointing import checkpoint
+
 EDGE_MODULUS = 301
 
 
@@ -64,8 +66,8 @@ class _TriangleState:
             new = new.join(self.edges, ["a", "b"], "left_anti")
         # freeze a unique rank per new edge (stable across the two
         # incidence references below)
-        new = new.withColumn("eid", F.monotonically_increasing_id()).localCheckpoint(
-            eager=True
+        new = checkpoint(
+            new.withColumn("eid", F.monotonically_increasing_id()), eager=True
         )
         self.batches += 1
         if new.isEmpty():
@@ -99,7 +101,7 @@ class _TriangleState:
             inc2, (F.col("v") == F.col("x2")) & (F.col("w") == F.col("w2"))
         ).filter(F.col("rid2") < F.col("i"))
         self.count += closed.count()
-        self.edges = alledges.select("a", "b").localCheckpoint(eager=True)
+        self.edges = checkpoint(alledges.select("a", "b"), eager=True)
 
 
 def run_streaming_triangle_count(

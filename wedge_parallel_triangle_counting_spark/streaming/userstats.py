@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.checkpointing import checkpoint
+
 OUT_SCHEMA = (
     "user_id long, n_events long, total_value_micro long, max_value_micro long"
 )
@@ -120,9 +122,7 @@ def run_streaming_user_stats(
 
     def capture(df: DataFrame, batch_id: int) -> None:
         batches.append(
-            df.withColumn("_batch", F.lit(int(batch_id))).localCheckpoint(
-                eager=True
-            )
+            checkpoint(df.withColumn("_batch", F.lit(int(batch_id))), eager=True)
         )
 
     q = (
@@ -143,9 +143,9 @@ def run_streaming_user_stats(
     rn = F.row_number().over(
         Window.partitionBy("user_id").orderBy(F.desc("_batch"))
     )
-    return (
+    return checkpoint(
         allb.withColumn("_rn", rn)
         .filter(F.col("_rn") == 1)
-        .drop("_rn", "_batch")
-        .localCheckpoint(eager=True)
+        .drop("_rn", "_batch"),
+        eager=True,
     )
