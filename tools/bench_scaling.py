@@ -5,7 +5,8 @@ No multi-executor cluster exists in this sandbox, so the identical job
 runs in fresh single-JVM sessions pinned (sched_setaffinity, set
 before the JVM starts) to N and 4N CPUs over the identical input.
 
-Hardware calibration (tools/box_calibration.py measures it): this
+Hardware calibration (recorded in BENCH/RUNS.md; the probe that
+measured it is retired): this
 sandbox's 32 vCPUs are oversubscribed — raw numpy with independent
 per-process data scales 8→32 procs at only 0.35 (memory-bound) / 0.69
 (cache-resident CPU) efficiency, so NO engine can evidence 0.8 at
@@ -246,7 +247,7 @@ amplification of the sf0.1 lineitem graph ({lo['m_raw']:,} raw /
 (run 0 discarded — the reference's protocol, tc.cu:894-913).
 Produced by `python tools/bench_scaling.py {N} {SF_DIR} {REPS} {AMPLIFY}`.
 
-**Hardware calibration** (`tools/box_calibration.py`): this VM's 32
+**Hardware calibration** (recorded in `BENCH/RUNS.md`): this VM's 32
 vCPUs are oversubscribed — RAW NUMPY with independent per-process
 data scales 8→32 procs at 0.35 (memory-bound) / 0.69 (cache-resident)
 efficiency, so no engine can evidence 0.8 at 8→32 cores here. At

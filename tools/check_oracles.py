@@ -3,6 +3,12 @@
 same parquet, compare row count, column names, and order-insensitive
 values. Usage: python tools/check_oracles.py [sf_dir] [query ...]
 
+Determinism probe: python tools/check_oracles.py --probe [sf_dir] [query ...]
+runs each named query (all when none is named) in a fresh `local[2]`
+and a fresh `local[32]` session, one child process each, and compares
+the two row sets exactly, with no tolerance. It exits non-zero on any
+difference. The oracles are not run.
+
 Every CTE is made MATERIALIZED before DuckDB runs the oracle: inlined,
 the unrolled-round oracles grow exponentially with the round count
 (`pagerank_warm_start` spent ~9 min in single-threaded planning on a
@@ -11,8 +17,12 @@ touched."""
 
 from __future__ import annotations
 
+import os
+import pickle
 import re
+import subprocess
 import sys
+import tempfile
 
 import duckdb
 import pandas as pd
@@ -49,9 +59,71 @@ def materialize_ctes(sql: str) -> str:
     return _CTE.sub(r"\1\2 AS MATERIALIZED (", sql)
 
 
+def _collect_rows(master: str, out: str, sf_dir: str, names: list[str]) -> None:
+    """Child side of --probe: run `names` in a fresh `master` session
+    and pickle {name: normalized rows, or the error text}."""
+    spark = get_spark(app_name="determinism-probe", master=master)
+    qs = entrymod.queries()
+    rows = {}
+    for name in names or list(qs):
+        try:
+            rows[name] = normalize(qs[name](spark, sf_dir).toPandas())
+        except Exception as e:  # noqa: BLE001
+            rows[name] = f"spark error: {e}"
+        finally:
+            spark.catalog.clearCache()
+    spark.stop()
+    with open(out, "wb") as f:
+        pickle.dump(rows, f)
+
+
+def probe(sf_dir: str, names: list[str]) -> int:
+    """Compare `names` between fresh local[2] and local[32] sessions,
+    exactly."""
+    masters = ("local[2]", "local[32]")
+    runs = []
+    with tempfile.TemporaryDirectory() as tmp:
+        for master in masters:
+            out = os.path.join(tmp, "rows.pkl")
+            cmd = [sys.executable, __file__, "--rows", master, out, sf_dir, *names]
+            subprocess.run(cmd, check=True)
+            with open(out, "rb") as f:
+                runs.append(pickle.load(f))
+    failures = []
+    for name, lo in runs[0].items():
+        hi = runs[1][name]
+        if isinstance(lo, str) or isinstance(hi, str):
+            why = lo if isinstance(lo, str) else hi
+        else:
+            try:
+                pd.testing.assert_frame_equal(lo, hi, check_exact=True)
+                print(f"OK    {name}: rows={len(lo)} identical at {' and '.join(masters)}")
+                continue
+            except AssertionError as e:
+                why = f"{' vs '.join(masters)} differ\n{str(e)[:500]}"
+        failures.append(name)
+        print(f"FAIL  {name}: {why}")
+    if failures:
+        print(f"\n{len(failures)} FAILURES: {failures}")
+        return 1
+    print(f"\nall {len(runs[0])} queries identical")
+    return 0
+
+
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    args = sys.argv[1:]
+    if args[:1] == ["--rows"]:
+        _collect_rows(args[1], args[2], args[3], args[4:])
+        return 0
+    probing = args[:1] == ["--probe"]
+    if probing:
+        args = args[1:]
+    sf_dir = "/root/testdata/sf0.01"
+    if args and (os.path.isdir(args[0]) or not probing):
+        sf_dir, args = args[0], args[1:]
+    if probing:
+        return probe(sf_dir, args)
+    only = set(args)
     spark = get_spark(app_name="oracle-check", master="local[8]")
     con = duckdb.connect()
     for t in TABLES:

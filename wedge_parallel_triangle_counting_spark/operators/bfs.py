@@ -60,7 +60,7 @@ def shortest_hops(
         npart, "v"
     )
     frontier = dist
-    for it in range(max_hops):
+    for it in loop.rounds(max_hops):
         nbrs = (
             sym.join(frontier.select("v"), sym.src == F.col("v"))
             .select(F.col("dst").alias("v"))
@@ -73,9 +73,7 @@ def shortest_hops(
         # the frontier count doubles as the convergence check AND the
         # checkpoint materialization — one action per round
         frontier = checkpoint(new_frontier, round=it)
-        n_new = frontier.count()
-        loop.history[-1]["extra"]["frontier"] = n_new
-        if n_new == 0:
+        if loop.settled(frontier.count()):
             break
     dist.count()
     sym.unpersist()

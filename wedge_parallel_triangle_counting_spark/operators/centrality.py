@@ -69,27 +69,24 @@ def _ms_bfs(
             if checkpoint_dir
             else None
         ),
+        resume=resume,
     )
-    start = 0
-    dist = None
-    if resume:
-        got = loop.resume()
-        if got is not None:
-            dist, start = got
-            # the snapshot after iteration i holds rows with
-            # hops <= i+1 and resumes at start = i+1, so the frontier
-            # (rows settled in that last completed round) is exactly
-            # hops == start. Resuming with a SMALLER max_hops than
-            # the snapshot must still honor this call's contract:
-            # clamp the distance table to the requested budget.
-            dist = dist.filter(F.col("hops") <= max_hops)
-            frontier = dist.filter(F.col("hops") == start)
-    if dist is None:
-        dist = seeds.select(
+    dist = loop.start(
+        seeds.select(
             "s", F.col("s").alias("v"), F.lit(0).cast("long").alias("hops")
         ).repartition(npart, "v")
-        frontier = dist
-    for it in range(start, max_hops):
+    )
+    frontier = dist
+    if loop.first_round:
+        # the snapshot after iteration i holds rows with hops <= i+1
+        # and resumes at first_round = i+1, so the frontier (rows
+        # settled in that last completed round) is exactly
+        # hops == first_round. Resuming with a SMALLER max_hops than
+        # the snapshot must still honor this call's contract: clamp
+        # the distance table to the requested budget.
+        dist = dist.filter(F.col("hops") <= max_hops)
+        frontier = dist.filter(F.col("hops") == loop.first_round)
+    for it in loop.rounds(max_hops):
         nbrs = (
             sym.join(frontier.select("s", "v"), sym.src == F.col("v"))
             .select("s", F.col("dst").alias("v"))
@@ -100,9 +97,7 @@ def _ms_bfs(
         )
         dist = loop.step(dist.unionByName(new_frontier), it, eager=False)
         frontier = checkpoint(new_frontier, round=it)
-        n_new = frontier.count()
-        loop.history[-1]["extra"]["frontier"] = n_new
-        if n_new == 0:
+        if loop.settled(frontier.count()):
             break
     dist = checkpoint(dist, eager=True)
     sym.unpersist()

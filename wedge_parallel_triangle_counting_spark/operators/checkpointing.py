@@ -15,8 +15,39 @@ Two layers:
 - every `checkpoint_every` iterations (when a directory is given):
   durable parquet snapshot + a JSON manifest recording iteration
   number, row count, per-partition row counts (lineage of the physical
-  partitioning), and metric history. `resume()` restarts from the last
-  snapshot after a crash.
+  partitioning), and metric history. A loop built with `resume=True`
+  restarts from the last snapshot after a crash.
+
+Round driver. Every round loop is written the same way:
+
+    loop = CheckpointedLoop(spark, "name", checkpoint_dir, every,
+                            fingerprint=..., resume=resume)
+    state = loop.start(init)          # resumed snapshot, or init
+    for it in loop.rounds(max_iters, on_cap="warn"):
+        state = loop.step(round_body(state), it, eager=False)
+        if loop.settled(changed_count(state)):
+            break
+
+`rounds()` yields round indices from the resumed one (0 on a fresh
+run); `settled(pending)` records the round's change count in `history`
+and returns `pending == 0`. The driver adds no Spark action: the count
+is the one the round already takes. When `rounds()` runs out and the
+last `settled()` count is non-zero, the loop stopped at its round cap
+with the result still changing, and `on_cap` decides what happens, with
+one message naming the loop, the cap and the count:
+
+| on_cap   | loops                                   | why                       |
+|----------|-----------------------------------------|---------------------------|
+| "warn"   | hashmin, star, k-core, k-truss, MIS /   | a partial answer is still |
+|          | coloring, matching                      | usable, but must be known |
+| "raise"  | densest, scc (outer, colour and mark)   | a truncated answer is     |
+|          |                                         | silently wrong            |
+| None     | bfs/harmonic `max_hops`, sssp           | the cap is a documented   |
+|          | `max_rounds`, pagerank `tol`, labelprop,| budget, or the loop runs a|
+|          | eigencentrality, hits, salsa            | fixed number of rounds    |
+
+A resumed run whose snapshot is already at the cap yields no round and
+says nothing: this call ran no round that could have been cut short.
 """
 
 from __future__ import annotations
@@ -24,6 +55,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import warnings
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -313,28 +345,36 @@ class CheckpointedLoop:
         checkpoint_every: int = 5,
         collect_partition_stats: bool = False,
         fingerprint: dict | None = None,
+        resume: bool = False,
     ) -> None:
         self.spark = spark
         self.name = name
         self.dir = checkpoint_dir
         self.every = max(checkpoint_every, 1)
         self.collect_partition_stats = collect_partition_stats
-        # input/parameter fingerprint stored in the manifest; resume()
+        # input/parameter fingerprint stored in the manifest; start()
         # refuses a snapshot whose fingerprint differs (resuming an
         # iteration over a CHANGED input would silently continue from
         # stale state)
         self.fingerprint = fingerprint
+        self.resume = resume
+        # round rounds() starts from: 0, or the one after the resumed
+        # snapshot's
+        self.first_round = 0
         self.history: list[dict] = []
         self._t0 = time.time()
+        self._round = 0
+        self._round_records = 0  # len(history) when the round began
+        self._pending = None  # last settled() count of the running rounds()
 
     # -- manifest helpers -------------------------------------------------
     def _manifest_path(self) -> str:
         assert self.dir is not None
         return os.path.join(self.dir, f"{self.name}.manifest.json")
 
-    def resume(self) -> tuple[DataFrame, int] | None:
-        """Return (state, next_iteration) from the last durable
-        snapshot, or None if there is nothing to resume from."""
+    def _snapshot(self) -> tuple[DataFrame, int] | None:
+        """(state, next_iteration) from the last durable snapshot, or
+        None if there is nothing to resume from."""
         if not self.dir:
             return None
         mp = self._manifest_path()
@@ -353,6 +393,66 @@ class CheckpointedLoop:
         self.history = manifest.get("history", [])
         df = self.spark.read.parquet(manifest["path"])
         return df, manifest["iteration"] + 1
+
+    # -- round driver -----------------------------------------------------
+    def start(self, init: DataFrame) -> DataFrame:
+        """The loop's initial state: the last durable snapshot when
+        built with `resume=True` and one exists (`first_round` then
+        points past it), else `init`."""
+        got = self._snapshot() if self.resume else None
+        if got is None:
+            return init
+        df, self.first_round = got
+        return df
+
+    def rounds(
+        self,
+        max_rounds: int,
+        on_cap: str | None = None,
+        *,
+        cap: str = "max_iters",
+        unit: str = "rows",
+    ):
+        """Yield round indices `first_round` .. `max_rounds - 1`; the
+        caller breaks out when a round settles. Running out with the
+        last `settled()` count non-zero applies `on_cap`: "warn" (a
+        RuntimeWarning), "raise" (a RuntimeError) or None (the cap is a
+        budget). `cap` and `unit` name the operator's cap parameter and
+        what the count counts, for the message."""
+        self._pending = None
+        for it in range(self.first_round, max_rounds):
+            self._round, self._round_records = it, len(self.history)
+            yield it
+        if on_cap is None or not self._pending:
+            return
+        msg = (
+            f"{self.name}: stopped at the round cap {cap}={max_rounds} "
+            f"with {self._pending} {unit} still changing in the last "
+            "round; the result is not converged"
+        )
+        if on_cap == "raise":
+            raise RuntimeError(msg)
+        warnings.warn(msg, RuntimeWarning, stacklevel=2)
+
+    def settled(self, pending: int, **extra) -> bool:
+        """Record this round's change count (and `extra`) in `history`
+        and return `pending == 0`. Adds no Spark action."""
+        extra["pending"] = pending
+        if len(self.history) > self._round_records:  # step() ran this round
+            self.history[-1]["extra"].update(extra)
+        else:
+            self.history.append(
+                IterationMetrics(
+                    iteration=self._round,
+                    rows=-1,
+                    partitions=0,
+                    partition_rows=[],
+                    extra=extra,
+                    wall_sec=time.time() - self._t0,
+                ).__dict__
+            )
+        self._pending = pending
+        return pending == 0
 
     # -- per-iteration hook ------------------------------------------------
     def step(self, df: DataFrame, iteration: int, eager: bool = True, **extra) -> DataFrame:

@@ -18,8 +18,6 @@ durable checkpoint + manifest on cadence.
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -162,7 +160,7 @@ def _components_hashmin(
         sym_cnt = None
     verts = sym.select(F.col("src").alias("v")).distinct()
 
-    # input fingerprint (edge count) guards resume() against a changed
+    # input fingerprint (edge count) guards a resume against a changed
     # graph; only computed when durable checkpointing is on
     if checkpoint_dir:
         fp = {"sym_edges": sym_cnt if sym_cnt is not None else sym.count()}
@@ -175,40 +173,20 @@ def _components_hashmin(
         checkpoint_every,
         collect_partition_stats=partition_stats,
         fingerprint=fp,
+        resume=resume,
     )
-    start = 0
-    labels = None
-    if resume:
-        got = loop.resume()
-        if got is not None:
-            labels, start = got
-    if labels is None:
-        labels = verts.select("v", F.col("v").alias("component"))
-
-    changed = 0
-    for it in range(start, max_iters):
-        new_labels = loop.step(
+    labels = loop.start(verts.select("v", F.col("v").alias("component")))
+    for it in loop.rounds(max_iters, on_cap="warn", unit="labels"):
+        labels = loop.step(
             _hashmin_round(sym, labels, bcast_state), it, eager=False
         )
         # the round's single action: materializes the lazy checkpoint
         # AND counts label changes off the carried `chg` flag (r6: the
         # old separate new⋈old join job is gone — the round join
         # already sees both labels)
-        changed = (
-            new_labels.agg(F.coalesce(F.sum("chg"), F.lit(0))).collect()[0][0]
-        )
-        loop.history[-1]["extra"]["changed"] = changed
-        labels = new_labels
-        if changed == 0:
+        changed = labels.agg(F.coalesce(F.sum("chg"), F.lit(0))).collect()[0][0]
+        if loop.settled(changed):
             break
-    if changed:
-        warnings.warn(
-            f"components: hashmin stopped at the round cap max_iters="
-            f"{max_iters} with {changed} labels still changing in the last "
-            "round; the labels are not converged",
-            RuntimeWarning,
-            stacklevel=3,
-        )
     if loop.history:  # state is localCheckpointed — sym no longer needed
         sym.unpersist()
     return labels.select("v", "component")
@@ -293,17 +271,18 @@ def _components_star(
 
     fp = {"canonical_edges": prev_cnt} if checkpoint_dir else None
     loop = CheckpointedLoop(
-        spark, "components_star", checkpoint_dir, checkpoint_every, fingerprint=fp
+        spark,
+        "components_star",
+        checkpoint_dir,
+        checkpoint_every,
+        fingerprint=fp,
+        resume=resume,
     )
-    cur = e
-    start = 0
-    if resume:
-        got = loop.resume()
-        if got is not None:
-            cur, start = got
-            prev_cnt = cur.count()
+    cur = loop.start(e)
+    if loop.first_round:
+        prev_cnt = cur.count()
 
-    cur, prev_cnt = _star_rounds(loop, cur, prev_cnt, start, max_iters)
+    cur = _star_rounds(loop, cur, prev_cnt, max_iters)
     # parent table: every vertex points to its component min (vertex
     # set from the persisted canonical edges — materialized via
     # localCheckpoint so `e` can be released before returning the
@@ -326,11 +305,12 @@ def _star_rounds(
     loop: CheckpointedLoop,
     cur: DataFrame,
     prev_cnt: int,
-    start: int,
     max_iters: int,
-) -> tuple[DataFrame, int]:
+) -> DataFrame:
     """Alternating large-star / small-star rounds until the edge
-    relation stabilizes; returns (final relation, its count).
+    relation stabilizes; returns the final relation. Stopping at
+    `max_iters` with the relation still changing warns: the parents
+    are then not the component minima.
 
     No intermediate distincts inside a round (on the large-star output
     or the small-star self rows): they are semantically optional —
@@ -356,7 +336,7 @@ def _star_rounds(
     pre-dedup of the join output is needed."""
     # per-src neighborhood min, added as column `mn`
     nbr_min = F.min("dst").over(Window.partitionBy("src"))
-    for it in range(start, max_iters):
+    for it in loop.rounds(max_iters, on_cap="warn", unit="edges"):
         # large-star: for each u, connect all strictly-larger neighbors
         # to min(neighborhood ∪ {u})
         nbrs = cur.select("src", "dst").unionByName(
@@ -395,17 +375,17 @@ def _star_rounds(
         # (replaces two shuffling exceptAll jobs per round).
         new_cur = loop.step(new_cur, it, eager=False)
         new_cnt = new_cur.count()  # materializes the lazy checkpoint
-        converged = False
-        if new_cnt == prev_cnt:
-            converged = (
-                new_cur.join(cur, ["src", "dst"], "left_anti").isEmpty()
-            )
-        loop.history[-1]["extra"]["edges"] = new_cnt
+        # pending: the edge-count change, and 1 when the sets still
+        # differ at an equal count
+        pending = abs(new_cnt - prev_cnt)
+        if not pending:
+            same = new_cur.join(cur, ["src", "dst"], "left_anti").isEmpty()
+            pending = 0 if same else 1
         cur = new_cur
         prev_cnt = new_cnt
-        if converged:
+        if loop.settled(pending, edges=new_cnt):
             break
-    return cur, prev_cnt
+    return cur
 
 
 def component_size_histogram(labels: DataFrame) -> DataFrame:

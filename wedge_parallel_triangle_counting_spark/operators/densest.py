@@ -70,7 +70,7 @@ def densest_subgraph(
 
     stats: list[tuple[int, int, int]] = []  # (round, n, m)
     m = sym_cnt // 2
-    for it in range(max_iters):
+    for it in loop.rounds(max_iters, on_cap="raise", unit="edges"):
         deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
         n = deg.count()
         if n == 0:
@@ -87,18 +87,11 @@ def densest_subgraph(
             .join(keep.withColumnRenamed("v", "dst"), "dst", "left_semi")
             .select("src", "dst")
         )
-        new_cur = loop.step(new_cur, it, eager=False)
-        new_cnt = new_cur.count()  # materializes the lazy checkpoint
-        loop.history[-1]["extra"]["edges"] = new_cnt
-        cur = new_cur
+        cur = loop.step(new_cur, it, eager=False)
+        new_cnt = cur.count()  # materializes the lazy checkpoint
         m = new_cnt // 2
-        if new_cnt == 0:
+        if loop.settled(new_cnt):
             break
-    else:
-        raise RuntimeError(
-            f"densest peel did not empty the graph in {max_iters} rounds; "
-            "raise max_iters"
-        )
     sym.unpersist()
 
     best_round, bn, bm = max(

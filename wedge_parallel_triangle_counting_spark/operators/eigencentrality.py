@@ -64,22 +64,16 @@ def eigenvector_centrality(
         # k to k+n iterations is the legitimate resume case (matches
         # hits/pagerank fingerprint discipline)
         fingerprint=({"sym_edges": m2} if checkpoint_dir else None),
+        resume=resume,
     )
-    start = 0
-    state = None
-    if resume:
-        got = loop.resume()
-        if got is not None:
-            state, start = got
-    if state is None:
-        state = (
-            sym.select(F.col("src").alias("v"))
-            .distinct()
-            .select("v", F.lit(1.0).alias("score"))
-        )
+    state = loop.start(
+        sym.select(F.col("src").alias("v"))
+        .distinct()
+        .select("v", F.lit(1.0).alias("score"))
+    )
 
     prev_raw = None
-    for it in range(start, num_iters):
+    for it in loop.rounds(num_iters):
         raw = (
             sym.join(state.withColumnRenamed("v", "src"), "src")
             .groupBy(F.col("dst").alias("v"))
@@ -120,21 +114,3 @@ def eigenvector_centrality(
     if prev_raw is not None:
         prev_raw.unpersist()
     return state
-
-
-def _round_frame(edges: DataFrame, npart: int) -> DataFrame:
-    """Plan-audit hook (tools/dump_plans_r06.py): one steady-state
-    iteration's lazy plan with the collected norm as a literal
-    placeholder. Not used by eigenvector_centrality()."""
-    sym = build_sym_clustered(edges, npart, key="src")
-    state = (
-        sym.select(F.col("src").alias("v"))
-        .distinct()
-        .select("v", F.lit(1.0).alias("score"))
-    )
-    raw = (
-        sym.join(state.withColumnRenamed("v", "src"), "src")
-        .groupBy(F.col("dst").alias("v"))
-        .agg(F.sum("score").alias("x"))
-    )
-    return raw.select("v", (F.col("x") / F.lit(1.0)).alias("score"))

@@ -47,18 +47,15 @@ def hits(
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 5,
     resume: bool = False,
-    dual_edge_copies: bool = True,
 ) -> DataFrame:
     """Returns DataFrame [v: long, hub: double, authority: double].
 
-    `dual_edge_copies` (default) persists the clean edge table TWICE —
-    hash(src)- and hash(dst)-clustered — so BOTH half-step joins are
-    co-partitioned with the hash(v) state and no edge-sized exchange
-    happens inside the loop (one extra exchange at setup buys
-    2·num_iters of them; the per-iteration cost is then only the two
-    contribution aggregations). Off = single dst-clustered copy, the
-    hub half-step re-exchanges the edges by src every iteration —
-    kept for A/B."""
+    The clean edge table is persisted TWICE — hash(src)- and
+    hash(dst)-clustered — so BOTH half-step joins are co-partitioned
+    with the hash(v) state and no edge-sized exchange happens inside
+    the loop (one extra exchange at setup buys 2·num_iters of them;
+    the per-iteration cost is then only the two contribution
+    aggregations)."""
     spark = edges.sparkSession
     npart = loop_partitions(spark)
     e = (
@@ -68,7 +65,7 @@ def hits(
         .dropDuplicates(["src", "dst"])
         .persist()
     )
-    e_src = e.repartition(npart, "src").persist() if dual_edge_copies else e
+    e_src = e.repartition(npart, "src").persist()
     verts = (
         e.select(F.col("src").alias("v"))
         .unionByName(e.select(F.col("dst").alias("v")))
@@ -82,24 +79,18 @@ def hits(
         checkpoint_dir,
         checkpoint_every,
         fingerprint=({"edges": e.count()} if checkpoint_dir else None),
+        resume=resume,
     )
-    start = 0
-    state = None
-    if resume:
-        got = loop.resume()
-        if got is not None:
-            state, start = got
-    if state is None:
-        # authority is carried in the INITIAL/durable state only so a
-        # resumed-finished run (start == num_iters) can still return
-        # both vectors; the in-loop state reads just the hub column
-        state = verts.select(
-            "v", F.lit(1.0).alias("hub"), F.lit(1.0).alias("authority")
-        )
+    # authority is carried in the INITIAL/durable state only so a
+    # resumed-finished run (first_round == num_iters) can still return
+    # both vectors; the in-loop state reads just the hub column
+    state = loop.start(
+        verts.select("v", F.lit(1.0).alias("hub"), F.lit(1.0).alias("authority"))
+    )
 
     a = None
     prev_scratch: list[DataFrame] = []
-    for it in range(start, num_iters):
+    for it in loop.rounds(num_iters):
         # SPARSE state: vertices with zero hub/authority carry no
         # information through the loop (they contribute nothing to
         # either half-step's sum or to the L2 norms), so the
@@ -156,7 +147,7 @@ def hits(
         )
         prev_scratch = [a_un, h_un]
         # durable snapshots keep the full (hub, authority) state so
-        # resume() stays self-contained; the in-memory per-round state
+        # a resume stays self-contained; the in-memory per-round state
         # is hub-only
         if checkpoint_dir and it % loop.every == 0:
             step_df = h.join(a, "v", "full").select(
@@ -195,40 +186,5 @@ def hits(
     for c in prev_scratch:
         c.unpersist()
     e.unpersist()
-    if dual_edge_copies:
-        e_src.unpersist()
+    e_src.unpersist()
     return out
-
-
-def _round_frames(edges: DataFrame, npart: int) -> DataFrame:
-    """Plan-audit hook (tools/dump_plans_r06.py): ONE steady-state
-    iteration's lazy plan — authority half-step feeding the hub
-    half-step, with the collected norm scalars as literal placeholders
-    (1.0), exactly as the loop builds them. Not used by hits()."""
-    e = (
-        normalize_edges(edges)
-        .filter(F.col("src") != F.col("dst"))
-        .repartition(npart, "dst")
-        .dropDuplicates(["src", "dst"])
-    )
-    e_src = e.repartition(npart, "src")
-    verts = (
-        e.select(F.col("src").alias("v"))
-        .unionByName(e.select(F.col("dst").alias("v")))
-        .distinct()
-        .repartition(npart, "v")
-    )
-    state = verts.select("v", F.lit(1.0).alias("hub"))
-    a_un = (
-        e_src.join(state.select(F.col("v").alias("src"), "hub"), "src")
-        .filter(F.col("hub") != 0.0)
-        .groupBy(F.col("dst").alias("v"))
-        .agg(F.sum("hub").alias("a_raw"))
-    )
-    a = a_un.select("v", (F.col("a_raw") / F.lit(1.0)).alias("authority"))
-    h_un = (
-        e.join(a.select(F.col("v").alias("dst"), "authority"), "dst")
-        .groupBy(F.col("src").alias("v"))
-        .agg(F.sum("authority").alias("h_raw"))
-    )
-    return h_un.select("v", (F.col("h_raw") / F.lit(1.0)).alias("hub"))

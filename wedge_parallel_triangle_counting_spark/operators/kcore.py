@@ -28,7 +28,9 @@ def k_core(
     checkpoint_every: int = 5,
 ) -> DataFrame:
     """Vertices of the k-core with their within-core degree:
-    (v, core_degree), core_degree >= k. Empty result if no k-core."""
+    (v, core_degree), core_degree >= k. Empty result if no k-core.
+    A peel still removing edges at `max_iters` warns (RuntimeWarning):
+    the result is then a superset of the k-core."""
     spark = edges.sparkSession
     npart = loop_partitions(spark)
     sym = build_sym_clustered(edges, npart, key="src").persist()
@@ -39,7 +41,7 @@ def k_core(
         spark, f"kcore{k}", checkpoint_dir, checkpoint_every, fingerprint=fp
     )
 
-    for it in range(max_iters):
+    for it in loop.rounds(max_iters, on_cap="warn", unit="edges"):
         deg = cur.groupBy("src").agg(F.count("*").alias("d"))
         keep = deg.filter(F.col("d") >= k).select(F.col("src").alias("v"))
         new_cur = (
@@ -47,13 +49,11 @@ def k_core(
             .join(keep.withColumnRenamed("v", "dst"), "dst", "left_semi")
             .select("src", "dst")
         )
-        new_cur = loop.step(new_cur, it, eager=False)
-        m = new_cur.count()  # materializes the lazy checkpoint
-        loop.history[-1]["extra"]["edges"] = m
-        cur = new_cur
-        if m == prev_m:
+        cur = loop.step(new_cur, it, eager=False)
+        m = cur.count()  # materializes the lazy checkpoint
+        removed, prev_m = prev_m - m, m
+        if loop.settled(removed, edges=m):
             break
-        prev_m = m
 
     out = cur.groupBy(F.col("src").alias("v")).agg(
         F.count("*").alias("core_degree")

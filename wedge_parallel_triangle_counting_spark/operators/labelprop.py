@@ -49,18 +49,12 @@ def label_propagation(
         checkpoint_every,
         collect_partition_stats=partition_stats,
         fingerprint=({"sym_edges": sym.count()} if checkpoint_dir else None),
+        resume=resume,
     )
-    start = 0
-    labels = None
-    if resume:
-        got = loop.resume()
-        if got is not None:
-            labels, start = got
-    if labels is None:
-        labels = verts.select("v", F.col("v").alias("label"))
+    labels = loop.start(verts.select("v", F.col("v").alias("label")))
 
     w = Window.partitionBy("v").orderBy(F.desc("cnt"), F.asc("label"))
-    for it in range(start, num_iters):
+    for it in loop.rounds(num_iters):
         rhs = F.broadcast(labels) if bcast_state else labels
         votes = (
             sym.join(rhs, sym.dst == rhs.v)
@@ -75,8 +69,7 @@ def label_propagation(
         )
         # lazy checkpoint: lineage truncated per round, materialization
         # rides the next round's join (or the terminal count below)
-        new_labels = loop.step(new_labels, it, eager=False)
-        labels = new_labels
+        labels = loop.step(new_labels, it, eager=False)
     # materialize the lazy checkpoint chain, then release the edge cache
     labels.count()
     sym.unpersist()

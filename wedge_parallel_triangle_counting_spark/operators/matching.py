@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpointing import checkpoint, loop_partitions
+from .checkpointing import CheckpointedLoop, checkpoint, loop_partitions
 from .graph import drop_self_loops, normalize_edges
 
 
@@ -55,7 +55,9 @@ def maximal_matching(edges: DataFrame, max_rounds: int = 32) -> DataFrame:
     """[a: long, b: long, round: int] (a < b) — a maximal matching of
     the canonical simple graph: no two selected edges share a vertex,
     and every unselected edge touches a matched vertex. Equals the
-    sequential greedy matching in md5-priority order."""
+    sequential greedy matching in md5-priority order. Stopping at
+    `max_rounds` with edges still active warns (RuntimeWarning): the
+    matching is then not maximal."""
     spark = edges.sparkSession
     npart = loop_partitions(spark)
     clean = drop_self_loops(normalize_edges(edges))
@@ -69,9 +71,17 @@ def maximal_matching(edges: DataFrame, max_rounds: int = 32) -> DataFrame:
         eager=True,
     )
     matched: list[DataFrame] = []
-    for rnd in range(1, max_rounds + 1):
-        if act.limit(1).count() == 0:
-            break
+    # no directory: the driver only tracks rounds and the cap, the
+    # eager checkpoints below stay as they are
+    loop = CheckpointedLoop(spark, "matching")
+    empty = act.limit(1).count() == 0  # an empty graph runs no round
+    for it in loop.rounds(
+        0 if empty else max_rounds,
+        on_cap="warn",
+        cap="max_rounds",
+        unit="active edges",
+    ):
+        rnd = it + 1
         ends = act.select(F.col("a").alias("v"), "p").unionByName(
             act.select(F.col("b").alias("v"), "p")
         )
@@ -96,6 +106,10 @@ def maximal_matching(edges: DataFrame, max_rounds: int = 32) -> DataFrame:
             .repartition(npart, "a"),
             eager=True,
         )
+        # the emptiness check ends the round (one job, as the check at
+        # the top of the next round did), so the cap sees the count
+        if loop.settled(act.count()):
+            break
     if not matched:
         return spark.createDataFrame([], "a long, b long, round int")
     out = matched[0]

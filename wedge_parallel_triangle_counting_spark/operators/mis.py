@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpointing import checkpoint, loop_partitions
+from .checkpointing import CheckpointedLoop, checkpoint, loop_partitions
 from .graph import build_sym_clustered
 
 # 2^31: leaves the 32-bit md5 prefix in the high bits and any vertex
@@ -82,7 +82,13 @@ def _luby_rounds(
         eager=True,
     )
     selections: list[DataFrame] = []
-    for rnd in range(1, max_rounds + 1):
+    # no directory: the driver only tracks rounds and the cap, the
+    # eager checkpoints below stay as they are
+    loop = CheckpointedLoop(spark, "mis" if drop_neighbors else "coloring")
+    for it in loop.rounds(
+        max_rounds, on_cap="warn", cap="max_rounds", unit="active vertices"
+    ):
+        rnd = it + 1
         # min active-neighbor priority per active vertex: edges with
         # BOTH endpoints active, aggregated on src (the clustered key)
         live = (
@@ -117,7 +123,9 @@ def _luby_rounds(
             .repartition(npart, "v"),
             eager=True,
         )
-        if act.limit(1).count() == 0:
+        # same job count as limit(1).count() on the checkpointed frame,
+        # and the cap warning gets the real count
+        if loop.settled(act.count()):
             break
     if not selections:
         out = spark.createDataFrame([], "v long, round int")
@@ -134,12 +142,16 @@ def maximal_independent_set(edges: DataFrame, max_rounds: int = 32) -> DataFrame
     """Deterministic Luby MIS over the symmetric simple graph:
     [v: long, round: int] for every MIS member. Independent (no edge
     inside the set) and maximal (every non-member has a neighbor in
-    the set) — both asserted in tests/test_graph.py."""
+    the set) — both asserted in tests/test_graph.py. Stopping at
+    `max_rounds` with vertices still active warns (RuntimeWarning):
+    the set is then not maximal."""
     return _luby_rounds(edges, max_rounds, drop_neighbors=True)
 
 
 def luby_coloring(edges: DataFrame, max_rounds: int = 256) -> DataFrame:
     """Jones-Plassmann greedy coloring: [v: long, round: int] where
     `round` is v's color (1-based). Every vertex of the symmetric
-    simple graph is colored; adjacent vertices never share a color."""
+    simple graph is colored; adjacent vertices never share a color.
+    Stopping at `max_rounds` with vertices still uncolored warns
+    (RuntimeWarning)."""
     return _luby_rounds(edges, max_rounds, drop_neighbors=False)

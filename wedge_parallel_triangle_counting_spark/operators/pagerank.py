@@ -172,13 +172,8 @@ def pagerank(
             if checkpoint_dir
             else None
         ),
+        resume=resume,
     )
-    start = 0
-    ranks = None
-    if resume:
-        got = loop.resume()
-        if got is not None:
-            ranks, start = got
     if sources is not None:
         srcs = [int(x) for x in sources]
         s_col = F.when(F.col("v").isin(srcs), F.lit(1.0 / len(srcs))).otherwise(
@@ -186,19 +181,19 @@ def pagerank(
         )
     else:
         s_col = None
-    if ranks is None:
-        # state carries outdeg so the iteration needs no ranks⋈outdeg
-        # join — one fewer shuffle per iteration
-        init = s_col if s_col is not None else F.lit(1.0 / n)
-        if init_ranks is not None:
-            ranks = (
-                outdeg.join(
-                    init_ranks.select("v", F.col("pr").alias("pr0")), "v", "left"
-                )
-                .select("v", "outdeg", F.coalesce("pr0", init).alias("pr"))
+    # state carries outdeg so the iteration needs no ranks⋈outdeg
+    # join — one fewer shuffle per iteration
+    init = s_col if s_col is not None else F.lit(1.0 / n)
+    if init_ranks is not None:
+        ranks = (
+            outdeg.join(
+                init_ranks.select("v", F.col("pr").alias("pr0")), "v", "left"
             )
-        else:
-            ranks = outdeg.select("v", "outdeg", init.alias("pr"))
+            .select("v", "outdeg", F.coalesce("pr0", init).alias("pr"))
+        )
+    else:
+        ranks = outdeg.select("v", "outdeg", init.alias("pr"))
+    ranks = loop.start(ranks)
 
     base = (1.0 - damping) / n
     # NOTE: unlike labelprop/hashmin, PageRank does NOT broadcast its
@@ -208,7 +203,7 @@ def pagerank(
     # at sf0.1 local[32]: broadcast 5.2s vs co-partitioned 3.5-3.8s,
     # all reps same sign.
     ranks = _iterate(
-        loop, e, outdeg, ranks, s_col, base, damping, n, start, num_iters, tol,
+        loop, e, outdeg, ranks, s_col, base, damping, n, num_iters, tol,
         weighted=weight_col is not None, residuals=residuals_out,
     )
     e.unpersist()
@@ -217,10 +212,10 @@ def pagerank(
 
 
 def _iterate(
-    loop, e, outdeg, ranks, s_col, base, damping, n, start, num_iters, tol,
+    loop, e, outdeg, ranks, s_col, base, damping, n, num_iters, tol,
     weighted=False, residuals=None,
 ):
-    for it in range(start, num_iters):
+    for it in loop.rounds(num_iters):
         # dangling mass as a 1-row aggregate cross-joined into the plan
         # — no separate driver action per iteration
         dangling_df = ranks.filter(F.col("outdeg") == 0).agg(
@@ -296,9 +291,8 @@ def _iterate(
                 .agg(F.sum(F.abs(F.col("a.pr") - F.col("b.pr"))))
                 .collect()[0][0]
             )
-            loop.history[-1]["extra"]["l1_delta"] = delta
         ranks = new_ranks
-        if tol is not None and delta is not None and delta < tol:
+        if delta is not None and loop.settled(int(delta >= tol), l1_delta=delta):
             break
     # materialize the final (lazily checkpointed) state so the caller's
     # actions never recompute the loop and the static caches can be

@@ -26,8 +26,8 @@ Scale shape: in/out degrees are attached to the EDGE table once
 before the loop (they are loop constants — attaching them per
 iteration would be two extra joins per round), and the table is
 persisted twice, hash(src)- and hash(dst)-clustered, so every
-half-step join is co-partitioned with the state (HITS'
-dual_edge_copies argument). The two FORWARD half-steps (a's and h's)
+half-step join is co-partitioned with the state (the HITS
+layout). The two FORWARD half-steps (a's and h's)
 share one src-side join + one aggregation — per iteration the loop is
 exactly THREE join+agg pairs instead of the naive four. State is
 sparse (zero-score vertices carry nothing through a stochastic
@@ -94,27 +94,23 @@ def salsa(
             if checkpoint_dir
             else None
         ),
+        resume=resume,
     )
-    start = 0
-    state = None
-    if resume:
-        got = loop.resume()
-        if got is not None:
-            state, start = got
-    if state is None:
-        auth0 = e_dst.select(F.col("dst").alias("v")).distinct().select(
-            "v", F.lit(1.0 / n_auth).alias("a")
-        )
-        hub0 = e_dst.select(F.col("src").alias("v")).distinct().select(
-            "v", F.lit(1.0 / n_hub).alias("h")
-        )
-        state = auth0.join(hub0, "v", "full").select(
+    auth0 = e_dst.select(F.col("dst").alias("v")).distinct().select(
+        "v", F.lit(1.0 / n_auth).alias("a")
+    )
+    hub0 = e_dst.select(F.col("src").alias("v")).distinct().select(
+        "v", F.lit(1.0 / n_hub).alias("h")
+    )
+    state = loop.start(
+        auth0.join(hub0, "v", "full").select(
             "v",
             F.coalesce("a", F.lit(0.0)).alias("a"),
             F.coalesce("h", F.lit(0.0)).alias("h"),
         )
+    )
 
-    for it in range(start, num_iters):
+    for it in loop.rounds(num_iters):
         # backward half-step of the authority chain: mass of a(w)
         # leaves through w's in-links
         x = (
@@ -167,7 +163,7 @@ def salsa(
             )
         )
         state = loop.step(state, it, eager=False)
-        loop.history[-1]["extra"]["n"] = state.count()
+        state.count()  # materializes the lazy checkpoint before fwd goes
         fwd.unpersist()
 
     verts = (

@@ -150,13 +150,13 @@ def strongly_connected_components(
     done: DataFrame | None = None
     step = 0  # global step counter for the checkpoint loop history
 
-    n_all = active.count()
-
-    for outer in range(max_outer):
-        n_active = n_all if outer == 0 else active.count()
-        if n_active == 0:
-            break
-
+    n_all = n_active = active.count()
+    # the outer peel has its own driver: the inner loops' rounds() run
+    # on `loop` inside each outer round
+    peel = CheckpointedLoop(spark, "scc peel")
+    for outer in peel.rounds(
+        max_outer, on_cap="raise", cap="max_outer", unit="vertices"
+    ):
         # --- 0. trim: shrink the active set to vertices with BOTH an
         # in-edge and an out-edge inside the active subgraph; every
         # vertex peeled at any level is a singleton SCC (it cannot lie
@@ -228,23 +228,14 @@ def strongly_connected_components(
         # ~log(depth) rounds. The convergence count rides the round's
         # own materializing aggregation via a carried chg flag.
         color = active.select("v", F.col("v").alias("c"))
-        for it in range(max_inner):
-            new_color = loop.step(_color_round(ea, color), step, eager=False)
+        for _ in loop.rounds(
+            max_inner, on_cap="raise", cap="max_inner", unit="colours"
+        ):
+            color = loop.step(_color_round(ea, color), step, eager=False)
             step += 1
-            changed = (
-                new_color.agg(F.coalesce(F.sum("chg"), F.lit(0))).collect()[0][0]
-            )
-            loop.history[-1]["extra"].update(
-                {"outer": outer, "phase": "color", "changed": changed}
-            )
-            color = new_color
-            if changed == 0:
+            changed = color.agg(F.coalesce(F.sum("chg"), F.lit(0))).collect()[0][0]
+            if loop.settled(changed, outer=outer, phase="color"):
                 break
-        else:
-            raise RuntimeError(
-                f"scc coloring did not converge in {max_inner} rounds "
-                f"(outer {outer}); raise max_inner"
-            )
         color = color.select("v", "c")
 
         # --- 2. backward mark: v reaches its color root through
@@ -253,7 +244,9 @@ def strongly_connected_components(
         # to same-color endpoints
         marked = color.filter(F.col("v") == F.col("c")).select("v", "c")
         frontier = marked
-        for it in range(max_inner):
+        for it in loop.rounds(
+            max_inner, on_cap="raise", cap="max_inner", unit="marked vertices"
+        ):
             grown = (
                 ra.join(
                     frontier.select(F.col("v").alias("src"), "c"), "src"
@@ -270,17 +263,8 @@ def strongly_connected_components(
             marked = loop.step(marked.unionByName(new_frontier), step, eager=False)
             step += 1
             frontier = checkpoint(new_frontier, round=it)
-            n_new = frontier.count()
-            loop.history[-1]["extra"].update(
-                {"outer": outer, "phase": "mark", "frontier": n_new}
-            )
-            if n_new == 0:
+            if loop.settled(frontier.count(), outer=outer, phase="mark"):
                 break
-        else:
-            raise RuntimeError(
-                f"scc backward mark did not converge in {max_inner} rounds "
-                f"(outer {outer}); raise max_inner"
-            )
 
         assigned = marked.select("v", F.col("c").alias("scc"))
         done = (
@@ -294,13 +278,9 @@ def strongly_connected_components(
         if own_ea:  # fwd/rev (outer round 0 full-graph reuse) stay cached
             ea.unpersist()
             ra.unpersist()
-
-    else:
-        if active.count() > 0:
-            raise RuntimeError(
-                f"scc did not finish in {max_outer} outer rounds; "
-                "raise max_outer"
-            )
+        n_active = active.count()
+        if peel.settled(n_active):
+            break
 
     out = checkpoint(done.repartition(npart, "v"), eager=True)
     e.unpersist()

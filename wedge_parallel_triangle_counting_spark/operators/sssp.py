@@ -72,33 +72,30 @@ def weighted_sssp(
         fingerprint=(
             {"source": source, "m": e.count()} if checkpoint_dir else None
         ),
+        resume=resume,
     )
-    start = 0
-    dist = None
-    if resume:
-        got = loop.resume()
-        if got is not None:
-            state, start = got
-            if start > max_rounds:
-                # unlike BFS hops, a distance row does not record how
-                # many edges produced it, so a snapshot past this
-                # call's budget cannot be clamped — refuse rather
-                # than silently violate the <=max_rounds contract
-                raise ValueError(
-                    f"sssp checkpoint is at round {start} but this "
-                    f"call asked for max_rounds={max_rounds}; rerun "
-                    "without resume (or raise max_rounds)"
-                )
-            # the snapshot keeps the `improved` indicator, so the
-            # next round's relax frontier is recoverable exactly
-            dist = state.select("v", "dist")
-            frontier = state.filter("improved").select("v", "dist")
-    if dist is None:
-        dist = spark.createDataFrame(
-            [(source, 0)], "v long, dist long"
-        ).repartition(npart, "v")
-        frontier = dist  # rows improved last round — only these relax
-    for it in range(start, max_rounds):
+    dist = loop.start(
+        spark.createDataFrame([(source, 0)], "v long, dist long").repartition(
+            npart, "v"
+        )
+    )
+    frontier = dist  # rows improved last round — only these relax
+    if loop.first_round:
+        if loop.first_round > max_rounds:
+            # unlike BFS hops, a distance row does not record how
+            # many edges produced it, so a snapshot past this call's
+            # budget cannot be clamped — refuse rather than silently
+            # violate the <=max_rounds contract
+            raise ValueError(
+                f"sssp checkpoint is at round {loop.first_round} but this "
+                f"call asked for max_rounds={max_rounds}; rerun "
+                "without resume (or raise max_rounds)"
+            )
+        # the snapshot keeps the `improved` indicator, so the next
+        # round's relax frontier is recoverable exactly
+        frontier = dist.filter("improved").select("v", "dist")
+        dist = dist.select("v", "dist")
+    for it in loop.rounds(max_rounds):
         relaxed = (
             e.join(
                 frontier.select(F.col("v").alias("src"), "dist"), "src"
@@ -127,10 +124,8 @@ def weighted_sssp(
         frontier = checkpoint(
             merged.filter("improved").select("v", "dist"), round=it
         )
-        n_improved = frontier.count()
-        loop.history[-1]["extra"]["improved"] = n_improved
         dist = merged.select("v", "dist")
-        if n_improved == 0:
+        if loop.settled(frontier.count()):
             break
     out = checkpoint(dist, eager=True)
     e.unpersist()

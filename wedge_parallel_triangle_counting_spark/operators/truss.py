@@ -151,7 +151,9 @@ def k_truss(
 ) -> DataFrame:
     """Edges of the k-truss with their within-truss support:
     (src, dst, support), src < dst, support >= k-2 against the
-    SURVIVING subgraph. Empty result if the truss is empty."""
+    SURVIVING subgraph. Empty result if the truss is empty. A peel
+    still removing edges at `max_iters` warns (RuntimeWarning): the
+    result is then a superset of the k-truss."""
     spark = edges.sparkSession
     npart = loop_partitions(spark)
     und = canonical_edges(edges, npart).persist()
@@ -162,19 +164,17 @@ def k_truss(
     )
 
     cur = und
-    for it in range(max_iters):
+    for it in loop.rounds(max_iters, on_cap="warn", unit="edges"):
         new_cur = (
             _support(cur)
             .filter(F.col("support") >= k - 2)
             .select("src", "dst")
         )
-        new_cur = loop.step(new_cur, it, eager=False)
-        m = new_cur.count()
-        loop.history[-1]["extra"]["edges"] = m
-        cur = new_cur
-        if m == prev_m:
+        cur = loop.step(new_cur, it, eager=False)
+        m = cur.count()
+        removed, prev_m = prev_m - m, m
+        if loop.settled(removed, edges=m):
             break
-        prev_m = m
 
     # support recomputed against the final subgraph (the loop's last
     # filter used the PRE-removal supports)
