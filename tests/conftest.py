@@ -12,6 +12,14 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def spark_lane(monkeypatch):
+    """Pin pagerank() to its Spark lane: a zero cap fits no input."""
+    from wedge_parallel_triangle_counting_spark.operators import checkpointing
+
+    monkeypatch.setattr(checkpointing, "BROADCAST_MAX_EDGES", 0)
+
+
 def edges_df(spark, pairs):
     return spark.createDataFrame(
         [(int(a), int(b)) for a, b in pairs], "src long, dst long"

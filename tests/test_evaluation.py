@@ -153,6 +153,21 @@ def test_pagerank_convergence_empty_graph(spark):
     assert pagerank_convergence(empty, num_iters=3).count() == 0
 
 
+@pytest.mark.usefixtures("spark_lane")
+class TestPagerankConvergenceSparkLane:
+    """The pagerank_convergence tests above, on pagerank's Spark lane."""
+
+    test_pagerank_convergence_residuals_decay = staticmethod(
+        test_pagerank_convergence_residuals_decay
+    )
+    test_pagerank_convergence_matches_tol_delta = staticmethod(
+        test_pagerank_convergence_matches_tol_delta
+    )
+    test_pagerank_convergence_empty_graph = staticmethod(
+        test_pagerank_convergence_empty_graph
+    )
+
+
 def test_minhash_estimate_eval_identical_pair_exact(spark):
     from wedge_parallel_triangle_counting_spark.operators.evaluation import (
         minhash_estimate_eval,

@@ -3,11 +3,15 @@ golden graphs, checkpoint/resume, cross-strategy agreement."""
 
 from __future__ import annotations
 
+import json
+import logging
+import os
 import random
 
 import numpy as np
 import pytest
 
+from wedge_parallel_triangle_counting_spark.operators import checkpointing as CP
 from wedge_parallel_triangle_counting_spark.operators.components import (
     connected_components,
 )
@@ -110,6 +114,9 @@ def test_pagerank_resume_after_kill(spark, tmp_path):
         f"sys.path.insert(0, {repo!r})\n"
         "from wedge_parallel_triangle_counting_spark.session import get_spark\n"
         "from wedge_parallel_triangle_counting_spark.operators.pagerank import pagerank\n"
+        "from wedge_parallel_triangle_counting_spark.operators import checkpointing\n"
+        # the Spark lane: the driver-local one would finish before the kill
+        "checkpointing.BROADCAST_MAX_EDGES = 0\n"
         "spark = get_spark(app_name='kill-child', master='local[4]',\n"
         "                  extra_conf={'spark.ui.showConsoleProgress': 'false'})\n"
         "spark.sparkContext.setLogLevel('ERROR')\n"
@@ -477,6 +484,142 @@ def test_pagerank_weighted_uniform_weights_match_unweighted(spark):
     b = {r.v: r.pr for r in pagerank(dfw, num_iters=5, weight_col="w").collect()}
     for v in a:
         assert abs(a[v] - b[v]) < 1e-9
+
+
+@pytest.mark.usefixtures("spark_lane")
+class TestPagerankSparkLane:
+    """The pagerank tests above, on the Spark lane (the tests' inputs
+    fit the driver-local lane)."""
+
+    test_pagerank_matches_numpy = staticmethod(test_pagerank_matches_numpy)
+    test_pagerank_dangling_mass = staticmethod(test_pagerank_dangling_mass)
+    test_pagerank_tol_early_stop = staticmethod(test_pagerank_tol_early_stop)
+    test_pagerank_resume = staticmethod(test_pagerank_resume)
+    test_pagerank_personalized_matches_numpy = staticmethod(
+        test_pagerank_personalized_matches_numpy
+    )
+    test_pagerank_resume_refuses_different_sources = staticmethod(
+        test_pagerank_resume_refuses_different_sources
+    )
+    test_pagerank_weighted_matches_numpy = staticmethod(
+        test_pagerank_weighted_matches_numpy
+    )
+    test_pagerank_weighted_uniform_weights_match_unweighted = staticmethod(
+        test_pagerank_weighted_uniform_weights_match_unweighted
+    )
+
+
+def _lanes(caplog) -> list[str]:
+    """The lane verdicts pagerank logged, oldest first."""
+    return [
+        r.getMessage()
+        for r in caplog.records
+        if r.name == CP.__name__ and r.getMessage().startswith("pagerank: ")
+    ]
+
+
+def test_pagerank_lanes_agree(spark, monkeypatch, caplog):
+    """Every pagerank mode gives the same ranks on both lanes, to the
+    last few ulps (the lanes sum in different orders). The sources list
+    repeats an id and names one absent from the graph: both count
+    towards 1/len(sources)."""
+    caplog.set_level(logging.INFO, logger=CP.__name__)
+    pairs = _random_directed(41, 50, 260)
+    df = edges_df(spark, pairs)
+    rng = random.Random(41)
+    dfw = spark.createDataFrame(
+        [(a, b, float(rng.randrange(1, 6))) for a, b in pairs],
+        "src long, dst long, w double",
+    )
+    warm = spark.createDataFrame(
+        [(v, 0.05) for v in range(0, 50, 3)] + [(99, 0.5), (4, None)],
+        "v long, pr double",
+    )
+    modes = [
+        (df, {}),
+        (df, {"sources": [0, 1, 1, 77]}),
+        (dfw, {"weight_col": "w"}),
+        (df, {"init_ranks": warm}),
+        (df, {"tol": 1e-6, "num_iters": 60}),
+    ]
+    for edges, kw in modes:
+        kw = {"num_iters": 7, **kw}
+        runs = []
+        for cap in (CP.BROADCAST_MAX_EDGES, 0):
+            monkeypatch.setattr(CP, "BROADCAST_MAX_EDGES", cap)
+            frames: list = []
+            got = pagerank(edges, residuals_out=frames, **kw).collect()
+            residuals = [f.collect()[0] for f in frames]
+            runs.append(({r.v: r.pr for r in got}, residuals))
+        monkeypatch.undo()
+        (local, res_l), (dist, res_s) = runs
+        assert local.keys() == dist.keys(), kw
+        assert max(abs(local[v] - dist[v]) for v in local) < 1e-12, kw
+        assert res_l == res_s, kw
+    assert [m.split(" (")[0] for m in _lanes(caplog)] == [
+        "pagerank: local lane",
+        "pagerank: spark lane",
+    ] * len(modes)
+
+
+@pytest.mark.parametrize("first", ["local", "spark"])
+def test_pagerank_resume_across_lanes(spark, tmp_path, monkeypatch, first):
+    """A snapshot one lane wrote resumes in the other: same path, same
+    manifest and fingerprint; the manifest records the lane."""
+    pairs = _random_directed(8, 30, 120)
+    df = edges_df(spark, pairs)
+    ckpt = str(tmp_path / "pr")
+    direct = {r.v: r.pr for r in pagerank(df, num_iters=6).collect()}
+    with monkeypatch.context() as m:
+        if first == "spark":
+            m.setattr(CP, "BROADCAST_MAX_EDGES", 0)
+        pagerank(df, num_iters=3, checkpoint_dir=ckpt, checkpoint_every=2)
+    with open(os.path.join(ckpt, "pagerank.manifest.json")) as f:
+        manifest = json.load(f)
+    assert manifest["iteration"] == 2 and manifest["lane"]["lane"] == first
+    with monkeypatch.context() as m:
+        if first == "local":
+            m.setattr(CP, "BROADCAST_MAX_EDGES", 0)
+        resumed = {
+            r.v: r.pr
+            for r in pagerank(
+                df, num_iters=6, checkpoint_dir=ckpt, checkpoint_every=2, resume=True
+            ).collect()
+        }
+    with open(os.path.join(ckpt, "pagerank.manifest.json")) as f:
+        manifest = json.load(f)
+    second = "spark" if first == "local" else "local"
+    assert manifest["iteration"] == 4 and manifest["lane"]["lane"] == second
+    lanes = [h["extra"]["lane"]["lane"] for h in manifest["history"]]
+    assert lanes == [first] * 3 + [second] * 2
+    assert resumed.keys() == direct.keys()
+    assert max(abs(resumed[v] - direct[v]) for v in direct) < 1e-12
+
+
+def test_pagerank_spoofed_estimate_aborts_to_spark_lane(spark, monkeypatch, caplog):
+    """A size estimate far under the real input enters the local lane
+    without a count; the collected rows are over the cap, so the run
+    aborts to the Spark lane and still gives the right ranks."""
+    caplog.set_level(logging.INFO, logger=CP.__name__)
+    pairs = _random_directed(2, 40, 200)
+    monkeypatch.setattr(CP, "plan_size_bytes", lambda df: 1)
+    monkeypatch.setattr(CP, "BROADCAST_MAX_EDGES", 50)
+    got = {r.v: r.pr for r in pagerank(edges_df(spark, pairs), num_iters=8).collect()}
+    assert _lanes(caplog) == ["pagerank: spark lane (collected=200, cap 50 rows)"]
+    want = numpy_pagerank(pairs, 8)
+    assert got.keys() == want.keys()
+    assert max(abs(got[v] - want[v]) for v in want) < 1e-12
+
+
+def test_pagerank_null_endpoint_takes_spark_lane(spark, caplog):
+    """numpy cannot carry a null id, so an input holding one runs on the
+    Spark lane, whose answer it is."""
+    caplog.set_level(logging.INFO, logger=CP.__name__)
+    rows = [(0, 1), (1, 2), (2, 0), (2, None)]
+    df = spark.createDataFrame(rows, "src long, dst long")
+    got = pagerank(df, num_iters=4).collect()
+    assert _lanes(caplog) == ["pagerank: spark lane (nulls, cap 30000000 rows)"]
+    assert len(got) == 4  # the null endpoint is a vertex of the Spark lane
 
 
 def numpy_hits(pairs, num_iters):

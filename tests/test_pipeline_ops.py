@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import warnings
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import TWO_COMP, edges_df
@@ -325,6 +326,21 @@ def test_pagerank_warm_start_new_vertices_cold_init(spark):
     out = pagerank(edges, num_iters=1, init_ranks=old_ranks).collect()
     assert all(r["pr"] is not None for r in out)
     assert len(out) == 3
+
+
+@pytest.mark.usefixtures("spark_lane")
+class TestPagerankWarmStartSparkLane:
+    """The warm-start tests above, on pagerank's Spark lane."""
+
+    test_pagerank_warm_start_equals_cold_when_uniform = staticmethod(
+        test_pagerank_warm_start_equals_cold_when_uniform
+    )
+    test_pagerank_warm_start_converges_faster = staticmethod(
+        test_pagerank_warm_start_converges_faster
+    )
+    test_pagerank_warm_start_new_vertices_cold_init = staticmethod(
+        test_pagerank_warm_start_new_vertices_cold_init
+    )
 
 
 # -- incremental connected components -------------------------------------------

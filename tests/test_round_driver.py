@@ -183,6 +183,63 @@ def test_mis_round_cap_warns(spark):
     assert len(colors) == 100 and all(colors[a] != colors[b] for a, b in PATH100)
 
 
+def _luby_reference(pairs, drop_neighbors):
+    """Deterministic Luby in plain Python: the operator's md5 priority,
+    one selection per round, {v: round}."""
+    import hashlib
+
+    adj: dict = {}
+    for a, b in pairs:
+        if a != b:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+    prio = {
+        v: int(hashlib.md5(str(v).encode()).hexdigest()[:8], 16) * 2**31 + v
+        for v in adj
+    }
+    act, out, rnd = set(adj), {}, 0
+    while act:
+        rnd += 1
+        sel = {v for v in act if all(prio[v] < prio[u] for u in adj[v] & act)}
+        out.update((v, rnd) for v in sel)
+        act -= sel
+        if drop_neighbors:
+            act -= {u for v in sel for u in adj[v]}
+    return out
+
+
+def test_mis_round_jobs_and_output(spark):
+    """A round runs 12 Spark jobs for MIS and 10 for coloring (the
+    eager selection and active-set checkpoints with their AQE stages,
+    and the active count) — 2 fewer than when every round also checked
+    `sel.limit(1).count() == 0`, which could never fire. The per-round
+    figure is the job difference between a 2-round and a 1-round run;
+    the output is the plain-Python Luby's."""
+    import random
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    rng = random.Random(5)
+    pairs = [(rng.randrange(60), rng.randrange(60)) for _ in range(150)]
+    edges = edges_df(spark, pairs)
+
+    def jobs(tag, op, rounds):
+        sc.setJobGroup(tag, tag)
+        try:
+            with warnings.catch_warnings():
+                warnings.simplefilter("ignore", RuntimeWarning)
+                op(edges, max_rounds=rounds).count()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(tracker.getJobIdsForGroup(tag))
+
+    for op, per_round in ((maximal_independent_set, 12), (luby_coloring, 10)):
+        name = op.__name__
+        assert jobs(f"{name}_2", op, 2) - jobs(f"{name}_1", op, 1) == per_round
+        got = {r.v: r.round for r in op(edges).collect()}
+        assert got == _luby_reference(pairs, op is maximal_independent_set)
+
+
 def test_matching_round_cap_warns(spark):
     path = edges_df(spark, PATH100)
     with pytest.warns(RuntimeWarning, match=r"matching: .*max_rounds=1 with \d+ active edges"):

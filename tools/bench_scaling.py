@@ -20,7 +20,7 @@ preprocessing / copy / exec separately:
 - copy  = closure-probe build + broadcast (the reference's H2D copy)
 - exec  = wedge enumeration + closure probing (the kernel)
 - e2e   = prep + count with the fully distributed semi-join closure
-plus PageRank (5 iterations) wall time.
+plus PageRank (5 iterations, pinned to its Spark lane) wall time.
 
 Writes BENCH/LAST_SCALING.md (BENCH/BASELINE.md is hand-curated from
 the run history — this tool clobbered it once, r6-b) and prints a
@@ -120,6 +120,10 @@ for _ in range(min(reps, 2)):
 assert tri2 == tri
 
 # --- pagerank ---------------------------------------------------------
+# on the Spark lane: this input fits the driver-local lane, whose numpy
+# rounds run on one thread whatever the session's cores
+from wedge_parallel_triangle_counting_spark.operators import checkpointing as CP
+CP.BROADCAST_MAX_EDGES = 0
 o = spark.read.parquet(f"{sf_dir}/orders.parquet")
 pe = o.select((F.col("o_custkey") % 49999).alias("s0"),
               (F.col("o_orderkey") % 49999).alias("d0"))

@@ -48,18 +48,48 @@ one message naming the loop, the cap and the count:
 
 A resumed run whose snapshot is already at the cap yields no round and
 says nothing: this call ran no round that could have been cut short.
+
+Driver-local lane. A small iterative run is bound by Spark's per-stage
+cost, not by its data (a 2-round durable PageRank over 168 k links ran
+25 jobs), so a loop whose input fits one machine may run its rounds in
+numpy on the driver instead, through the same driver:
+
+    arrays, lane = local_input(edges.select(...))   # None: Spark lane
+    loop = CheckpointedLoop(..., lane=lane)         # logs the verdict
+    state = loop.start_local(init)                  # numpy columns
+    for it in loop.rounds(max_iters):
+        state = round_body(state)
+        loop.step_local(state, it)
+
+`local_input` takes the lane when `size_gate` says the input has at
+most `BROADCAST_MAX_EDGES` rows, collects it once through Arrow, and
+falls back to the Spark lane when the collected rows are over the cap
+or hold a null. `step_local` writes the same
+`<name>.iterNNNNN.parquet` snapshot `step` writes (with pyarrow) and
+swaps the same manifest, so a run snapshotted by one lane resumes in
+the other. The verdict and the number behind it (the size estimate,
+the counted or collected rows) go into every round's `history` record,
+the manifest and one INFO log event. Operators on the lane: pagerank.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import os
+import shutil
 import time
 import warnings
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+_log = logging.getLogger(__name__)
 
 
 # 2^64 bytes = 16 EiB. Any plan-size ESTIMATE above this is provably
@@ -274,6 +304,92 @@ def loop_partitions(spark: SparkSession) -> int:
     )
 
 
+# Largest input, in rows, that one machine takes whole: the triangle
+# engine's broadcast closure (~240 MB of int64 keys per executor) and
+# the driver-local loop lane both collect at most this many edges.
+BROADCAST_MAX_EDGES = 30_000_000
+
+
+class SizeGate(NamedTuple):
+    """`size_gate`'s verdict: whether the input fits the cap, and on
+    what evidence — basis "estimate" (`value` is Catalyst's size
+    estimate in bytes, no job ran) or "count" (`value` is the exact row
+    count, one job ran)."""
+
+    fits: bool
+    basis: str
+    value: int | None
+
+
+def plan_size_bytes(df: DataFrame) -> int | None:
+    """Catalyst's estimated size of the optimized plan in bytes —
+    metadata-only, no job. None when there is no estimate: a leaf of
+    unknown size (a frame built from Python rows or an RDD) reports
+    `spark.sql.defaultSizeInBytes`, Long.MaxValue by default, which
+    says nothing about the input."""
+    try:
+        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        conf = df.sparkSession._jsparkSession.sessionState().conf()
+        unknown = int(conf.defaultSizeInBytes())
+    except Exception:  # pragma: no cover — py4j/plan edge cases
+        return None
+    return None if est >= unknown else est
+
+
+def size_gate(df: DataFrame, cap: int) -> SizeGate:
+    """Whether `df` has at most `cap` rows, in three regimes (r6,
+    VERDICT item 3: the gates before ran a full count() job on the
+    derived input every time). The size estimate is metadata-only:
+    - estimate >= 64 x cap bytes: does not fit, no job;
+    - estimate <= cap bytes: fits, no job. The bound is 1 byte/row
+      (measured parquet int-pair scans estimate 3.7-22 B/row), so only
+      a sub-byte-per-row encoding can overshoot; a caller that collects
+      the input re-checks the rows it got and falls back to its
+      distributed plan, so a wrong estimate costs memory headroom,
+      never correctness;
+    - in between, or no estimate: one exact count() job."""
+    est = plan_size_bytes(df)
+    if est is not None and est >= 64 * cap:
+        return SizeGate(False, "estimate", est)
+    if est is not None and est <= cap:
+        return SizeGate(True, "estimate", est)
+    rows = df.count()
+    return SizeGate(rows <= cap, "count", rows)
+
+
+def collect_arrays(df: DataFrame, *cols: str) -> list[np.ndarray] | None:
+    """`cols` of `df` as numpy arrays through one Arrow collect (no
+    pandas object overhead — ADVICE round 1, _build_probe item). None
+    when a column holds a null, which a numpy array cannot carry."""
+    tbl = df.select(*cols).toArrow()
+    if any(c.null_count for c in tbl.columns):
+        return None
+    return [c.to_numpy() for c in tbl.columns]
+
+
+def local_input(edges: DataFrame) -> tuple[list[np.ndarray] | None, dict]:
+    """The driver-local lane's entry: (every column of `edges` as a
+    numpy array, the lane verdict) when the input fits one machine,
+    else (None, the verdict). `size_gate` decides at
+    `BROADCAST_MAX_EDGES` rows; an entry on the size estimate re-checks
+    the rows it collected and aborts to the Spark lane over the cap,
+    and a null anywhere (an id that does not cast to long comes out
+    null) also takes the Spark lane."""
+    cap = BROADCAST_MAX_EDGES
+    gate = size_gate(edges, cap)
+    lane = {"lane": "spark", "basis": gate.basis, "value": gate.value, "cap": cap}
+    if not gate.fits:
+        return None, lane
+    got = collect_arrays(edges, *edges.columns)
+    if got is None:
+        lane.update(basis="nulls", value=None)
+    elif len(got[0]) > cap:
+        lane.update(basis="collected", value=len(got[0]))
+    else:
+        return got, dict(lane, lane="local")
+    return None, lane
+
+
 # A label-propagation/HashMin round reads the edge table by one
 # endpoint (the join) and writes by the other (the aggregation), so the
 # optimal static clustering is REGIME-DEPENDENT:
@@ -291,27 +407,14 @@ LOOP_BROADCAST_INPUT_MAX = 2_500_000
 
 def loop_layout(edges) -> tuple[str, bool]:
     """(clustering key for the symmetric edge table, broadcast the
-    per-round state?) — see the regime note above.
-
-    The regime gate first consults Catalyst's size estimate
-    (metadata-only, no job — r6: on DERIVED inputs like the registry's
-    projected lineitem scans the old count() was a real scan job paid
-    at the top of every loop operator). An estimate at or below the row
-    cap in BYTES proves the row bound at >= 1 byte/row (measured
-    parquet int-pair scans estimate 3.7-22 B/row); 64x the cap proves
-    the big regime; only the gray zone pays the exact count. The
-    broadcast gate errs safe either way: a wrongly-big verdict costs
-    one co-partitioned shuffle per round, never correctness."""
-    est = None
-    try:
-        est = int(edges._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # pragma: no cover — py4j/plan edge cases
-        pass
-    if est is not None and est <= LOOP_BROADCAST_INPUT_MAX:
-        return "src", True
-    if est is not None and est >= 64 * LOOP_BROADCAST_INPUT_MAX:
-        return "dst", False
-    small = edges.count() <= LOOP_BROADCAST_INPUT_MAX
+    per-round state?) — see the regime note above. `size_gate` decides
+    at `LOOP_BROADCAST_INPUT_MAX` rows, with no job outside its gray
+    zone (r6: on DERIVED inputs like the registry's projected lineitem
+    scans the old count() was a real scan job paid at the top of every
+    loop operator). The broadcast gate errs safe either way: a
+    wrongly-big verdict costs one co-partitioned shuffle per round,
+    never correctness."""
+    small = size_gate(edges, LOOP_BROADCAST_INPUT_MAX).fits
     return ("src" if small else "dst", small)
 
 
@@ -346,6 +449,7 @@ class CheckpointedLoop:
         collect_partition_stats: bool = False,
         fingerprint: dict | None = None,
         resume: bool = False,
+        lane: dict | None = None,
     ) -> None:
         self.spark = spark
         self.name = name
@@ -358,6 +462,14 @@ class CheckpointedLoop:
         # stale state)
         self.fingerprint = fingerprint
         self.resume = resume
+        # `local_input`'s verdict for a loop that has the driver-local
+        # lane: kept in every round's record and in the manifest
+        self.lane = lane
+        if lane is not None:
+            why = lane["basis"]
+            if lane["value"] is not None:
+                why += f"={lane['value']}"
+            _log.info("%s: %s lane (%s, cap %s rows)", name, lane["lane"], why, lane["cap"])
         # round rounds() starts from: 0, or the one after the resumed
         # snapshot's
         self.first_round = 0
@@ -372,9 +484,9 @@ class CheckpointedLoop:
         assert self.dir is not None
         return os.path.join(self.dir, f"{self.name}.manifest.json")
 
-    def _snapshot(self) -> tuple[DataFrame, int] | None:
-        """(state, next_iteration) from the last durable snapshot, or
-        None if there is nothing to resume from."""
+    def _manifest(self) -> dict | None:
+        """The last durable snapshot's manifest (its history becomes
+        this loop's), or None if there is nothing to resume from."""
         if not self.dir:
             return None
         mp = self._manifest_path()
@@ -391,19 +503,70 @@ class CheckpointedLoop:
                 "delete the checkpoint directory to start fresh"
             )
         self.history = manifest.get("history", [])
-        df = self.spark.read.parquet(manifest["path"])
-        return df, manifest["iteration"] + 1
+        return manifest
+
+    def _commit(self, iteration: int, path: str) -> None:
+        """Point the manifest at the snapshot just written at `path`."""
+        tmp = self._manifest_path() + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(
+                {
+                    "iteration": iteration,
+                    "path": path,
+                    "history": self.history,
+                    "fingerprint": self.fingerprint,
+                    "lane": self.lane,
+                },
+                f,
+            )
+        os.replace(tmp, self._manifest_path())  # atomic manifest swap
+
+    def _record(self, iteration: int, rows: int, partitions: int,
+                partition_rows: list[int], extra: dict) -> None:
+        if self.lane is not None:
+            extra = {"lane": self.lane, **extra}
+        self.history.append(
+            IterationMetrics(
+                iteration=iteration,
+                rows=rows,
+                partitions=partitions,
+                partition_rows=partition_rows,
+                extra=extra,
+                wall_sec=time.time() - self._t0,
+            ).__dict__
+        )
 
     # -- round driver -----------------------------------------------------
     def start(self, init: DataFrame) -> DataFrame:
         """The loop's initial state: the last durable snapshot when
         built with `resume=True` and one exists (`first_round` then
         points past it), else `init`."""
-        got = self._snapshot() if self.resume else None
-        if got is None:
+        manifest = self._manifest() if self.resume else None
+        if manifest is None:
             return init
-        df, self.first_round = got
-        return df
+        self.first_round = manifest["iteration"] + 1
+        return self.spark.read.parquet(manifest["path"])
+
+    def start_local(self, init: dict[str, np.ndarray], key: str = "v") -> dict[str, np.ndarray]:
+        """`start` for the driver-local lane: `init` is the state as
+        numpy columns, sorted by the unique `key` column. A resumed
+        snapshot — written by either lane, in any row order — comes back
+        as `init`'s columns in `init`'s key order; a snapshot over other
+        keys is refused."""
+        manifest = self._manifest() if self.resume else None
+        if manifest is None:
+            return init
+        snap = pq.read_table(manifest["path"])
+        keys = snap.column(key).to_numpy()
+        order = np.argsort(keys, kind="stable")
+        if not np.array_equal(keys[order], init[key]):
+            raise ValueError(
+                f"checkpoint '{self.name}': the snapshot's {key} values "
+                "differ from the input's; refusing to resume — delete the "
+                "checkpoint directory to start fresh"
+            )
+        self.first_round = manifest["iteration"] + 1
+        return {c: snap.column(c).to_numpy()[order] for c in init}
 
     def rounds(
         self,
@@ -441,20 +604,14 @@ class CheckpointedLoop:
         if len(self.history) > self._round_records:  # step() ran this round
             self.history[-1]["extra"].update(extra)
         else:
-            self.history.append(
-                IterationMetrics(
-                    iteration=self._round,
-                    rows=-1,
-                    partitions=0,
-                    partition_rows=[],
-                    extra=extra,
-                    wall_sec=time.time() - self._t0,
-                ).__dict__
-            )
+            self._record(self._round, -1, 0, [], extra)
         self._pending = pending
         return pending == 0
 
     # -- per-iteration hook ------------------------------------------------
+    def _snapshot_path(self, iteration: int) -> str:
+        return os.path.join(self.dir, f"{self.name}.iter{iteration:05d}.parquet")
+
     def step(self, df: DataFrame, iteration: int, eager: bool = True, **extra) -> DataFrame:
         """Truncate lineage; snapshot durably on cadence; record metrics.
 
@@ -472,30 +629,27 @@ class CheckpointedLoop:
         else:
             partition_rows = []
             rows = -1
-        m = IterationMetrics(
-            iteration=iteration,
-            rows=rows,
-            partitions=df.rdd.getNumPartitions(),
-            partition_rows=partition_rows,
-            extra=extra,
-            wall_sec=time.time() - self._t0,
-        )
-        self.history.append(m.__dict__)
+        self._record(iteration, rows, df.rdd.getNumPartitions(), partition_rows, extra)
 
         if self.dir and iteration % self.every == 0:
-            path = os.path.join(self.dir, f"{self.name}.iter{iteration:05d}.parquet")
+            path = self._snapshot_path(iteration)
             df.write.mode("overwrite").parquet(path)
-            tmp = self._manifest_path() + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(
-                    {
-                        "iteration": iteration,
-                        "path": path,
-                        "history": self.history,
-                        "fingerprint": self.fingerprint,
-                    },
-                    f,
-                )
-            os.replace(tmp, self._manifest_path())  # atomic manifest swap
+            self._commit(iteration, path)
             df = self.spark.read.parquet(path)
         return df
+
+    def step_local(self, state: dict[str, np.ndarray], iteration: int) -> None:
+        """`step` for the driver-local lane: record the round (one
+        partition) and, on the snapshot cadence, write `state` with
+        pyarrow to the parquet path `step` uses and swap the manifest."""
+        rows = len(next(iter(state.values())))
+        if self.collect_partition_stats:
+            self._record(iteration, rows, 1, [rows], {})
+        else:
+            self._record(iteration, -1, 1, [], {})
+        if self.dir and iteration % self.every == 0:
+            path = self._snapshot_path(iteration)
+            shutil.rmtree(path, ignore_errors=True)
+            os.makedirs(path)
+            pq.write_table(pa.table(state), os.path.join(path, "part-00000.parquet"))
+            self._commit(iteration, path)

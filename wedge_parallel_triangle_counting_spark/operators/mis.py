@@ -105,10 +105,8 @@ def _luby_rounds(
             .select("v", F.lit(rnd).alias("round")),
             eager=True,
         )
-        if sel.limit(1).count() == 0:
-            # only possible when act is empty (the min-priority active
-            # vertex of any nonempty active graph is always selected)
-            break
+        # sel is never empty: act is (the loop settles when it
+        # empties), and the min-priority active vertex is always selected
         selections.append(sel)
         gone = sel.select("v")
         if drop_neighbors:

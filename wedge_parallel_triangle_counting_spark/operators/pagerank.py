@@ -31,14 +31,44 @@ Scale design (r3, after profiling the 0.67 scaling efficiency):
   dangling broadcast — materializes it; iterative lineage blowup,
   SURVEY §7.3). Every 8th round's checkpoint is eager, which bounds
   the RDD lineage of the carried ranks to 8 rounds.
+- Driver-local lane (checkpointing.local_input): when the edge table
+  fits one machine (at most BROADCAST_MAX_EDGES rows, the triangle
+  engine's fused-lane cap), `pagerank` collects src/dst once through
+  Arrow and runs the same graph build and recurrence in float64 numpy
+  on the driver — the same operation order as the Spark expressions,
+  so the lanes differ only in summation order (ulps). Small runs are
+  bound by Spark's per-stage cost, not by the data: a 2-round durable
+  run over 168 k links took 25 jobs on the Spark lane. Durable
+  snapshots, the manifest and its fingerprint are shared, so either
+  lane resumes the other's checkpoint. Null endpoints take the Spark
+  lane, as does an `init_ranks` that repeats a vertex id.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpointing import CheckpointedLoop, checkpoint, loop_partitions
+from .checkpointing import (
+    CheckpointedLoop,
+    checkpoint,
+    collect_arrays,
+    local_input,
+    loop_partitions,
+)
+
+
+def _edge_cols(weight_col: str | None) -> list:
+    """(src, dst[, w]) as long, long[, double]: the input both lanes read."""
+    cols = [
+        F.col("src").cast("long").alias("src"),
+        F.col("dst").cast("long").alias("dst"),
+    ]
+    if weight_col is not None:
+        cols.append(F.col(weight_col).cast("double").alias("w"))
+    return cols
 
 
 def _prepare(edges: DataFrame, weight_col: str | None, npart: int):
@@ -53,13 +83,7 @@ def _prepare(edges: DataFrame, weight_col: str | None, npart: int):
     prep, graph.prepare_oriented_fast), and — because the edge table
     is persisted before anything derives from it — the dedup runs
     once, not once per derived frame."""
-    cols = [
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-    ]
-    if weight_col is not None:
-        cols.append(F.col(weight_col).cast("double").alias("w"))
-    base = edges.select(*cols).repartition(npart, "src")
+    base = edges.select(*_edge_cols(weight_col)).repartition(npart, "src")
     if weight_col is None:
         e = base.dropDuplicates(["src", "dst"])
         out_expr, zero = F.count("*"), F.lit(0)
@@ -134,6 +158,30 @@ def pagerank(
     the full schedule over 10^12 edges. Pair with `tol` in
     production; tests pin `num_iters` for exact oracle replay."""
     spark = edges.sparkSession
+    arrays, lane = local_input(edges.select(*_edge_cols(weight_col)))
+    warm = None
+    if arrays is not None and init_ranks is not None:
+        # a null id never joins and a null pr means "cold", as in the
+        # Spark lane's left join + coalesce
+        warm = collect_arrays(
+            init_ranks.select(
+                F.col("v").cast("long").alias("v"),
+                F.col("pr").cast("double").alias("pr"),
+            ).dropna(),
+            "v",
+            "pr",
+        )
+        if len(np.unique(warm[0])) < len(warm[0]):
+            # the Spark lane's join repeats such a vertex; only it can
+            # say what that means
+            arrays, warm = None, None
+            lane.update(lane="spark", basis="init_ranks", value=None)
+    if arrays is not None:
+        return _pagerank_local(
+            spark, arrays, warm, lane, num_iters, damping, tol,
+            checkpoint_dir, checkpoint_every, resume, partition_stats,
+            sources, weight_col, residuals_out,
+        )
     # align the static sides with the per-iteration aggregation output
     # (spark.sql.shuffle.partitions) — a defaultParallelism mismatch
     # re-exchanged the edge table every iteration
@@ -153,26 +201,14 @@ def pagerank(
         checkpoint_dir,
         checkpoint_every,
         collect_partition_stats=partition_stats,
-        # fingerprint must pin the GRAPH and the QUERY, not just the
-        # vertex count (ADVICE r2): same-n different graphs, or a
-        # personalized run resuming a plain run's checkpoint, must be
-        # rejected — match the components/kcore fingerprints. The edge
-        # count job only runs when checkpointing is on.
+        # the edge count job only runs when checkpointing is on
         fingerprint=(
-            {
-                "n_vertices": n,
-                "m_edges": e.count(),
-                "damping": damping,
-                "sources": sorted(int(x) for x in sources)
-                if sources is not None
-                else None,
-                "weight_col": weight_col,
-                "warm_start": init_ranks is not None,
-            }
+            _fingerprint(n, e.count(), damping, sources, weight_col, init_ranks)
             if checkpoint_dir
             else None
         ),
         resume=resume,
+        lane=lane,
     )
     if sources is not None:
         srcs = [int(x) for x in sources]
@@ -196,12 +232,14 @@ def pagerank(
     ranks = loop.start(ranks)
 
     base = (1.0 - damping) / n
-    # NOTE: unlike labelprop/hashmin, PageRank does NOT broadcast its
-    # state — the contribution join is already co-partitioned
-    # (e hash(src) / ranks hash(v), aligned), so a per-round broadcast
-    # only adds a collect+broadcast job per iteration. Interleaved A/B
-    # at sf0.1 local[32]: broadcast 5.2s vs co-partitioned 3.5-3.8s,
-    # all reps same sign.
+    # NOTE: PageRank does NOT broadcast its state, unlike
+    # labelprop/hashmin: a per-round broadcast adds a collect+broadcast
+    # job per iteration. Interleaved A/B at sf0.1 local[32]: broadcast
+    # 5.2s vs shuffle join 3.5-3.8s, all reps same sign. The shuffle
+    # join is NOT co-partitioned: the edge side keeps _prepare's
+    # hash(src) clustering, but the carried ranks are a checkpointed
+    # frame that reports UnknownPartitioning, so their vertex-sized
+    # side is re-exchanged on v every round (ROADMAP direction 3).
     ranks = _iterate(
         loop, e, outdeg, ranks, s_col, base, damping, n, num_iters, tol,
         weighted=weight_col is not None, residuals=residuals_out,
@@ -209,6 +247,106 @@ def pagerank(
     e.unpersist()
     outdeg.unpersist()
     return ranks.select("v", "pr")
+
+
+def _fingerprint(n, m, damping, sources, weight_col, init_ranks) -> dict:
+    """The checkpoint fingerprint, the same in both lanes. It must pin
+    the GRAPH and the QUERY, not just the vertex count (ADVICE r2):
+    same-n different graphs, or a personalized run resuming a plain
+    run's checkpoint, must be rejected — match the components/kcore
+    fingerprints."""
+    return {
+        "n_vertices": n,
+        "m_edges": m,
+        "damping": damping,
+        "sources": sorted(int(x) for x in sources) if sources is not None else None,
+        "weight_col": weight_col,
+        "warm_start": init_ranks is not None,
+    }
+
+
+def _pagerank_local(
+    spark, arrays, warm, lane, num_iters, damping, tol, checkpoint_dir,
+    checkpoint_every, resume, partition_stats, sources, weight_col, residuals,
+):
+    """`pagerank` on the driver-local lane, from the collected
+    (src, dst[, w]) arrays: `_prepare`'s graph in numpy, then
+    `_iterate`'s recurrence in the order of its Spark expressions."""
+    src, dst = arrays[0], arrays[1]
+    # vertices = all endpoints, as dense indices into the sorted ids
+    v, idx = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    n = len(v)
+    if n == 0:
+        return spark.createDataFrame([], "v long, pr double")
+    # distinct edges (weighted: duplicate rows sum their weights) as
+    # src*n + dst keys; n <= 2*BROADCAST_MAX_EDGES keeps them in int64
+    key = idx[: len(src)] * n + idx[len(src):]
+    w = None
+    if weight_col is None:
+        key = np.unique(key)
+    else:
+        key, at = np.unique(key, return_inverse=True)
+        w = np.bincount(at, weights=arrays[2], minlength=len(key))
+    es, ed = np.divmod(key, n)
+    # out-mass: out-degree (int64), or the summed outgoing weight
+    outdeg = np.bincount(es, weights=w, minlength=n)
+
+    loop = CheckpointedLoop(
+        spark,
+        "pagerank",
+        checkpoint_dir,
+        checkpoint_every,
+        collect_partition_stats=partition_stats,
+        fingerprint=(
+            _fingerprint(n, len(key), damping, sources, weight_col, warm)
+            if checkpoint_dir
+            else None
+        ),
+        resume=resume,
+        lane=lane,
+    )
+    s = None
+    if sources is not None:
+        srcs = [int(x) for x in sources]
+        s = np.where(np.isin(v, srcs), 1.0 / len(srcs), 0.0)
+    pr = s if s is not None else np.full(n, 1.0 / n)
+    if warm is not None:
+        pos = np.minimum(np.searchsorted(v, warm[0]), n - 1)
+        hit = v[pos] == warm[0]
+        pr = pr.copy()
+        pr[pos[hit]] = warm[1][hit]
+    pr = loop.start_local({"v": v, "outdeg": outdeg, "pr": pr})["pr"]
+
+    # only sources with out-mass > 0 contribute; only out-mass == 0 is
+    # dangling (a negative weighted out-mass is neither)
+    live = outdeg[es] > 0
+    es, ed = es[live], ed[live]
+    od = outdeg[es]
+    w = w[live] if w is not None else None
+    dangling_v = outdeg == 0
+    base = (1.0 - damping) / n
+    for it in loop.rounds(num_iters):
+        dangling = pr[dangling_v].sum()
+        share = pr[es] * w / od if w is not None else pr[es] / od
+        contrib = np.bincount(ed, weights=share, minlength=n)
+        if s is None:
+            new = base + damping * (contrib + dangling / n)
+        else:
+            new = (1.0 - damping) * s + damping * (contrib + dangling * s)
+        loop.step_local({"v": v, "outdeg": outdeg, "pr": new}, it)
+        delta = None
+        if residuals is not None or tol is not None:
+            delta = float(np.abs(new - pr).sum())
+        if residuals is not None:
+            residuals.append(
+                spark.createDataFrame(
+                    [(it + 1, delta)], "iter long, l1_residual double"
+                ).select("iter", F.round("l1_residual", 6).alias("l1_residual"))
+            )
+        pr = new
+        if tol is not None and loop.settled(int(delta >= tol), l1_delta=delta):
+            break
+    return spark.createDataFrame(pd.DataFrame({"v": v, "pr": pr}), "v long, pr double")
 
 
 def _iterate(

@@ -60,40 +60,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import wedge as wk
+from .checkpointing import BROADCAST_MAX_EDGES, collect_arrays, size_gate
 from .graph import (
     adjacency,
     prepare_oriented,
     prepare_oriented_fast,
 )
 
-BROADCAST_MAX_EDGES = 30_000_000  # ~240 MB of int64 keys per executor
 HUB_ROUTE_BROADCAST_MAX = 1_000_000  # hub-id table broadcast cap for lane routing
-
-# Catalyst-statistics gate for the collect-fused wedge path (r6,
-# VERDICT item 3: the old gate ran a full count() job on the derived
-# input before every fused count). optimizedPlan().stats().sizeInBytes
-# is metadata-only (file sizes x projection ratio — no job):
-# - est <= FUSED_STATS_SAFE_BYTES: enter fused WITHOUT the count job.
-#   The bound is deliberately 1 byte/row (measured parquet int-pair
-#   scans estimate 3.7-22 B/row), so only sub-byte-per-row adversarial
-#   encodings can overshoot — and the fused path now re-checks the
-#   ACTUAL collected row count and falls back to the distributed
-#   pipeline if it exceeds BROADCAST_MAX_EDGES, so a wrong estimate
-#   costs memory headroom, never correctness.
-# - est >= FUSED_STATS_SKIP_BYTES (64 B/row at the cap): certainly too
-#   big — skip fused without counting.
-# - in between: the exact count() gate, as before.
-FUSED_STATS_SAFE_BYTES = BROADCAST_MAX_EDGES  # 1 byte/row floor
-FUSED_STATS_SKIP_BYTES = 64 * BROADCAST_MAX_EDGES
-
-
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's estimated size of the optimized plan in bytes —
-    metadata-only, no job. None when the estimate is unavailable."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # pragma: no cover — py4j/plan edge cases
-        return None
 
 
 def _split_chunks(adj_df: DataFrame, split_budget: int) -> DataFrame:
@@ -382,24 +356,6 @@ def _emit_pairs_arrow_udf():
     return run
 
 
-def _collect_long_cols(df: DataFrame, a: str, b: str) -> tuple[np.ndarray, np.ndarray]:
-    """Collect two long columns as numpy arrays via Arrow batches
-    (no pandas object overhead — ADVICE round 1, _build_probe item)."""
-    sel = df.select(a, b)
-    try:
-        tbl = sel.toArrow()
-        return (
-            tbl.column(a).to_numpy(zero_copy_only=False).astype(np.int64, copy=False),
-            tbl.column(b).to_numpy(zero_copy_only=False).astype(np.int64, copy=False),
-        )
-    except Exception:  # pragma: no cover — Arrow path unavailable
-        pdf = sel.toPandas()
-        return (
-            pdf[a].values.astype(np.int64),
-            pdf[b].values.astype(np.int64),
-        )
-
-
 def _numpy_top_hub_ids(src: np.ndarray, dst: np.ndarray, hub_k: int) -> np.ndarray:
     """Top-hub_k vertex ids by (symmetric degree, id) computed from the
     collected oriented edge arrays — each undirected edge appears once,
@@ -455,7 +411,7 @@ def _build_probe(
 ) -> _Probe:
     if key_base * key_base > 2**62:
         raise ValueError("vertex domain too large for int64 edge keys")
-    src, dst = _collect_long_cols(oriented, "src", "dst")
+    src, dst = collect_arrays(oriented, "src", "dst")
     edge_keys = wk.build_edge_keys(src, dst, key_base)
     hub_bc = None
     hub_ids = None
@@ -603,7 +559,7 @@ def _wedge_fused(
     caches.append(sym)
     mark("prep_sec")
 
-    a, b = _collect_long_cols(sym.filter(F.col("src") < F.col("dst")), "src", "dst")
+    a, b = collect_arrays(sym.filter(F.col("src") < F.col("dst")), "src", "dst")
     m = len(a)
     if max_collect_edges is not None and m > max_collect_edges:
         # optimistic entry (statistics-gated, no exact count): the
@@ -950,14 +906,11 @@ def triangle_count(
         # Collect-fused fast path (VERDICT r2 item 5): in the broadcast-
         # closure regime the probe collect IS the prep action — one
         # edge shuffle + one count job, no stats job, no degree joins.
-        # The closure="auto" gate is three-regime (r6, VERDICT item 3):
-        # a small Catalyst size estimate enters fused with NO gate job
-        # (the collected row count is re-checked, so a bad estimate
-        # aborts to the distributed pipeline instead of overflowing the
-        # broadcast budget), a huge estimate skips fused with no job,
-        # and only the gray zone pays the exact input count() the old
-        # gate ran unconditionally. Explicit closure="broadcast" skips
-        # the gate entirely.
+        # The closure="auto" gate is checkpointing.size_gate: an entry
+        # on the size estimate (no job) re-checks the collected row
+        # count, so a bad estimate aborts to the distributed pipeline
+        # instead of overflowing the broadcast budget. Explicit
+        # closure="broadcast" skips the gate entirely.
         use_fused = (
             prep in ("auto", "fast")
             and partitioner in ("auto", "hash")
@@ -965,13 +918,10 @@ def triangle_count(
         )
         max_collect = None
         if use_fused and closure == "auto":
-            est = _plan_size_bytes(edges)
-            if est is not None and est <= FUSED_STATS_SAFE_BYTES:
+            gate = size_gate(edges, BROADCAST_MAX_EDGES)
+            use_fused = gate.fits
+            if gate.basis == "estimate":
                 max_collect = BROADCAST_MAX_EDGES
-            elif est is not None and est >= FUSED_STATS_SKIP_BYTES:
-                use_fused = False
-            else:
-                use_fused = edges.count() <= BROADCAST_MAX_EDGES
         if use_fused:
             fused_info: dict = {}
             out = _wedge_fused(
