@@ -13,11 +13,13 @@ def spark():
 
 
 @pytest.fixture
-def spark_lane(monkeypatch):
-    """Pin pagerank() to its Spark lane: a zero cap fits no input."""
+def local_lane(monkeypatch):
+    """Put pagerank() on its driver-local lane. The test frames are
+    built from Python rows, which have no size estimate and so take the
+    Spark lane; a zero estimate fits under any cap."""
     from wedge_parallel_triangle_counting_spark.operators import checkpointing
 
-    monkeypatch.setattr(checkpointing, "BROADCAST_MAX_EDGES", 0)
+    monkeypatch.setattr(checkpointing, "plan_size_bytes", lambda df: 0)
 
 
 def edges_df(spark, pairs):

@@ -153,9 +153,9 @@ def test_pagerank_convergence_empty_graph(spark):
     assert pagerank_convergence(empty, num_iters=3).count() == 0
 
 
-@pytest.mark.usefixtures("spark_lane")
-class TestPagerankConvergenceSparkLane:
-    """The pagerank_convergence tests above, on pagerank's Spark lane."""
+@pytest.mark.usefixtures("local_lane")
+class TestPagerankConvergenceLocalLane:
+    """The pagerank_convergence tests above, on pagerank's driver-local lane."""
 
     test_pagerank_convergence_residuals_decay = staticmethod(
         test_pagerank_convergence_residuals_decay

@@ -116,7 +116,7 @@ def test_pagerank_resume_after_kill(spark, tmp_path):
         "from wedge_parallel_triangle_counting_spark.operators.pagerank import pagerank\n"
         "from wedge_parallel_triangle_counting_spark.operators import checkpointing\n"
         # the Spark lane: the driver-local one would finish before the kill
-        "checkpointing.BROADCAST_MAX_EDGES = 0\n"
+        "checkpointing.LOCAL_LANE_MAX_EDGES = 0\n"
         "spark = get_spark(app_name='kill-child', master='local[4]',\n"
         "                  extra_conf={'spark.ui.showConsoleProgress': 'false'})\n"
         "spark.sparkContext.setLogLevel('ERROR')\n"
@@ -486,10 +486,10 @@ def test_pagerank_weighted_uniform_weights_match_unweighted(spark):
         assert abs(a[v] - b[v]) < 1e-9
 
 
-@pytest.mark.usefixtures("spark_lane")
-class TestPagerankSparkLane:
-    """The pagerank tests above, on the Spark lane (the tests' inputs
-    fit the driver-local lane)."""
+@pytest.mark.usefixtures("local_lane")
+class TestPagerankLocalLane:
+    """The pagerank tests above, on the driver-local lane (the tests'
+    inputs, built from Python rows, take the Spark lane)."""
 
     test_pagerank_matches_numpy = staticmethod(test_pagerank_matches_numpy)
     test_pagerank_dangling_mass = staticmethod(test_pagerank_dangling_mass)
@@ -516,6 +516,15 @@ def _lanes(caplog) -> list[str]:
         for r in caplog.records
         if r.name == CP.__name__ and r.getMessage().startswith("pagerank: ")
     ]
+
+
+def _pin_lane(m, lane: str) -> None:
+    """Pin pagerank's lane on the monkeypatch `m`: "local" gives every
+    input a zero size estimate, "spark" a zero row cap."""
+    if lane == "local":
+        m.setattr(CP, "plan_size_bytes", lambda df: 0)
+    else:
+        m.setattr(CP, "LOCAL_LANE_MAX_EDGES", 0)
 
 
 def test_pagerank_lanes_agree(spark, monkeypatch, caplog):
@@ -545,13 +554,13 @@ def test_pagerank_lanes_agree(spark, monkeypatch, caplog):
     for edges, kw in modes:
         kw = {"num_iters": 7, **kw}
         runs = []
-        for cap in (CP.BROADCAST_MAX_EDGES, 0):
-            monkeypatch.setattr(CP, "BROADCAST_MAX_EDGES", cap)
-            frames: list = []
-            got = pagerank(edges, residuals_out=frames, **kw).collect()
-            residuals = [f.collect()[0] for f in frames]
+        for lane in ("local", "spark"):
+            with monkeypatch.context() as m:
+                _pin_lane(m, lane)
+                frames: list = []
+                got = pagerank(edges, residuals_out=frames, **kw).collect()
+                residuals = [f.collect()[0] for f in frames]
             runs.append(({r.v: r.pr for r in got}, residuals))
-        monkeypatch.undo()
         (local, res_l), (dist, res_s) = runs
         assert local.keys() == dist.keys(), kw
         assert max(abs(local[v] - dist[v]) for v in local) < 1e-12, kw
@@ -570,16 +579,15 @@ def test_pagerank_resume_across_lanes(spark, tmp_path, monkeypatch, first):
     df = edges_df(spark, pairs)
     ckpt = str(tmp_path / "pr")
     direct = {r.v: r.pr for r in pagerank(df, num_iters=6).collect()}
+    second = "spark" if first == "local" else "local"
     with monkeypatch.context() as m:
-        if first == "spark":
-            m.setattr(CP, "BROADCAST_MAX_EDGES", 0)
+        _pin_lane(m, first)
         pagerank(df, num_iters=3, checkpoint_dir=ckpt, checkpoint_every=2)
     with open(os.path.join(ckpt, "pagerank.manifest.json")) as f:
         manifest = json.load(f)
     assert manifest["iteration"] == 2 and manifest["lane"]["lane"] == first
     with monkeypatch.context() as m:
-        if first == "local":
-            m.setattr(CP, "BROADCAST_MAX_EDGES", 0)
+        _pin_lane(m, second)
         resumed = {
             r.v: r.pr
             for r in pagerank(
@@ -588,7 +596,6 @@ def test_pagerank_resume_across_lanes(spark, tmp_path, monkeypatch, first):
         }
     with open(os.path.join(ckpt, "pagerank.manifest.json")) as f:
         manifest = json.load(f)
-    second = "spark" if first == "local" else "local"
     assert manifest["iteration"] == 4 and manifest["lane"]["lane"] == second
     lanes = [h["extra"]["lane"]["lane"] for h in manifest["history"]]
     assert lanes == [first] * 3 + [second] * 2
@@ -603,7 +610,7 @@ def test_pagerank_spoofed_estimate_aborts_to_spark_lane(spark, monkeypatch, capl
     caplog.set_level(logging.INFO, logger=CP.__name__)
     pairs = _random_directed(2, 40, 200)
     monkeypatch.setattr(CP, "plan_size_bytes", lambda df: 1)
-    monkeypatch.setattr(CP, "BROADCAST_MAX_EDGES", 50)
+    monkeypatch.setattr(CP, "LOCAL_LANE_MAX_EDGES", 50)
     got = {r.v: r.pr for r in pagerank(edges_df(spark, pairs), num_iters=8).collect()}
     assert _lanes(caplog) == ["pagerank: spark lane (collected=200, cap 50 rows)"]
     want = numpy_pagerank(pairs, 8)
@@ -611,15 +618,67 @@ def test_pagerank_spoofed_estimate_aborts_to_spark_lane(spark, monkeypatch, capl
     assert max(abs(got[v] - want[v]) for v in want) < 1e-12
 
 
-def test_pagerank_null_endpoint_takes_spark_lane(spark, caplog):
+def test_pagerank_null_endpoint_takes_spark_lane(spark, monkeypatch, caplog):
     """numpy cannot carry a null id, so an input holding one runs on the
-    Spark lane, whose answer it is."""
+    Spark lane, whose answer it is — even when its estimate fits."""
     caplog.set_level(logging.INFO, logger=CP.__name__)
+    monkeypatch.setattr(CP, "plan_size_bytes", lambda df: 0)
     rows = [(0, 1), (1, 2), (2, 0), (2, None)]
     df = spark.createDataFrame(rows, "src long, dst long")
     got = pagerank(df, num_iters=4).collect()
-    assert _lanes(caplog) == ["pagerank: spark lane (nulls, cap 30000000 rows)"]
+    cap = CP.LOCAL_LANE_MAX_EDGES
+    assert _lanes(caplog) == [f"pagerank: spark lane (nulls, cap {cap} rows)"]
     assert len(got) == 4  # the null endpoint is a vertex of the Spark lane
+
+
+def test_size_gate_jobs(spark, monkeypatch):
+    """`size_gate` runs a job only in its gray zone, and only when the
+    caller asks for the count. A frame built from Python rows has no
+    size estimate (Catalyst reports Long.MaxValue): it reads as huge,
+    with no job — the triangle fused gate and `loop_layout` skip it
+    without looking, and pagerank takes the Spark lane."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    rows = edges_df(spark, _random_directed(3, 30, 100))
+
+    def gate(tag, df, cap, **kw):
+        sc.setJobGroup(tag, tag)
+        try:
+            got = CP.size_gate(df, cap, **kw)
+        finally:
+            sc.setJobGroup(None, None)
+        return got, len(tracker.getJobIdsForGroup(tag))
+
+    huge, jobs = gate("gate_rows", rows, 10**6)
+    assert (huge.fits, huge.basis, jobs) == (False, "estimate", 0)
+    assert huge.value >= 64 * 10**6
+    assert CP.loop_layout(rows) == ("dst", False)
+    monkeypatch.setattr(CP, "plan_size_bytes", lambda df: 1000)
+    counted, jobs = gate("gate_count", rows, 100)
+    assert counted == CP.SizeGate(True, "count", 100) and jobs >= 1
+    assert gate("gate_est", rows, 100, count=False) == (
+        CP.SizeGate(False, "estimate", 1000),
+        0,
+    )
+    assert gate("gate_small", rows, 1000, count=False) == (
+        CP.SizeGate(True, "estimate", 1000),
+        0,
+    )
+
+
+def test_pagerank_gray_zone_takes_spark_lane_without_a_job(spark, monkeypatch, caplog):
+    """An edge table whose estimate is over the lane cap (here 2 B/row,
+    inside the 64x gray zone where the triangle gate would count) takes
+    the Spark lane on the estimate: pagerank never counts its input to
+    choose, so the verdict's basis is the estimate."""
+    caplog.set_level(logging.INFO, logger=CP.__name__)
+    pairs = _random_directed(4, 30, 120)
+    monkeypatch.setattr(CP, "plan_size_bytes", lambda df: 1000)
+    monkeypatch.setattr(CP, "LOCAL_LANE_MAX_EDGES", 500)
+    got = {r.v: r.pr for r in pagerank(edges_df(spark, pairs), num_iters=5).collect()}
+    assert _lanes(caplog) == ["pagerank: spark lane (estimate=1000, cap 500 rows)"]
+    want = numpy_pagerank(pairs, 5)
+    assert max(abs(got[v] - want[v]) for v in want) < 1e-12
 
 
 def numpy_hits(pairs, num_iters):

@@ -328,9 +328,9 @@ def test_pagerank_warm_start_new_vertices_cold_init(spark):
     assert len(out) == 3
 
 
-@pytest.mark.usefixtures("spark_lane")
-class TestPagerankWarmStartSparkLane:
-    """The warm-start tests above, on pagerank's Spark lane."""
+@pytest.mark.usefixtures("local_lane")
+class TestPagerankWarmStartLocalLane:
+    """The warm-start tests above, on pagerank's driver-local lane."""
 
     test_pagerank_warm_start_equals_cold_when_uniform = staticmethod(
         test_pagerank_warm_start_equals_cold_when_uniform

@@ -361,7 +361,7 @@ def test_pagerank_round_never_exchanges_edge_table(spark, monkeypatch):
     checkpointed AQE result, which reports UnknownPartitioning, so its
     vertex-sized side may be exchanged on v. Broadcast disabled to
     force the at-scale SortMergeJoin plan, and the Spark lane pinned:
-    this input fits the driver-local lane, which has no plan."""
+    this parquet input fits the driver-local lane, which has no plan."""
     from wedge_parallel_triangle_counting_spark.operators import checkpointing
     from wedge_parallel_triangle_counting_spark.operators.checkpointing import (
         CheckpointedLoop,
@@ -380,7 +380,7 @@ def test_pagerank_round_never_exchanges_edge_table(spark, monkeypatch):
         return step(self, df, iteration, *args, **kwargs)
 
     monkeypatch.setattr(CheckpointedLoop, "step", recording_step)
-    monkeypatch.setattr(checkpointing, "BROADCAST_MAX_EDGES", 0)
+    monkeypatch.setattr(checkpointing, "LOCAL_LANE_MAX_EDGES", 0)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")

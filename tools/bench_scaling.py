@@ -120,10 +120,10 @@ for _ in range(min(reps, 2)):
 assert tri2 == tri
 
 # --- pagerank ---------------------------------------------------------
-# on the Spark lane: this input fits the driver-local lane, whose numpy
-# rounds run on one thread whatever the session's cores
+# pinned to the Spark lane: the driver-local lane's numpy rounds run on
+# one thread whatever the session's cores
 from wedge_parallel_triangle_counting_spark.operators import checkpointing as CP
-CP.BROADCAST_MAX_EDGES = 0
+CP.LOCAL_LANE_MAX_EDGES = 0
 o = spark.read.parquet(f"{sf_dir}/orders.parquet")
 pe = o.select((F.col("o_custkey") % 49999).alias("s0"),
               (F.col("o_orderkey") % 49999).alias("d0"))

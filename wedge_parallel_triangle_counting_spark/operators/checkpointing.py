@@ -61,15 +61,16 @@ numpy on the driver instead, through the same driver:
         state = round_body(state)
         loop.step_local(state, it)
 
-`local_input` takes the lane when `size_gate` says the input has at
-most `BROADCAST_MAX_EDGES` rows, collects it once through Arrow, and
-falls back to the Spark lane when the collected rows are over the cap
-or hold a null. `step_local` writes the same
-`<name>.iterNNNNN.parquet` snapshot `step` writes (with pyarrow) and
-swaps the same manifest, so a run snapshotted by one lane resumes in
-the other. The verdict and the number behind it (the size estimate,
-the counted or collected rows) go into every round's `history` record,
-the manifest and one INFO log event. Operators on the lane: pagerank.
+`local_input` takes the lane when the size estimate alone places the
+input under `LOCAL_LANE_MAX_EDGES` rows (no job either way), collects
+it once through Arrow, and falls back to the Spark lane when the
+collected rows are over the cap or hold a null. `step_local` writes
+the same `<name>.iterNNNNN.parquet` snapshot `step` writes (with
+pyarrow) and swaps the same manifest, so a run snapshotted by one lane
+resumes in the other. The verdict and the number behind it (the size
+estimate, or the collected rows on an abort) go into every round's
+`history` record, the manifest and one INFO log event. Operators on
+the lane: pagerank.
 """
 
 from __future__ import annotations
@@ -304,10 +305,19 @@ def loop_partitions(spark: SparkSession) -> int:
     )
 
 
-# Largest input, in rows, that one machine takes whole: the triangle
-# engine's broadcast closure (~240 MB of int64 keys per executor) and
-# the driver-local loop lane both collect at most this many edges.
+# Largest input, in rows, that the triangle engine takes whole: its
+# broadcast closure is ~240 MB of int64 keys per executor.
 BROADCAST_MAX_EDGES = 30_000_000
+
+# Largest edge table, in rows, that the driver-local loop lane
+# collects: the largest measured size (tools/bench_pagerank_lanes.py).
+# 10-round PageRank on R-MAT parquet, 4 vCPU, medians of 3, local lane
+# vs Spark lane at local[4] / local[32]: 4.2 M edges 4.1 vs 17.3 / 33.0
+# s, 8.4 M 8.9 vs 36.8 / 58.2 s, 16.8 M 18.0 vs 82.4 / 113.2 s. At
+# 16.8 M the driver's Python peaks at ~2.0 GB RSS and its JVM at ~3 GB.
+# Above this size, and on hosts with more than 4 cores, the crossover
+# is unmeasured.
+LOCAL_LANE_MAX_EDGES = 16_000_000
 
 
 class SizeGate(NamedTuple):
@@ -323,36 +333,34 @@ class SizeGate(NamedTuple):
 
 def plan_size_bytes(df: DataFrame) -> int | None:
     """Catalyst's estimated size of the optimized plan in bytes —
-    metadata-only, no job. None when there is no estimate: a leaf of
-    unknown size (a frame built from Python rows or an RDD) reports
-    `spark.sql.defaultSizeInBytes`, Long.MaxValue by default, which
-    says nothing about the input."""
+    metadata-only, no job. None when the estimate is unavailable. A
+    leaf of unknown size (a frame built from Python rows or an RDD)
+    reports `spark.sql.defaultSizeInBytes`, Long.MaxValue by default,
+    so it reads as huge."""
     try:
-        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        conf = df.sparkSession._jsparkSession.sessionState().conf()
-        unknown = int(conf.defaultSizeInBytes())
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:  # pragma: no cover — py4j/plan edge cases
         return None
-    return None if est >= unknown else est
 
 
-def size_gate(df: DataFrame, cap: int) -> SizeGate:
+def size_gate(df: DataFrame, cap: int, count: bool = True) -> SizeGate:
     """Whether `df` has at most `cap` rows, in three regimes (r6,
     VERDICT item 3: the gates before ran a full count() job on the
     derived input every time). The size estimate is metadata-only:
-    - estimate >= 64 x cap bytes: does not fit, no job;
     - estimate <= cap bytes: fits, no job. The bound is 1 byte/row
       (measured parquet int-pair scans estimate 3.7-22 B/row), so only
       a sub-byte-per-row encoding can overshoot; a caller that collects
       the input re-checks the rows it got and falls back to its
       distributed plan, so a wrong estimate costs memory headroom,
       never correctness;
-    - in between, or no estimate: one exact count() job."""
+    - estimate >= 64 x cap bytes: does not fit, no job;
+    - in between, or no estimate: one exact count() job — or, with
+      `count=False`, does not fit, no job."""
     est = plan_size_bytes(df)
-    if est is not None and est >= 64 * cap:
-        return SizeGate(False, "estimate", est)
     if est is not None and est <= cap:
         return SizeGate(True, "estimate", est)
+    if not count or (est is not None and est >= 64 * cap):
+        return SizeGate(False, "estimate", est)
     rows = df.count()
     return SizeGate(rows <= cap, "count", rows)
 
@@ -370,13 +378,15 @@ def collect_arrays(df: DataFrame, *cols: str) -> list[np.ndarray] | None:
 def local_input(edges: DataFrame) -> tuple[list[np.ndarray] | None, dict]:
     """The driver-local lane's entry: (every column of `edges` as a
     numpy array, the lane verdict) when the input fits one machine,
-    else (None, the verdict). `size_gate` decides at
-    `BROADCAST_MAX_EDGES` rows; an entry on the size estimate re-checks
-    the rows it collected and aborts to the Spark lane over the cap,
-    and a null anywhere (an id that does not cast to long comes out
-    null) also takes the Spark lane."""
-    cap = BROADCAST_MAX_EDGES
-    gate = size_gate(edges, cap)
+    else (None, the verdict). The gate is the size estimate alone
+    (`size_gate(..., count=False)` at `LOCAL_LANE_MAX_EDGES`): an
+    input the estimate cannot place under the cap takes the Spark lane
+    without a job, so the choice adds no job to a Spark-lane run. An
+    entry re-checks the rows it collected and aborts to the Spark lane
+    over the cap, and a null anywhere (an id that does not cast to long
+    comes out null) also takes the Spark lane."""
+    cap = LOCAL_LANE_MAX_EDGES
+    gate = size_gate(edges, cap, count=False)
     lane = {"lane": "spark", "basis": gate.basis, "value": gate.value, "cap": cap}
     if not gate.fits:
         return None, lane

@@ -31,17 +31,20 @@ Scale design (r3, after profiling the 0.67 scaling efficiency):
   dangling broadcast — materializes it; iterative lineage blowup,
   SURVEY §7.3). Every 8th round's checkpoint is eager, which bounds
   the RDD lineage of the carried ranks to 8 rounds.
-- Driver-local lane (checkpointing.local_input): when the edge table
-  fits one machine (at most BROADCAST_MAX_EDGES rows, the triangle
-  engine's fused-lane cap), `pagerank` collects src/dst once through
-  Arrow and runs the same graph build and recurrence in float64 numpy
-  on the driver — the same operation order as the Spark expressions,
-  so the lanes differ only in summation order (ulps). Small runs are
-  bound by Spark's per-stage cost, not by the data: a 2-round durable
-  run over 168 k links took 25 jobs on the Spark lane. Durable
-  snapshots, the manifest and its fingerprint are shared, so either
-  lane resumes the other's checkpoint. Null endpoints take the Spark
-  lane, as does an `init_ranks` that repeats a vertex id.
+- Driver-local lane (checkpointing.local_input): when Catalyst's size
+  estimate of the edge table is at most LOCAL_LANE_MAX_EDGES bytes
+  (1 byte/row, so at most that many rows; no job), `pagerank` collects
+  src/dst once through Arrow and runs the same graph build and
+  recurrence in float64 numpy on the driver — the same operation
+  order as the Spark expressions, so the lanes differ only in
+  summation order (ulps). Small runs are bound by Spark's per-stage
+  cost, not by the data: a 2-round durable run over 168 k links took
+  25 jobs on the Spark lane. Any other input — a larger estimate, or
+  none (a frame built from Python rows or an RDD reads as huge) —
+  takes the Spark lane without a job. Durable snapshots, the manifest
+  and its fingerprint are shared, so either lane resumes the other's
+  checkpoint. Null endpoints take the Spark lane, as does an
+  `init_ranks` that repeats a vertex id.
 """
 
 from __future__ import annotations
@@ -279,7 +282,7 @@ def _pagerank_local(
     if n == 0:
         return spark.createDataFrame([], "v long, pr double")
     # distinct edges (weighted: duplicate rows sum their weights) as
-    # src*n + dst keys; n <= 2*BROADCAST_MAX_EDGES keeps them in int64
+    # src*n + dst keys; n <= 2*LOCAL_LANE_MAX_EDGES keeps them in int64
     key = idx[: len(src)] * n + idx[len(src):]
     w = None
     if weight_col is None:
