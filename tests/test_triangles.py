@@ -76,27 +76,61 @@ def test_wedge_small_split_budget(spark):
     assert got == expected
 
 
-def test_wedge_range_partitioner(spark):
-    # wedge-balanced range partitioning (tc.cu:348-361 analogue) must
-    # agree with the default hash clustering, including with hubs split
-    pairs = _random_graph(17, 40, 500)
-    expected = _brute_triangles(pairs)
-    df = edges_df(spark, pairs)
-    got = triangle_count(df, strategy="wedge", partitioner="wedge_range").collect()[0][0]
-    assert got == expected
+def test_wedge_range_chosen_by_input(spark, monkeypatch):
+    # the wedge-balanced range partitioning (tc.cu:348-361 analogue) is
+    # picked from the input: a graph whose max degree reaches the hub
+    # threshold gets a RangePartitioning flat lane, a hub-free graph
+    # keeps the prep's clustering with no extra exchange
+    import wedge_parallel_triangle_counting_spark.operators.triangles as T
+
+    seen = []
+    close = T._close
+
+    def recording_close(spark_, oriented, *args, **kwargs):
+        lanes = args[4] if len(args) > 4 else kwargs["lanes"]
+        plan = lambda df: df._jdf.queryExecution().executedPlan().toString()
+        seen.append((plan(lanes[0][0]), plan(oriented)))
+        return close(spark_, oriented, *args, **kwargs)
+
+    monkeypatch.setattr(T, "_close", recording_close)
+    hub = _random_graph(17, 40, 500)
     got = triangle_count(
-        df, strategy="wedge", partitioner="wedge_range", split_budget=8
+        edges_df(spark, hub), strategy="wedge", closure="join", split_budget=8
     ).collect()[0][0]
-    assert got == expected
+    assert got == _brute_triangles(hub)
+    flat_plan, _ = seen[-1]
+    assert "rangepartitioning" in flat_plan.lower(), flat_plan
+
+    hub_free = _random_graph(5, 200, 150)
+    got = triangle_count(
+        edges_df(spark, hub_free), strategy="wedge", closure="join"
+    ).collect()[0][0]
+    assert got == _brute_triangles(hub_free)
+    flat_plan, oriented_plan = seen[-1]
+    assert "rangepartitioning" not in flat_plan.lower(), flat_plan
+    assert flat_plan.count("Exchange") == oriented_plan.count("Exchange"), flat_plan
 
 
-def test_prep_paths_agree(spark):
-    # fast (no-relabel) and relabel preprocessing are interchangeable
+@pytest.mark.parametrize("strategy", STRATEGIES)
+def test_relabel_chosen_by_input(spark, monkeypatch, strategy):
+    # ids past 3·10⁹ overflow int64 edge keys ((max_id+1)² > 2⁶²), so
+    # every strategy must take the rank-space relabel prep on its own
+    import wedge_parallel_triangle_counting_spark.operators.triangles as T
+
+    calls = []
+    relabel = T._relabel
+
+    def recording_relabel(*args):
+        calls.append(1)
+        return relabel(*args)
+
+    monkeypatch.setattr(T, "_relabel", recording_relabel)
     pairs = _random_graph(19, 50, 400)
-    df = edges_df(spark, pairs)
-    fast = triangle_count(df, strategy="wedge", prep="fast").collect()[0][0]
-    relab = triangle_count(df, strategy="wedge", prep="relabel").collect()[0][0]
-    assert fast == relab == _brute_triangles(pairs)
+    base = 3_000_000_000
+    shifted = [(a + base, b + base) for a, b in pairs]
+    got = triangle_count(edges_df(spark, shifted), strategy=strategy).collect()[0][0]
+    assert got == _brute_triangles(pairs)
+    assert calls, strategy
 
 
 def test_no_cached_blocks_leak(spark):

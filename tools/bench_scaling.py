@@ -99,7 +99,7 @@ copy_sec = round(time.perf_counter() - t0, 2)
 exec_secs = []
 for _ in range(reps + 2):  # extra warm reps, reference discards run 0
     t0 = time.perf_counter()
-    tri2 = flat.mapInPandas(T._flat_count_udf(probe), schema=T.COUNT_SCHEMA).agg(
+    tri2 = flat.mapInPandas(T._count_udf(probe), schema=T.COUNT_SCHEMA).agg(
         F.coalesce(F.sum("tri"), F.lit(0)).alias("triangles")).collect()[0][0]
     exec_secs.append(round(time.perf_counter() - t0, 2))
 exec_secs = exec_secs[2:]

@@ -78,19 +78,17 @@ def enumerate_pairs(
     k = np.arange(total_rows, dtype=np.int64) - row_start + np.repeat(i_lo, n_rows_per_vertex)
     row_len = degs[row_vertex] - 1 - k  # pairs (k, j) for j in (k, deg)
 
-    # Level 2: expand each first-index row into its pairs.
+    # Level 2: expand each first-index row into its pairs. Row r holds
+    # adj[k] at flat position first[r] and pairs it with the next
+    # row_len[r] positions, so pair g of row r (global index
+    # offs[r] + t) reads u at first[r] + 1 + t = g + (first[r] + 1 - offs[r]).
     total_pairs = int(row_len.sum())
     if total_pairs == 0:
         return np.empty(0, np.int64), np.empty(0, np.int64)
-    pair_vertex = np.repeat(row_vertex, row_len)
-    pair_i = np.repeat(k, row_len)
-    pair_start = np.repeat(np.cumsum(row_len) - row_len, row_len)
-    t = np.arange(total_pairs, dtype=np.int64) - pair_start
-    pair_j = pair_i + 1 + t
-
-    base = starts[pair_vertex]
-    w = flat[base + pair_i]
-    u = flat[base + pair_j]
+    first = starts[row_vertex] + k
+    offs = np.cumsum(row_len) - row_len
+    w = np.repeat(flat[first], row_len)
+    u = flat[np.arange(total_pairs, dtype=np.int64) + np.repeat(first + 1 - offs, row_len)]
     return w.astype(np.int64, copy=False), u.astype(np.int64, copy=False)
 
 
@@ -213,85 +211,53 @@ def build_hub_bitmap(
     return bitmap
 
 
-def count_triangles_block(
+def wedge_blocks(
     flat: np.ndarray,
     starts: np.ndarray,
     degs: np.ndarray,
     i_lo: np.ndarray,
     i_hi: np.ndarray,
+    block_pairs: int = DEFAULT_BLOCK_PAIRS,
+):
+    """Yield the wedge pairs (w, u) of a batch of adjacency rows
+    (`enumerate_pairs` arguments) in blocks of whole rows, each at most
+    `block_pairs` pairs unless one row alone exceeds it — the bounded
+    launch chunking of O4, and the one block loop behind both the
+    closure count and the pair emitter. Block ends are found by binary
+    search over the cumulative pair count, not by a per-row walk."""
+    cum = np.cumsum(pair_count(degs, i_lo, i_hi))
+    lo = 0
+    nrows = len(degs)
+    while lo < nrows:
+        base = int(cum[lo - 1]) if lo else 0
+        hi = max(int(np.searchsorted(cum, base + block_pairs, side="right")), lo + 1)
+        yield enumerate_pairs(flat, starts[lo:hi], degs[lo:hi], i_lo[lo:hi], i_hi[lo:hi])
+        lo = hi
+
+
+def count_closed(
+    blocks,
     edge_keys: np.ndarray,
     key_base: int,
     hub_bitmap: np.ndarray | None = None,
     hub_ids: np.ndarray | None = None,
-    block_pairs: int = DEFAULT_BLOCK_PAIRS,
     timings: dict | None = None,
 ) -> int:
-    """Count closed wedges for a batch of adjacency rows, processing in
-    bounded-size blocks of rows (launch-chunking analogue, O4).
+    """Count the closed wedges among `blocks`, an iterator of (w, u)
+    pair arrays such as `wedge_blocks`.
 
-    `timings`, if given, accumulates "enum_sec" (wedge enumeration —
+    `timings`, if given, accumulates "enum_sec" (producing each block —
     the reference's get-wedges phase) and "probe_sec" (closure check —
     its evaluate-wedges phase), mirroring tc_cycles' per-variant cycle
     split (experiments/tc_cycles.cu:1089-1137)."""
-    counts = pair_count(degs, i_lo, i_hi)
     total = 0
-    lo = 0
-    nrows = len(degs)
-    while lo < nrows:
-        hi = lo + 1
-        acc = counts[lo]
-        while hi < nrows and acc + counts[hi] <= block_pairs:
-            acc += counts[hi]
-            hi += 1
-        t0 = time.perf_counter()
-        w, u = enumerate_pairs(flat, starts[lo:hi], degs[lo:hi], i_lo[lo:hi], i_hi[lo:hi])
+    t0 = time.perf_counter()
+    for w, u in blocks:
         t1 = time.perf_counter()
         total += probe_pairs(w, u, edge_keys, key_base, hub_bitmap, hub_ids)
+        t2 = time.perf_counter()
         if timings is not None:
-            t2 = time.perf_counter()
             timings["enum_sec"] = timings.get("enum_sec", 0.0) + (t1 - t0)
             timings["probe_sec"] = timings.get("probe_sec", 0.0) + (t2 - t1)
-        lo = hi
-    return total
-
-
-def count_arrow_block(
-    centers: np.ndarray,
-    flat: np.ndarray,
-    starts: np.ndarray,
-    degs: np.ndarray,
-    edge_keys: np.ndarray,
-    key_base: int,
-    hub_bitmap: np.ndarray | None = None,
-    hub_ids: np.ndarray | None = None,
-    block_pairs: int = DEFAULT_BLOCK_PAIRS,
-    timings: dict | None = None,
-) -> int:
-    """Arrow (path-wedge) evaluation: for each row r the path center is
-    `centers[r] = v` of an oriented edge (v, w), and the row's adjacency
-    is adj(w); every u in adj(w) forms a path v→w→u whose closure {v,u}
-    is probed. Mirrors the two-level wedge_vp/wedge_vi walk of
-    experiments/tc_arrow.cu:345-371, chunked like O4. `timings` as in
-    count_triangles_block (get/evaluate split)."""
-    total = 0
-    lo = 0
-    nrows = len(degs)
-    while lo < nrows:
-        hi = lo + 1
-        acc = int(degs[lo])
-        while hi < nrows and acc + degs[hi] <= block_pairs:
-            acc += int(degs[hi])
-            hi += 1
-        t0 = time.perf_counter()
-        d = degs[lo:hi]
-        w = np.repeat(centers[lo:hi].astype(np.int64, copy=False), d)
-        s0 = starts[lo]
-        u = flat[s0 : s0 + int(d.sum())]
-        t1 = time.perf_counter()
-        total += probe_pairs(w, u, edge_keys, key_base, hub_bitmap, hub_ids)
-        if timings is not None:
-            t2 = time.perf_counter()
-            timings["enum_sec"] = timings.get("enum_sec", 0.0) + (t1 - t0)
-            timings["probe_sec"] = timings.get("probe_sec", 0.0) + (t2 - t1)
-        lo = hi
+        t0 = t2
     return total

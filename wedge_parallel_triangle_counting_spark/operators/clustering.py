@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .graph import adjacency, prepare_oriented_fast
+from .graph import adjacency, common_neighbors, prepare_oriented_fast
 
 
 def _per_vertex_triangles(edges: DataFrame, caches: list | None = None) -> DataFrame:
@@ -29,18 +29,8 @@ def _per_vertex_triangles(edges: DataFrame, caches: list | None = None) -> DataF
     oriented, deg, _n, _max_id, _stats = prepare_oriented_fast(edges, caches=own)
     if caches is not None:
         caches.extend(own)
-    adj = adjacency(oriented)
-    a_src = adj.select(F.col("v").alias("src"), F.col("adj").alias("adj_src"))
-    a_dst = adj.select(F.col("v").alias("dst"), F.col("adj").alias("adj_dst"))
-    per_edge = (
-        oriented.join(a_src, "src")
-        .join(a_dst, "dst")
-        .select(
-            "src",
-            "dst",
-            F.array_intersect("adj_src", "adj_dst").alias("common"),
-        )
-        .filter(F.size("common") > 0)
+    per_edge = common_neighbors(oriented, adjacency(oriented)).filter(
+        F.size("common") > 0
     )
     corners = (
         per_edge.select(F.col("src").alias("v"), F.size("common").alias("w"))

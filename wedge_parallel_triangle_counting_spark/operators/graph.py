@@ -141,7 +141,6 @@ def orient_by_degree(sym: DataFrame, deg: DataFrame) -> DataFrame:
 
 def prepare_oriented(
     edges: DataFrame,
-    rank_method: str = "scalable",
     caches: list | None = None,
 ) -> tuple[DataFrame, DataFrame, int]:
     """Full preprocessing pipeline: dirty edges → (oriented edges in
@@ -156,14 +155,10 @@ def prepare_oriented(
     # so the symmetrize shuffle runs once.
     sym = symmetrize(normalize_edges(edges)).persist()
     deg = degrees(sym)
-    if rank_method == "window":
-        ranks = degree_rank(deg, method="window")
-        n = ranks.count()
-    else:
-        from .ids import assign_contiguous_ids_with_count
+    from .ids import assign_contiguous_ids_with_count
 
-        ranked, n = assign_contiguous_ids_with_count(deg, ["degree", "v"], "rank")
-        ranks = ranked.select("v", "rank")
+    ranked, n = assign_contiguous_ids_with_count(deg, ["degree", "v"], "rank")
+    ranks = ranked.select("v", "rank")
     # the two relabel joins each consume ranks — persist so the rank
     # assignment (a python-worker pass) runs once, not twice
     ranks = ranks.persist()
@@ -392,4 +387,23 @@ def adjacency(oriented: DataFrame) -> DataFrame:
     return oriented.groupBy(F.col("src").alias("v")).agg(
         F.sort_array(F.collect_list("dst")).alias("adj"),
         F.count("*").alias("deg"),
+    )
+
+
+def common_neighbors(oriented: DataFrame, adj: DataFrame) -> DataFrame:
+    """(src, dst, common) for every edge of `oriented`, common = the
+    array intersection adj(src) ∩ adj(dst) — the one adjacency-
+    intersection listing behind the triangle query as a worst-case-
+    optimal join (Ngo et al., PODS 2018): every common neighbor closes
+    one triangle over the edge (the tc_edge layout,
+    experiments/tc_edge.cu). `adj` is the caller's (v, adj) adjacency
+    of the same edges — `adjacency(oriented)` or an equivalent layout —
+    so the caller decides whether it is persisted and how it is
+    planned."""
+    a_src = adj.select(F.col("v").alias("src"), F.col("adj").alias("adj_src"))
+    a_dst = adj.select(F.col("v").alias("dst"), F.col("adj").alias("adj_dst"))
+    return (
+        oriented.join(a_src, "src")
+        .join(a_dst, "dst")
+        .select("src", "dst", F.array_intersect("adj_src", "adj_dst").alias("common"))
     )

@@ -127,20 +127,20 @@ def modularity(
     )
 
 
-def transitivity(edges: DataFrame, **tc_kwargs) -> DataFrame:
+def transitivity(edges: DataFrame) -> DataFrame:
     """Global clustering coefficient: 3*triangles / wedges over the
     cleaned undirected graph, in exact ppm. Returns ONE row
     (triangles, wedges, transitivity_ppm); empty iff no wedges.
 
-    Triangles come from the engine's triangle lane (`triangle_count`,
-    any strategy); wedges are the symmetric-degree closed form
+    Triangles come from the engine's triangle lane (`triangle_count`'s
+    default wedge strategy); wedges are the symmetric-degree closed form
     sum d(d-1)/2 computed in DECIMAL(38,0) (a 10^9-degree hub alone
     contributes ~5e17 — int64 survives the web graph but not with
     margin, so the sum is widened and only the final cast is long).
     """
     from .triangles import triangle_count
 
-    tri = triangle_count(edges, **tc_kwargs)  # eager 1-row [triangles]
+    tri = triangle_count(edges)  # eager 1-row [triangles]
 
     e = _clean_undirected(edges)
     sym = e.select(F.col("a").alias("v")).unionAll(e.select(F.col("b").alias("v")))

@@ -4,25 +4,44 @@ The reference ships ~12 binaries that are alternative physical plans of
 the same query (SURVEY.md §2.11); we expose the same axis as a
 `strategy=` option, and the strategies cross-check each other
 (differential testing, mirroring the reference's cross-variant
-agreement):
+agreement). Every strategy but "join" is wedge enumeration plus a
+closure check, written once: two batch readers (`_csr_rows` over
+sorted (src, dst) partitions, `_list_rows` over adjacency-array rows)
+feed one count UDF and one emit UDF through `wk.wedge_blocks`, and one
+closure step (`_close`) picks the broadcast probe or the distributed
+semi-join. The "edge" strategy lists through `graph.common_neighbors`,
+the adjacency intersection truss and clustering share.
+
+Options: `strategy`; `closure` ("auto" | "broadcast" | "join");
+`hub_k` (hub-bitmap size); `split_budget` (wedges per hub chunk);
+`phase_metrics`. Every other physical choice follows from the input:
+- prep: fast (original ids, one shuffle) unless the ids overflow int64
+  edge keys ((max_id+1)² > 2⁶²), then the rank-space relabel;
+- closure="auto": broadcast probe up to BROADCAST_MAX_EDGES oriented
+  edges, distributed LEFT SEMI join beyond;
+- flat-lane partitioning: wedge-balanced range partitioning when the
+  max degree reaches the hub threshold, else the prep's hash(src)
+  clustering with no exchange;
+- partitions: the session's defaultParallelism.
 
 - "wedge"  (default, the WeTriC strategy, tc.cu:173-293): in the
   broadcast-closure regime (≤30M edges) the COLLECT-FUSED path runs
   exactly two edge-sized jobs: the single symmetrize/dedup shuffle
   terminated by the probe's Arrow collect (degrees, stats, orientation,
   hub detection and the hub bitmap all derived from the collected
-  arrays in numpy), then one count job in which the vectorized UDF
-  applies the degree-order orientation and hub skip against a broadcast
-  degree dictionary — no stats job, no degree joins. Beyond that
-  regime (or under explicit partitioner/prep overrides) the general
-  two-lane plan runs: fused single-shuffle preprocessing
-  (degree-ordered orientation in ORIGINAL id space —
-  graph.prepare_oriented_fast), then:
+  arrays in numpy), then one count job in which the CSR reader applies
+  the degree-order orientation and hub skip per run against a
+  broadcast degree dictionary — no stats job, no degree joins. Beyond
+  that regime (or with closure="join") the general two-lane plan runs:
+  fused single-shuffle preprocessing (degree-ordered orientation in
+  ORIGINAL id space — graph.prepare_oriented_fast), then:
   * non-hub lane: oriented edges are already hash-clustered by src
     from the prep shuffle; a sortWithinPartitions makes the partition
     the CSR (columnar src/dst, no array objects) with NO further
     exchange; one vectorized mapInPandas enumerates wedges and probes
-    closure per partition;
+    closure per partition. With hubs present the lane is instead
+    range-partitioned on the global cumulative wedge count (the
+    paper's equal-wedges-per-worker partition, tc.cu:348-361);
   * hub lane (power-law head): vertices whose wedge count exceeds
     `split_budget` are routed out by anti/semi JOIN (never a driver-side
     id collect), exploded into bounded first-index chunks
@@ -30,9 +49,6 @@ agreement):
   Both lanes probe a broadcast sorted canonical edge-key array + hub
   bitmap (reference J1/J3), or emit candidate pairs for a distributed
   LEFT SEMI join when the edge set exceeds executor memory.
-  `partitioner="wedge_range"` replaces the hash clustering of the flat
-  lane with a range partitioning on the global cumulative wedge count
-  (the paper's equal-wedges-per-worker partition, tc.cu:348-361).
 - "arrow"  (experiments/tc_arrow.cu:173-289,345-371): path-wedge
   enumeration — per oriented edge (v,w), walk adj(w) (the two-level
   wedge_vp/wedge_vi index becomes an edges⋈adjacency join) and probe
@@ -51,6 +67,7 @@ session don't accumulate cached blocks.
 
 from __future__ import annotations
 
+import functools
 import time
 from typing import Iterator
 
@@ -63,6 +80,7 @@ from ..functions import wedge as wk
 from .checkpointing import BROADCAST_MAX_EDGES, collect_arrays, size_gate
 from .graph import (
     adjacency,
+    common_neighbors,
     prepare_oriented,
     prepare_oriented_fast,
 )
@@ -97,26 +115,10 @@ class _Probe:
         self.hub_bc = hub_bc
         self.hub_ids = hub_ids
 
-    def count(self, flat, starts, degs, i_lo, i_hi, timings=None) -> int:
-        return wk.count_triangles_block(
-            flat,
-            starts,
-            degs,
-            i_lo,
-            i_hi,
-            self.keys_bc.value,
-            self.key_base,
-            self.hub_bc.value if self.hub_bc is not None else None,
-            self.hub_ids,
-            timings=timings,
-        )
-
-    def count_arrow(self, centers, flat, starts, degs, timings=None) -> int:
-        return wk.count_arrow_block(
-            centers,
-            flat,
-            starts,
-            degs,
+    def count(self, rows: tuple, timings: dict | None = None) -> int:
+        """Closed wedges of one batch of wedge rows (a reader's yield)."""
+        return wk.count_closed(
+            wk.wedge_blocks(*rows),
             self.keys_bc.value,
             self.key_base,
             self.hub_bc.value if self.hub_bc is not None else None,
@@ -150,210 +152,111 @@ def _timed_row(total: int, timings: dict) -> pd.DataFrame:
     )
 
 
-def _flat_count_udf(probe: _Probe):
-    """Count wedges closing over partitions of (src, dst) rows sorted by
-    (src, dst) — the partition is consumed as columnar CSR directly.
-    Arrow batches may split a vertex's adjacency; a carry buffer defers
-    the trailing (possibly incomplete) vertex run to the next batch."""
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry_s = carry_d = None
-        total = 0
-        timings: dict = {}
-
-        def process(src: np.ndarray, dst: np.ndarray) -> int:
-            starts, degs = _runs(src)
-            return probe.count(
-                dst, starts, degs, np.zeros(len(degs), np.int64), degs - 1, timings
-            )
-
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            src = pdf["src"].values.astype(np.int64, copy=False)
-            dst = pdf["dst"].values.astype(np.int64, copy=False)
-            if carry_s is not None:
-                src = np.concatenate([carry_s, src])
-                dst = np.concatenate([carry_d, dst])
-            # defer the trailing run (vertex may continue in next batch)
-            boundary = int(np.searchsorted(src, src[-1], side="left"))
-            if boundary > 0:
-                total += process(src[:boundary], dst[:boundary])
-            carry_s, carry_d = src[boundary:], dst[boundary:]
-        if carry_s is not None and len(carry_s):
-            total += process(carry_s, carry_d)
-        yield _timed_row(total, timings)
-
-    return run
+# The two readers turn a mapInPandas batch iterator into wedge rows
+# (flat, starts, degs, i_lo, i_hi) — the arguments of wk.wedge_blocks —
+# one per physical layout; the count and emit UDFs below are written
+# once over either.
 
 
-def _flat_count_sym_udf(probe: _Probe, lookup_bc):
-    """Flat-lane count straight over the SYMMETRIC edge table (fused
-    path): the degree-order orientation filter and the hub-center skip
-    run inside the UDF against a broadcast degree dictionary
-    (`lookup_bc`: sorted ids / degree / is_hub arrays), so the count job
-    needs no degree joins at all. A vertex's symmetric adjacency is
-    contiguous in the hash(src)-clustered sorted partition; the filtered
-    subset (its oriented adjacency) stays contiguous and sorted, so the
-    CSR carry logic is identical to `_flat_count_udf` — the carry runs
-    on RAW rows, the filter on each completed run."""
+def _csr_rows(it: Iterator[pd.DataFrame], keep=None) -> Iterator[tuple]:
+    """The CSR reader: partitions of (src, dst) rows sorted by (src,
+    dst) are consumed as columnar CSR directly, every src run one
+    adjacency row. Arrow batches may split a vertex's adjacency; a
+    carry buffer defers the trailing (possibly incomplete) run to the
+    next batch. `keep(src, dst) -> mask`, if given, filters each
+    stretch of complete runs (the fused lane's degree-order orientation
+    and hub skip): a run's kept subset stays contiguous and sorted."""
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry_s = carry_d = None
-        total = 0
-        timings: dict = {}
-        look = lookup_bc.value
-        ids, deg, is_hub = look["ids"], look["deg"], look["is_hub"]
-
-        def process(src: np.ndarray, dst: np.ndarray) -> int:
-            si = np.searchsorted(ids, src)
-            di = np.searchsorted(ids, dst)
-            ds, dd = deg[si], deg[di]
-            keep = ((ds < dd) | ((ds == dd) & (src < dst))) & ~is_hub[si]
-            src, dst = src[keep], dst[keep]
+    def rows(src: np.ndarray, dst: np.ndarray):
+        if keep is not None:
+            mask = keep(src, dst)
+            src, dst = src[mask], dst[mask]
             if len(src) == 0:
-                return 0
-            starts, degs = _runs(src)
-            return probe.count(
-                dst, starts, degs, np.zeros(len(degs), np.int64), degs - 1, timings
-            )
+                return
+        starts, degs = _runs(src)
+        yield dst, starts, degs, np.zeros(len(degs), np.int64), degs - 1
 
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            src = pdf["src"].values.astype(np.int64, copy=False)
-            dst = pdf["dst"].values.astype(np.int64, copy=False)
-            if carry_s is not None:
-                src = np.concatenate([carry_s, src])
-                dst = np.concatenate([carry_d, dst])
-            boundary = int(np.searchsorted(src, src[-1], side="left"))
-            if boundary > 0:
-                total += process(src[:boundary], dst[:boundary])
-            carry_s, carry_d = src[boundary:], dst[boundary:]
-        if carry_s is not None and len(carry_s):
-            total += process(carry_s, carry_d)
-        yield _timed_row(total, timings)
-
-    return run
+    carry_s = carry_d = None
+    for pdf in it:
+        if len(pdf) == 0:
+            continue
+        src = pdf["src"].values.astype(np.int64, copy=False)
+        dst = pdf["dst"].values.astype(np.int64, copy=False)
+        if carry_s is not None:
+            src = np.concatenate([carry_s, src])
+            dst = np.concatenate([carry_d, dst])
+        # defer the trailing run (vertex may continue in next batch)
+        boundary = int(np.searchsorted(src, src[-1], side="left"))
+        if boundary > 0:
+            yield from rows(src[:boundary], dst[:boundary])
+        carry_s, carry_d = src[boundary:], dst[boundary:]
+    if carry_s is not None and len(carry_s):
+        yield from rows(carry_s, carry_d)
 
 
-def _array_count_udf(probe: _Probe):
-    """Count wedges for chunk rows (v, adj, deg, i_lo, i_hi) — the hub
-    lane and the vertex strategy."""
+def _list_rows(it: Iterator[pd.DataFrame]) -> Iterator[tuple]:
+    """The list-column reader: rows (adj, deg, i_lo, i_hi), one
+    adjacency array each — the hub lane's chunks, the vertex strategy's
+    whole adjacencies and the arrow strategy's path rows."""
+    for pdf in it:
+        if len(pdf) == 0:
+            continue
+        degs = pdf["deg"].values.astype(np.int64)
+        flat = np.concatenate(
+            [np.asarray(a, dtype=np.int64) for a in pdf["adj"].values]
+        )
+        yield (
+            flat,
+            np.cumsum(degs) - degs,
+            degs,
+            pdf["i_lo"].values.astype(np.int64),
+            pdf["i_hi"].values.astype(np.int64),
+        )
+
+
+def _count_udf(probe: _Probe, read=_csr_rows):
+    """Count closed wedges over the rows `read` yields: one row per
+    partition (COUNT_SCHEMA)."""
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        total = 0
         timings: dict = {}
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            degs = pdf["deg"].values.astype(np.int64)
-            flat = np.concatenate(
-                [np.asarray(a, dtype=np.int64) for a in pdf["adj"].values]
-            )
-            starts = np.cumsum(degs) - degs
-            total += probe.count(
-                flat,
-                starts,
-                degs,
-                pdf["i_lo"].values.astype(np.int64),
-                pdf["i_hi"].values.astype(np.int64),
-                timings,
-            )
+        total = sum(probe.count(rows, timings) for rows in read(it))
         yield _timed_row(total, timings)
 
     return run
 
 
-def _arrow_count_udf(probe: _Probe):
-    """Count path-wedges for rows (src, adj) where adj = adj(dst) of an
-    oriented edge (src, dst) — the arrow strategy's evaluate step
-    (experiments/tc_arrow.cu:345-371)."""
+# bench.py's amplified exec phase counts a sorted oriented frame
+# through this name
+_flat_count_udf = _count_udf
+
+
+def _emit_udf(read):
+    """Emit every wedge pair (w, u) of the rows `read` yields, for the
+    distributed closure (rows of "src long, dst long")."""
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        total = 0
-        timings: dict = {}
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            degs = np.array([len(a) for a in pdf["adj"].values], dtype=np.int64)
-            flat = np.concatenate(
-                [np.asarray(a, dtype=np.int64) for a in pdf["adj"].values]
-            ) if degs.sum() else np.empty(0, np.int64)
-            starts = np.cumsum(degs) - degs
-            centers = pdf["src"].values.astype(np.int64, copy=False)
-            total += probe.count_arrow(centers, flat, starts, degs, timings)
-        yield _timed_row(total, timings)
+        for rows in read(it):
+            for w, u in wk.wedge_blocks(*rows):
+                yield pd.DataFrame({"src": w, "dst": u})
 
     return run
 
 
-def _emit_pairs_flat_udf():
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry_s = carry_d = None
+def _degree_order_keep(lookup_bc):
+    """The fused lane's per-run filter over the SYMMETRIC edge table:
+    keep the degree-ordered half, minus edges out of hub-lane vertices,
+    against a broadcast degree dictionary (`lookup_bc`: sorted ids /
+    degree / is_hub arrays) — so the count job needs no degree joins."""
 
-        def emit(src, dst):
-            starts, degs = _runs(src)
-            w, u = wk.enumerate_pairs(
-                dst, starts, degs, np.zeros(len(degs), np.int64), degs - 1
-            )
-            return pd.DataFrame({"src": w, "dst": u})
+    def keep(src: np.ndarray, dst: np.ndarray) -> np.ndarray:
+        look = lookup_bc.value
+        ids, deg = look["ids"], look["deg"]
+        si = np.searchsorted(ids, src)
+        ds, dd = deg[si], deg[np.searchsorted(ids, dst)]
+        return ((ds < dd) | ((ds == dd) & (src < dst))) & ~look["is_hub"][si]
 
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            src = pdf["src"].values.astype(np.int64, copy=False)
-            dst = pdf["dst"].values.astype(np.int64, copy=False)
-            if carry_s is not None:
-                src = np.concatenate([carry_s, src])
-                dst = np.concatenate([carry_d, dst])
-            boundary = int(np.searchsorted(src, src[-1], side="left"))
-            if boundary > 0:
-                yield emit(src[:boundary], dst[:boundary])
-            carry_s, carry_d = src[boundary:], dst[boundary:]
-        if carry_s is not None and len(carry_s):
-            yield emit(carry_s, carry_d)
-
-    return run
-
-
-def _emit_pairs_array_udf():
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            degs = pdf["deg"].values.astype(np.int64)
-            flat = np.concatenate(
-                [np.asarray(a, dtype=np.int64) for a in pdf["adj"].values]
-            )
-            starts = np.cumsum(degs) - degs
-            w, u = wk.enumerate_pairs(
-                flat,
-                starts,
-                degs,
-                pdf["i_lo"].values.astype(np.int64),
-                pdf["i_hi"].values.astype(np.int64),
-            )
-            yield pd.DataFrame({"src": w, "dst": u})
-
-    return run
-
-
-def _emit_pairs_arrow_udf():
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            degs = np.array([len(a) for a in pdf["adj"].values], dtype=np.int64)
-            if degs.sum() == 0:
-                continue
-            flat = np.concatenate(
-                [np.asarray(a, dtype=np.int64) for a in pdf["adj"].values]
-            )
-            w = np.repeat(pdf["src"].values.astype(np.int64, copy=False), degs)
-            yield pd.DataFrame({"src": w, "dst": flat})
-
-    return run
+    return keep
 
 
 def _numpy_top_hub_ids(src: np.ndarray, dst: np.ndarray, hub_k: int) -> np.ndarray:
@@ -405,25 +308,30 @@ def _numpy_top_hub_ids(src: np.ndarray, dst: np.ndarray, hub_k: int) -> np.ndarr
 
 def _build_probe(
     spark: SparkSession,
-    oriented: DataFrame,
+    edges,
     key_base: int,
     hub_k: int,
 ) -> _Probe:
+    """The one closure-probe builder: broadcast sorted edge keys plus,
+    for hub_k > 0, the top-hub_k id array and its hub↔hub bitmap.
+    `edges` is an oriented (src, dst) frame, collected here through
+    Arrow, or the (src, dst) arrays a caller already collected."""
     if key_base * key_base > 2**62:
         raise ValueError("vertex domain too large for int64 edge keys")
-    src, dst = collect_arrays(oriented, "src", "dst")
-    edge_keys = wk.build_edge_keys(src, dst, key_base)
+    if isinstance(edges, DataFrame):
+        edges = collect_arrays(edges, "src", "dst")
+    src, dst = edges
+    sc = spark.sparkContext
     hub_bc = None
     hub_ids = None
-    if hub_k and hub_k > 0 and len(src):
+    if hub_k > 0 and len(src):
         # the probe arrays are already in driver memory (the broadcast
         # path caps them at BROADCAST_MAX_EDGES), so a numpy top-k is
         # strictly cheaper than a Spark degree re-aggregation job —
         # the copy phase stays free of extra cluster actions
         hub_ids = _numpy_top_hub_ids(src, dst, hub_k)
-        bitmap = wk.build_hub_bitmap(src, dst, hub_ids)
-        hub_bc = spark.sparkContext.broadcast(bitmap)
-    keys_bc = spark.sparkContext.broadcast(edge_keys)
+        hub_bc = sc.broadcast(wk.build_hub_bitmap(src, dst, hub_ids))
+    keys_bc = sc.broadcast(wk.build_edge_keys(src, dst, key_base))
     return _Probe(keys_bc, key_base, hub_bc, hub_ids)
 
 
@@ -524,7 +432,6 @@ def _wedge_fused(
     edges: DataFrame,
     hub_k: int,
     split_budget: int,
-    partitions: int | None,
     caches: list,
     mark,
     phase_metrics: dict | None,
@@ -554,7 +461,7 @@ def _wedge_fused(
     itself."""
     from .graph import build_sym_clustered, orient_from_sym
 
-    npart = partitions or spark.sparkContext.defaultParallelism
+    npart = spark.sparkContext.defaultParallelism
     sym = build_sym_clustered(edges, npart).persist()
     caches.append(sym)
     mark("prep_sec")
@@ -594,15 +501,7 @@ def _wedge_fused(
     hub_min_deg = int((2 * split_budget) ** 0.5) + 2
     hub_flag = outdeg >= hub_min_deg
 
-    sc = spark.sparkContext
-    edge_keys = wk.build_edge_keys(a, b, key_base)
-    hub_ids = _numpy_top_hub_ids(a, b, hub_k) if hub_k and hub_k > 0 else None
-    hub_bc = (
-        sc.broadcast(wk.build_hub_bitmap(a, b, hub_ids))
-        if hub_ids is not None and len(hub_ids)
-        else None
-    )
-    probe = _Probe(sc.broadcast(edge_keys), key_base, hub_bc, hub_ids)
+    probe = _build_probe(spark, (a, b), key_base, hub_k)
 
     hub_tbl = None
     est = None
@@ -619,13 +518,10 @@ def _wedge_fused(
                 spark,
                 oriented,
                 key_base,
-                None,
                 closure="broadcast",
                 hub_k=hub_k,
                 split_budget=split_budget,
-                partitions=partitions,
                 clustered_by_src=True,
-                partitioner="auto",
                 caches=caches,
                 stats=stats,
                 probe=probe,
@@ -634,17 +530,22 @@ def _wedge_fused(
             mark("exec_sec")
             return out
 
-    lookup_bc = sc.broadcast({"ids": ids, "deg": cnt, "is_hub": hub_flag})
+    lookup_bc = spark.sparkContext.broadcast(
+        {"ids": ids, "deg": cnt, "is_hub": hub_flag}
+    )
     mark("build_sec")
 
+    keep = _degree_order_keep(lookup_bc)
     flat = sym.sortWithinPartitions("src", "dst")
-    counts = flat.mapInPandas(_flat_count_sym_udf(probe, lookup_bc), schema=COUNT_SCHEMA)
+    counts = flat.mapInPandas(
+        _count_udf(probe, lambda it: _csr_rows(it, keep)), schema=COUNT_SCHEMA
+    )
     if hub_tbl is not None:
         # Arrow table → DataFrame is zero-copy on the driver side
         # (no Python row boxing / pickling; ADVICE r3)
         hub_df = spark.createDataFrame(hub_tbl).repartition(npart, "v", "i_lo")
         counts = counts.unionByName(
-            hub_df.mapInPandas(_array_count_udf(probe), schema=COUNT_SCHEMA)
+            hub_df.mapInPandas(_count_udf(probe, _list_rows), schema=COUNT_SCHEMA)
         )
     out = _finish(_sum_counts(counts), caches, spark, phase_metrics)
     mark("exec_sec")
@@ -699,13 +600,10 @@ def _wedge_count(
     spark: SparkSession,
     oriented: DataFrame,
     key_base: int,
-    deg: DataFrame,
     closure: str,
     hub_k: int,
     split_budget: int,
-    partitions: int | None,
     clustered_by_src: bool,
-    partitioner: str,
     caches: list,
     stats: dict | None,
     probe: _Probe | None = None,
@@ -713,7 +611,7 @@ def _wedge_count(
     """Two-lane wedge-parallel count over degree-oriented edges.
     `probe`, if given, is a pre-built closure probe (the fused path
     builds it from its own Arrow collect — no second collect here)."""
-    npart = partitions or spark.sparkContext.defaultParallelism
+    npart = spark.sparkContext.defaultParallelism
 
     hub_min_deg = int((2 * split_budget) ** 0.5) + 2
     odeg = oriented.groupBy("src").agg(F.count("*").alias("deg"))
@@ -746,91 +644,93 @@ def _wedge_count(
         maybe_hubs = st["n_hubs"] > 0
         route_broadcast = st["n_hubs"] <= HUB_ROUTE_BROADCAST_MAX
 
-    flat_edges = oriented
-    hub_chunks = None
+    hub_lane = []
     if maybe_hubs:
         hubs = odeg.filter(F.col("deg") >= hub_min_deg).select("src")
         if route_broadcast:
             hubs = F.broadcast(hubs)
         flat_edges = oriented.join(hubs, "src", "left_anti")
-        hub_edges = oriented.join(hubs, "src", "left_semi")
-        hub_adj = adjacency(hub_edges)
+        hub_adj = adjacency(oriented.join(hubs, "src", "left_semi"))
         hub_chunks = _split_chunks(hub_adj, split_budget).repartition(
             npart, "v", "i_lo"
         )
-
-    if partitioner == "auto":
-        # skew-aware choice: a graph whose max degree reaches the hub
-        # threshold is in the power-law regime where hash-by-src also
-        # misplaces MID-degree vertices — the wedge-balanced range
-        # partition measured 1.8x faster there (COVERAGE.md §2.11);
-        # otherwise keep the zero-exchange hash clustering from prep
-        partitioner = "wedge_range" if maybe_hubs else "hash"
-
-    if partitioner == "wedge_range":
-        flat_odeg = (
-            odeg.filter(F.col("deg") < hub_min_deg) if maybe_hubs else odeg
-        )
+        hub_lane.append((hub_chunks, _list_rows))
+        # skew-aware partitioning: a graph whose max degree reaches the
+        # hub threshold is in the power-law regime where hash-by-src
+        # also misplaces MID-degree vertices — the wedge-balanced range
+        # partition measured 1.8x faster there (COVERAGE.md §2.11)
+        flat_odeg = odeg.filter(F.col("deg") < hub_min_deg)
         flat_parted = _wedge_range_flat(flat_edges, flat_odeg, npart, caches)
-    elif clustered_by_src and partitions is None:
+    elif clustered_by_src:
         # fast prep already hash-clustered the edges by src — the CSR
         # lane needs only an in-partition sort, NO exchange
-        flat_parted = flat_edges.sortWithinPartitions("src", "dst")
+        flat_parted = oriented.sortWithinPartitions("src", "dst")
     else:
-        flat_parted = flat_edges.repartition(npart, "src").sortWithinPartitions(
+        flat_parted = oriented.repartition(npart, "src").sortWithinPartitions(
             "src", "dst"
         )
+    lanes = [(flat_parted, _csr_rows)] + hub_lane
+    return _close(spark, oriented, key_base, m, closure, hub_k, lanes, probe)
 
+
+def _close(
+    spark: SparkSession,
+    oriented: DataFrame,
+    key_base: int,
+    m: int | None,
+    closure: str,
+    hub_k: int,
+    lanes: list,
+    probe: _Probe | None = None,
+) -> DataFrame:
+    """The closure step shared by the wedge, arrow and vertex
+    strategies. `lanes` are (frame, reader) pairs of wedge rows over
+    `oriented` (m edges; None when no stats action counted them).
+    closure="auto" takes the broadcast probe up to BROADCAST_MAX_EDGES
+    oriented edges and the distributed semi-join beyond. "broadcast"
+    counts every lane against one probe (built here unless given);
+    "join" emits every lane's wedge pairs, canonical by id, LEFT SEMI
+    against the canonicalized edge set."""
     if closure == "auto":
+        if m is None:
+            m = oriented.count()
         closure = "broadcast" if m <= BROADCAST_MAX_EDGES else "join"
-
     if closure == "broadcast":
         if probe is None:
             probe = _build_probe(spark, oriented, key_base, hub_k)
-        counts = flat_parted.mapInPandas(_flat_count_udf(probe), schema=COUNT_SCHEMA)
-        if hub_chunks is not None:
-            counts = counts.unionByName(
-                hub_chunks.mapInPandas(_array_count_udf(probe), schema=COUNT_SCHEMA)
-            )
-        return _sum_counts(counts)
-
-    # Distributed closure: emit candidate pairs (canonical by id),
-    # LEFT SEMI against the canonicalized edge set.
-    pairs = flat_parted.mapInPandas(_emit_pairs_flat_udf(), schema="src long, dst long")
-    if hub_chunks is not None:
-        pairs = pairs.unionByName(
-            hub_chunks.mapInPandas(_emit_pairs_array_udf(), schema="src long, dst long")
-        )
-    closed = pairs.join(_canonical(oriented), ["src", "dst"], "left_semi")
+        counts = [
+            rows.mapInPandas(_count_udf(probe, read), schema=COUNT_SCHEMA)
+            for rows, read in lanes
+        ]
+        return _sum_counts(functools.reduce(DataFrame.unionByName, counts))
+    pairs = [
+        rows.mapInPandas(_emit_udf(read), schema="src long, dst long")
+        for rows, read in lanes
+    ]
+    closed = _canonical(functools.reduce(DataFrame.unionByName, pairs)).join(
+        _canonical(oriented), ["src", "dst"], "left_semi"
+    )
     return closed.agg(F.count("*").alias("triangles"))
 
 
-def _prep(
-    edges: DataFrame,
-    prep: str,
-    rank_method: str,
-    npart: int | None,
-    caches: list,
-) -> tuple[DataFrame, DataFrame, int, bool, dict | None]:
-    """Preprocess → (oriented, degree table (v, degree), key_base,
-    clustered_by_src, stats|None). prep="fast" fuses everything onto
-    one shuffle in original id space and returns its free stats;
-    prep="relabel" is the rank-space pipeline (used when ids don't fit
-    integer edge keys, or on request)."""
-    if prep in ("auto", "fast"):
-        oriented, deg, n, max_id, stats = prepare_oriented_fast(
-            edges, npart, caches=caches
-        )
-        if prep == "fast" or (max_id + 1) ** 2 <= 2**62:
-            return oriented, deg, max_id + 1, True, stats
-        for c in caches:
-            c.unpersist()
-        caches.clear()
-    oriented, ranks, n = prepare_oriented(edges, rank_method=rank_method, caches=caches)
-    # rank space: degree rank IS the id order, so the degree table for
-    # the hub bitmap is just (rank, rank) — top-k ranks = top-k degrees
-    deg = ranks.select(F.col("rank").alias("v"), F.col("rank").alias("degree"))
-    return oriented, deg, n, False, None
+def _prep(edges: DataFrame, caches: list) -> tuple[DataFrame, int, bool, dict | None]:
+    """Preprocess → (oriented, key_base, clustered_by_src, stats|None).
+    The fast prep fuses everything onto one shuffle in original id
+    space and returns its free stats; ids too large for integer edge
+    keys ((max_id+1)² > 2⁶²) take the rank-space relabel pipeline."""
+    oriented, _deg, _n, max_id, stats = prepare_oriented_fast(edges, caches=caches)
+    if (max_id + 1) ** 2 <= 2**62:
+        return oriented, max_id + 1, True, stats
+    for c in caches:
+        c.unpersist()
+    caches.clear()
+    return _relabel(edges, caches)
+
+
+def _relabel(edges: DataFrame, caches: list) -> tuple[DataFrame, int, bool, None]:
+    """The rank-space prep: ids 0..n-1, so n is the edge-key base."""
+    oriented, _ranks, n = prepare_oriented(edges, caches=caches)
+    return oriented, n, False, None
 
 
 def _sum_counts(counts: DataFrame) -> DataFrame:
@@ -873,12 +773,8 @@ def triangle_count(
     edges: DataFrame,
     strategy: str = "wedge",
     closure: str = "auto",
-    rank_method: str = "scalable",
     hub_k: int = 8192,
     split_budget: int = 1 << 18,
-    partitions: int | None = None,
-    partitioner: str = "auto",
-    prep: str = "auto",
     phase_metrics: dict | None = None,
 ) -> DataFrame:
     """Exact global triangle count of the undirected simple graph
@@ -889,6 +785,8 @@ def triangle_count(
     if given, is filled with driver-side wall times for the prep /
     probe-build / exec phases (the reference's accounting split,
     tc.cu:886-913)."""
+    if strategy not in ("wedge", "arrow", "vertex", "edge", "join"):
+        raise ValueError(f"unknown strategy {strategy!r}")
     spark = edges.sparkSession
     caches: list = []
     t0 = time.perf_counter()
@@ -902,7 +800,8 @@ def triangle_count(
             )
             t0 = now
 
-    if strategy == "wedge":
+    prep = _prep
+    if strategy == "wedge" and closure in ("auto", "broadcast"):
         # Collect-fused fast path (VERDICT r2 item 5): in the broadcast-
         # closure regime the probe collect IS the prep action — one
         # edge shuffle + one count job, no stats job, no degree joins.
@@ -911,13 +810,9 @@ def triangle_count(
         # count, so a bad estimate aborts to the distributed pipeline
         # instead of overflowing the broadcast budget. Explicit
         # closure="broadcast" skips the gate entirely.
-        use_fused = (
-            prep in ("auto", "fast")
-            and partitioner in ("auto", "hash")
-            and closure in ("auto", "broadcast")
-        )
+        use_fused = True
         max_collect = None
-        if use_fused and closure == "auto":
+        if closure == "auto":
             gate = size_gate(edges, BROADCAST_MAX_EDGES)
             use_fused = gate.fits
             if gate.basis == "estimate":
@@ -929,7 +824,6 @@ def triangle_count(
                 edges,
                 hub_k=hub_k,
                 split_budget=split_budget,
-                partitions=partitions,
                 caches=caches,
                 mark=mark,
                 phase_metrics=phase_metrics,
@@ -939,141 +833,89 @@ def triangle_count(
             if out is not None:
                 return out
             # release the fused attempt, then: vertex ids overflowing
-            # int64 edge keys fall to the relabel pipeline; a row-count
-            # overflow (optimistic statistics entry) keeps the fast
-            # prep — its stats job re-derives m and closure="auto"
+            # int64 edge keys go straight to the relabel pipeline; a
+            # row-count overflow (optimistic statistics entry) keeps the
+            # fast prep — its stats job re-derives m and closure="auto"
             # routes to the distributed semi-join lane
             for c in caches:
                 c.unpersist()
             caches.clear()
             if fused_info.get("abort") != "rows":
-                prep = "relabel" if prep == "auto" else prep
+                prep = _relabel
 
-    if strategy in ("wedge", "arrow", "vertex"):
-        oriented, deg, key_base, clustered, stats = _prep(
-            edges, prep, rank_method, partitions, caches
+    oriented, key_base, clustered, stats = prep(edges, caches)
+    oriented = oriented.persist()
+    caches.append(oriented)
+    mark("prep_sec")
+    m = stats["m_oriented"] if stats is not None else None
+
+    if strategy == "wedge":
+        result = _wedge_count(
+            spark,
+            oriented,
+            key_base,
+            closure=closure,
+            hub_k=hub_k,
+            split_budget=split_budget,
+            clustered_by_src=clustered,
+            caches=caches,
+            stats=stats,
         )
-        oriented = oriented.persist()
-        caches.append(oriented)
-        mark("prep_sec")
-
-        if strategy == "wedge":
-            result = _wedge_count(
-                spark,
-                oriented,
-                key_base,
-                deg,
-                closure=closure,
-                hub_k=hub_k,
-                split_budget=split_budget,
-                partitions=partitions,
-                clustered_by_src=clustered,
-                partitioner=partitioner,
-                caches=caches,
-                stats=stats,
-            )
-            mark("build_sec")
-            out = _finish(result, caches, spark, phase_metrics)
-            mark("exec_sec")
-            return out
-
-        if strategy == "arrow":
-            # path-wedge: edges (v,w) ⋈ adjacency(w) — the relational
-            # analogue of tc_arrow's two-level prefix index; adjacency
-            # grouping shuffles by v, the join shuffles edges by dst
-            # (both unavoidable: the strategy's unit of work is the
-            # (in-edge, out-adjacency) pair)
-            adj = adjacency(oriented).select(
-                F.col("v").alias("dst"), F.col("adj").alias("adj")
-            )
-            paths = oriented.join(adj, "dst").select("src", "adj")
-            if closure == "auto":
-                m = stats["m_oriented"] if stats is not None else oriented.count()
-                closure = "broadcast" if m <= BROADCAST_MAX_EDGES else "join"
-            if closure == "broadcast":
-                probe = _build_probe(spark, oriented, key_base, hub_k)
-                mark("build_sec")
-                per_part = paths.mapInPandas(_arrow_count_udf(probe), schema=COUNT_SCHEMA)
-                result = _sum_counts(per_part)
-            else:
-                mark("build_sec")
-                pairs = paths.mapInPandas(
-                    _emit_pairs_arrow_udf(), schema="src long, dst long"
-                )
-                canon = pairs.select(
-                    F.least("src", "dst").alias("src"),
-                    F.greatest("src", "dst").alias("dst"),
-                )
-                result = canon.join(
-                    _canonical(oriented), ["src", "dst"], "left_semi"
-                ).agg(F.count("*").alias("triangles"))
-            out = _finish(result, caches, spark, phase_metrics)
-            mark("exec_sec")
-            return out
-
-        # strategy == "vertex"
-        adj = adjacency(oriented)
-        rows = adj.filter(F.col("deg") >= 2).select(
+    elif strategy == "arrow":
+        # path-wedge: edges (v,w) ⋈ adjacency(w) — the relational
+        # analogue of tc_arrow's two-level prefix index; adjacency
+        # grouping shuffles by v, the join shuffles edges by dst
+        # (both unavoidable: the strategy's unit of work is the
+        # (in-edge, out-adjacency) pair). Each path row is the
+        # adjacency [v, *adj(w)] with first index 0 only, so its wedge
+        # pairs are exactly the paths' closures {v, u}
+        # (experiments/tc_arrow.cu:345-371).
+        adj = adjacency(oriented).select(
+            F.col("v").alias("dst"), F.col("adj"), F.col("deg")
+        )
+        paths = oriented.join(adj, "dst").select(
+            F.concat(F.array("src"), "adj").alias("adj"),
+            (F.col("deg") + 1).alias("deg"),
+            F.lit(0).alias("i_lo"),
+            F.lit(1).alias("i_hi"),
+        )
+        result = _close(
+            spark, oriented, key_base, m, closure, hub_k, [(paths, _list_rows)]
+        )
+    elif strategy == "vertex":
+        rows = adjacency(oriented).filter(F.col("deg") >= 2).select(
             "v",
             "adj",
             "deg",
             F.lit(0).alias("i_lo"),
             (F.col("deg") - 1).alias("i_hi"),
         )
-        if closure == "auto":
-            m = stats["m_oriented"] if stats is not None else oriented.count()
-            closure = "broadcast" if m <= BROADCAST_MAX_EDGES else "join"
-        if closure == "broadcast":
-            probe = _build_probe(spark, oriented, key_base, 0)
-            mark("build_sec")
-            per_part = rows.mapInPandas(_array_count_udf(probe), schema=COUNT_SCHEMA)
-            result = _sum_counts(per_part)
-        else:
-            mark("build_sec")
-            pairs = rows.mapInPandas(_emit_pairs_array_udf(), schema="src long, dst long")
-            result = pairs.join(_canonical(oriented), ["src", "dst"], "left_semi").agg(
-                F.count("*").alias("triangles")
-            )
-        out = _finish(result, caches, spark, phase_metrics)
-        mark("exec_sec")
-        return out
-
-    if strategy in ("edge", "join"):
-        oriented, _deg, _kb, _cl, _st = _prep(edges, prep, rank_method, partitions, caches)
-        oriented = oriented.persist()
-        caches.append(oriented)
-        mark("prep_sec")
-
-        if strategy == "edge":
-            # persisted: BOTH endpoint joins consume the grouped
-            # adjacency — unpersisted, each branch re-runs the
-            # collect_list aggregation over the oriented cache (r6)
-            adj = adjacency(oriented).persist()
-            caches.append(adj)
-            a_src = adj.select(F.col("v").alias("src"), F.col("adj").alias("adj_src"))
-            a_dst = adj.select(F.col("v").alias("dst"), F.col("adj").alias("adj_dst"))
-            per_edge = (
-                oriented.join(a_src, "src")
-                .join(a_dst, "dst")
-                .select(F.size(F.array_intersect("adj_src", "adj_dst")).alias("c"))
-            )
-            result = per_edge.agg(F.coalesce(F.sum("c"), F.lit(0)).alias("triangles"))
-        else:
-            e1 = oriented.alias("e1")
-            e2 = oriented.alias("e2")
-            e3 = oriented.alias("e3")
-            tri = e1.join(e2, F.col("e1.dst") == F.col("e2.src")).join(
-                e3,
-                (F.col("e1.src") == F.col("e3.src"))
-                & (F.col("e2.dst") == F.col("e3.dst")),
-                "left_semi",
-            )
-            result = tri.agg(F.count("*").alias("triangles"))
-        out = _finish(result, caches, spark, phase_metrics)
-        mark("exec_sec")
-        return out
-
-    raise ValueError(f"unknown strategy {strategy!r}")
+        result = _close(spark, oriented, key_base, m, closure, 0, [(rows, _list_rows)])
+    elif strategy == "edge":
+        # persisted: BOTH endpoint joins consume the grouped
+        # adjacency — unpersisted, each branch re-runs the
+        # collect_list aggregation over the oriented cache (r6)
+        adj = adjacency(oriented).persist()
+        caches.append(adj)
+        per_edge = common_neighbors(oriented, adj).select(
+            F.size("common").alias("c")
+        )
+        result = per_edge.agg(F.coalesce(F.sum("c"), F.lit(0)).alias("triangles"))
+    else:  # join
+        e1 = oriented.alias("e1")
+        e2 = oriented.alias("e2")
+        e3 = oriented.alias("e3")
+        tri = e1.join(e2, F.col("e1.dst") == F.col("e2.src")).join(
+            e3,
+            (F.col("e1.src") == F.col("e3.src"))
+            & (F.col("e2.dst") == F.col("e3.dst")),
+            "left_semi",
+        )
+        result = tri.agg(F.count("*").alias("triangles"))
+    mark("build_sec")
+    out = _finish(result, caches, spark, phase_metrics)
+    mark("exec_sec")
+    return out
 
 
 def wedge_stats(edges: DataFrame) -> DataFrame:
@@ -1081,7 +923,7 @@ def wedge_stats(edges: DataFrame) -> DataFrame:
     graph, max degree — the reference's sample_degrees report
     (experiments/sample_degrees.cu:505-560)."""
     caches: list = []
-    oriented, deg, _kb, _cl, _st = _prep(edges, "fast", "scalable", None, caches)
+    oriented, deg, _n, _mx, _st = prepare_oriented_fast(edges, caches=caches)
     odeg = oriented.groupBy(F.col("src")).agg(F.count("*").alias("degree"))
     stats_sym = deg.agg(F.count("*").alias("n"), F.max("degree").alias("max_degree"))
     stats_or = odeg.agg(

@@ -50,7 +50,7 @@ from .checkpointing import (
     finish_with_caches,
     loop_partitions,
 )
-from .graph import normalize_edges
+from .graph import adjacency, common_neighbors, normalize_edges
 
 
 def canonical_edges(edges: DataFrame, npart: int) -> DataFrame:
@@ -68,32 +68,22 @@ def canonical_edges(edges: DataFrame, npart: int) -> DataFrame:
     )
 
 
-def _higher_adjacency(und: DataFrame) -> DataFrame:
-    """adj+(v): sorted array of canonical higher neighbors."""
-    return und.groupBy("src").agg(
-        F.sort_array(F.collect_list("dst")).alias("adj")
-    )
-
-
 def enumerate_triangles(und: DataFrame) -> DataFrame:
     """Every triangle of the canonical edge frame exactly once as
-    (a, b, c) with a < b < c."""
-    adj = _higher_adjacency(und)
+    (a, b, c) with a < b < c: over id-oriented edges the adjacency is
+    adj+(v), the sorted higher neighbors, so each common neighbor c of
+    an edge (a, b) is above both. explode_outer + not-null rather than
+    explode: from a plain explode of the `common` column Catalyst infers
+    size(common) > 0 and pushes it into the join condition, computing
+    every intersection twice."""
     return (
-        und.join(
-            adj.select(F.col("src"), F.col("adj").alias("adj_src")), "src"
-        )
-        .join(
-            adj.select(
-                F.col("src").alias("dst"), F.col("adj").alias("adj_dst")
-            ),
-            "dst",
-        )
+        common_neighbors(und, adjacency(und))
         .select(
             F.col("src").alias("a"),
             F.col("dst").alias("b"),
-            F.explode(F.array_intersect("adj_src", "adj_dst")).alias("c"),
+            F.explode_outer("common").alias("c"),
         )
+        .filter(F.col("c").isNotNull())
     )
 
 
