@@ -171,13 +171,15 @@ def _cn_brute(pairs, k, max_degree=None):
 
 
 def test_link_prediction_max_degree_excludes_hub_centers(spark):
+    from pyspark.sql import functions as F
+
     from wedge_parallel_triangle_counting_spark.operators.linkpred import (
         common_neighbor_pairs,
-        wedge_candidates,
     )
     from wedge_parallel_triangle_counting_spark.operators.graph import (
         normalize_edges,
         symmetrize,
+        wedge_pairs,
     )
 
     # Zipf-ish fixture with one explicit mega-hub (vertex 0 touches all)
@@ -204,8 +206,9 @@ def test_link_prediction_max_degree_excludes_hub_centers(spark):
     # candidate relation is bounded: capped <= sum_{deg<=cap} d(d-1)/2,
     # strictly fewer rows than the uncapped relation that the hub inflates
     sym = symmetrize(normalize_edges(edges_df(spark, pairs)))
-    capped = wedge_candidates(sym, max_degree=cap).count()
-    uncapped = wedge_candidates(sym).count()
+    inc = sym.select(F.col("src").alias("key"), F.col("dst").alias("item"))
+    capped = wedge_pairs(inc, max_key_deg=cap).count()
+    uncapped = wedge_pairs(inc).count()
     bound = sum(
         len(ns) * (len(ns) - 1) // 2 for ns in adj.values() if len(ns) <= cap
     )
@@ -213,7 +216,8 @@ def test_link_prediction_max_degree_excludes_hub_centers(spark):
     assert capped < uncapped
 
 
-def test_link_prediction_hub_salting_is_exact(spark):
+def test_link_prediction_hub_salting_is_exact(spark, monkeypatch):
+    from wedge_parallel_triangle_counting_spark.operators import graph
     from wedge_parallel_triangle_counting_spark.operators.linkpred import (
         common_neighbor_pairs,
     )
@@ -221,18 +225,19 @@ def test_link_prediction_hub_salting_is_exact(spark):
     pairs = _random_graph(43, 30, 150)
     want = _cn_brute(pairs, k=10)
     # force the salted hub lane on for essentially every center
+    monkeypatch.setattr(graph, "WEDGE_SALT_MIN_DEG", 2)
+    monkeypatch.setattr(graph, "WEDGE_SALT_SPLITS", 5)
     got = [
         ((r.id_a, r.id_b), r.cn)
-        for r in common_neighbor_pairs(
-            edges_df(spark, pairs), k=10, hub_min_deg=2, hub_splits=5
-        ).collect()
+        for r in common_neighbor_pairs(edges_df(spark, pairs), k=10).collect()
     ]
     assert sorted(got, key=lambda kv: (-kv[1], kv[0])) == want
 
 
-def test_link_prediction_scores_match_brute(spark):
+def test_link_prediction_scores_match_brute(spark, monkeypatch):
     import math
 
+    from wedge_parallel_triangle_counting_spark.operators import graph
     from wedge_parallel_triangle_counting_spark.operators.linkpred import (
         link_prediction_scores,
     )
@@ -262,8 +267,9 @@ def test_link_prediction_scores_match_brute(spark):
             assert r.cn == len(adj[r.id_a] & adj[r.id_b])
     # hub salting keeps weighted scores exact too: star + clique fixture
     star = [(0, i) for i in range(1, 40)] + [(1, 2), (2, 3)]
+    monkeypatch.setattr(graph, "WEDGE_SALT_MIN_DEG", 8)
     hub_got = link_prediction_scores(
-        edges_df(spark, star), k=5, method="resource_allocation", hub_min_deg=8
+        edges_df(spark, star), k=5, method="resource_allocation"
     ).collect()
     sadj = _adj(_und(star))
     for r in hub_got:

@@ -490,3 +490,79 @@ def test_lm_buckets_plan_has_no_single_partition_sort(spark):
             assert "Sort" not in parent, plan
     # and the data-path sort is the range-partitioned kind
     assert "rangepartitioning" in plan.lower(), plan
+
+
+def _own_nodes(df) -> list[tuple[str, str]]:
+    """(class name, one-line description) of every node in `df`'s own
+    executed plan, walked like `_shuffle_exchanges`: through AQE and
+    its query stages, never into the plans that built cached
+    relations."""
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    found = []
+
+    def walk(node):
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if name.endswith("QueryStageExec"):
+            return walk(node.plan())
+        found.append((name, node.simpleString(1000)))
+        for child in seq(node.children()):
+            walk(child)
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return found
+
+
+def _intersections_and_generates(df) -> tuple[int, int]:
+    nodes = _own_nodes(df)
+    return (
+        sum(desc.count("array_intersect(") for _, desc in nodes),
+        sum(1 for name, _ in nodes if name == "GenerateExec"),
+    )
+
+
+def test_edge_support_intersects_once(spark):
+    """truss._support lists each edge's common neighbors once and
+    emits every triangle's 3 member edges from that one Generate: one
+    array_intersect and one Generate in the plan. A union of three
+    projections of the triangle listing repeats both joins and the
+    intersection per branch, and k_truss pays that every peel round."""
+    from wedge_parallel_triangle_counting_spark.operators.checkpointing import (
+        loop_partitions,
+    )
+    from wedge_parallel_triangle_counting_spark.operators.truss import (
+        _support,
+        canonical_edges,
+    )
+    from wedge_parallel_triangle_counting_spark.plans import testdata
+
+    edges = testdata.derived_pagerank_edges(spark, SF)
+    und = canonical_edges(edges, loop_partitions(spark)).persist()
+    try:
+        assert _intersections_and_generates(_support(und)) == (1, 1)
+    finally:
+        und.unpersist()
+
+
+def test_per_vertex_triangles_intersects_once(spark):
+    """clustering._per_vertex_triangles emits each triangle's 3
+    corners from one pass over the common-neighbor listing: one
+    array_intersect (no `size(common) > 0` copy pushed into a join
+    condition) and one Generate beyond those of the cached prep."""
+    from wedge_parallel_triangle_counting_spark.operators.clustering import (
+        _per_vertex_triangles,
+    )
+    from wedge_parallel_triangle_counting_spark.plans import testdata
+
+    edges = testdata.derived_pagerank_edges(spark, SF)
+    caches: list = []
+    try:
+        pv = _per_vertex_triangles(edges, caches=caches)
+        assert _intersections_and_generates(pv) == (1, 1)
+    finally:
+        for c in caches:
+            c.unpersist()

@@ -173,9 +173,12 @@ def test_truss_invariants(spark, pairs):
 @given(pairs=edge_lists)
 def test_butterfly_wedge_identity(spark, pairs):
     """Σ_{u<v} codeg(u,v) over endpoint pairs equals the total wedge
-    count Σ_c C(deg(c), 2) — the two ways of counting wedges."""
+    count Σ_c C(deg(c), 2) — the two ways of counting wedges — and the
+    co-neighbor pairs and 4-cycles of butterfly_count and
+    quadrilateral_count match brute-force codegrees."""
     from wedge_parallel_triangle_counting_spark.operators.motifs import (
         butterfly_count,
+        quadrilateral_count,
     )
 
     und = {(min(a, b), max(a, b)) for a, b in pairs if a != b}
@@ -186,3 +189,55 @@ def test_butterfly_wedge_identity(spark, pairs):
     wedges = sum(d * (d - 1) // 2 for d in deg.values())
     r = butterfly_count(edges_df(spark, pairs)).collect()[0]
     assert r.wedge_pairs == wedges
+    # brute codegrees: quadrilateral_count is the same computation
+    # under its own column names
+    adj = {}
+    for a, b in und:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    vs = sorted(adj)
+    codeg = [len(adj[u] & adj[v]) for i, u in enumerate(vs) for v in vs[i + 1 :]]
+    coneighbor_pairs = sum(1 for w in codeg if w)
+    quads = sum(w * (w - 1) // 2 for w in codeg) // 2
+    assert (r.coneighbor_pairs, r.four_cycles) == (coneighbor_pairs, quads)
+    q = quadrilateral_count(edges_df(spark, pairs)).collect()[0]
+    assert (q.endpoint_pairs, q.quads) == (coneighbor_pairs, quads)
+
+
+incidences = st.lists(
+    st.tuples(st.integers(0, 8), st.integers(0, 30)), min_size=0, max_size=150
+)
+
+
+@pytest.mark.parametrize("salted", [False, True])
+@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
+@given(rows=incidences, cap=st.one_of(st.none(), st.integers(1, 12)))
+def test_wedge_pairs_matches_bruteforce(spark, monkeypatch, salted, rows, cap):
+    """graph.wedge_pairs against a brute force over random bipartite
+    (key, item) incidences: n = shared keys of degree in [2, cap],
+    wsum = Σ 1/deg over them, each pair a < b once. `salted` forces
+    every key with >= 2 items through the salted hub lane."""
+    import math
+
+    if salted:
+        monkeypatch.setattr(G, "WEDGE_SALT_MIN_DEG", 2)
+        monkeypatch.setattr(G, "WEDGE_SALT_SPLITS", 3)
+    inc = spark.createDataFrame(sorted(set(rows)), "key long, item long")
+    got = G.wedge_pairs(
+        inc, max_key_deg=cap, key_weight=lambda d: 1.0 / d.cast("double")
+    ).collect()
+    items = {}
+    for k, i in set(rows):
+        items.setdefault(k, set()).add(i)
+    want = {}
+    for its in items.values():
+        if cap is not None and len(its) > cap:
+            continue
+        for a in its:
+            for b in its:
+                if a < b:
+                    n, w = want.get((a, b), (0, 0.0))
+                    want[(a, b)] = (n + 1, w + 1.0 / len(its))
+    assert {(r.a, r.b): r.n for r in got} == {p: n for p, (n, _) in want.items()}
+    for r in got:
+        assert math.isclose(r.wsum, want[(r.a, r.b)][1], rel_tol=1e-12)

@@ -6,10 +6,10 @@ t(v) = triangles through v, lcc(v) = t(v) / C(deg(v), 2).
 
 Physical plan: one pass over the degree-oriented edges joined with
 both endpoint adjacencies (the `edge` strategy layout,
-experiments/tc_edge.cu); each oriented edge (a, b) contributes
-|adj(a) ∩ adj(b)| to BOTH endpoints and 1 to every common neighbor c
-(the triangle's third corner). All JVM expressions — the explode
-emits exactly 3T corner rows for T triangles, then one hash
+experiments/tc_edge.cu); every common neighbor c of an oriented edge
+(a, b) closes one triangle, and one explode emits its 3 corners
+a, b, c. All JVM expressions — exactly 3T corner rows for T
+triangles from one adjacency intersection per edge, then one hash
 aggregation. No driver-side work beyond the prep stats action.
 """
 
@@ -29,19 +29,20 @@ def _per_vertex_triangles(edges: DataFrame, caches: list | None = None) -> DataF
     oriented, deg, _n, _max_id, _stats = prepare_oriented_fast(edges, caches=own)
     if caches is not None:
         caches.extend(own)
-    per_edge = common_neighbors(oriented, adjacency(oriented)).filter(
-        F.size("common") > 0
-    )
+    # one pass: each common neighbor c of an oriented edge (src, dst)
+    # closes a triangle whose 3 corners are emitted together
+    # (explode_outer: see truss.enumerate_triangles)
+    n = F.size("common")
     corners = (
-        per_edge.select(F.col("src").alias("v"), F.size("common").alias("w"))
-        .unionByName(
-            per_edge.select(F.col("dst").alias("v"), F.size("common").alias("w"))
+        common_neighbors(oriented, adjacency(oriented))
+        .select(
+            F.explode_outer(
+                F.concat(F.array_repeat("src", n), F.array_repeat("dst", n), "common")
+            ).alias("v")
         )
-        .unionByName(
-            per_edge.select(F.explode("common").alias("v"), F.lit(1).alias("w"))
-        )
+        .filter(F.col("v").isNotNull())
     )
-    tcnt = corners.groupBy("v").agg(F.sum("w").alias("t"))
+    tcnt = corners.groupBy("v").agg(F.count(F.lit(1)).alias("t"))
     return deg.join(tcnt, "v", "left").select(
         "v",
         F.col("degree").cast("long").alias("degree"),

@@ -8,11 +8,13 @@ engines produce identical values.
 
 Scale notes:
 - exact dedup = one hash aggregation, the cheapest possible shuffle;
-- n-gram Jaccard builds an inverted index doc↔shingle and self-joins
-  on shingle — the classic candidate-generation join; the shingle key
-  distribution is Zipfian, so the join benefits from AQE skew-split.
-  At web scale, very frequent shingles should be dropped (stop-shingle
-  cutoff) — exposed as `max_shingle_freq`;
+- n-gram Jaccard, containment and substring windows are the open-wedge
+  pair relation with the SHINGLE as the wedge center: the doc↔shingle
+  inverted index goes through graph.wedge_pairs (the same aggregation
+  behind butterflies and link prediction), which drops single-doc
+  shingles before the self-join, salts Zipf-head shingles across
+  tasks, and applies the stop-shingle cutoff (`max_shingle_freq`,
+  `max_window_freq`) from the one per-shingle degree;
 - MinHash+LSH bounds candidate generation: 16 hashes → 4 bands of 4;
   only docs agreeing on a full band meet in the band-bucket join.
 """
@@ -21,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .graph import wedge_pairs
 
 NUM_HASHES = 16
 BANDS = 4
@@ -63,6 +67,56 @@ def dedup_exact(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
+def _shingle_overlap(
+    docs: DataFrame,
+    n: int,
+    max_shingle_freq: int | None,
+    caches: list | None = None,
+) -> DataFrame:
+    """(doc_a, doc_b, inter, sza, szb) for every doc pair a < b sharing
+    a shingle: inter = |A∩B| and sza, szb = the per-doc shingle set
+    sizes, all counted over the shingles in at most `max_shingle_freq`
+    documents (None keeps every shingle). Shared base of
+    ngram_jaccard_pairs and containment_pairs."""
+    # the explicit not-null filter gives every consumer the same
+    # shingle subtree (otherwise each infers its own filters below the
+    # distinct), so the shingle scan and its exchange run once
+    inc = (
+        shingles(docs, n=n)
+        .select(F.col("shingle").alias("key"), F.col("doc_id").alias("item"))
+        .filter(F.col("key").isNotNull() & F.col("item").isNotNull())
+    )
+    if caches is not None:
+        inc = inc.persist()
+        caches.append(inc)
+    sizes = inc.groupBy("item").agg(F.count(F.lit(1)).alias("sz"))
+    if max_shingle_freq is not None:
+        # minus each doc's stop shingles: only the keys over the cap
+        # meet the incidence, and the degree is wedge_pairs' own
+        # aggregation, so the planner reuses its shuffle
+        deg = inc.groupBy("key").agg(F.count(F.lit(1)).alias("deg"))
+        stop = (
+            inc.join(deg.filter(F.col("deg") > max_shingle_freq), "key")
+            .groupBy("item")
+            .agg(F.count(F.lit(1)).alias("n_stop"))
+        )
+        sizes = sizes.join(stop, "item", "left").select(
+            "item", (F.col("sz") - F.coalesce("n_stop", F.lit(0))).alias("sz")
+        )
+    return (
+        wedge_pairs(inc, max_key_deg=max_shingle_freq)
+        .join(sizes.select(F.col("item").alias("a"), F.col("sz").alias("sza")), "a")
+        .join(sizes.select(F.col("item").alias("b"), F.col("sz").alias("szb")), "b")
+        .select(
+            F.col("a").alias("doc_a"),
+            F.col("b").alias("doc_b"),
+            F.col("n").alias("inter"),
+            "sza",
+            "szb",
+        )
+    )
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame,
     n: int = 3,
@@ -73,8 +127,9 @@ def ngram_jaccard_pairs(
     """Near-duplicate pairs by exact token-n-gram Jaccard similarity:
     (doc_a, doc_b, jaccard) with doc_a < doc_b and jaccard >= threshold.
 
-    Inverted-index self-join for candidates, then |A∩B| from the join
-    count and |A∪B| = |A|+|B|−|A∩B| from per-doc set sizes.
+    Inverted-index self-join for candidates (graph.wedge_pairs), then
+    |A∩B| from the join count and |A∪B| = |A|+|B|−|A∩B| from per-doc
+    set sizes.
 
     `max_shingle_freq` (default ON) drops shingles shared by more than
     that many documents before the self-join — the stop-shingle cutoff
@@ -84,38 +139,17 @@ def ngram_jaccard_pairs(
     overlap is ONLY ultra-common shingles are not near-duplicates in
     any useful sense. Pass None to disable.
 
-    The shingle frame feeds three consumers (sizes, both join sides).
-    Pass a `caches` list to persist it across them — the frame is
-    appended so the CALLER unpersists after its terminal action
-    (same contract as triangle_count's internal caches). The default
-    recomputes the shingle scan per consumer but never leaks a cached
-    block into a long-lived session."""
-    sh = shingles(docs, n=n)
-    if max_shingle_freq is not None:
-        keep = sh.groupBy("shingle").count().filter(F.col("count") <= max_shingle_freq)
-        sh = sh.join(keep.select("shingle"), "shingle")
-    if caches is not None:
-        sh = sh.persist()
-        caches.append(sh)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
-    )
+    The shingle frame feeds three consumers (degrees, sizes, the
+    self-join). Pass a `caches` list to persist it across them — the
+    frame is appended so the CALLER unpersists after its terminal
+    action (same contract as triangle_count's internal caches). The
+    default recomputes the shingle scan per consumer but never leaks a
+    cached block into a long-lived session."""
+    jaccard = F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter"))
     return (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sza"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "szb"), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter"))).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
+        _shingle_overlap(docs, n, max_shingle_freq, caches)
+        .filter(jaccard >= threshold)
+        .select("doc_a", "doc_b", F.round(jaccard, 6).alias("jaccard"))
     )
 
 
@@ -370,21 +404,13 @@ def substring_dup_pairs(
     signal and bounds the join fan-out at freq^2 — the same skew guard
     ngram_jaccard_pairs uses, mandatory at 10^12 documents."""
     win = shingles(docs, n=window, id_col=id_col, text_col=text_col).select(
-        "doc_id", _hash64(F.concat(F.lit("sw:"), F.col("shingle"))).alias("h")
+        _hash64(F.concat(F.lit("sw:"), F.col("shingle"))).alias("key"),
+        F.col("doc_id").alias("item"),
     )
-    keep = (
-        win.groupBy("h")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter((F.col("df") >= 2) & (F.col("df") <= max_window_freq))
-    )
-    w = win.join(keep.select("h"), "h", "left_semi")
-    a = w.select(F.col("doc_id").alias("doc_a"), "h")
-    b = w.select(F.col("doc_id").alias("doc_b"), "h")
-    return (
-        a.join(b, "h")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_shared_windows"))
+    return wedge_pairs(win, max_key_deg=max_window_freq).select(
+        F.col("a").alias("doc_a"),
+        F.col("b").alias("doc_b"),
+        F.col("n").alias("n_shared_windows"),
     )
 
 
@@ -456,38 +482,18 @@ def containment_pairs(
 
     Same stop-shingle cutoff (df <= max_shingle_freq) as
     ngram_jaccard_pairs bounds the candidate join at web scale."""
-    sh = shingles(docs, n=n)
-    if max_shingle_freq is not None:
-        keep = sh.groupBy("shingle").count().filter(F.col("count") <= max_shingle_freq)
-        sh = sh.join(keep.select("shingle"), "shingle")
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").cast("long").alias("inter"))
-        .join(
-            sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sza"),
-            "doc_a",
-        )
-        .join(
-            sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "szb"),
-            "doc_b",
-        )
-    )
+    inter = _shingle_overlap(docs, n, max_shingle_freq)
     fwd = inter.select(
         F.col("doc_a").alias("doc_inner"),
         F.col("doc_b").alias("doc_outer"),
         "inter",
-        F.col("sza").cast("long").alias("sz_inner"),
+        F.col("sza").alias("sz_inner"),
     )
     rev = inter.select(
         F.col("doc_b").alias("doc_inner"),
         F.col("doc_a").alias("doc_outer"),
         "inter",
-        F.col("szb").cast("long").alias("sz_inner"),
+        F.col("szb").alias("sz_inner"),
     )
     return (
         fwd.unionByName(rev)

@@ -21,7 +21,9 @@ Scale notes (the target is ~10^12 pages / 10^13 edges):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -388,6 +390,72 @@ def adjacency(oriented: DataFrame) -> DataFrame:
         F.sort_array(F.collect_list("dst")).alias("adj"),
         F.count("*").alias("deg"),
     )
+
+
+# Keys with at least WEDGE_SALT_MIN_DEG items have their pairs spread
+# over WEDGE_SALT_SPLITS join tasks (wedge_pairs' hub lane).
+WEDGE_SALT_MIN_DEG = 4096
+WEDGE_SALT_SPLITS = 32
+
+
+def wedge_pairs(
+    inc: DataFrame,
+    max_key_deg: int | None = None,
+    key_weight: Callable[[Column], Column] | None = None,
+) -> DataFrame:
+    """Lazy DataFrame (a, b, n[, wsum]): every item pair a < b of the
+    DISTINCT (key, item) incidence `inc` that shares at least one key,
+    n = the number of shared keys — the open-wedge endpoint relation,
+    whether the wedge center is a vertex (butterflies, 4-cycles, common
+    neighbors) or a shingle (near-duplicate documents). A key of degree
+    d contributes C(d, 2) pairs, so the cost is Σ d², quadratic in the
+    largest key.
+
+    One per-key degree serves three purposes:
+    - `max_key_deg` drops keys of higher degree (the stop-shingle /
+      hub-center cap; None keeps every key);
+    - keys with a single item, which pair with nothing, never reach
+      the self-join;
+    - keys of degree >= WEDGE_SALT_MIN_DEG take a salted lane: one side
+      salted by hash(item), the other replicated over all
+      WEDGE_SALT_SPLITS salts, so each pair meets exactly once, at
+      salt(a), and a degree-d key costs d²/splits per task instead of
+      d² in one. The other keys self-join on the key alone and pay
+      nothing for it.
+
+    `key_weight` maps the degree column to a per-key weight; the pairs
+    then carry wsum = Σ weight over their shared keys.
+
+    When `inc` is cached hash-clustered by key (the motif, link
+    prediction and mirror-host callers build it with one exchange),
+    the degree, its join and the self-join reuse that clustering: the
+    only new exchanges are the pair aggregation's and, for hub keys
+    only, the salted join's."""
+    deg = inc.groupBy("key").agg(F.count(F.lit(1)).alias("deg"))
+    keep = F.col("deg") >= 2
+    if max_key_deg is not None:
+        keep = keep & (F.col("deg") <= max_key_deg)
+    t = inc.join(deg.filter(keep), "key")
+    a_cols = ["key", F.col("item").alias("a")]
+    aggs = [F.count(F.lit(1)).alias("n")]
+    if key_weight is not None:
+        a_cols.append(key_weight(F.col("deg")).alias("w"))
+        aggs.append(F.sum("w").alias("wsum"))
+    hub = F.col("deg") >= WEDGE_SALT_MIN_DEG
+    flat, hubs = t.filter(~hub), t.filter(hub)
+    salt = F.pmod(F.xxhash64("item"), F.lit(WEDGE_SALT_SPLITS)).cast("int")
+    salts = F.sequence(F.lit(0), F.lit(WEDGE_SALT_SPLITS - 1))
+    wedges = flat.select(*a_cols).join(
+        flat.select("key", F.col("item").alias("b")), "key"
+    ).unionByName(
+        hubs.select(*a_cols, salt.alias("salt"))
+        .join(
+            hubs.select("key", F.col("item").alias("b"), F.explode(salts).alias("salt")),
+            ["key", "salt"],
+        )
+        .drop("salt")
+    )
+    return wedges.filter(F.col("a") < F.col("b")).groupBy("a", "b").agg(*aggs)
 
 
 def common_neighbors(oriented: DataFrame, adj: DataFrame) -> DataFrame:

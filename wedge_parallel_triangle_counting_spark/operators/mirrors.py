@@ -27,7 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpointing import finish_with_caches
+from .checkpointing import finish_with_caches, loop_partitions
+from .graph import wedge_pairs
 
 
 def mirror_host_pairs(
@@ -42,39 +43,36 @@ def mirror_host_pairs(
     sharing >= min_shared distinct page fingerprints, host_a < host_b,
     jaccard in exact integer parts-per-million.
 
-    Plan: distinct (host, fp) -> per-host set sizes (hash agg) and the
-    inverted index with the frequency cap (one window-free agg +
-    semi-join) -> fp self-join -> pair agg -> two broadcast-sized size
-    joins. The only edge-scale shuffles key on fp; pair and size
-    relations are #hosts-scale.
+    Plan: distinct (host, fp) clustered by fp -> per-host set sizes
+    (hash agg) and graph.wedge_pairs over the fp -> host inverted index
+    with the frequency cap -> two broadcast-sized size joins. The only
+    edge-scale shuffle keys on fp; pair and size relations are
+    #hosts-scale.
     """
-    # `sets` feeds four consumers (sizes, the frequency cap, both join
-    # sides) — persist it or every consumer re-scans the corpus and
-    # recomputes the distinct (the plan audit caught exactly that)
+    # `sets` feeds the sizes and wedge_pairs' degree and self-join —
+    # persist it or every consumer re-scans the corpus and recomputes
+    # the distinct (the plan audit caught exactly that)
     sets = (
         host_fp.select(
             F.col(host_col).cast("string").alias("host"),
             F.col(fp_col).cast("string").alias("fp"),
         )
         .filter(F.col("host").isNotNull() & F.col("fp").isNotNull())
-        .distinct()
+        .repartition(loop_partitions(host_fp.sparkSession), "fp")
+        .dropDuplicates(["host", "fp"])
         .persist()
     )
     sizes = sets.groupBy("host").agg(F.count(F.lit(1)).alias("n"))
-    common = (
-        sets.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("n_hosts"))
-        .filter(F.col("n_hosts") > max_hosts_per_fp)
-        .select("fp")
-    )
-    indexed = sets.join(common, "fp", "left_anti")
-    a = indexed.select(F.col("host").alias("host_a"), "fp")
-    b = indexed.select(F.col("host").alias("host_b"), "fp")
     pairs = (
-        a.join(b, "fp")
-        .filter(F.col("host_a") < F.col("host_b"))
-        .groupBy("host_a", "host_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
+        wedge_pairs(
+            sets.select(F.col("fp").alias("key"), F.col("host").alias("item")),
+            max_key_deg=max_hosts_per_fp,
+        )
+        .select(
+            F.col("a").alias("host_a"),
+            F.col("b").alias("host_b"),
+            F.col("n").alias("shared"),
+        )
         .filter(F.col("shared") >= min_shared)
     )
     sa = sizes.select(F.col("host").alias("host_a"), F.col("n").alias("n_a"))

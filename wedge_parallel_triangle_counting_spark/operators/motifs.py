@@ -1,5 +1,5 @@
 """Small-motif statistics beyond triangles: butterflies (4-cycles /
-rectangles) and directed reciprocity.
+rectangles), tetrahedra, bipartite projection and directed reciprocity.
 
 Butterflies are the wedge primitive's other classic payoff (the
 reference engine is organized entirely around wedges, tc.cu's
@@ -8,20 +8,21 @@ BOTH endpoints. Every 4-cycle owns exactly two diagonal pairs, so
 
     four_cycles = (Σ_{u<v} C(codeg(u,v), 2)) / 2
 
-where codeg(u, v) = number of common neighbors. The plan enumerates
-each wedge once as an edge-edge self-join keyed by the CENTER vertex
-(the same join shape as the distributed wedge lane,
-operators/triangles.py), hash-aggregates per endpoint pair with
-map-side combine, and folds the closed form — no driver loops, no
-Python.
+where codeg(u, v) = number of common neighbors. The codeg relation is
+`graph.wedge_pairs` over the (center, endpoint) incidence — the one
+open-wedge pair aggregation shared with link prediction and shingle
+dedup — and the closed form folds it in one global aggregation: no
+driver loops, no Python. quadrilateral_count is the same computation
+under its own column names, and bipartite_projection is wedge_pairs
+over a bipartite relation.
 
 At 100 TB the wedge relation is the scale risk (Σ d(d-1)/2 explodes
-on hubs). The standard mitigations both compose with this plan:
-degree-capped exact counting per stratum, or the sampled estimator
-(operators/approx.py's wedge-sampling shape applies to butterflies
-unchanged). The exact operator here keeps the full join because its
-output feeds the ORACLE-CHECKED count; callers at web scale should
-cap or sample first.
+on hubs). wedge_pairs salts hub centers across tasks; the other
+standard mitigations compose with this plan: degree-capped exact
+counting per stratum, or the sampled estimator (operators/approx.py's
+wedge-sampling shape applies to butterflies unchanged). The exact
+operators here keep every center because their output feeds the
+ORACLE-CHECKED count; callers at web scale should cap or sample first.
 """
 
 from __future__ import annotations
@@ -30,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .checkpointing import checkpoint, finish_with_caches, loop_partitions
-from .graph import normalize_edges
+from .graph import build_sym_clustered, normalize_edges, wedge_pairs
 from .truss import canonical_edges, enumerate_triangles
 
 
@@ -42,17 +43,11 @@ def butterfly_count(edges: DataFrame, caches: list | None = None) -> DataFrame:
     four_cycles      = Σ_{u<v} C(codeg, 2) / 2  (each 4-cycle once;
                        the sum counts every cycle's two diagonals)
     """
-    npart = loop_partitions(edges.sparkSession)
-    und = canonical_edges(edges, npart).persist()  # read 4x below
-    # symmetric incidence (center, endpoint) from one cached frame;
-    # self-join on center enumerates each unordered wedge once
-    inc = und.select(F.col("src").alias("c"), F.col("dst").alias("e")).unionByName(
-        und.select(F.col("dst").alias("c"), F.col("src").alias("e"))
-    )
-    left = inc.select("c", F.col("e").alias("u"))
-    right = inc.select("c", F.col("e").alias("v"))
-    wedges = left.join(right, "c").filter(F.col("u") < F.col("v"))
-    codeg = wedges.groupBy("u", "v").agg(F.count(F.lit(1)).alias("w"))
+    # symmetric (center, endpoint) incidence, cached and clustered on
+    # the center so wedge_pairs adds no exchange before its pair agg
+    sym = build_sym_clustered(edges, loop_partitions(edges.sparkSession)).persist()
+    inc = sym.select(F.col("src").alias("key"), F.col("dst").alias("item"))
+    codeg = wedge_pairs(inc).withColumnRenamed("n", "w")
     out = codeg.agg(
         # coalesce: a wedge-free graph (e.g. a perfect matching) has
         # an EMPTY codeg relation and sum() would be NULL
@@ -68,7 +63,7 @@ def butterfly_count(edges: DataFrame, caches: list | None = None) -> DataFrame:
         # exact past 2^53 where a double division would not
         F.expr("diag DIV 2").alias("four_cycles"),
     )
-    return finish_with_caches(out, [und], caches)
+    return finish_with_caches(out, [sym], caches)
 
 
 def tetrahedron_count(edges: DataFrame, caches: list | None = None) -> DataFrame:
@@ -117,27 +112,23 @@ def bipartite_projection(
     This is the purest wedge-parallel workload (the reference's name):
     every left entity of degree d contributes C(d, 2) wedges, and the
     projection IS the wedge-endpoint aggregation. Plan: distinct
-    incidence → self-join keyed by the left entity → (u < v) pair agg
-    with map-side combine → TakeOrderedAndProject.
+    incidence → graph.wedge_pairs keyed by the left entity (hub
+    entities salted) → TakeOrderedAndProject.
 
     At web scale the d² blowup on hub left-entities is the risk —
     `min_weight` prunes the long tail AFTER aggregation (exactness
     kept), and the standard cap/sample mitigations compose upstream
     (the same story as butterfly_count)."""
+    npart = loop_partitions(pairs.sparkSession)
     inc = (
-        pairs.select(F.col("left").alias("l"), F.col("right").alias("r"))
-        .dropDuplicates(["l", "r"])
+        pairs.select(F.col("left").alias("key"), F.col("right").alias("item"))
+        .repartition(npart, "key")  # the dedup and wedge_pairs reuse it
+        .dropDuplicates(["key", "item"])
         .persist()
     )
-    a = inc.select("l", F.col("r").alias("u"))
-    b = inc.select("l", F.col("r").alias("v"))
-    proj = (
-        a.join(b, "l")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("weight"))
-        .filter(F.col("weight") >= min_weight)
-    )
+    proj = wedge_pairs(inc).select(
+        F.col("a").alias("u"), F.col("b").alias("v"), F.col("n").alias("weight")
+    ).filter(F.col("weight") >= min_weight)
     return finish_with_caches(
         proj.orderBy(F.desc("weight"), "u", "v").limit(k), [inc], caches
     )
@@ -292,40 +283,23 @@ def hub_ego_stats(edges: DataFrame, top_h: int = 10) -> DataFrame:
 def quadrilateral_count(edges: DataFrame) -> DataFrame:
     """Exact global 4-cycle (quadrilateral) count, not necessarily
     induced — the square member of the motif family (triangles /
-    tetrahedra / butterflies). Uses the diagonal identity: a pair of
-    common neighbors {x, y} of an endpoint pair (u, w) closes the
-    4-cycle u-x-w-y, and every 4-cycle is counted once per diagonal:
+    tetrahedra / butterflies). A pair of common neighbors {x, y} of an
+    endpoint pair (u, w) closes the 4-cycle u-x-w-y, and every 4-cycle
+    is counted once per diagonal:
 
         quads = Σ_{u<w} C(cn(u, w), 2) / 2   (the sum is always even)
 
-    One row [endpoint_pairs, quads].
+    One row [endpoint_pairs, quads]: butterfly_count's
+    coneighbor_pairs and four_cycles, the same single computation
+    under this query's column names.
 
-    Plan: wedge self-join of the incidence relation (center v joins
-    its neighbor pairs), one groupBy on the endpoint pair, one global
-    agg — all JVM. The wedge relation is Σ_v C(d_v, 2) rows, the same
-    blow-up linkpred bounds with hub caps; for an exact global count
-    the Chiba-Nishizeki alternative (intersect adjacencies in
-    degeneracy order, O(α·m) work) trades this shuffle for the
-    triangles_edge-style array_intersect lane — at 100 TB run this
-    after a max-degree cap or on the hub-split adjacency, exactly as
-    the wedge triangle lane splits hubs."""
-    npart = loop_partitions(edges.sparkSession)
-    und = canonical_edges(edges, npart).persist()
-    inc = und.select(F.col("src").alias("v"), F.col("dst").alias("nbr")).unionByName(
-        und.select(F.col("dst").alias("v"), F.col("src").alias("nbr"))
+    For an exact global count at 100 TB, the Chiba-Nishizeki
+    alternative (intersect adjacencies in degeneracy order, O(α·m)
+    work) trades the wedge shuffle for the triangles_edge-style
+    array_intersect lane."""
+    own: list = []
+    out = butterfly_count(edges, caches=own).select(
+        F.col("coneighbor_pairs").alias("endpoint_pairs"),
+        F.col("four_cycles").alias("quads"),
     )
-    a, b = inc.alias("a"), inc.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.v") == F.col("b.v")) & (F.col("a.nbr") < F.col("b.nbr")))
-        .groupBy(F.col("a.nbr").alias("u"), F.col("b.nbr").alias("w"))
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    out = pairs.agg(
-        F.count(F.lit(1)).cast("long").alias("endpoint_pairs"),
-        F.expr("coalesce(sum(c * (c - 1) DIV 2), 0) DIV 2")
-        .cast("long")
-        .alias("quads"),
-    )
-    res = checkpoint(out, eager=True)
-    und.unpersist()
-    return res
+    return finish_with_caches(out, own)

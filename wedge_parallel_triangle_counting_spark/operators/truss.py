@@ -24,8 +24,9 @@ Physical plan, one support pass (all JVM expressions):
   3. each edge (a, b) joined with adj+(a) and adj+(b); every
      w ∈ adj+(a) ∩ adj+(b) is one triangle a < b < w, found exactly
      once (the tc_edge strategy layout, experiments/tc_edge.cu);
-  4. explode the 3 member edges per triangle and hash-aggregate —
-     map-side partial combine keeps the shuffle ~edge-sized.
+  4. explode the 3 member edges per triangle in the same pass and
+     hash-aggregate — map-side partial combine keeps the shuffle
+     ~edge-sized.
 
 The k-truss peel repeats support → filter(support >= k-2) until the
 edge count is stable, through the same CheckpointedLoop harness as
@@ -89,12 +90,22 @@ def enumerate_triangles(und: DataFrame) -> DataFrame:
 
 def _support(und: DataFrame) -> DataFrame:
     """(src, dst, support) for every canonical edge; support = number
-    of triangles containing the edge (0 included via left join)."""
-    tri = enumerate_triangles(und)
+    of triangles containing the edge (0 included via left join). One
+    Generate emits each triangle's 3 member edges (a, b), (a, c),
+    (b, c) straight from the edge's common-neighbor list, so the
+    intersection runs once per edge (inline_outer: see
+    enumerate_triangles). Built from array_repeat/arrays_zip rather
+    than a `transform` lambda, which Spark evaluates without codegen."""
+    n = F.size("common")
+    a, b = F.array_repeat(F.col("src"), n), F.array_repeat(F.col("dst"), n)
+
+    def edges(x, y):
+        return F.arrays_zip(x, y).cast("array<struct<src:bigint,dst:bigint>>")
+
     member_edges = (
-        tri.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionByName(tri.select(F.col("a").alias("src"), F.col("c").alias("dst")))
-        .unionByName(tri.select(F.col("b").alias("src"), F.col("c").alias("dst")))
+        common_neighbors(und, adjacency(und))
+        .select(F.inline_outer(F.concat(edges(a, b), edges(a, "common"), edges(b, "common"))))
+        .filter(F.col("src").isNotNull())
     )
     sup = member_edges.groupBy("src", "dst").agg(
         F.count(F.lit(1)).alias("support")
