@@ -14,12 +14,23 @@ def spark():
 
 @pytest.fixture
 def local_lane(monkeypatch):
-    """Put pagerank() on its driver-local lane. The test frames are
-    built from Python rows, which have no size estimate and so take the
-    Spark lane; a zero estimate fits under any cap."""
+    """Put pagerank() on its driver-local lane, and let triangle_count's
+    size gate take its collect-first path. The test frames are built
+    from Python rows, which have no size estimate and so take the Spark
+    lane (the distributed pipeline for triangle_count); a zero estimate
+    fits under any cap."""
     from wedge_parallel_triangle_counting_spark.operators import checkpointing
 
     monkeypatch.setattr(checkpointing, "plan_size_bytes", lambda df: 0)
+
+
+@pytest.fixture
+def spark_count(monkeypatch):
+    """Make triangle_count's collect-first path count every graph that
+    has a wedge in its Spark job instead of on the driver."""
+    from wedge_parallel_triangle_counting_spark.operators import checkpointing
+
+    monkeypatch.setattr(checkpointing, "LOCAL_LANE_MAX_WEDGES", 0)
 
 
 def edges_df(spark, pairs):

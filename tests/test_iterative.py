@@ -667,16 +667,46 @@ def test_size_gate_jobs(spark, monkeypatch):
 
 
 def test_pagerank_gray_zone_takes_spark_lane_without_a_job(spark, monkeypatch, caplog):
-    """An edge table whose estimate is over the lane cap (here 2 B/row,
-    inside the 64x gray zone where the triangle gate would count) takes
-    the Spark lane on the estimate: pagerank never counts its input to
-    choose, so the verdict's basis is the estimate."""
+    """An edge table whose estimate is over the lane's bound (here 4
+    B/row of the cap, over the 3 B/row floor and inside the 64x gray
+    zone where the triangle gate would count) takes the Spark lane on
+    the estimate: pagerank never counts its input to choose, so the
+    verdict's basis is the estimate."""
     caplog.set_level(logging.INFO, logger=CP.__name__)
     pairs = _random_directed(4, 30, 120)
-    monkeypatch.setattr(CP, "plan_size_bytes", lambda df: 1000)
+    monkeypatch.setattr(CP, "plan_size_bytes", lambda df: 2000)
     monkeypatch.setattr(CP, "LOCAL_LANE_MAX_EDGES", 500)
     got = {r.v: r.pr for r in pagerank(edges_df(spark, pairs), num_iters=5).collect()}
-    assert _lanes(caplog) == ["pagerank: spark lane (estimate=1000, cap 500 rows)"]
+    assert _lanes(caplog) == ["pagerank: spark lane (estimate=2000, cap 500 rows)"]
+    want = numpy_pagerank(pairs, 5)
+    assert max(abs(got[v] - want[v]) for v in want) < 1e-12
+
+
+def test_pagerank_entry_trusts_the_bytes_per_row_floor(spark, monkeypatch, caplog):
+    """The lane admits an estimate up to 3 B/row of its cap (parquet
+    int pairs measure >= 3.7 B/row): an estimate of 2.5 B/row enters
+    without a job and, its rows under the cap, runs on the driver."""
+    caplog.set_level(logging.INFO, logger=CP.__name__)
+    pairs = _random_directed(6, 30, 120)
+    monkeypatch.setattr(CP, "LOCAL_LANE_MAX_EDGES", 200)
+    monkeypatch.setattr(CP, "plan_size_bytes", lambda df: 500)
+    got = {r.v: r.pr for r in pagerank(edges_df(spark, pairs), num_iters=5).collect()}
+    assert _lanes(caplog) == ["pagerank: local lane (estimate=500, cap 200 rows)"]
+    want = numpy_pagerank(pairs, 5)
+    assert got.keys() == want.keys()
+    assert max(abs(got[v] - want[v]) for v in want) < 1e-12
+
+
+def test_pagerank_entry_at_the_floor_aborts_over_the_cap(spark, monkeypatch, caplog):
+    """An estimate at exactly 3 B/row of the cap enters, but a denser
+    encoding hides more rows than the cap: the collected-row re-check
+    aborts to the Spark lane, which gives the right ranks."""
+    caplog.set_level(logging.INFO, logger=CP.__name__)
+    pairs = _random_directed(7, 30, 120)
+    monkeypatch.setattr(CP, "LOCAL_LANE_MAX_EDGES", 100)
+    monkeypatch.setattr(CP, "plan_size_bytes", lambda df: 300)
+    got = {r.v: r.pr for r in pagerank(edges_df(spark, pairs), num_iters=5).collect()}
+    assert _lanes(caplog) == ["pagerank: spark lane (collected=120, cap 100 rows)"]
     want = numpy_pagerank(pairs, 5)
     assert max(abs(got[v] - want[v]) for v in want) < 1e-12
 

@@ -4,16 +4,19 @@ invariance, and random-graph differential tests."""
 
 from __future__ import annotations
 
+import logging
 import random
 
 import pytest
 
+import wedge_parallel_triangle_counting_spark.operators.triangles as T
+from wedge_parallel_triangle_counting_spark.operators import checkpointing as CP
 from wedge_parallel_triangle_counting_spark.operators.triangles import (
     triangle_count,
     wedge_stats,
 )
 
-from .conftest import GOLDEN_TRIANGLES, edges_df
+from .conftest import GOLDEN_TRIANGLES, K4, edges_df
 
 STRATEGIES = ["wedge", "arrow", "vertex", "edge", "join"]
 
@@ -207,18 +210,191 @@ def test_sampled_empty_graph(spark):
     assert (row.estimate, row.closed, row.sampled, row.total_wedges) == (0, 0, 0, 0)
 
 
-def test_fused_matches_distributed_on_zipf_hubs(spark):
-    # the collect-fused path (driver-derived stats/hubs/probe) must
-    # agree with the fully distributed closure on a skewed graph where
-    # the hub lane is active
+def _zipf_hub_graph():
     rng = random.Random(41)
     pairs = [(0, rng.randrange(1, 80)) for _ in range(400)]  # hub 0
-    pairs += _random_graph(43, 80, 300)
+    return pairs + _random_graph(43, 80, 300)
+
+
+def _lanes(caplog) -> list[str]:
+    """The lane verdicts triangle_count logged, oldest first."""
+    return [
+        r.getMessage()
+        for r in caplog.records
+        if r.name == CP.__name__ and r.getMessage().startswith("triangle_count: ")
+    ]
+
+
+def test_fused_matches_distributed_on_zipf_hubs(spark, local_lane, spark_count, caplog):
+    # the collect-first path's Spark count (driver-derived stats/hubs/
+    # probe, driver-built hub chunks) must agree with the fully
+    # distributed closure on a skewed graph where the hub lane is active
+    caplog.set_level(logging.INFO, logger=CP.__name__)
+    pairs = _zipf_hub_graph()
     expected = _brute_triangles(pairs)
     df = edges_df(spark, pairs)
     fused = triangle_count(df, split_budget=16, hub_k=16).collect()[0][0]
+    assert _lanes(caplog)[-1].startswith("triangle_count: spark lane ")
     dist = triangle_count(df, closure="join", split_budget=16).collect()[0][0]
     assert fused == dist == expected
+
+
+PARITY_GRAPHS = {
+    "zipf_hubs": _zipf_hub_graph(),
+    "k4": K4,
+    "random": _random_graph(53, 70, 500),
+}
+
+
+@pytest.mark.parametrize("path", ["local", "spark"])
+@pytest.mark.parametrize("graph", sorted(PARITY_GRAPHS))
+def test_count_paths_match_bruteforce(spark, local_lane, monkeypatch, caplog, graph, path):
+    """Both count paths of the collect-first lane — the driver threads
+    and the Spark count job — give the brute-force count, with hub_k 0
+    and 16 (the Spark count's hub bitmap off and on)."""
+    caplog.set_level(logging.INFO, logger=CP.__name__)
+    if path == "spark":
+        monkeypatch.setattr(CP, "LOCAL_LANE_MAX_WEDGES", 0)
+    pairs = PARITY_GRAPHS[graph]
+    df = edges_df(spark, pairs)
+    for hub_k in (0, 16):
+        got = triangle_count(df, hub_k=hub_k, split_budget=16).collect()[0][0]
+        assert got == _brute_triangles(pairs), (graph, path, hub_k)
+    lanes = _lanes(caplog)
+    assert len(lanes) == 2 and all(f": {path} lane " in ln for ln in lanes), lanes
+
+
+def test_local_count_splits_heavy_rows(spark, local_lane, monkeypatch):
+    """A row with more pairs than a block is cut into i-range chunks
+    that share the adjacency array: K12 plus a star on vertex 0 (its
+    oriented rows hold up to 11 vertices, 55 pairs) with a 10-pair
+    block still counts exactly, through rows cut into chunks."""
+    from wedge_parallel_triangle_counting_spark.functions import wedge as wk
+
+    monkeypatch.setattr(wk, "DEFAULT_BLOCK_PAIRS", 10)
+    seen = []
+    parts = T._wedge_parts
+
+    def recording_parts(*args):
+        seen.append(parts(*args))
+        return seen[-1]
+
+    monkeypatch.setattr(T, "_wedge_parts", recording_parts)
+    pairs = [(a, b) for a in range(12) for b in range(a + 1, 12)]
+    pairs += [(0, 100 + i) for i in range(30)]
+    got = triangle_count(edges_df(spark, pairs), hub_k=0).collect()[0][0]
+    assert got == _brute_triangles(pairs) == 220
+    chunks = [row for part in seen[-1] for row in zip(*part)]
+    assert len(chunks) > len({int(st) for st, _, _, _ in chunks})  # rows were cut
+
+
+def test_wedge_parts_cover_every_pair_once():
+    """`_wedge_parts` keeps every pair of every row exactly once,
+    balances the parts by pair count and bounds every chunk that is
+    wider than one first index by the share."""
+    import numpy as np
+
+    from wedge_parallel_triangle_counting_spark.functions import wedge as wk
+
+    rng = np.random.default_rng(5)
+    degs = rng.zipf(1.6, size=300).clip(max=400).astype(np.int64)
+    starts = np.cumsum(degs) - degs
+    total = int((degs * (degs - 1) // 2).sum())
+    for parts_n, block in ((1, 10**9), (4, 10**9), (4, 50), (7, 3)):
+        parts = T._wedge_parts(starts, degs, parts_n, block)
+        assert 1 <= len(parts) <= parts_n
+        share = max(1, min(block, -(-total // parts_n)))
+        pairs = []
+        for st, d, lo, hi in parts:
+            n = wk.pair_count(d, lo, hi)
+            wide = hi - lo > 1
+            assert (n[wide] <= share).all()
+            pairs.append(int(n.sum()))
+            for s0, d0, l0, h0 in zip(st, d, lo, hi):
+                assert 0 <= l0 < h0 <= d0 - 1
+        assert sum(pairs) == total
+        # every pair of a row, in order: the chunks of a row tile [0, d-1)
+        rows = {}
+        for st, d, lo, hi in parts:
+            for s0, d0, l0, h0 in zip(st, d, lo, hi):
+                rows.setdefault(int(s0), []).append((int(l0), int(h0), int(d0)))
+        for s0, spans in rows.items():
+            spans.sort()
+            assert spans[0][0] == 0 and spans[-1][1] == spans[-1][2] - 1
+            assert all(a[1] == b[0] for a, b in zip(spans, spans[1:]))
+
+
+def _python_worker_metrics(spark, run) -> tuple[int, list[str]]:
+    """Run `run()` and return (the Spark jobs it ran, the plan nodes of
+    its SQL executions that send data to Python workers)."""
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def newest():
+        n = store.executionsCount()
+        return store.executionsList(max(0, n - 20), 20)
+
+    seen = newest()
+    last = max((seen.apply(i).executionId() for i in range(seen.size())), default=-1)
+    sc.setJobGroup("py_bytes", "py_bytes")
+    try:
+        run()
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("py_bytes"))
+    execs = newest()
+    py_nodes = []
+    for i in range(execs.size()):
+        ex = execs.apply(i)
+        if ex.executionId() <= last:
+            continue
+        metrics = ex.metrics()
+        for j in range(metrics.size()):
+            if metrics.apply(j).name() == "data sent to Python workers":
+                py_nodes.append(ex.description())
+    return jobs, py_nodes
+
+
+def test_local_lane_runs_one_job_and_no_python_worker(spark, local_lane):
+    """The driver count's only Spark job is the Arrow collect: no
+    shuffle, no count job and no Python worker. The Spark count path on
+    the same input sends its rows to Python workers."""
+    df = edges_df(spark, _random_graph(59, 60, 400))
+    out = []
+    jobs, py_nodes = _python_worker_metrics(
+        spark, lambda: out.append(triangle_count(df).collect()[0][0])
+    )
+    assert (jobs, py_nodes) == (1, [])
+    assert out == [_brute_triangles(_random_graph(59, 60, 400))]
+
+
+def test_spark_count_path_uses_python_workers(spark, local_lane, spark_count):
+    """The probe of the job-count test can see Python workers: the Spark
+    count path plans one (the count UDF)."""
+    df = edges_df(spark, _random_graph(59, 60, 400))
+    jobs, py_nodes = _python_worker_metrics(
+        spark, lambda: triangle_count(df).collect()
+    )
+    assert jobs > 1 and py_nodes
+
+
+@pytest.mark.parametrize("closure", ["auto", "broadcast"])
+@pytest.mark.parametrize("strategy", ["wedge", "vertex", "arrow"])
+def test_negative_ids_do_not_collide_in_edge_keys(spark, strategy, closure):
+    """With key_base = max_id + 1 = 4, the keys of (-4, 3) and (-3, -1)
+    were both -13, so this triangle-free graph counted 3 triangles on
+    the vertex strategy and on the wedge strategy with hub_k=0. Negative
+    ids now take the rank-space relabel."""
+    pairs = [(0, -4), (0, 3), (-4, 1), (-4, 2), (3, 1), (3, 2), (-3, -1)]
+    df = edges_df(spark, pairs)
+    for hub_k in (0, 8192):
+        got = triangle_count(
+            df, strategy=strategy, closure=closure, hub_k=hub_k
+        ).collect()[0][0]
+        assert got == 0, (strategy, closure, hub_k)
+    # a real triangle among negative ids still counts
+    tri = edges_df(spark, pairs + [(-3, -4), (-1, -4)])
+    assert triangle_count(tri, strategy=strategy, closure=closure).collect()[0][0] == 1
 
 
 def test_fused_id_overflow_falls_back_to_relabel(spark):
@@ -261,19 +437,21 @@ def test_hub_routing_never_collects_id_lists():
     assert ".isin(" not in src
 
 
-def test_wedge_stats_gate_row_overflow_falls_back(spark, monkeypatch):
+def test_wedge_stats_gate_row_overflow_falls_back(spark, monkeypatch, caplog):
     """r6 fused gate: an optimistic statistics-gated entry whose ACTUAL
     canonical edge count exceeds the broadcast budget must abort to the
     distributed lane (fast prep + semi-join closure) and still count
     exactly. BROADCAST_MAX_EDGES is shrunk below K4's 6 canonical edges
-    so the tiny fixture takes the overflow path."""
-    import wedge_parallel_triangle_counting_spark.operators.triangles as T
-
-    from .conftest import K4
-
+    and the size estimate spoofed to 1 byte, so the tiny fixture enters
+    on the estimate and takes the overflow path."""
+    caplog.set_level(logging.INFO, logger=CP.__name__)
     monkeypatch.setattr(T, "BROADCAST_MAX_EDGES", 4)
+    monkeypatch.setattr(CP, "plan_size_bytes", lambda df: 1)
     out = T.triangle_count(edges_df(spark, K4), strategy="wedge").collect()[0][0]
     assert out == 4
+    assert _lanes(caplog) == [
+        "triangle_count: distributed lane (estimate=1, rows=6, cap 4 rows)"
+    ]
 
 
 def test_hub_topk_and_bitmap_dense_sparse_agree():

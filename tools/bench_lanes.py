@@ -1,16 +1,24 @@
-"""PageRank lane crossover: the driver-local numpy lane against the Spark
-lane on R-MAT edge tables (edge factor 16) read back from parquet — the
-measurement behind `checkpointing.LOCAL_LANE_MAX_EDGES`.
+"""Driver-local lane crossover: the numpy lane against the Spark lane of
+one operator on R-MAT edge tables (edge factor 16, seed 1) read back
+from parquet — the measurement behind `checkpointing.LOCAL_LANE_MAX_EDGES`
+(--op pagerank) and `checkpointing.LOCAL_LANE_MAX_WEDGES` (--op
+triangles).
+
+- pagerank: 10-round `pagerank(e).toPandas()`; the local lane runs the
+  rounds in numpy, the Spark lane the DataFrame loop.
+- triangles: `triangle_count(e).collect()`; both lanes collect the edges
+  once, then the local lane counts on the driver threads and the Spark
+  lane in its one count job.
 
 Each run is a fresh child process: a session at the given master, one
-untimed warm-up PageRank on the scale-14 table, then one timed
-10-round `pagerank(e).toPandas()` with the lane pinned. Lanes alternate
-order from rep to rep. Prints one RESULT JSON line per run (wall time,
-the driver's Python peak RSS and its JVM's peak RSS) and a median
-table at the end.
+untimed warm-up of the operator on the scale-14 table, then one timed
+run with the lane pinned. Lanes alternate order from rep to rep. Prints
+one RESULT JSON line per run (wall time, the driver's Python peak RSS,
+its JVM's peak RSS and the operator's lane verdict) and a median table
+at the end.
 
-Usage: python tools/bench_pagerank_lanes.py WORK_DIR [--reps N]
-           [--masters local[4],local[32]] SCALE [SCALE ...]
+Usage: python tools/bench_lanes.py WORK_DIR [--op pagerank|triangles]
+           [--reps N] [--masters local[4],local[32]] SCALE [SCALE ...]
 WORK_DIR holds the generated parquet (made once, reused).
 """
 
@@ -19,6 +27,7 @@ from __future__ import annotations
 import argparse
 import collections
 import json
+import logging
 import os
 import resource
 import statistics
@@ -59,31 +68,57 @@ def peak_rss_mb(pid: int) -> float:
     return float("nan")
 
 
-def child(work: str, scale: int, master: str, lane: str) -> None:
+def pin(op: str, lane: str) -> None:
+    """Pin `op` to `lane` through the checkpointing module's gates."""
     from wedge_parallel_triangle_counting_spark.operators import checkpointing as CP
-    from wedge_parallel_triangle_counting_spark.operators.pagerank import pagerank
+
+    if op == "pagerank":
+        if lane == "local":
+            CP.plan_size_bytes = lambda df: 0
+            CP.LOCAL_LANE_MAX_EDGES = 1 << 40
+        else:
+            CP.LOCAL_LANE_MAX_EDGES = 0
+    else:
+        CP.plan_size_bytes = lambda df: 0  # both lanes collect first
+        CP.LOCAL_LANE_MAX_WEDGES = 1 << 62 if lane == "local" else 0
+
+
+def run_op(op: str, e):
+    if op == "pagerank":
+        from wedge_parallel_triangle_counting_spark.operators.pagerank import pagerank
+
+        return len(pagerank(e, num_iters=ITERS).toPandas())
+    from wedge_parallel_triangle_counting_spark.operators.triangles import triangle_count
+
+    return triangle_count(e).collect()[0][0]
+
+
+def child(work: str, op: str, scale: int, master: str, lane: str) -> None:
+    from wedge_parallel_triangle_counting_spark.operators import checkpointing as CP
     from wedge_parallel_triangle_counting_spark.session import get_spark
 
-    if lane == "local":
-        CP.plan_size_bytes = lambda df: 0
-        CP.LOCAL_LANE_MAX_EDGES = 1 << 40
-    else:
-        CP.LOCAL_LANE_MAX_EDGES = 0
+    verdicts: list[str] = []
+    handler = logging.Handler()
+    handler.emit = lambda r: verdicts.append(r.getMessage())
+    logging.getLogger(CP.__name__).addHandler(handler)
+    logging.getLogger(CP.__name__).setLevel(logging.INFO)
+    pin(op, lane)
     spark = get_spark(app_name="lanes", master=master,
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
-    pagerank(spark.read.parquet(table(work, WARM_SCALE)), num_iters=ITERS).toPandas()
+    run_op(op, spark.read.parquet(table(work, WARM_SCALE)))
     e = spark.read.parquet(table(work, scale))
     rows = e.count()
     t0 = time.perf_counter()
-    out = pagerank(e, num_iters=ITERS).toPandas()
+    out = run_op(op, e)
     wall = time.perf_counter() - t0
     jvm = spark._jvm.java.lang.ProcessHandle.current().pid()
     print("RESULT " + json.dumps({
-        "scale": scale, "rows": rows, "master": master, "lane": lane,
-        "wall_s": round(wall, 3), "vertices": len(out),
+        "op": op, "scale": scale, "rows": rows, "master": master, "lane": lane,
+        "wall_s": round(wall, 3), "result": out,
         "py_peak_mb": round(resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024),
         "jvm_peak_mb": round(peak_rss_mb(jvm)),
+        "verdict": verdicts[-1] if verdicts else None,
     }), flush=True)
     spark.stop()
 
@@ -92,12 +127,13 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("work")
     ap.add_argument("scales", nargs="+", type=int)
+    ap.add_argument("--op", choices=("pagerank", "triangles"), default="pagerank")
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--masters", default="local[4],local[32]")
     ap.add_argument("--child", nargs=2, metavar=("MASTER", "LANE"))
     a = ap.parse_args()
     if a.child:
-        child(a.work, a.scales[0], *a.child)
+        child(a.work, a.op, a.scales[0], *a.child)
         return
     os.makedirs(a.work, exist_ok=True)
     generate(a.work, sorted({WARM_SCALE, *a.scales}))
@@ -107,7 +143,8 @@ def main() -> None:
             for rep in range(a.reps):
                 for lane in ("local", "spark") if rep % 2 == 0 else ("spark", "local"):
                     p = subprocess.run(
-                        [sys.executable, __file__, a.work, str(scale), "--child", master, lane],
+                        [sys.executable, __file__, a.work, str(scale), "--op", a.op,
+                         "--child", master, lane],
                         capture_output=True, text=True,
                     )
                     got = [ln for ln in p.stdout.splitlines() if ln.startswith("RESULT ")]
@@ -116,7 +153,7 @@ def main() -> None:
                     print(got[-1], flush=True)
                     rec = json.loads(got[-1][7:])
                     walls[(rec["rows"], master, lane)].append(rec["wall_s"])
-    print("| edges | master | local s | spark s |\n|---|---|---|---|")
+    print(f"| {a.op} edges | master | local s | spark s |\n|---|---|---|---|")
     for rows, master in sorted({(r, m) for r, m, _ in walls}):
         med = {lane: statistics.median(walls[(rows, master, lane)]) for lane in ("local", "spark")}
         print(f"| {rows} | {master} | {med['local']:.2f} | {med['spark']:.2f} |")

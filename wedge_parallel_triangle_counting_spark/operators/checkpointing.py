@@ -62,15 +62,19 @@ numpy on the driver instead, through the same driver:
         loop.step_local(state, it)
 
 `local_input` takes the lane when the size estimate alone places the
-input under `LOCAL_LANE_MAX_EDGES` rows (no job either way), collects
-it once through Arrow, and falls back to the Spark lane when the
-collected rows are over the cap or hold a null. `step_local` writes
-the same `<name>.iterNNNNN.parquet` snapshot `step` writes (with
-pyarrow) and swaps the same manifest, so a run snapshotted by one lane
-resumes in the other. The verdict and the number behind it (the size
-estimate, or the collected rows on an abort) go into every round's
-`history` record, the manifest and one INFO log event. Operators on
-the lane: pagerank.
+input under `LOCAL_LANE_MAX_EDGES` rows at the measured floor of
+`_MIN_BYTES_PER_ROW` (no job either way), collects it once through
+Arrow, and falls back to the Spark lane when the collected rows are
+over the cap or hold a null. `step_local` writes the same
+`<name>.iterNNNNN.parquet` snapshot `step` writes (with pyarrow) and
+swaps the same manifest, so a run snapshotted by one lane resumes in
+the other. The verdict and the number behind it (the size estimate, or
+the collected rows on an abort) go into every round's `history`
+record, the manifest and one INFO log event (`lane_event`). Operators
+on the lane: pagerank, and triangle_count — a one-shot count, not a
+loop: it collects its edges behind `size_gate`, counts on the driver
+up to `LOCAL_LANE_MAX_WEDGES` oriented wedges and logs its verdict
+through the same `lane_event`.
 """
 
 from __future__ import annotations
@@ -310,7 +314,7 @@ def loop_partitions(spark: SparkSession) -> int:
 BROADCAST_MAX_EDGES = 30_000_000
 
 # Largest edge table, in rows, that the driver-local loop lane
-# collects: the largest measured size (tools/bench_pagerank_lanes.py).
+# collects: the largest measured size (tools/bench_lanes.py --op pagerank).
 # 10-round PageRank on R-MAT parquet, 4 vCPU, medians of 3, local lane
 # vs Spark lane at local[4] / local[32]: 4.2 M edges 4.1 vs 17.3 / 33.0
 # s, 8.4 M 8.9 vs 36.8 / 58.2 s, 16.8 M 18.0 vs 82.4 / 113.2 s. At
@@ -318,6 +322,24 @@ BROADCAST_MAX_EDGES = 30_000_000
 # Above this size, and on hosts with more than 4 cores, the crossover
 # is unmeasured.
 LOCAL_LANE_MAX_EDGES = 16_000_000
+
+# Largest oriented wedge count W = sum d+(d+-1)/2 that triangle_count
+# enumerates on the driver (one thread per CPU) once it has collected
+# the edges; beyond it one Spark count job runs instead. The largest
+# measured W (tools/bench_lanes.py --op triangles), rounded up: R-MAT
+# parquet, seed 1, local[4] on 4 vCPU, fresh JVM per run, lanes
+# interleaved, median wall local vs Spark count: 262 k edges (5.2 M
+# wedges) 0.53 vs 2.45 s, 1.0 M (33 M) 1.91 vs 5.65 s, 4.2 M (205 M)
+# 7.13 vs 18.92 s, 8.4 M (502 M) 15.98 vs 38.60 s, with the driver's
+# Python at 1.9 GB peak RSS. Above it, and against a cluster of many
+# executors, the crossover is unmeasured.
+LOCAL_LANE_MAX_WEDGES = 510_000_000
+
+# Lowest size estimate per row measured on parquet int-pair scans (3.7
+# B/row; `size_gate`), rounded down: `local_input` admits an estimate
+# up to this many bytes per row of its cap. A denser encoding collects
+# more rows than the cap and aborts on the row re-check.
+_MIN_BYTES_PER_ROW = 3
 
 
 class SizeGate(NamedTuple):
@@ -379,14 +401,15 @@ def local_input(edges: DataFrame) -> tuple[list[np.ndarray] | None, dict]:
     """The driver-local lane's entry: (every column of `edges` as a
     numpy array, the lane verdict) when the input fits one machine,
     else (None, the verdict). The gate is the size estimate alone
-    (`size_gate(..., count=False)` at `LOCAL_LANE_MAX_EDGES`): an
-    input the estimate cannot place under the cap takes the Spark lane
-    without a job, so the choice adds no job to a Spark-lane run. An
-    entry re-checks the rows it collected and aborts to the Spark lane
-    over the cap, and a null anywhere (an id that does not cast to long
-    comes out null) also takes the Spark lane."""
+    (`size_gate(..., count=False)` at `_MIN_BYTES_PER_ROW` bytes per
+    row of `LOCAL_LANE_MAX_EDGES`): an input the estimate cannot place
+    under the cap takes the Spark lane without a job, so the choice
+    adds no job to a Spark-lane run. An entry re-checks the rows it
+    collected and aborts to the Spark lane over the cap, and a null
+    anywhere (an id that does not cast to long comes out null) also
+    takes the Spark lane."""
     cap = LOCAL_LANE_MAX_EDGES
-    gate = size_gate(edges, cap, count=False)
+    gate = size_gate(edges, _MIN_BYTES_PER_ROW * cap, count=False)
     lane = {"lane": "spark", "basis": gate.basis, "value": gate.value, "cap": cap}
     if not gate.fits:
         return None, lane
@@ -398,6 +421,24 @@ def local_input(edges: DataFrame) -> tuple[list[np.ndarray] | None, dict]:
     else:
         return got, dict(lane, lane="local")
     return None, lane
+
+
+def lane_event(name: str, lane: dict) -> None:
+    """Log a lane verdict as one INFO event, `<name>: <lane> lane
+    (<basis>=<value>, <key>=<value>..., cap <cap> <unit>)`: the basis
+    and value say what decided it (the size estimate, an exact count,
+    the collected rows), any further keys the numbers taken after the
+    collect, and the unit defaults to rows."""
+    why = [lane["basis"] + ("" if lane["value"] is None else f"={lane['value']}")]
+    why += [
+        f"{k}={v}"
+        for k, v in lane.items()
+        if k not in ("lane", "basis", "value", "cap", "unit")
+    ]
+    _log.info(
+        "%s: %s lane (%s, cap %s %s)",
+        name, lane["lane"], ", ".join(why), lane["cap"], lane.get("unit", "rows"),
+    )
 
 
 # A label-propagation/HashMin round reads the edge table by one
@@ -476,10 +517,7 @@ class CheckpointedLoop:
         # lane: kept in every round's record and in the manifest
         self.lane = lane
         if lane is not None:
-            why = lane["basis"]
-            if lane["value"] is not None:
-                why += f"={lane['value']}"
-            _log.info("%s: %s lane (%s, cap %s rows)", name, lane["lane"], why, lane["cap"])
+            lane_event(name, lane)
         # round rounds() starts from: 0, or the one after the resumed
         # snapshot's
         self.first_round = 0

@@ -198,7 +198,7 @@ def prepare_oriented_fast(
 ) -> tuple[DataFrame, DataFrame, int, int, dict]:
     """Fused preprocessing in ORIGINAL id space: dirty edges →
     (oriented, degrees, n, max_id, stats), with ONE edge-sized shuffle
-    and ONE driver action (stats = {n, max_id, m_oriented,
+    and ONE driver action (stats = {n, max_id, min_id, m_oriented,
     max_degree}).
 
     The whole chain runs on a single hash(src) partitioning:
@@ -239,6 +239,7 @@ def prepare_oriented_fast(
     row = deg.agg(
         F.count("*").alias("n"),
         F.max("src").alias("mx"),
+        F.min("src").alias("mn"),
         F.coalesce(F.sum("degree"), F.lit(0)).alias("m_sym"),
         F.max("degree").alias("max_deg"),
     ).collect()[0]
@@ -250,6 +251,7 @@ def prepare_oriented_fast(
     stats = {
         "n": n,
         "max_id": max_id,
+        "min_id": row["mn"] if row["mn"] is not None else 0,
         "m_oriented": int(row["m_sym"]) // 2,
         "max_degree": row["max_deg"] if row["max_deg"] is not None else 0,
     }

@@ -32,9 +32,10 @@ Scale design (r3, after profiling the 0.67 scaling efficiency):
   SURVEY §7.3). Every 8th round's checkpoint is eager, which bounds
   the RDD lineage of the carried ranks to 8 rounds.
 - Driver-local lane (checkpointing.local_input): when Catalyst's size
-  estimate of the edge table is at most LOCAL_LANE_MAX_EDGES bytes
-  (1 byte/row, so at most that many rows; no job), `pagerank` collects
-  src/dst once through Arrow and runs the same graph build and
+  estimate of the edge table is at most 3 bytes per row of
+  LOCAL_LANE_MAX_EDGES (parquet int pairs measure >= 3.7 B/row; no
+  job), `pagerank` collects src/dst once through Arrow — more rows than
+  the cap abort to the Spark lane — and runs the same graph build and
   recurrence in float64 numpy on the driver — the same operation
   order as the Spark expressions, so the lanes differ only in
   summation order (ulps). Small runs are bound by Spark's per-stage

@@ -13,10 +13,13 @@ semi-join. The "edge" strategy lists through `graph.common_neighbors`,
 the adjacency intersection truss and clustering share.
 
 Options: `strategy`; `closure` ("auto" | "broadcast" | "join");
-`hub_k` (hub-bitmap size); `split_budget` (wedges per hub chunk);
+`hub_k` (hub-bitmap size of the broadcast probe; the driver count
+probes the edge keys alone, see `_local_count`); `split_budget`
+(wedges per hub chunk);
 `phase_metrics`. Every other physical choice follows from the input:
-- prep: fast (original ids, one shuffle) unless the ids overflow int64
-  edge keys ((max_id+1)² > 2⁶²), then the rank-space relabel;
+- prep: fast (original ids, one shuffle) unless the ids do not fit
+  int64 edge keys (`_key_base`: a negative id, or (max_id+1)² > 2⁶²),
+  then the rank-space relabel;
 - closure="auto": broadcast probe up to BROADCAST_MAX_EDGES oriented
   edges, distributed LEFT SEMI join beyond;
 - flat-lane partitioning: wedge-balanced range partitioning when the
@@ -25,14 +28,18 @@ Options: `strategy`; `closure` ("auto" | "broadcast" | "join");
 - partitions: the session's defaultParallelism.
 
 - "wedge"  (default, the WeTriC strategy, tc.cu:173-293): in the
-  broadcast-closure regime (≤30M edges) the COLLECT-FUSED path runs
-  exactly two edge-sized jobs: the single symmetrize/dedup shuffle
-  terminated by the probe's Arrow collect (degrees, stats, orientation,
-  hub detection and the hub bitmap all derived from the collected
-  arrays in numpy), then one count job in which the CSR reader applies
-  the degree-order orientation and hub skip per run against a
-  broadcast degree dictionary — no stats job, no degree joins. Beyond
-  that regime (or with closure="join") the general two-lane plan runs:
+  broadcast-closure regime (≤30M edges) the COLLECT-FIRST path's first
+  job is one narrow Arrow collect of the clean input; dedup, degrees,
+  the degree-order orientation and the oriented wedge count W are
+  numpy on the driver. Up to `checkpointing.LOCAL_LANE_MAX_WEDGES`
+  wedges the count runs there too — the paper's one-launch count, in
+  one thread per CPU over equal wedge ranges (tc.cu:348-361) — and the
+  collect is the only Spark job. Beyond it one count job runs, in
+  which the CSR reader applies the orientation and hub skip per run of
+  the symmetric table against a broadcast degree dictionary (no stats
+  job, no degree joins). One INFO event names the lane taken
+  (`checkpointing.lane_event`). Beyond that regime (or with
+  closure="join") the general two-lane plan runs:
   fused single-shuffle preprocessing (degree-ordered orientation in
   ORIGINAL id space — graph.prepare_oriented_fast), then:
   * non-hub lane: oriented edges are already hash-clustered by src
@@ -68,7 +75,9 @@ session don't accumulate cached blocks.
 from __future__ import annotations
 
 import functools
+import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from typing import Iterator
 
 import numpy as np
@@ -77,10 +86,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import wedge as wk
-from .checkpointing import BROADCAST_MAX_EDGES, collect_arrays, size_gate
+from . import checkpointing
+from .checkpointing import BROADCAST_MAX_EDGES, collect_arrays, lane_event, size_gate
 from .graph import (
     adjacency,
+    build_sym_clustered,
     common_neighbors,
+    drop_self_loops,
+    normalize_edges,
+    orient_from_sym,
     prepare_oriented,
     prepare_oriented_fast,
 )
@@ -306,16 +320,30 @@ def _numpy_top_hub_ids(src: np.ndarray, dst: np.ndarray, hub_k: int) -> np.ndarr
     return np.sort(ids)
 
 
+def _key_base(min_id: int, max_id: int) -> int | None:
+    """Base of the int64 edge keys `lo * base + hi` over vertex ids in
+    [min_id, max_id]: max_id + 1, or None when those keys are not
+    unique int64 values and the caller must relabel to rank space — a
+    negative id (at base 4, (-4, 3) and (-3, -1) both key to -13) or
+    (max_id + 1)² > 2⁶²."""
+    base = max_id + 1
+    if min_id < 0 or base * base > 2**62:
+        return None
+    return base
+
+
 def _build_probe(
     spark: SparkSession,
     edges,
     key_base: int,
     hub_k: int,
+    keys=None,
 ) -> _Probe:
-    """The one closure-probe builder: broadcast sorted edge keys plus,
-    for hub_k > 0, the top-hub_k id array and its hub↔hub bitmap.
-    `edges` is an oriented (src, dst) frame, collected here through
-    Arrow, or the (src, dst) arrays a caller already collected."""
+    """The one broadcast closure probe: sorted edge keys plus, for
+    hub_k > 0, the top-hub_k id array and its hub↔hub bitmap. `edges`
+    is an oriented (src, dst) frame, collected here through Arrow, or
+    the (src, dst) arrays a caller already collected (with their sorted
+    `keys`, if it has them)."""
     if key_base * key_base > 2**62:
         raise ValueError("vertex domain too large for int64 edge keys")
     if isinstance(edges, DataFrame):
@@ -331,8 +359,9 @@ def _build_probe(
         # the copy phase stays free of extra cluster actions
         hub_ids = _numpy_top_hub_ids(src, dst, hub_k)
         hub_bc = sc.broadcast(wk.build_hub_bitmap(src, dst, hub_ids))
-    keys_bc = sc.broadcast(wk.build_edge_keys(src, dst, key_base))
-    return _Probe(keys_bc, key_base, hub_bc, hub_ids)
+    if keys is None:
+        keys = wk.build_edge_keys(src, dst, key_base)
+    return _Probe(sc.broadcast(keys), key_base, hub_bc, hub_ids)
 
 
 # Max flat adjacency elements the driver may materialize when building
@@ -427,6 +456,70 @@ def _hub_chunk_rows(
     return table, None
 
 
+def _wedge_parts(
+    starts: np.ndarray, degs: np.ndarray, parts: int, block_pairs: int
+) -> list[tuple]:
+    """Cut CSR rows into at most `parts` wedge rows (starts, degs, i_lo,
+    i_hi) of near-equal pair count — the paper's equal-wedges-per-worker
+    split by the cumulative wedge count (tc.cu:348-361). A row with
+    more pairs than a share (at most `block_pairs`) is first split into
+    i-range chunks of width max(1, share // deg), so every chunk but a
+    degree-bound one fits a block; the chunks keep reading the shared
+    `flat` array, nothing is copied."""
+    keep = degs >= 2
+    starts, degs = starts[keep], degs[keep]
+    pairs = degs * (degs - 1) // 2
+    total = int(pairs.sum())
+    if total == 0:
+        return []
+    share = max(1, min(block_pairs, -(-total // parts)))
+    width = np.where(pairs > share, np.maximum(1, share // degs), degs - 1)
+    n_chunks = (degs - 2) // width + 1
+    row = np.repeat(np.arange(len(degs)), n_chunks)
+    first = np.repeat(np.cumsum(n_chunks) - n_chunks, n_chunks)
+    i_lo = (np.arange(len(row), dtype=np.int64) - first) * width[row]
+    i_hi = np.minimum(i_lo + width[row], degs[row] - 1)
+    starts, degs = starts[row], degs[row]
+    cum = np.cumsum(wk.pair_count(degs, i_lo, i_hi))
+    cuts = np.searchsorted(cum, total * np.arange(1, parts) // parts, side="right")
+    bounds = np.unique(np.concatenate([[0], cuts, [len(cum)]]))
+    return [
+        (starts[lo:hi], degs[lo:hi], i_lo[lo:hi], i_hi[lo:hi])
+        for lo, hi in zip(bounds, bounds[1:])
+    ]
+
+
+def _local_count(
+    flat: np.ndarray, parts: list[tuple], keys: np.ndarray, key_base: int
+) -> tuple[int, dict]:
+    """Closed wedges of `parts` (`_wedge_parts`) over the oriented
+    adjacency `flat`, probed against the sorted edge `keys`: one thread
+    per part — numpy releases the GIL in the enumerate and probe
+    kernels — each walking its part in blocks of at most
+    `wk.DEFAULT_BLOCK_PAIRS` pairs, the per-task memory bound of the
+    Spark count. Returns the count and the enumerate/probe seconds
+    summed over the threads.
+
+    No hub bitmap: on 4 vCPU it made this probe 1.4-1.6x slower (R-MAT
+    scale 14 and 16, 1 and 4 threads, hub_k=8192) — two extra binary
+    searches per pair over the hub ids cost more than the smaller
+    search they save."""
+    block = wk.DEFAULT_BLOCK_PAIRS
+
+    def count(part: tuple) -> tuple[int, dict]:
+        timings: dict = {}
+        blocks = wk.wedge_blocks(flat, *part, block_pairs=block)
+        n = wk.count_closed(blocks, keys, key_base, timings=timings)
+        return n, timings
+
+    with ThreadPoolExecutor(max(len(parts), 1)) as pool:
+        done = list(pool.map(count, parts))
+    timings = {
+        k: sum(t.get(k, 0.0) for _, t in done) for k in ("enum_sec", "probe_sec")
+    }
+    return sum(n for n, _ in done), timings
+
+
 def _wedge_fused(
     spark: SparkSession,
     edges: DataFrame,
@@ -435,63 +528,77 @@ def _wedge_fused(
     caches: list,
     mark,
     phase_metrics: dict | None,
+    lane: dict,
     max_collect_edges: int | None = None,
-    info: dict | None = None,
 ) -> DataFrame | None:
-    """Collect-fused wedge count (broadcast-closure regime): TWO
-    edge-sized jobs total instead of four.
+    """Collect-first wedge count (broadcast-closure regime). Its first
+    job is one narrow Arrow collect of the clean input (self loops
+    dropped; no shuffle, no persist). Dedup, canonical id order,
+    degrees, the degree-order orientation (`_orientation_arrays`) and
+    the oriented wedge count W = Σ d⁺(d⁺−1)/2 are then numpy on the
+    driver, and W picks where the wedges are counted:
 
-    - job 1: the single symmetrize/dedup shuffle, terminated by an
-      Arrow collect of the canonical (src<dst) half — the probe copy.
-      Degrees, stats, orientation, hub detection and the hub bitmap are
-      all derived from the collected arrays in numpy (zero extra jobs;
-      the ids were already resident, same argument as the r2 numpy
-      top-k).
-    - job 2: the count — the flat lane reads the cached symmetric
-      table (still hash(src)-clustered from the one shuffle), applies
-      the degree-order orientation + hub skip INSIDE the vectorized UDF
-      via a broadcast degree dictionary (no degree joins), and the hub
-      lane (if any) runs over driver-built chunk rows.
+    - W ≤ checkpointing.LOCAL_LANE_MAX_WEDGES: on the driver, over the
+      sorted oriented CSR in wedge-balanced threads (`_wedge_parts`,
+      `_local_count`) — the only Spark job is the collect;
+    - otherwise one Spark count job: the flat lane reads the symmetric
+      table (`build_sym_clustered`, its one shuffle) and applies the
+      orientation and hub skip inside the vectorized UDF against a
+      broadcast degree dictionary (no degree joins), the hub lane (if
+      any) runs over driver-built chunk rows, and both probe the
+      broadcast built from the arrays in hand.
 
-    Returns None when the fused path cannot apply (vertex ids overflow
-    int64 edge keys) — the caller falls back to the relabel pipeline.
-    The broadcast degree dictionary is ~24 B/vertex; in the regime this
-    path gates on (≤30M collected edges) that is ≤ ~1.5 GB worst case
-    and typically far less, the same order as the edge-key broadcast
-    itself."""
-    from .graph import build_sym_clustered, orient_from_sym
-
-    npart = spark.sparkContext.defaultParallelism
-    sym = build_sym_clustered(edges, npart).persist()
-    caches.append(sym)
+    `lane` is the verdict (`checkpointing.lane_event`): it gains the
+    canonical rows, W and the lane taken. Returns None, with
+    lane["lane"] naming the fallback, when the path cannot apply: a
+    vertex id that does not fit int64 edge keys ("relabel") or, after
+    an entry on the size estimate (`max_collect_edges`), more canonical
+    edges than the broadcast budget ("distributed"). The broadcast
+    degree dictionary is ~24 B/vertex, the same order as the edge-key
+    broadcast itself."""
+    src, dst = collect_arrays(drop_self_loops(normalize_edges(edges)), "src", "dst")
+    keys = np.empty(0, np.int64)
+    key_base = 1  # any base keys an empty edge set
+    if len(src):
+        lo_id = int(min(src.min(), dst.min()))
+        hi_id = int(max(src.max(), dst.max()))
+        key_base = _key_base(lo_id, hi_id)
+        if key_base is None:
+            lane.update(lane="relabel", min_id=lo_id, max_id=hi_id)
+            return None
+        # sorted unique canonical keys: the dedup and the probe array
+        keys = np.unique(np.minimum(src, dst) * key_base + np.maximum(src, dst))
+    del src, dst
+    m = len(keys)
+    lane["rows"] = m
+    if max_collect_edges is not None and m > max_collect_edges:
+        # the estimate let in more canonical edges than the broadcast
+        # budget: abort to the distributed pipeline
+        lane["lane"] = "distributed"
+        return None
+    a, b = np.divmod(keys, key_base)
+    ids, cnt, src_o, dst_o, pos_o, outdeg = _orientation_arrays(a, b)
+    wedges = int((outdeg * (outdeg - 1) // 2).sum())
+    cap = checkpointing.LOCAL_LANE_MAX_WEDGES
+    local = wedges <= cap
+    lane.update(lane="local" if local else "spark", wedges=wedges, cap=cap, unit="wedges")
     mark("prep_sec")
 
-    a, b = collect_arrays(sym.filter(F.col("src") < F.col("dst")), "src", "dst")
-    m = len(a)
-    if max_collect_edges is not None and m > max_collect_edges:
-        # optimistic entry (statistics-gated, no exact count): the
-        # actual canonical edge count exceeds the broadcast-closure
-        # budget — abort to the distributed pipeline
-        if info is not None:
-            info["abort"] = "rows"
-        return None
-    if m == 0:
-        mark("build_sec")
-        out = _finish(
-            spark.createDataFrame([(0, 0.0, 0.0)], COUNT_SCHEMA),
-            caches,
-            spark,
-            phase_metrics,
+    if local:
+        # oriented CSR: rows by src, each row's adjacency sorted
+        row_src, flat = np.divmod(np.sort(src_o * key_base + dst_o), key_base)
+        starts, degs = _runs(row_src)
+        parts = _wedge_parts(
+            starts, degs, len(os.sched_getaffinity(0)), wk.DEFAULT_BLOCK_PAIRS
         )
+        mark("build_sec")
+        total, timings = _local_count(flat, parts, keys, key_base)
+        _record_split(phase_metrics, timings)
         mark("exec_sec")
-        return out
-    key_base = int(max(a.max(), b.max())) + 1
-    if key_base * key_base > 2**62:
-        if info is not None:
-            info["abort"] = "keys"
-        return None  # caller unpersists and takes the relabel pipeline
+        return _result(spark, total)
 
-    ids, cnt, src_o, dst_o, pos_o, outdeg = _orientation_arrays(a, b)
+    npart = spark.sparkContext.defaultParallelism
+    sym = build_sym_clustered(edges, npart)
     stats = {
         "n": int(len(ids)),
         "max_id": key_base - 1,
@@ -501,7 +608,7 @@ def _wedge_fused(
     hub_min_deg = int((2 * split_budget) ** 0.5) + 2
     hub_flag = outdeg >= hub_min_deg
 
-    probe = _build_probe(spark, (a, b), key_base, hub_k)
+    probe = _build_probe(spark, (a, b), key_base, hub_k, keys)
 
     hub_tbl = None
     est = None
@@ -716,11 +823,13 @@ def _close(
 def _prep(edges: DataFrame, caches: list) -> tuple[DataFrame, int, bool, dict | None]:
     """Preprocess → (oriented, key_base, clustered_by_src, stats|None).
     The fast prep fuses everything onto one shuffle in original id
-    space and returns its free stats; ids too large for integer edge
-    keys ((max_id+1)² > 2⁶²) take the rank-space relabel pipeline."""
+    space and returns its free stats; ids that do not fit integer edge
+    keys (`_key_base`: a negative id, or (max_id+1)² > 2⁶²) take the
+    rank-space relabel pipeline."""
     oriented, _deg, _n, max_id, stats = prepare_oriented_fast(edges, caches=caches)
-    if (max_id + 1) ** 2 <= 2**62:
-        return oriented, max_id + 1, True, stats
+    key_base = _key_base(stats["min_id"], max_id)
+    if key_base is not None:
+        return oriented, key_base, True, stats
     for c in caches:
         c.unpersist()
     caches.clear()
@@ -742,6 +851,25 @@ def _sum_counts(counts: DataFrame) -> DataFrame:
     )
 
 
+def _record_split(phase_metrics: dict | None, timings: dict) -> None:
+    """Surface a count's enumerate/probe CPU seconds (`timings` keys
+    enum_sec, probe_sec) in `phase_metrics` — tc_cycles' get/evaluate
+    accounting."""
+    if phase_metrics is not None:
+        # 6 decimals: a sub-50µs probe on a tiny graph must not round
+        # to 0.0 (ADVICE r3: the 4-decimal round made the phase-split
+        # test flake on fast hardware)
+        phase_metrics["enumerate_cpu_sec"] = round(float(timings["enum_sec"]), 6)
+        phase_metrics["probe_cpu_sec"] = round(float(timings["probe_sec"]), 6)
+
+
+def _result(spark: SparkSession, val: int) -> DataFrame:
+    """The 1-row [triangles: long] answer. Built from pandas, it is a
+    local relation that the caller collects without a Spark job (a
+    frame from Python rows runs one)."""
+    return spark.createDataFrame(pd.DataFrame({"triangles": np.array([val], np.int64)}))
+
+
 def _finish(
     result: DataFrame,
     caches: list,
@@ -755,18 +883,14 @@ def _finish(
     surface it in `phase_metrics` (tc_cycles' get/evaluate accounting)."""
     row = result.collect()[0]
     val = int(row[0])
-    if phase_metrics is not None and "enum_sec" in row.__fields__:
-        # 6 decimals: a sub-50µs probe on a tiny graph must not round
-        # to 0.0 (ADVICE r3: the 4-decimal round made the phase-split
-        # test flake on fast hardware)
-        phase_metrics["enumerate_cpu_sec"] = round(float(row["enum_sec"]), 6)
-        phase_metrics["probe_cpu_sec"] = round(float(row["probe_sec"]), 6)
+    if "enum_sec" in row.__fields__:
+        _record_split(phase_metrics, row.asDict())
     for c in caches:
         try:
             c.unpersist()
         except Exception:  # pragma: no cover
             pass
-    return spark.createDataFrame([(val,)], "triangles long")
+    return _result(spark, val)
 
 
 def triangle_count(
@@ -802,23 +926,26 @@ def triangle_count(
 
     prep = _prep
     if strategy == "wedge" and closure in ("auto", "broadcast"):
-        # Collect-fused fast path (VERDICT r2 item 5): in the broadcast-
-        # closure regime the probe collect IS the prep action — one
-        # edge shuffle + one count job, no stats job, no degree joins.
-        # The closure="auto" gate is checkpointing.size_gate: an entry
-        # on the size estimate (no job) re-checks the collected row
-        # count, so a bad estimate aborts to the distributed pipeline
-        # instead of overflowing the broadcast budget. Explicit
-        # closure="broadcast" skips the gate entirely.
+        # Collect-first path (`_wedge_fused`): in the broadcast-closure
+        # regime one narrow Arrow collect is the prep action and the
+        # count runs on the driver or in one Spark job. The
+        # closure="auto" gate is checkpointing.size_gate: an entry on
+        # the size estimate (no job) re-checks the collected rows, so
+        # a bad estimate aborts to the distributed pipeline instead of
+        # overflowing the broadcast budget. Explicit closure="broadcast"
+        # skips the gate entirely.
+        lane = {"lane": "distributed", "basis": "closure=broadcast", "value": None,
+                "cap": BROADCAST_MAX_EDGES}
         use_fused = True
         max_collect = None
         if closure == "auto":
             gate = size_gate(edges, BROADCAST_MAX_EDGES)
+            lane.update(basis=gate.basis, value=gate.value)
             use_fused = gate.fits
             if gate.basis == "estimate":
                 max_collect = BROADCAST_MAX_EDGES
+        out = None
         if use_fused:
-            fused_info: dict = {}
             out = _wedge_fused(
                 spark,
                 edges,
@@ -827,21 +954,18 @@ def triangle_count(
                 caches=caches,
                 mark=mark,
                 phase_metrics=phase_metrics,
+                lane=lane,
                 max_collect_edges=max_collect,
-                info=fused_info,
             )
-            if out is not None:
-                return out
-            # release the fused attempt, then: vertex ids overflowing
-            # int64 edge keys go straight to the relabel pipeline; a
-            # row-count overflow (optimistic statistics entry) keeps the
-            # fast prep — its stats job re-derives m and closure="auto"
-            # routes to the distributed semi-join lane
-            for c in caches:
-                c.unpersist()
-            caches.clear()
-            if fused_info.get("abort") != "rows":
-                prep = _relabel
+        lane_event("triangle_count", lane)
+        if out is not None:
+            return out
+        # vertex ids that do not fit int64 edge keys go straight to the
+        # relabel pipeline; a row-count overflow (optimistic estimate
+        # entry) keeps the fast prep — its stats job re-derives m and
+        # closure="auto" routes to the distributed semi-join lane
+        if lane["lane"] == "relabel":
+            prep = _relabel
 
     oriented, key_base, clustered, stats = prep(edges, caches)
     oriented = oriented.persist()
