@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import logging
 import random
+import uuid
 
 import pytest
 
@@ -74,7 +75,7 @@ def test_wedge_small_split_budget(spark):
     pairs = _random_graph(11, 30, 300)
     expected = _brute_triangles(pairs)
     got = triangle_count(
-        edges_df(spark, pairs), strategy="wedge", split_budget=4, hub_k=8
+        edges_df(spark, pairs), strategy="wedge", split_budget=4
     ).collect()[0][0]
     assert got == expected
 
@@ -90,7 +91,7 @@ def test_wedge_range_chosen_by_input(spark, monkeypatch):
     close = T._close
 
     def recording_close(spark_, oriented, *args, **kwargs):
-        lanes = args[4] if len(args) > 4 else kwargs["lanes"]
+        lanes = args[3] if len(args) > 3 else kwargs["lanes"]
         plan = lambda df: df._jdf.queryExecution().executedPlan().toString()
         seen.append((plan(lanes[0][0]), plan(oriented)))
         return close(spark_, oriented, *args, **kwargs)
@@ -226,14 +227,14 @@ def _lanes(caplog) -> list[str]:
 
 
 def test_fused_matches_distributed_on_zipf_hubs(spark, local_lane, spark_count, caplog):
-    # the collect-first path's Spark count (driver-derived stats/hubs/
-    # probe, driver-built hub chunks) must agree with the fully
-    # distributed closure on a skewed graph where the hub lane is active
+    # the collect-first path's Spark count (driver-built oriented CSR
+    # split into equal-wedge parts, one task each) must agree with the
+    # fully distributed closure, whose hub lane is active on this graph
     caplog.set_level(logging.INFO, logger=CP.__name__)
     pairs = _zipf_hub_graph()
     expected = _brute_triangles(pairs)
     df = edges_df(spark, pairs)
-    fused = triangle_count(df, split_budget=16, hub_k=16).collect()[0][0]
+    fused = triangle_count(df, split_budget=16).collect()[0][0]
     assert _lanes(caplog)[-1].startswith("triangle_count: spark lane ")
     dist = triangle_count(df, closure="join", split_budget=16).collect()[0][0]
     assert fused == dist == expected
@@ -250,83 +251,119 @@ PARITY_GRAPHS = {
 @pytest.mark.parametrize("graph", sorted(PARITY_GRAPHS))
 def test_count_paths_match_bruteforce(spark, local_lane, monkeypatch, caplog, graph, path):
     """Both count paths of the collect-first lane — the driver threads
-    and the Spark count job — give the brute-force count, with hub_k 0
-    and 16 (the Spark count's hub bitmap off and on)."""
+    and the Spark count job — give the brute-force count."""
     caplog.set_level(logging.INFO, logger=CP.__name__)
     if path == "spark":
         monkeypatch.setattr(CP, "LOCAL_LANE_MAX_WEDGES", 0)
     pairs = PARITY_GRAPHS[graph]
-    df = edges_df(spark, pairs)
-    for hub_k in (0, 16):
-        got = triangle_count(df, hub_k=hub_k, split_budget=16).collect()[0][0]
-        assert got == _brute_triangles(pairs), (graph, path, hub_k)
+    got = triangle_count(edges_df(spark, pairs), split_budget=16).collect()[0][0]
+    assert got == _brute_triangles(pairs), (graph, path)
     lanes = _lanes(caplog)
-    assert len(lanes) == 2 and all(f": {path} lane " in ln for ln in lanes), lanes
+    assert len(lanes) == 1 and f": {path} lane " in lanes[0], lanes
+
+
+K12_STAR = [(a, b) for a in range(12) for b in range(a + 1, 12)] + [
+    (0, 100 + i) for i in range(30)
+]
+
+
+def _oriented_csr_of(pairs):
+    """The oriented CSR (flat, starts, degs) the collect-first lane
+    builds from an edge list."""
+    import numpy as np
+
+    und = np.array(sorted({(min(a, b), max(a, b)) for a, b in pairs if a != b}))
+    base = int(und.max()) + 1
+    return T._oriented_csr(und[:, 0] * base + und[:, 1], base)
+
+
+def _check_parts(flat, starts, degs, parts):
+    """The self-contained part format: each part's own slice of `flat`
+    reproduces exactly its pairs — in part order they are every pair of
+    the whole CSR, once each, in row-major order — and the slices hold
+    at most m + (P - 1) · max out-degree values (a part boundary cuts at
+    most one row)."""
+    import numpy as np
+
+    from wedge_parallel_triangle_counting_spark.functions import wedge as wk
+
+    whole = wk.enumerate_pairs(flat, starts, degs, np.zeros_like(degs), degs - 1)
+    got = [wk.enumerate_pairs(*part) for part in parts]
+    for i in (0, 1):
+        assert np.array_equal(np.concatenate([g[i] for g in got]), whole[i])
+    sliced = sum(len(part[0]) for part in parts)
+    assert sliced <= len(flat) + (len(parts) - 1) * int(degs.max())
 
 
 def test_local_count_splits_heavy_rows(spark, local_lane, monkeypatch):
-    """A row with more pairs than a block is cut into i-range chunks
-    that share the adjacency array: K12 plus a star on vertex 0 (its
-    oriented rows hold up to 11 vertices, 55 pairs) with a 10-pair
-    block still counts exactly, through rows cut into chunks."""
+    """A row with more pairs than a block is cut into i-range chunks:
+    K12 plus a star on vertex 0 (its oriented rows hold up to 11
+    vertices, 55 pairs) with a 10-pair block still counts exactly,
+    through rows cut into chunks, on the driver threads and in the
+    Spark count. On the driver the parts' slices are views of the one
+    oriented CSR."""
+    import numpy as np
+
     from wedge_parallel_triangle_counting_spark.functions import wedge as wk
 
     monkeypatch.setattr(wk, "DEFAULT_BLOCK_PAIRS", 10)
     seen = []
-    parts = T._wedge_parts
+    split = T._wedge_parts
 
     def recording_parts(*args):
-        seen.append(parts(*args))
-        return seen[-1]
+        seen.append((args, split(*args)))
+        return seen[-1][1]
 
     monkeypatch.setattr(T, "_wedge_parts", recording_parts)
-    pairs = [(a, b) for a in range(12) for b in range(a + 1, 12)]
-    pairs += [(0, 100 + i) for i in range(30)]
-    got = triangle_count(edges_df(spark, pairs), hub_k=0).collect()[0][0]
-    assert got == _brute_triangles(pairs) == 220
-    chunks = [row for part in seen[-1] for row in zip(*part)]
-    assert len(chunks) > len({int(st) for st, _, _, _ in chunks})  # rows were cut
+    df = edges_df(spark, K12_STAR)
+    assert triangle_count(df).collect()[0][0] == _brute_triangles(K12_STAR) == 220
+    (flat, starts, degs, _n, _block), parts = seen[-1]
+    _check_parts(flat, starts, degs, parts)
+    assert int(degs.max()) ** 2 <= 2 * len(flat)
+    assert all(np.shares_memory(part[0], flat) for part in parts)
+    assert sum(len(part[2]) for part in parts) > int((degs >= 2).sum())  # rows were cut
+    monkeypatch.setattr(CP, "LOCAL_LANE_MAX_WEDGES", 0)
+    assert triangle_count(df).collect()[0][0] == 220
 
 
 def test_wedge_parts_cover_every_pair_once():
     """`_wedge_parts` keeps every pair of every row exactly once,
     balances the parts by pair count and bounds every chunk that is
-    wider than one first index by the share."""
+    wider than one first index by the share — on zipf-distributed row
+    lengths, and on the oriented CSRs of the zipf-hub and K12+star
+    graphs, whose rows degree orientation keeps within sqrt(2m)."""
     import numpy as np
 
     from wedge_parallel_triangle_counting_spark.functions import wedge as wk
 
     rng = np.random.default_rng(5)
     degs = rng.zipf(1.6, size=300).clip(max=400).astype(np.int64)
-    starts = np.cumsum(degs) - degs
-    total = int((degs * (degs - 1) // 2).sum())
-    for parts_n, block in ((1, 10**9), (4, 10**9), (4, 50), (7, 3)):
-        parts = T._wedge_parts(starts, degs, parts_n, block)
-        assert 1 <= len(parts) <= parts_n
-        share = max(1, min(block, -(-total // parts_n)))
-        pairs = []
-        for st, d, lo, hi in parts:
-            n = wk.pair_count(d, lo, hi)
-            wide = hi - lo > 1
-            assert (n[wide] <= share).all()
-            pairs.append(int(n.sum()))
-            for s0, d0, l0, h0 in zip(st, d, lo, hi):
-                assert 0 <= l0 < h0 <= d0 - 1
-        assert sum(pairs) == total
-        # every pair of a row, in order: the chunks of a row tile [0, d-1)
-        rows = {}
-        for st, d, lo, hi in parts:
-            for s0, d0, l0, h0 in zip(st, d, lo, hi):
-                rows.setdefault(int(s0), []).append((int(l0), int(h0), int(d0)))
-        for s0, spans in rows.items():
-            spans.sort()
-            assert spans[0][0] == 0 and spans[-1][1] == spans[-1][2] - 1
-            assert all(a[1] == b[0] for a, b in zip(spans, spans[1:]))
+    csrs = [(np.arange(int(degs.sum())), np.cumsum(degs) - degs, degs)]
+    for pairs in (_zipf_hub_graph(), K12_STAR):
+        flat, starts, degs = _oriented_csr_of(pairs)
+        assert int(degs.max()) ** 2 <= 2 * len(flat)
+        csrs.append((flat, starts, degs))
+    for flat, starts, degs in csrs:
+        total = int((degs * (degs - 1) // 2).sum())
+        for parts_n, block in ((1, 10**9), (4, 10**9), (4, 50), (7, 3), (32, 10**9)):
+            parts = T._wedge_parts(flat, starts, degs, parts_n, block)
+            assert 1 <= len(parts) <= parts_n
+            _check_parts(flat, starts, degs, parts)
+            share = max(1, min(block, -(-total // parts_n)))
+            pairs = []
+            for _, st, d, lo, hi in parts:
+                n = wk.pair_count(d, lo, hi)
+                wide = hi - lo > 1
+                assert (n[wide] <= share).all()
+                pairs.append(int(n.sum()))
+                assert ((0 <= lo) & (lo < hi) & (hi <= d - 1)).all()
+            assert sum(pairs) == total
 
 
-def _python_worker_metrics(spark, run) -> tuple[int, list[str]]:
-    """Run `run()` and return (the Spark jobs it ran, the plan nodes of
-    its SQL executions that send data to Python workers)."""
+def _python_worker_metrics(spark, run) -> tuple[int, int, list[str]]:
+    """Run `run()` and return (the Spark jobs it ran, the shuffle bytes
+    their stages wrote, the plan nodes of its SQL executions that send
+    data to Python workers)."""
     sc = spark.sparkContext
     store = spark._jsparkSession.sharedState().statusStore()
 
@@ -336,12 +373,21 @@ def _python_worker_metrics(spark, run) -> tuple[int, list[str]]:
 
     seen = newest()
     last = max((seen.apply(i).executionId() for i in range(seen.size())), default=-1)
-    sc.setJobGroup("py_bytes", "py_bytes")
+    group = uuid.uuid4().hex  # a group of its own: job ids are never reset
+    sc.setJobGroup(group, group)
     try:
         run()
     finally:
         sc.setJobGroup(None, None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup("py_bytes"))
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    job_ids = tracker.getJobIdsForGroup(group)
+    stages = sc._jsc.sc().statusStore()
+    shuffle = sum(
+        stages.lastStageAttempt(sid).shuffleWriteBytes()
+        for j in job_ids
+        for sid in tracker.getJobInfo(j).stageIds
+    )
     execs = newest()
     py_nodes = []
     for i in range(execs.size()):
@@ -352,30 +398,37 @@ def _python_worker_metrics(spark, run) -> tuple[int, list[str]]:
         for j in range(metrics.size()):
             if metrics.apply(j).name() == "data sent to Python workers":
                 py_nodes.append(ex.description())
-    return jobs, py_nodes
+    return len(job_ids), shuffle, py_nodes
 
 
 def test_local_lane_runs_one_job_and_no_python_worker(spark, local_lane):
     """The driver count's only Spark job is the Arrow collect: no
-    shuffle, no count job and no Python worker. The Spark count path on
-    the same input sends its rows to Python workers."""
+    shuffle, no count job and no Python worker."""
     df = edges_df(spark, _random_graph(59, 60, 400))
     out = []
-    jobs, py_nodes = _python_worker_metrics(
+    got = _python_worker_metrics(
         spark, lambda: out.append(triangle_count(df).collect()[0][0])
     )
-    assert (jobs, py_nodes) == (1, [])
+    assert got == (1, 0, [])
     assert out == [_brute_triangles(_random_graph(59, 60, 400))]
 
 
 def test_spark_count_path_uses_python_workers(spark, local_lane, spark_count):
-    """The probe of the job-count test can see Python workers: the Spark
-    count path plans one (the count UDF)."""
+    """The lane's Spark count reuses the driver's parts: two jobs (the
+    collect and the count, one task per part) and no shuffle. The
+    probe of the job-count tests can see Python workers: the vertex
+    strategy plans one (its count UDF)."""
     df = edges_df(spark, _random_graph(59, 60, 400))
-    jobs, py_nodes = _python_worker_metrics(
-        spark, lambda: triangle_count(df).collect()
+    out = []
+    jobs, shuffle, _ = _python_worker_metrics(
+        spark, lambda: out.append(triangle_count(df).collect()[0][0])
     )
-    assert jobs > 1 and py_nodes
+    assert (jobs, shuffle) == (2, 0)
+    assert out == [_brute_triangles(_random_graph(59, 60, 400))]
+    _, shuffle, py_nodes = _python_worker_metrics(
+        spark, lambda: triangle_count(df, strategy="vertex").collect()
+    )
+    assert shuffle > 0 and py_nodes
 
 
 @pytest.mark.parametrize("closure", ["auto", "broadcast"])
@@ -383,18 +436,37 @@ def test_spark_count_path_uses_python_workers(spark, local_lane, spark_count):
 def test_negative_ids_do_not_collide_in_edge_keys(spark, strategy, closure):
     """With key_base = max_id + 1 = 4, the keys of (-4, 3) and (-3, -1)
     were both -13, so this triangle-free graph counted 3 triangles on
-    the vertex strategy and on the wedge strategy with hub_k=0. Negative
-    ids now take the rank-space relabel."""
+    the vertex strategy and on the wedge strategy without a hub bitmap.
+    Negative ids now take the rank-space relabel."""
     pairs = [(0, -4), (0, 3), (-4, 1), (-4, 2), (3, 1), (3, 2), (-3, -1)]
     df = edges_df(spark, pairs)
-    for hub_k in (0, 8192):
-        got = triangle_count(
-            df, strategy=strategy, closure=closure, hub_k=hub_k
-        ).collect()[0][0]
-        assert got == 0, (strategy, closure, hub_k)
+    got = triangle_count(df, strategy=strategy, closure=closure).collect()[0][0]
+    assert got == 0, (strategy, closure)
     # a real triangle among negative ids still counts
     tri = edges_df(spark, pairs + [(-3, -4), (-1, -4)])
     assert triangle_count(tri, strategy=strategy, closure=closure).collect()[0][0] == 1
+
+
+def test_bench_exec_phase_private_calls(spark):
+    """bench.py's amplified exec phase builds the probe through
+    `_build_probe` with a fourth positional argument (the size of the
+    retired hub bitmap) and counts through `_flat_count_udf`: that exact
+    sequence still gives the count."""
+    from pyspark.sql import functions as F
+
+    from wedge_parallel_triangle_counting_spark.operators import graph as G
+
+    pairs = _random_graph(61, 60, 400)
+    oriented, _deg, _n, max_id, _stats = G.prepare_oriented_fast(edges_df(spark, pairs))
+    flat = oriented.sortWithinPartitions("src", "dst").persist()
+    probe = T._build_probe(spark, flat, max_id + 1, 8192)
+    got = (
+        flat.mapInPandas(T._flat_count_udf(probe), schema=T.COUNT_SCHEMA)
+        .agg(F.coalesce(F.sum("tri"), F.lit(0)).alias("triangles"))
+        .collect()[0][0]
+    )
+    flat.unpersist()
+    assert got == _brute_triangles(pairs)
 
 
 def test_fused_id_overflow_falls_back_to_relabel(spark):
@@ -452,46 +524,3 @@ def test_wedge_stats_gate_row_overflow_falls_back(spark, monkeypatch, caplog):
     assert _lanes(caplog) == [
         "triangle_count: distributed lane (estimate=1, rows=6, cap 4 rows)"
     ]
-
-
-def test_hub_topk_and_bitmap_dense_sparse_agree():
-    """ADVICE r5: pin the dense (bincount / byte-membership) and sparse
-    (np.unique / clipped-searchsorted) paths of _numpy_top_hub_ids and
-    build_hub_bitmap to identical outputs — including ids beyond 2^40
-    (forcing the sparse branch) and top-k count ties."""
-    import numpy as np
-
-    import wedge_parallel_triangle_counting_spark.operators.triangles as T
-    from wedge_parallel_triangle_counting_spark.functions import wedge as wk
-
-    rng = np.random.default_rng(7)
-    for trial in range(30):
-        n = int(rng.integers(5, 40))
-        m = int(rng.integers(5, 120))
-        a = rng.integers(0, n, size=m).astype(np.int64)
-        b = rng.integers(0, n, size=m).astype(np.int64)
-        keep = a != b
-        a, b = a[keep], b[keep]
-        if len(a) == 0:
-            continue
-        for hub_k in (1, 3, 8):
-            dense = T._numpy_top_hub_ids(a, b, hub_k)
-            # sparse reference: same selection semantics, forced by
-            # shifting ids beyond the dense-domain cap (> 2^40)
-            shift = np.int64(1) << np.int64(41)
-            sparse = T._numpy_top_hub_ids(a + shift, b + shift, hub_k) - shift
-            assert np.array_equal(dense, sparse), (trial, hub_k)
-            bm_dense = wk.build_hub_bitmap(a, b, dense)
-            bm_sparse = wk.build_hub_bitmap(a + shift, b + shift, dense + shift)
-            assert np.array_equal(bm_dense, bm_sparse), (trial, hub_k)
-        # count-tie case: duplicate every edge so all counts tie in pairs
-        aa, bb = np.concatenate([a, a]), np.concatenate([b, b])
-        d2 = T._numpy_top_hub_ids(aa, bb, 4)
-        s2 = T._numpy_top_hub_ids(aa + shift, bb + shift, 4) - shift
-        assert np.array_equal(d2, s2)
-    # out-of-range hub ids: the bitmap guard must drop them, not raise
-    a = np.array([0, 1, 2], dtype=np.int64)
-    b = np.array([1, 2, 0], dtype=np.int64)
-    hubs = np.array([-5, 0, 1, 999999], dtype=np.int64)
-    bm = wk.build_hub_bitmap(a, b, np.sort(hubs))
-    assert bm.shape == (((4 * 4) + 63) // 64,)

@@ -94,7 +94,7 @@ flat = oriented.sortWithinPartitions("src", "dst").persist()
 mo = flat.count()
 prep_sec = round(time.perf_counter() - t0, 2)
 t0 = time.perf_counter()
-probe = T._build_probe(spark, flat, max_id + 1, 8192)
+probe = T._build_probe(spark, flat, max_id + 1)
 copy_sec = round(time.perf_counter() - t0, 2)
 exec_secs = []
 for _ in range(reps + 2):  # extra warm reps, reference discards run 0
@@ -107,8 +107,6 @@ exec_secs = exec_secs[2:]
 # --- e2e: full pipeline with the distributed semi-join closure -------
 flat.unpersist()
 probe.keys_bc.destroy()          # drop the ~150 MB probe broadcast
-if probe.hub_bc is not None:
-    probe.hub_bc.destroy()
 del probe
 spark.catalog.clearCache(); amp.persist(); amp.count()
 e2e_secs = []; tri = None

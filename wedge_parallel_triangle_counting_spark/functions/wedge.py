@@ -11,8 +11,11 @@ numpy re-expression of the reference's device-side inner loops:
   analogue of the reference's "cooperation" staging (`tc.cu:176-257`)
   where wedges are first materialized contiguously and then evaluated
   together.
-- hub bitmap: `tc.cu:329-346,262-272` (J3) becomes a dense bit-packed
-  numpy matrix over the top-`hub_k` ranked vertices, probed O(1).
+- no hub bitmap (the reference's J3, `tc.cu:329-346,262-272`): on the
+  CPU the two extra binary searches per pair over the hub ids cost more
+  than the shorter key search they save — slower on the driver count
+  and in executor tasks alike (BENCH/RUNS.md r12-b) — and degree
+  orientation already caps every out-degree at sqrt(2m).
 
 All functions operate on whole arrays; python-level loops only step
 over bounded-size blocks (the analogue of kernel-launch chunking,
@@ -110,44 +113,14 @@ def build_edge_keys(src: np.ndarray, dst: np.ndarray, key_base: int) -> np.ndarr
 
 
 def probe_pairs(
-    w: np.ndarray,
-    u: np.ndarray,
-    edge_keys: np.ndarray,
-    key_base: int,
-    hub_bitmap: np.ndarray | None = None,
-    hub_ids: np.ndarray | None = None,
+    w: np.ndarray, u: np.ndarray, edge_keys: np.ndarray, key_base: int
 ) -> int:
     """Count how many {w, u} pairs are edges — the closure check (J1).
-
-    Pairs are canonicalized by id before probing. If a hub index is
-    provided (`hub_ids`: sorted vertex ids; `hub_bitmap`: dense k×k bit
-    matrix over their positions), pairs whose BOTH endpoints are hubs
-    are answered by a cache-resident probe (J3, tc.cu:262-272) — a
-    searchsorted over ≤8k ids (L1/L2) plus one bit load — instead of a
-    binary search over the full DRAM-sized edge-key array."""
+    Pairs are canonicalized by id before probing."""
     if len(w) == 0:
         return 0
     lo = np.minimum(w, u).astype(np.int64, copy=False)
     hi = np.maximum(w, u).astype(np.int64, copy=False)
-    hub_count = 0
-    if hub_bitmap is not None and hub_ids is not None and len(hub_ids):
-        k = len(hub_ids)
-        ilo = np.searchsorted(hub_ids, lo)
-        ihi = np.searchsorted(hub_ids, hi)
-        np.clip(ilo, 0, k - 1, out=ilo)
-        np.clip(ihi, 0, k - 1, out=ihi)
-        is_hub = (hub_ids[ilo] == lo) & (hub_ids[ihi] == hi)
-        if is_hub.any():
-            bit = ilo[is_hub] * k + ihi[is_hub]
-            bit.sort()  # sequential bitmap access (cache locality)
-            hits = (hub_bitmap[bit >> 6] >> (bit & 63).astype(np.uint64)) & np.uint64(1)
-            hub_count = int(hits.sum())
-            keep = ~is_hub
-            lo = lo[keep]
-            hi = hi[keep]
-
-    if len(lo) == 0:
-        return hub_count
     keys = lo * np.int64(key_base) + hi
     # Sorting the probe keys first makes consecutive binary searches
     # share their upper tree path in cache — ~15x faster than random-
@@ -158,57 +131,7 @@ def probe_pairs(
     keys.sort()
     pos = np.searchsorted(edge_keys, keys)
     np.clip(pos, 0, len(edge_keys) - 1, out=pos)
-    return hub_count + int((edge_keys[pos] == keys).sum())
-
-
-def build_hub_bitmap(
-    src: np.ndarray, dst: np.ndarray, hub_ids: np.ndarray
-) -> np.ndarray:
-    """Dense bit matrix of hub↔hub edges (canonical by id) over the
-    positions of `hub_ids` (sorted vertex ids, typically the top-k by
-    degree).
-
-    Reference builds a packed upper-triangular matrix over the top
-    RANKS (tc.cu:329-346); indexing by position in an explicit sorted
-    id array generalizes that to un-relabeled vertex spaces. A dense
-    k×k matrix costs 2× bits but keeps the index math branch-free for
-    numpy (8192 → 8 MiB, as the README's -a 8192)."""
-    k = len(hub_ids)
-    bitmap = np.zeros((k * k + 63) // 64, dtype=np.uint64)
-    if k == 0 or len(src) == 0:
-        return bitmap
-    lo = np.minimum(src, dst).astype(np.int64)
-    hi = np.maximum(src, dst).astype(np.int64)
-    max_id = int(hi.max())
-    min_id = int(lo.min())
-    if 0 <= min_id and max_id <= min(max(4 * 2 * len(src), 1 << 20), 1 << 28):
-        # dense-domain fast path (r5-n follow-up): a byte membership
-        # table turns the hub test into two sequential-gather passes,
-        # and the exact positions are then found by binary search over
-        # ONLY the surviving hub-hub endpoints — vs binary-searching
-        # all 2m endpoints (measured 6s -> <1s at 38.4M endpoints).
-        member = np.zeros(max_id + 1, dtype=bool)
-        # guard (ADVICE r5): hub_ids outside [0, max endpoint id] would
-        # raise / silently wrap under fancy indexing; such ids cannot
-        # appear in any edge, so dropping them is exact
-        safe = hub_ids[(hub_ids >= 0) & (hub_ids <= max_id)]
-        member[safe] = True
-        m = member[lo] & member[hi]
-        if m.any():
-            ilo = np.searchsorted(hub_ids, lo[m])  # exact: members only
-            ihi = np.searchsorted(hub_ids, hi[m])
-            bit = ilo * k + ihi
-            np.bitwise_or.at(
-                bitmap, bit >> 6, np.uint64(1) << (bit & 63).astype(np.uint64)
-            )
-        return bitmap
-    ilo = np.clip(np.searchsorted(hub_ids, lo), 0, k - 1)
-    ihi = np.clip(np.searchsorted(hub_ids, hi), 0, k - 1)
-    m = (hub_ids[ilo] == lo) & (hub_ids[ihi] == hi)
-    if m.any():
-        bit = ilo[m] * k + ihi[m]
-        np.bitwise_or.at(bitmap, bit >> 6, np.uint64(1) << (bit & 63).astype(np.uint64))
-    return bitmap
+    return int((edge_keys[pos] == keys).sum())
 
 
 def wedge_blocks(
@@ -239,8 +162,6 @@ def count_closed(
     blocks,
     edge_keys: np.ndarray,
     key_base: int,
-    hub_bitmap: np.ndarray | None = None,
-    hub_ids: np.ndarray | None = None,
     timings: dict | None = None,
 ) -> int:
     """Count the closed wedges among `blocks`, an iterator of (w, u)
@@ -254,7 +175,7 @@ def count_closed(
     t0 = time.perf_counter()
     for w, u in blocks:
         t1 = time.perf_counter()
-        total += probe_pairs(w, u, edge_keys, key_base, hub_bitmap, hub_ids)
+        total += probe_pairs(w, u, edge_keys, key_base)
         t2 = time.perf_counter()
         if timings is not None:
             timings["enum_sec"] = timings.get("enum_sec", 0.0) + (t1 - t0)

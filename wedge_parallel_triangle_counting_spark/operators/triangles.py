@@ -13,9 +13,7 @@ semi-join. The "edge" strategy lists through `graph.common_neighbors`,
 the adjacency intersection truss and clustering share.
 
 Options: `strategy`; `closure` ("auto" | "broadcast" | "join");
-`hub_k` (hub-bitmap size of the broadcast probe; the driver count
-probes the edge keys alone, see `_local_count`); `split_budget`
-(wedges per hub chunk);
+`split_budget` (wedges per hub chunk of the distributed pipeline);
 `phase_metrics`. Every other physical choice follows from the input:
 - prep: fast (original ids, one shuffle) unless the ids do not fit
   int64 edge keys (`_key_base`: a negative id, or (max_id+1)² > 2⁶²),
@@ -30,14 +28,15 @@ probes the edge keys alone, see `_local_count`); `split_budget`
 - "wedge"  (default, the WeTriC strategy, tc.cu:173-293): in the
   broadcast-closure regime (≤30M edges) the COLLECT-FIRST path's first
   job is one narrow Arrow collect of the clean input; dedup, degrees,
-  the degree-order orientation and the oriented wedge count W are
-  numpy on the driver. Up to `checkpointing.LOCAL_LANE_MAX_WEDGES`
-  wedges the count runs there too — the paper's one-launch count, in
-  one thread per CPU over equal wedge ranges (tc.cu:348-361) — and the
-  collect is the only Spark job. Beyond it one count job runs, in
-  which the CSR reader applies the orientation and hub skip per run of
-  the symmetric table against a broadcast degree dictionary (no stats
-  job, no degree joins). One INFO event names the lane taken
+  one degree-ordered CSR and one split of its wedges into equal ranges
+  (tc.cu:348-361) are numpy on the driver. Up to
+  `checkpointing.LOCAL_LANE_MAX_WEDGES` oriented wedges the parts count
+  there too, one thread per CPU — the paper's one-launch count — and
+  the collect is the only Spark job. Beyond it the same parts count in
+  one Spark job, one task each, against the broadcast edge keys (no
+  shuffle, no second read of the input). No hub lane is needed:
+  degree orientation caps every out-degree at sqrt(2m), and a part
+  boundary cuts at most one row. One INFO event names the lane taken
   (`checkpointing.lane_event`). Beyond that regime (or with
   closure="join") the general two-lane plan runs:
   fused single-shuffle preprocessing (degree-ordered orientation in
@@ -53,8 +52,9 @@ probes the edge keys alone, see `_local_count`); `split_budget`
     `split_budget` are routed out by anti/semi JOIN (never a driver-side
     id collect), exploded into bounded first-index chunks
     (high-degree-vertex splitting) and spread across partitions.
-  Both lanes probe a broadcast sorted canonical edge-key array + hub
-  bitmap (reference J1/J3), or emit candidate pairs for a distributed
+  Both lanes probe a broadcast sorted canonical edge-key array
+  (reference J1; the J3 hub bitmap measured slower on the CPU, see
+  `functions/wedge.py`), or emit candidate pairs for a distributed
   LEFT SEMI join when the edge set exceeds executor memory.
 - "arrow"  (experiments/tc_arrow.cu:173-289,345-371): path-wedge
   enumeration — per oriented edge (v,w), walk adj(w) (the two-level
@@ -90,11 +90,9 @@ from . import checkpointing
 from .checkpointing import BROADCAST_MAX_EDGES, collect_arrays, lane_event, size_gate
 from .graph import (
     adjacency,
-    build_sym_clustered,
     common_neighbors,
     drop_self_loops,
     normalize_edges,
-    orient_from_sym,
     prepare_oriented,
     prepare_oriented_fast,
 )
@@ -118,26 +116,17 @@ def _split_chunks(adj_df: DataFrame, split_budget: int) -> DataFrame:
 
 
 class _Probe:
-    """Closure-probe context shipped to executors (broadcast handles).
+    """Closure-probe context shipped to executors: the broadcast sorted
+    canonical edge keys and their base."""
 
-    `hub_ids` is a sorted ≤hub_k-element id array (tiny — rides in the
-    closure pickle); the bitmap over its positions is broadcast."""
-
-    def __init__(self, keys_bc, key_base, hub_bc, hub_ids):
+    def __init__(self, keys_bc, key_base):
         self.keys_bc = keys_bc
         self.key_base = key_base
-        self.hub_bc = hub_bc
-        self.hub_ids = hub_ids
 
     def count(self, rows: tuple, timings: dict | None = None) -> int:
         """Closed wedges of one batch of wedge rows (a reader's yield)."""
         return wk.count_closed(
-            wk.wedge_blocks(*rows),
-            self.keys_bc.value,
-            self.key_base,
-            self.hub_bc.value if self.hub_bc is not None else None,
-            self.hub_ids,
-            timings=timings,
+            wk.wedge_blocks(*rows), self.keys_bc.value, self.key_base, timings=timings
         )
 
 
@@ -172,23 +161,16 @@ def _timed_row(total: int, timings: dict) -> pd.DataFrame:
 # once over either.
 
 
-def _csr_rows(it: Iterator[pd.DataFrame], keep=None) -> Iterator[tuple]:
+def _csr_rows(it: Iterator[pd.DataFrame]) -> Iterator[tuple]:
     """The CSR reader: partitions of (src, dst) rows sorted by (src,
     dst) are consumed as columnar CSR directly, every src run one
     adjacency row. Arrow batches may split a vertex's adjacency; a
     carry buffer defers the trailing (possibly incomplete) run to the
-    next batch. `keep(src, dst) -> mask`, if given, filters each
-    stretch of complete runs (the fused lane's degree-order orientation
-    and hub skip): a run's kept subset stays contiguous and sorted."""
+    next batch."""
 
-    def rows(src: np.ndarray, dst: np.ndarray):
-        if keep is not None:
-            mask = keep(src, dst)
-            src, dst = src[mask], dst[mask]
-            if len(src) == 0:
-                return
+    def rows(src: np.ndarray, dst: np.ndarray) -> tuple:
         starts, degs = _runs(src)
-        yield dst, starts, degs, np.zeros(len(degs), np.int64), degs - 1
+        return dst, starts, degs, np.zeros(len(degs), np.int64), degs - 1
 
     carry_s = carry_d = None
     for pdf in it:
@@ -202,10 +184,10 @@ def _csr_rows(it: Iterator[pd.DataFrame], keep=None) -> Iterator[tuple]:
         # defer the trailing run (vertex may continue in next batch)
         boundary = int(np.searchsorted(src, src[-1], side="left"))
         if boundary > 0:
-            yield from rows(src[:boundary], dst[:boundary])
+            yield rows(src[:boundary], dst[:boundary])
         carry_s, carry_d = src[boundary:], dst[boundary:]
     if carry_s is not None and len(carry_s):
-        yield from rows(carry_s, carry_d)
+        yield rows(carry_s, carry_d)
 
 
 def _list_rows(it: Iterator[pd.DataFrame]) -> Iterator[tuple]:
@@ -257,69 +239,6 @@ def _emit_udf(read):
     return run
 
 
-def _degree_order_keep(lookup_bc):
-    """The fused lane's per-run filter over the SYMMETRIC edge table:
-    keep the degree-ordered half, minus edges out of hub-lane vertices,
-    against a broadcast degree dictionary (`lookup_bc`: sorted ids /
-    degree / is_hub arrays) — so the count job needs no degree joins."""
-
-    def keep(src: np.ndarray, dst: np.ndarray) -> np.ndarray:
-        look = lookup_bc.value
-        ids, deg = look["ids"], look["deg"]
-        si = np.searchsorted(ids, src)
-        ds, dd = deg[si], deg[np.searchsorted(ids, dst)]
-        return ((ds < dd) | ((ds == dd) & (src < dst))) & ~look["is_hub"][si]
-
-    return keep
-
-
-def _numpy_top_hub_ids(src: np.ndarray, dst: np.ndarray, hub_k: int) -> np.ndarray:
-    """Top-hub_k vertex ids by (symmetric degree, id) computed from the
-    collected oriented edge arrays — each undirected edge appears once,
-    so occurrence count across src∪dst IS the symmetric degree.
-
-    Dense-domain fast path: when the id range is comparable to the
-    edge count (always true after rank-relabel, and for contiguous web
-    graphs), two O(m) `np.bincount` passes (summed — no 2m concatenate
-    copy) replace the sort-based `np.unique` over 2m elements —
-    measured ~6x faster on the 32x amplified probe build (copy-phase
-    probe r5-n follow-up: 0.6 s vs 4.1 s at 38.4M elements / 6.4M id
-    domain). Sparse id domains (raw 64-bit hash ids) fall back to
-    np.unique, since a bincount array sized by max_id would explode.
-    Selection semantics are identical in both paths: top hub_k by
-    (count, id)."""
-    if len(src) and len(dst):
-        max_id = max(int(src.max()), int(dst.max()))
-        min_id = min(int(src.min()), int(dst.min()))
-    else:  # degenerate input — the unique path handles it cheaply
-        max_id, min_id = 0, -1
-    # same absolute 1<<28 cap as build_hub_bitmap (ADVICE r5): without
-    # it a sparse-but-in-range id domain could transiently allocate
-    # ~64 B/edge of bincount buffers at the BROADCAST_MAX_EDGES scale
-    if 0 <= min_id and max_id <= min(
-        max(4 * (len(src) + len(dst)), 1 << 20), 1 << 28
-    ):
-        counts_all = np.bincount(src, minlength=max_id + 1)
-        counts_all += np.bincount(dst, minlength=max_id + 1)
-        present = np.nonzero(counts_all)[0]
-        if len(present) > hub_k:
-            counts = counts_all[present]
-            # O(n) prefilter to the count threshold, then lexsort only
-            # the candidate set (hub_k + count-ties) — same top hub_k
-            # by (count, id) as the full lexsort in the sparse path
-            kth = np.partition(counts, len(counts) - hub_k)[len(counts) - hub_k]
-            cand = counts >= kth
-            present, counts = present[cand], counts[cand]
-            order = np.lexsort((present, counts))[-hub_k:]
-            present = present[order]
-        return np.sort(present.astype(src.dtype, copy=False))
-    ids, counts = np.unique(np.concatenate([src, dst]), return_counts=True)
-    if len(ids) > hub_k:
-        order = np.lexsort((ids, counts))[-hub_k:]
-        ids = ids[order]
-    return np.sort(ids)
-
-
 def _key_base(min_id: int, max_id: int) -> int | None:
     """Base of the int64 edge keys `lo * base + hi` over vertex ids in
     [min_id, max_id]: max_id + 1, or None when those keys are not
@@ -333,139 +252,54 @@ def _key_base(min_id: int, max_id: int) -> int | None:
 
 
 def _build_probe(
-    spark: SparkSession,
-    edges,
-    key_base: int,
-    hub_k: int,
-    keys=None,
+    spark: SparkSession, edges: DataFrame, key_base: int, _unused=None
 ) -> _Probe:
-    """The one broadcast closure probe: sorted edge keys plus, for
-    hub_k > 0, the top-hub_k id array and its hub↔hub bitmap. `edges`
-    is an oriented (src, dst) frame, collected here through Arrow, or
-    the (src, dst) arrays a caller already collected (with their sorted
-    `keys`, if it has them)."""
+    """The one broadcast closure probe: the sorted canonical edge keys
+    of the oriented (src, dst) frame `edges`, collected here through
+    Arrow."""
+    # `_unused` is accepted and ignored: bench.py's amplified exec phase
+    # still passes the size of the retired hub bitmap (8192)
     if key_base * key_base > 2**62:
         raise ValueError("vertex domain too large for int64 edge keys")
-    if isinstance(edges, DataFrame):
-        edges = collect_arrays(edges, "src", "dst")
-    src, dst = edges
-    sc = spark.sparkContext
-    hub_bc = None
-    hub_ids = None
-    if hub_k > 0 and len(src):
-        # the probe arrays are already in driver memory (the broadcast
-        # path caps them at BROADCAST_MAX_EDGES), so a numpy top-k is
-        # strictly cheaper than a Spark degree re-aggregation job —
-        # the copy phase stays free of extra cluster actions
-        hub_ids = _numpy_top_hub_ids(src, dst, hub_k)
-        hub_bc = sc.broadcast(wk.build_hub_bitmap(src, dst, hub_ids))
-    if keys is None:
-        keys = wk.build_edge_keys(src, dst, key_base)
-    return _Probe(sc.broadcast(keys), key_base, hub_bc, hub_ids)
+    src, dst = collect_arrays(edges, "src", "dst")
+    keys = wk.build_edge_keys(src, dst, key_base)
+    return _Probe(spark.sparkContext.broadcast(keys), key_base)
 
 
-# Max flat adjacency elements the driver may materialize when building
-# hub chunks from the already-collected edge arrays (~400 MB of int64).
-# Chunk rows duplicate the adjacency per chunk, the same duplication the
-# distributed _split_chunks explode pays in shuffle volume; beyond the
-# cap the fully distributed hub lane takes over.
-HUB_DRIVER_CHUNK_ELEMS = 50_000_000
-
-
-def _orientation_arrays(a: np.ndarray, b: np.ndarray):
-    """Degree/orientation prep from collected canonical (a<b) edges —
-    the whole reference preprocess (degree count, degree-order
-    orientation, tc.cu:660-751) as numpy over arrays already resident
-    in driver memory, so the fused path needs NO extra Spark job for
-    stats, hubs, or the probe."""
+def _oriented_csr(keys: np.ndarray, key_base: int) -> tuple:
+    """The degree-ordered CSR (flat, starts, degs) of sorted canonical
+    edge keys — the reference preprocess (degree count, degree-order
+    orientation, tc.cu:660-751) as numpy on the driver. Each edge points
+    away from its lower-degree end (ties: the lower id), rows run by
+    src and every row's adjacency is sorted. A vertex of out-degree d
+    points at d vertices of degree >= d, so d² <= 2m: no row is longer
+    than sqrt(2m)."""
+    a, b = np.divmod(keys, key_base)  # a < b: the keys are canonical
     ids, cnt = np.unique(np.concatenate([a, b]), return_counts=True)
-    ia = np.searchsorted(ids, a)
-    ib = np.searchsorted(ids, b)
-    da, db = cnt[ia], cnt[ib]
-    a_first = (da < db) | ((da == db) & (a < b))
-    src_o = np.where(a_first, a, b)
-    dst_o = np.where(a_first, b, a)
-    pos_o = np.where(a_first, ia, ib)
-    outdeg = np.bincount(pos_o, minlength=len(ids))
-    return ids, cnt, src_o, dst_o, pos_o, outdeg
-
-
-def _hub_chunk_rows(
-    src_o: np.ndarray,
-    dst_o: np.ndarray,
-    pos_o: np.ndarray,
-    hub_flag: np.ndarray,
-    split_budget: int,
-):
-    """Hub-lane chunk rows (v, adj, deg, i_lo, i_hi) built driver-side
-    from the collected oriented arrays (no Spark jobs — the fused
-    analogue of adjacency()+_split_chunks). Returns (pa.Table, None),
-    (None, None) when there is no hub work, or (None, est_elems) when
-    materializing the rows would exceed HUB_DRIVER_CHUNK_ELEMS.
-
-    Fully vectorized (numpy repeat/cumsum) and shipped as an Arrow
-    table: at the 50M-element cap the old per-hub Python loop built
-    several GB of boxed ints and paid pickling on top (ADVICE r3) —
-    the Arrow path materializes exactly the ~8 B/element it budgets
-    for and enters Spark through zero-copy createDataFrame."""
-    import pyarrow as pa
-
-    hmask = hub_flag[pos_o]
-    hs, hd = src_o[hmask], dst_o[hmask]
-    if len(hs) == 0:
-        return None, None
-    order = np.lexsort((hd, hs))
-    hs, hd = hs[order], hd[order]
-    starts, degs = _runs(hs)
-    keep = degs >= 2  # a 1-edge hub spawns no wedges
-    starts, degs = starts[keep], degs[keep]
-    if len(starts) == 0:
-        return None, None
-    widths = np.maximum(1, split_budget // degs)
-    n_chunks = (degs - 2) // widths + 1  # len(range(0, deg-1, c))
-    est = int((n_chunks * degs).sum())
-    if est > HUB_DRIVER_CHUNK_ELEMS:
-        return None, est
-    # one row per chunk: map each chunk to its hub, then its (lo, hi)
-    # window from the chunk's ordinal within the hub
-    hub_of = np.repeat(np.arange(len(starts)), n_chunks)
-    first = np.repeat(np.cumsum(n_chunks) - n_chunks, n_chunks)
-    within = np.arange(len(hub_of), dtype=np.int64) - first
-    lo = within * widths[hub_of]
-    hi = np.minimum(lo + widths[hub_of], degs[hub_of] - 1)
-    # adjacency values: every chunk row carries its hub's full sorted
-    # adjacency — the same duplication the distributed _split_chunks
-    # explode pays in shuffle volume
-    d_of = degs[hub_of]
-    val_first = np.repeat(np.cumsum(d_of) - d_of, d_of)
-    val_pos = np.arange(int(d_of.sum()), dtype=np.int64) - val_first
-    values = hd[np.repeat(starts[hub_of], d_of) + val_pos]
-    offsets = np.concatenate(([0], np.cumsum(d_of)))
-    adj = pa.ListArray.from_arrays(
-        pa.array(offsets, type=pa.int32()), pa.array(values, type=pa.int64())
-    )
-    table = pa.table(
-        {
-            "v": pa.array(hs[starts][hub_of], type=pa.int64()),
-            "adj": adj,
-            "deg": pa.array(d_of, type=pa.int64()),
-            "i_lo": pa.array(lo, type=pa.int64()),
-            "i_hi": pa.array(hi, type=pa.int64()),
-        }
-    )
-    return table, None
+    a_first = cnt[np.searchsorted(ids, a)] <= cnt[np.searchsorted(ids, b)]
+    src = np.where(a_first, a, b)
+    dst = np.where(a_first, b, a)
+    row_src, flat = np.divmod(np.sort(src * key_base + dst), key_base)
+    starts, degs = _runs(row_src)
+    return flat, starts, degs
 
 
 def _wedge_parts(
-    starts: np.ndarray, degs: np.ndarray, parts: int, block_pairs: int
+    flat: np.ndarray, starts: np.ndarray, degs: np.ndarray, parts: int, block_pairs: int
 ) -> list[tuple]:
-    """Cut CSR rows into at most `parts` wedge rows (starts, degs, i_lo,
-    i_hi) of near-equal pair count — the paper's equal-wedges-per-worker
-    split by the cumulative wedge count (tc.cu:348-361). A row with
-    more pairs than a share (at most `block_pairs`) is first split into
-    i-range chunks of width max(1, share // deg), so every chunk but a
-    degree-bound one fits a block; the chunks keep reading the shared
-    `flat` array, nothing is copied."""
+    """Cut the CSR (flat, starts, degs) into at most `parts` wedge rows
+    of near-equal pair count — the paper's equal-wedges-per-worker split
+    by the cumulative wedge count (tc.cu:348-361). A row with more pairs
+    than a share (at most `block_pairs`) is first split into i-range
+    chunks of width max(1, share // deg), so every chunk but a
+    degree-bound one fits a block.
+
+    Each part is self-contained — `wk.wedge_blocks` arguments (flat,
+    starts, degs, i_lo, i_hi) over its own slice of `flat`, with the
+    starts rebased to it — so it can count in a driver thread (the slice
+    is a view) or ship to a Spark task. A part boundary cuts at most one
+    row, so the slices hold at most (parts - 1) · max deg values beyond
+    the m of `flat`."""
     keep = degs >= 2
     starts, degs = starts[keep], degs[keep]
     pairs = degs * (degs - 1) // 2
@@ -483,37 +317,47 @@ def _wedge_parts(
     cum = np.cumsum(wk.pair_count(degs, i_lo, i_hi))
     cuts = np.searchsorted(cum, total * np.arange(1, parts) // parts, side="right")
     bounds = np.unique(np.concatenate([[0], cuts, [len(cum)]]))
-    return [
-        (starts[lo:hi], degs[lo:hi], i_lo[lo:hi], i_hi[lo:hi])
-        for lo, hi in zip(bounds, bounds[1:])
-    ]
+    out = []
+    for lo, hi in zip(bounds, bounds[1:]):
+        f0, f1 = starts[lo], starts[hi - 1] + degs[hi - 1]
+        rows = (starts[lo:hi] - f0, degs[lo:hi], i_lo[lo:hi], i_hi[lo:hi])
+        out.append((flat[f0:f1], *rows))
+    return out
 
 
-def _local_count(
-    flat: np.ndarray, parts: list[tuple], keys: np.ndarray, key_base: int
-) -> tuple[int, dict]:
-    """Closed wedges of `parts` (`_wedge_parts`) over the oriented
-    adjacency `flat`, probed against the sorted edge `keys`: one thread
-    per part — numpy releases the GIL in the enumerate and probe
-    kernels — each walking its part in blocks of at most
-    `wk.DEFAULT_BLOCK_PAIRS` pairs, the per-task memory bound of the
-    Spark count. Returns the count and the enumerate/probe seconds
-    summed over the threads.
+def _count_parts(parts: list[tuple], keys: np.ndarray, key_base: int, sc=None):
+    """Closed wedges of the self-contained `parts` (`_wedge_parts`)
+    against the sorted edge `keys`, one per-part count on either side:
 
-    No hub bitmap: on 4 vCPU it made this probe 1.4-1.6x slower (R-MAT
-    scale 14 and 16, 1 and 4 threads, hub_k=8192) — two extra binary
-    searches per pair over the hub ids cost more than the smaller
-    search they save."""
-    block = wk.DEFAULT_BLOCK_PAIRS
+    - `sc` None: driver threads, one per CPU at most — numpy releases
+      the GIL in the enumerate and probe kernels;
+    - a SparkContext: one task per part (`parallelize` keeps part i in
+      task i) against the broadcast keys — one job, no shuffle.
 
-    def count(part: tuple) -> tuple[int, dict]:
+    Each part walks in blocks of at most `wk.DEFAULT_BLOCK_PAIRS` pairs,
+    the per-task memory bound. Returns the count and the enumerate/probe
+    seconds summed over the parts."""
+
+    def count(part: tuple, keys: np.ndarray) -> tuple[int, dict]:
         timings: dict = {}
-        blocks = wk.wedge_blocks(flat, *part, block_pairs=block)
-        n = wk.count_closed(blocks, keys, key_base, timings=timings)
+        n = wk.count_closed(wk.wedge_blocks(*part), keys, key_base, timings=timings)
         return n, timings
 
-    with ThreadPoolExecutor(max(len(parts), 1)) as pool:
-        done = list(pool.map(count, parts))
+    if not parts:
+        done = []
+    elif sc is None:
+        with ThreadPoolExecutor(min(len(parts), len(os.sched_getaffinity(0)))) as pool:
+            done = list(pool.map(lambda part: count(part, keys), parts))
+    else:
+        keys_bc = sc.broadcast(keys)
+        try:
+            done = (
+                sc.parallelize(parts, len(parts))
+                .map(lambda part: count(part, keys_bc.value))
+                .collect()
+            )
+        finally:
+            keys_bc.destroy()
     timings = {
         k: sum(t.get(k, 0.0) for _, t in done) for k in ("enum_sec", "probe_sec")
     }
@@ -523,9 +367,6 @@ def _local_count(
 def _wedge_fused(
     spark: SparkSession,
     edges: DataFrame,
-    hub_k: int,
-    split_budget: int,
-    caches: list,
     mark,
     phase_metrics: dict | None,
     lane: dict,
@@ -533,29 +374,24 @@ def _wedge_fused(
 ) -> DataFrame | None:
     """Collect-first wedge count (broadcast-closure regime). Its first
     job is one narrow Arrow collect of the clean input (self loops
-    dropped; no shuffle, no persist). Dedup, canonical id order,
-    degrees, the degree-order orientation (`_orientation_arrays`) and
-    the oriented wedge count W = Σ d⁺(d⁺−1)/2 are then numpy on the
-    driver, and W picks where the wedges are counted:
+    dropped; no shuffle, no persist). Dedup and canonical id order are
+    numpy on the driver, then one oriented CSR (`_oriented_csr`) and
+    one equal-wedge split (`_wedge_parts`, one part per CPU or Spark
+    slot, whichever is more), and the oriented wedge count W = Σ
+    d⁺(d⁺−1)/2 picks the side that counts those parts (`_count_parts`):
 
-    - W ≤ checkpointing.LOCAL_LANE_MAX_WEDGES: on the driver, over the
-      sorted oriented CSR in wedge-balanced threads (`_wedge_parts`,
-      `_local_count`) — the only Spark job is the collect;
-    - otherwise one Spark count job: the flat lane reads the symmetric
-      table (`build_sym_clustered`, its one shuffle) and applies the
-      orientation and hub skip inside the vectorized UDF against a
-      broadcast degree dictionary (no degree joins), the hub lane (if
-      any) runs over driver-built chunk rows, and both probe the
-      broadcast built from the arrays in hand.
+    - W ≤ checkpointing.LOCAL_LANE_MAX_WEDGES: driver threads — the
+      only Spark job is the collect;
+    - otherwise one Spark count job, one task per part, against the
+      broadcast sorted edge keys: no shuffle, no second read of the
+      input.
 
     `lane` is the verdict (`checkpointing.lane_event`): it gains the
     canonical rows, W and the lane taken. Returns None, with
     lane["lane"] naming the fallback, when the path cannot apply: a
     vertex id that does not fit int64 edge keys ("relabel") or, after
     an entry on the size estimate (`max_collect_edges`), more canonical
-    edges than the broadcast budget ("distributed"). The broadcast
-    degree dictionary is ~24 B/vertex, the same order as the edge-key
-    broadcast itself."""
+    edges than the broadcast budget ("distributed")."""
     src, dst = collect_arrays(drop_self_loops(normalize_edges(edges)), "src", "dst")
     keys = np.empty(0, np.int64)
     key_base = 1  # any base keys an empty edge set
@@ -569,94 +405,28 @@ def _wedge_fused(
         # sorted unique canonical keys: the dedup and the probe array
         keys = np.unique(np.minimum(src, dst) * key_base + np.maximum(src, dst))
     del src, dst
-    m = len(keys)
-    lane["rows"] = m
-    if max_collect_edges is not None and m > max_collect_edges:
+    lane["rows"] = len(keys)
+    if max_collect_edges is not None and len(keys) > max_collect_edges:
         # the estimate let in more canonical edges than the broadcast
         # budget: abort to the distributed pipeline
         lane["lane"] = "distributed"
         return None
-    a, b = np.divmod(keys, key_base)
-    ids, cnt, src_o, dst_o, pos_o, outdeg = _orientation_arrays(a, b)
-    wedges = int((outdeg * (outdeg - 1) // 2).sum())
+    mark("prep_sec")
+
+    sc = spark.sparkContext
+    flat, starts, degs = _oriented_csr(keys, key_base)
+    nparts = max(len(os.sched_getaffinity(0)), sc.defaultParallelism)
+    parts = _wedge_parts(flat, starts, degs, nparts, wk.DEFAULT_BLOCK_PAIRS)
+    wedges = int((degs * (degs - 1) // 2).sum())
     cap = checkpointing.LOCAL_LANE_MAX_WEDGES
     local = wedges <= cap
     lane.update(lane="local" if local else "spark", wedges=wedges, cap=cap, unit="wedges")
-    mark("prep_sec")
-
-    if local:
-        # oriented CSR: rows by src, each row's adjacency sorted
-        row_src, flat = np.divmod(np.sort(src_o * key_base + dst_o), key_base)
-        starts, degs = _runs(row_src)
-        parts = _wedge_parts(
-            starts, degs, len(os.sched_getaffinity(0)), wk.DEFAULT_BLOCK_PAIRS
-        )
-        mark("build_sec")
-        total, timings = _local_count(flat, parts, keys, key_base)
-        _record_split(phase_metrics, timings)
-        mark("exec_sec")
-        return _result(spark, total)
-
-    npart = spark.sparkContext.defaultParallelism
-    sym = build_sym_clustered(edges, npart)
-    stats = {
-        "n": int(len(ids)),
-        "max_id": key_base - 1,
-        "m_oriented": m,
-        "max_degree": int(cnt.max()),
-    }
-    hub_min_deg = int((2 * split_budget) ** 0.5) + 2
-    hub_flag = outdeg >= hub_min_deg
-
-    probe = _build_probe(spark, (a, b), key_base, hub_k, keys)
-
-    hub_tbl = None
-    est = None
-    if bool(hub_flag.any()):
-        hub_tbl, est = _hub_chunk_rows(src_o, dst_o, pos_o, hub_flag, split_budget)
-        if hub_tbl is None and est is not None:
-            # pathological hub mass: keep the fully distributed hub
-            # machinery (join routing + explode splitting + wedge_range
-            # balance), reusing the probe and stats already in hand
-            oriented = orient_from_sym(sym, npart, stats["n"]).persist()
-            caches.append(oriented)
-            mark("build_sec")
-            result = _wedge_count(
-                spark,
-                oriented,
-                key_base,
-                closure="broadcast",
-                hub_k=hub_k,
-                split_budget=split_budget,
-                clustered_by_src=True,
-                caches=caches,
-                stats=stats,
-                probe=probe,
-            )
-            out = _finish(result, caches, spark, phase_metrics)
-            mark("exec_sec")
-            return out
-
-    lookup_bc = spark.sparkContext.broadcast(
-        {"ids": ids, "deg": cnt, "is_hub": hub_flag}
-    )
     mark("build_sec")
 
-    keep = _degree_order_keep(lookup_bc)
-    flat = sym.sortWithinPartitions("src", "dst")
-    counts = flat.mapInPandas(
-        _count_udf(probe, lambda it: _csr_rows(it, keep)), schema=COUNT_SCHEMA
-    )
-    if hub_tbl is not None:
-        # Arrow table → DataFrame is zero-copy on the driver side
-        # (no Python row boxing / pickling; ADVICE r3)
-        hub_df = spark.createDataFrame(hub_tbl).repartition(npart, "v", "i_lo")
-        counts = counts.unionByName(
-            hub_df.mapInPandas(_count_udf(probe, _list_rows), schema=COUNT_SCHEMA)
-        )
-    out = _finish(_sum_counts(counts), caches, spark, phase_metrics)
+    total, timings = _count_parts(parts, keys, key_base, None if local else sc)
+    _record_split(phase_metrics, timings)
     mark("exec_sec")
-    return out
+    return _result(spark, total)
 
 
 def _canonical(oriented: DataFrame) -> DataFrame:
@@ -708,16 +478,12 @@ def _wedge_count(
     oriented: DataFrame,
     key_base: int,
     closure: str,
-    hub_k: int,
     split_budget: int,
     clustered_by_src: bool,
     caches: list,
     stats: dict | None,
-    probe: _Probe | None = None,
 ) -> DataFrame:
-    """Two-lane wedge-parallel count over degree-oriented edges.
-    `probe`, if given, is a pre-built closure probe (the fused path
-    builds it from its own Arrow collect — no second collect here)."""
+    """Two-lane wedge-parallel count over degree-oriented edges."""
     npart = spark.sparkContext.defaultParallelism
 
     hub_min_deg = int((2 * split_budget) ** 0.5) + 2
@@ -777,7 +543,7 @@ def _wedge_count(
             "src", "dst"
         )
     lanes = [(flat_parted, _csr_rows)] + hub_lane
-    return _close(spark, oriented, key_base, m, closure, hub_k, lanes, probe)
+    return _close(spark, oriented, key_base, m, closure, lanes)
 
 
 def _close(
@@ -786,16 +552,14 @@ def _close(
     key_base: int,
     m: int | None,
     closure: str,
-    hub_k: int,
     lanes: list,
-    probe: _Probe | None = None,
 ) -> DataFrame:
     """The closure step shared by the wedge, arrow and vertex
     strategies. `lanes` are (frame, reader) pairs of wedge rows over
     `oriented` (m edges; None when no stats action counted them).
     closure="auto" takes the broadcast probe up to BROADCAST_MAX_EDGES
     oriented edges and the distributed semi-join beyond. "broadcast"
-    counts every lane against one probe (built here unless given);
+    counts every lane against one probe (`_build_probe`);
     "join" emits every lane's wedge pairs, canonical by id, LEFT SEMI
     against the canonicalized edge set."""
     if closure == "auto":
@@ -803,8 +567,7 @@ def _close(
             m = oriented.count()
         closure = "broadcast" if m <= BROADCAST_MAX_EDGES else "join"
     if closure == "broadcast":
-        if probe is None:
-            probe = _build_probe(spark, oriented, key_base, hub_k)
+        probe = _build_probe(spark, oriented, key_base)
         counts = [
             rows.mapInPandas(_count_udf(probe, read), schema=COUNT_SCHEMA)
             for rows, read in lanes
@@ -897,7 +660,6 @@ def triangle_count(
     edges: DataFrame,
     strategy: str = "wedge",
     closure: str = "auto",
-    hub_k: int = 8192,
     split_budget: int = 1 << 18,
     phase_metrics: dict | None = None,
 ) -> DataFrame:
@@ -949,9 +711,6 @@ def triangle_count(
             out = _wedge_fused(
                 spark,
                 edges,
-                hub_k=hub_k,
-                split_budget=split_budget,
-                caches=caches,
                 mark=mark,
                 phase_metrics=phase_metrics,
                 lane=lane,
@@ -979,7 +738,6 @@ def triangle_count(
             oriented,
             key_base,
             closure=closure,
-            hub_k=hub_k,
             split_budget=split_budget,
             clustered_by_src=clustered,
             caches=caches,
@@ -1003,9 +761,7 @@ def triangle_count(
             F.lit(0).alias("i_lo"),
             F.lit(1).alias("i_hi"),
         )
-        result = _close(
-            spark, oriented, key_base, m, closure, hub_k, [(paths, _list_rows)]
-        )
+        result = _close(spark, oriented, key_base, m, closure, [(paths, _list_rows)])
     elif strategy == "vertex":
         rows = adjacency(oriented).filter(F.col("deg") >= 2).select(
             "v",
@@ -1014,7 +770,7 @@ def triangle_count(
             F.lit(0).alias("i_lo"),
             (F.col("deg") - 1).alias("i_hi"),
         )
-        result = _close(spark, oriented, key_base, m, closure, 0, [(rows, _list_rows)])
+        result = _close(spark, oriented, key_base, m, closure, [(rows, _list_rows)])
     elif strategy == "edge":
         # persisted: BOTH endpoint joins consume the grouped
         # adjacency — unpersisted, each branch re-runs the

@@ -15,7 +15,7 @@ The html embeds the text in a `<main>` block and the outlinks as
 `<a href="...">` anchors in a `<nav>` block, so extraction has an
 exact inverse. Outlink targets are skewed quadratically toward low
 page ids — a power-law-ish head that exercises the engine's skew
-machinery (hub splitting, hub bitmap).
+machinery (hub splitting, equal-wedge balance).
 
 In production this table is an Iceberg scan
 (`spark.read.format("iceberg").load(...)`); `read_pages` falls back to
