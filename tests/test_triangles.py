@@ -383,10 +383,14 @@ def _python_worker_metrics(spark, run) -> tuple[int, int, list[str]]:
     tracker = sc.statusTracker()
     job_ids = tracker.getJobIdsForGroup(group)
     stages = sc._jsc.sc().statusStore()
+    # Once the status store holds spark.ui.retainedStages stages it
+    # evicts those without a completion time first: the skipped ones,
+    # which wrote nothing. A stage it no longer holds counts 0 bytes.
     shuffle = sum(
         stages.lastStageAttempt(sid).shuffleWriteBytes()
         for j in job_ids
         for sid in tracker.getJobInfo(j).stageIds
+        if tracker.getStageInfo(sid) is not None
     )
     execs = newest()
     py_nodes = []

@@ -51,7 +51,7 @@ HEADLINE = [
     # round-5: distributed-ntile rewrite — the returned frame's plan
     # must show NO Window and NO SinglePartition exchange (the id pass
     # collects tiny offset tables at construction; the data path is
-    # range-partitioned sort + mapInPandas + broadcast join)
+    # range-partitioned sort + JVM id projection + broadcast join)
     "text_lm_buckets",
 ]
 

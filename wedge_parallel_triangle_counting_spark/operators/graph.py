@@ -79,10 +79,11 @@ def degree_rank(deg: DataFrame, method: str = "scalable") -> DataFrame:
 
     method="window" uses a global row_number() window — correct but
     single-task at the sort boundary, fine for tests.
-    method="scalable" (default) is the two-pass zipWithIndex pattern:
-    range-partition by the sort key, sort within partitions, count rows
-    per partition, broadcast the cumulative offsets, and add
-    per-partition local indexes — no single-task bottleneck.
+    method="scalable" (default) is the two-pass zipWithIndex pattern
+    (ids.py): range-partition by the sort key, sort within partitions,
+    count rows per partition, then one JVM column expression adds the
+    partition's prefix-sum offset to the row's index within its
+    partition — no single-task bottleneck and no Python worker.
     """
     if method == "window":
         w = Window.orderBy("degree", "v")
@@ -156,16 +157,18 @@ def prepare_oriented(
     # sym feeds both the degree count and the relabel joins — persist
     # so the symmetrize shuffle runs once.
     sym = symmetrize(normalize_edges(edges)).persist()
+    if caches is not None:
+        caches.append(sym)
     deg = degrees(sym)
     from .ids import assign_contiguous_ids_with_count
 
-    ranked, n = assign_contiguous_ids_with_count(deg, ["degree", "v"], "rank")
+    # ranks are a JVM projection over the persisted range-sorted degree
+    # table (appended to caches): both relabel joins read that cache,
+    # so the degree sort runs once
+    ranked, n = assign_contiguous_ids_with_count(
+        deg, ["degree", "v"], "rank", caches=caches
+    )
     ranks = ranked.select("v", "rank")
-    # the two relabel joins each consume ranks — persist so the rank
-    # assignment (a python-worker pass) runs once, not twice
-    ranks = ranks.persist()
-    if caches is not None:
-        caches.extend([sym, ranks])
     oriented = orient(relabel(sym, ranks, n=n))
     return oriented, ranks, n
 

@@ -270,12 +270,13 @@ def lm_buckets(
     global rank follows the repo's two-pass zipWithIndex pattern
     (ids.assign_contiguous_ids_with_count) over the total order
     (lang ASC, score DESC, doc_id ASC): range-partitioned distributed
-    sort + broadcast per-partition offsets. Per-lang rank = global id −
-    lang start offset, where the start offsets come from a prefix sum
-    over the per-lang count table (#langs rows — bounded, tiny). The
-    ntile bucket is then the closed-form function of (rank, lang
-    count, n_buckets), bit-identical to SQL NTILE. All JVM expressions
-    after the Arrow id pass; output cardinality = #langs x n_buckets."""
+    sort + per-partition offsets in one JVM expression. Per-lang rank
+    = global id − lang start offset, where the start offsets come from
+    a prefix sum over the per-lang count table (#langs rows — bounded,
+    tiny). The ntile bucket is then the closed-form function of (rank,
+    lang count, n_buckets), bit-identical to SQL NTILE. Every step is
+    a JVM expression, with no Python worker; output cardinality =
+    #langs x n_buckets."""
     if n_buckets < 1:
         raise ValueError("n_buckets must be >= 1")
     from .ids import assign_contiguous_ids_with_count
